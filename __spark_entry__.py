@@ -2212,7 +2212,7 @@ def q_embedding_pair_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_score_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's centerpiece, end to end (M1+M2+R7): batch model
-    scoring via mapInPandas (model loaded once per task, Arrow-batched
+    scoring via mapInArrow (model loaded once per task, Arrow-batched
     matrix inference) then the distributed confusion-count query
     (reference README.md:162-184, 249)."""
     emb = load_table(spark, sf_dir, "embeddings")

@@ -5,13 +5,15 @@ The reference ships a CNTK model to executors with ``sc.addFile``, loads
 it once per partition inside ``run_worker``, and calls ``model.eval`` one
 image at a time (reference README.md:162-184). That per-record eval is
 its documented inefficiency (SURVEY.md §4). Here the same lifecycle is
-expressed with ``DataFrame.mapInPandas``:
+expressed with ``DataFrame.mapInArrow``:
 
 * iterator-of-batches form → the model loads ONCE per task, before the
   batch loop (the reference's "one partition per worker" trick,
   README.md:76, without hand-setting partition counts);
 * inference runs on whole Arrow batches (NumPy matrix ops / BLAS), not
   per row — the order-of-magnitude win BASELINE.md asks for;
+* the (rows, width) input matrix is a zero-copy view of the list
+  column's flat Arrow values buffer — no per-row ndarray, no pandas;
 * batch width is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
   so wide image/embedding columns can't blow task memory.
 
@@ -25,8 +27,10 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from hdinsight_pyspark_cntk_integration_spark.pyworker import cheap_task_start
 
 ModelLoader = Callable[[], Callable[[np.ndarray], np.ndarray]]
 
@@ -95,7 +99,7 @@ def hwc_to_chw(batch: np.ndarray) -> np.ndarray:
 def subtract_mean(batch: np.ndarray, mean_image: np.ndarray) -> np.ndarray:
     """P5: broadcast mean-image subtraction (README.md:159,165). The mean
     ships inside the task closure — small constants don't need an explicit
-    ``sc.broadcast`` under mapInPandas, Spark broadcasts the serialized
+    ``sc.broadcast`` under mapInArrow, Spark broadcasts the serialized
     function once per executor."""
     return batch - mean_image
 
@@ -116,6 +120,69 @@ def cifar_preprocess(flat_batch: np.ndarray, mean_chw: np.ndarray | None = None)
 # ---------------------------------------------------------------------------
 # The scoring operator
 # ---------------------------------------------------------------------------
+def batch_matrix(col: pa.Array, name: str) -> np.ndarray:
+    """(rows, width) matrix over a list column's flat ``values`` buffer.
+
+    Slices the child by the column's own ``offsets``, so a sliced batch
+    (``offsets[0] != 0``) reads only its rows. Zero-copy when the values
+    hold no nulls, so the result is a READ-ONLY view: preprocess and
+    predict must not write into their input. A null row or rows of
+    different length raise ``ValueError`` naming the column.
+    """
+    if col.null_count:
+        raise ValueError(f"score: column {name!r} has {col.null_count} null row(s)")
+    offsets = col.offsets.to_numpy()
+    lengths = np.diff(offsets)
+    width = int(lengths[0]) if len(lengths) else 0
+    if (lengths != width).any():
+        raise ValueError(
+            f"score: column {name!r} has rows of different length "
+            f"({int(lengths.min())}..{int(lengths.max())})"
+        )
+    start = int(offsets[0])
+    flat = col.values.slice(start, int(offsets[-1]) - start)
+    return flat.to_numpy(zero_copy_only=False).reshape(len(col), width)
+
+
+def batch_scorer(
+    model_loader: ModelLoader,
+    input_col: str,
+    pass_through: Sequence[str] = (),
+    preprocess: Callable[[np.ndarray], np.ndarray] | None = None,
+    scores_col: str | None = None,
+    pred_col: str = "predicted_label",
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
+    """The ``mapInArrow`` function behind ``score``: RecordBatches in,
+    ``pass_through`` + ``pred_col`` (int64) [+ ``scores_col`` as
+    ``list<double>``] RecordBatches out."""
+    pass_through = list(pass_through)
+    names = [*pass_through, pred_col, *([scores_col] if scores_col else [])]
+    scores_type = pa.list_(pa.field("element", pa.float64()))
+
+    def run_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        cheap_task_start()
+        # Load once per task, before the batch loop — M1's amortization.
+        predict = model_loader()
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            x = batch_matrix(batch.column(input_col), input_col)
+            if preprocess is not None:
+                x = preprocess(x)
+            scores = np.asarray(predict(x), dtype=np.float64)
+            out = [batch.column(c) for c in pass_through]
+            out.append(pa.array(scores.argmax(axis=1).astype(np.int64)))
+            if scores_col:
+                n, k = scores.shape
+                offsets = pa.array(np.arange(0, n * k + 1, k, dtype=np.int32))
+                out.append(
+                    pa.ListArray.from_arrays(offsets, pa.array(scores.ravel()), type=scores_type)
+                )
+            yield pa.RecordBatch.from_arrays(out, names=names)
+
+    return run_batches
+
+
 def score(
     df: DataFrame,
     model_loader: ModelLoader,
@@ -128,10 +195,12 @@ def score(
 ) -> DataFrame:
     """Distributed batch inference over an ``array<float>`` column.
 
-    Plan shape: FileScan → ArrowEvalPython(mapInPandas) — single stage, no
-    shuffle; Catalyst prunes unused columns before the Python boundary
-    (the reference does this pruning by hand, yielding only
-    ``(label, pred)`` before collect — README.md:174).
+    Plan shape: FileScan → MapInArrow — single stage, no shuffle;
+    Catalyst prunes unused columns before the Python boundary (the
+    reference does this pruning by hand, yielding only ``(label, pred)``
+    before collect — README.md:174). Each Arrow batch reaches the model
+    as one zero-copy (rows, width) matrix (``batch_matrix``); the
+    pass-through columns go back as the same Arrow arrays.
 
     Returns ``pass_through`` columns + ``pred_col`` (long, argmax of class
     scores = M2) and optionally the raw score vector.
@@ -141,21 +210,9 @@ def score(
     out_fields.append(f"{pred_col} long")
     if scores_col:
         out_fields.append(f"{scores_col} array<double>")
-    out_schema = ", ".join(out_fields)
-
-    def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Load once per task, before the batch loop — M1's amortization.
-        predict = model_loader()
-        for pdf in batches:
-            x = np.stack(pdf[input_col].to_numpy())
-            if preprocess is not None:
-                x = preprocess(x)
-            scores = np.asarray(predict(x), dtype=np.float64)
-            out = {c: pdf[c] for c in pass_through}
-            out[pred_col] = scores.argmax(axis=1).astype(np.int64)
-            if scores_col:
-                out[scores_col] = list(scores)
-            yield pd.DataFrame(out)
+    run_batches = batch_scorer(
+        model_loader, input_col, pass_through, preprocess, scores_col, pred_col
+    )
 
     cols_needed = [*pass_through, input_col]
     narrow = df.select(*cols_needed)
@@ -172,70 +229,12 @@ def score(
             narrow = narrow.repartition(par)
     elif repartition:
         narrow = narrow.repartition(repartition)
-    return narrow.mapInPandas(run_batches, schema=out_schema)
+    return narrow.mapInArrow(run_batches, schema=", ".join(out_fields))
 
 
 # ---------------------------------------------------------------------------
-# Alternative scoring surfaces
+# Model loaders
 # ---------------------------------------------------------------------------
-def score_with_predict_batch_udf(
-    df: DataFrame,
-    model_loader: ModelLoader,
-    input_col: str,
-    n_features: int,
-    n_classes: int | None = None,
-    pass_through: Sequence[str] = (),
-    preprocess: Callable[[np.ndarray], np.ndarray] | None = None,
-    pred_col: str = "predicted_label",
-    batch_size: int = 1024,
-) -> DataFrame:
-    """M1/M2 via ``pyspark.ml.functions.predict_batch_udf`` (SURVEY §2.3's
-    alternative surface) — same semantics as ``score``: model loaded once
-    per task via ``make_predict_fn``, Arrow-batched inference, argmax
-    postprocess. Column-expression form, so it composes with arbitrary
-    projections; ``score``'s mapInPandas form remains the primary path
-    (it can emit multiple columns without re-invoking the model).
-
-    ``n_features`` is the fixed width of the ``array<float>`` input column:
-    predict_batch_udf treats array columns as tensor columns and requires
-    ``input_tensor_shapes``, so batches arrive as dense (batch, n_features)
-    ndarrays. ``n_classes``, when given, validates the model's score-vector
-    width on the first batch.
-    """
-    from pyspark.ml.functions import predict_batch_udf
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    def make_predict_fn():
-        predict = model_loader()
-
-        def predict_fn(inputs: np.ndarray) -> np.ndarray:
-            x = np.stack(inputs) if inputs.dtype == object else inputs
-            if preprocess is not None:
-                x = preprocess(x)
-            scores = np.asarray(predict(x), dtype=np.float64)
-            if n_classes is not None and scores.shape[1] != n_classes:
-                raise ValueError(
-                    f"model emitted {scores.shape[1]} classes, expected {n_classes}"
-                )
-            return scores
-
-        return predict_fn
-
-    scores_udf = predict_batch_udf(
-        make_predict_fn,
-        return_type=ArrayType(DoubleType()),
-        batch_size=batch_size,
-        input_tensor_shapes=[[n_features]],
-    )
-    from hdinsight_pyspark_cntk_integration_spark.functions.vector import argmax_index
-
-    scored = df.select(*pass_through, scores_udf(F.col(input_col)).alias("_scores"))
-    return scored.select(
-        *pass_through, argmax_index(F.col("_scores")).cast("long").alias(pred_col)
-    )
-
-
 def make_onnx_loader(model_path: str, input_name: str | None = None) -> ModelLoader:
     """ModelLoader for an ONNX model via onnxruntime (the public-runtime
     stand-in for the reference's CNTK ``.dnn`` load, README.md:162-184).

@@ -201,7 +201,8 @@ def lint_plan(df: DataFrame) -> list[str]:
     - ``cartesian``: a CartesianProduct — O(n*m) at scale, almost always
       a missing join key or a forgotten broadcast hint.
     - ``python-row-udf``: a BatchEvalPython node — row-at-a-time Python
-      in the hot path (ArrowEvalPython / mapInPandas are the fast path).
+      in the hot path (ArrowEvalPython / mapInPandas / mapInArrow are the fast
+      path).
     - ``global-window``: a window function over an empty PARTITION BY —
       the whole input flows through ONE task.
     - ``global-sort``: a range-partitioned global Sort that is not a

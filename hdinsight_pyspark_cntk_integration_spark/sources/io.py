@@ -3,8 +3,10 @@
 Covers the reference's sinks (SURVEY.md §2.6): K1 is the single-file CSV
 write with header + overwrite the reference uses for its client bridge
 (reference README.md:95,217 — ``coalesce(1).write.mode("overwrite")
-.csv(path, header=True)``); K2's read-back becomes a plain header/schema
-CSV reader. ``read_binary_files`` is the modern ingest path for opaque
+.csv(path, header=True)``), here written as ``repartition(1)`` so the plan
+upstream of the one output file keeps its parallelism (see
+``write_single_csv``); K2's read-back becomes a plain header/schema CSV
+reader. ``read_binary_files`` is the modern ingest path for opaque
 media blobs (SURVEY.md §2.1 S2): at scale the bytes live on blob storage
 and are read directly, not unpickled on the driver.
 """
@@ -196,13 +198,21 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
 
 
 def write_single_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """K1: deliberate single-partition CSV rewrite (reference README.md:95,217).
+    """K1: deliberate single-file CSV write with a header (reference
+    README.md:95,217).
 
-    ``coalesce(1)`` is an explicit user intent — one output file for a
-    client to read back — not a scale path. For large results use
-    ``write_parquet`` with natural parallelism.
+    One output file for a client to read back is an explicit user
+    intent, not a scale path; for large results use ``write_parquet``
+    with natural parallelism. The reference writes ``coalesce(1)``, but a
+    coalesce adds no shuffle boundary, so Spark collapses the WHOLE
+    upstream plan (scan, Python scoring, everything) into one task on one
+    core. ``repartition(1)`` — the fix Spark's ``coalesce`` docstring
+    recommends for a drastic coalesce — puts an ``Exchange
+    SinglePartition`` in between: the upstream stage keeps one task per
+    input split, and only the final rows (for scoring: the narrow
+    predictions) cross the exchange to the single writer task.
     """
-    df.coalesce(1).write.mode(mode).option("header", True).csv(path)
+    df.repartition(1).write.mode(mode).option("header", True).csv(path)
 
 
 def observed_write(

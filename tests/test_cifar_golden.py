@@ -6,8 +6,9 @@ accuracy + confusion matrix (reference README.md:69-84 ingest,
 211 "XX.XX%", 249 confusion):
 
   tar+pickle archive → DataFrame → real CIFAR-10_mean.xml → P1–P5
-  preprocess → stub linear scorer (mapInPandas, model loaded once per
-  task) → accuracy % + confusion matrix
+  preprocess → stub linear scorer (mapInArrow, model loaded once per
+  task, one zero-copy input matrix per Arrow batch) → accuracy % +
+  confusion matrix
 
 with a deterministic synthetic archive and the stub model standing in
 for resnet20_meanimage_159.dnn (CNTK isn't installable here; the real

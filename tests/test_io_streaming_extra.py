@@ -21,7 +21,7 @@ def test_single_csv_roundtrip(spark, tmp_path, sf_dir):
     out = str(tmp_path / "nation_csv")
     eio.write_single_csv(nation, out)
     files = glob.glob(f"{out}/part-*.csv")
-    assert len(files) == 1  # coalesce(1) => exactly one data file
+    assert len(files) == 1  # repartition(1) => exactly one data file
     back = eio.read_csv(
         spark, out, schema="n_nationkey int, n_name string, n_regionkey int"
     )

@@ -47,7 +47,7 @@ def test_merge_join_hint_respected(spark, sf_dir):
 
 
 def test_scoring_pipeline_shuffle_free_before_agg(spark, sf_dir):
-    """scan → mapInPandas is one stage; only the confusion groupBy (and
+    """scan → mapInArrow is one stage; only the confusion groupBy (and
     the deliberate small-source repartition) may exchange."""
     from hdinsight_pyspark_cntk_integration_spark.operators import scoring as sc
 
@@ -60,7 +60,7 @@ def test_scoring_pipeline_shuffle_free_before_agg(spark, sf_dir):
     )
     assert P.count_shuffles(scored) == 0
     plan = P.formatted_plan(scored)
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
+    assert "ArrowEvalPython" in plan or "MapInPandas" in plan or "MapInArrow" in plan
 
 
 def test_accuracy_is_partial_aggregate(spark, sf_dir):

@@ -15,6 +15,7 @@ Usage: python tools/check_parity.py [--json PATH] [sf_dir] [query ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
@@ -23,7 +24,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from hdinsight_pyspark_cntk_integration_spark import get_spark

@@ -8,9 +8,10 @@ Usage: python tools/dump_plans.py [sf_dir] [out_md]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from hdinsight_pyspark_cntk_integration_spark import get_spark

@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -74,6 +75,6 @@ def build(base: str, out: str, factor: int) -> None:
 
 if __name__ == "__main__":
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/fixtures/x10cust"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "fixtures", "x10cust")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     build(base, out, factor)

@@ -28,7 +28,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from hdinsight_pyspark_cntk_integration_spark import get_spark
 from hdinsight_pyspark_cntk_integration_spark.operators import dedup as dd
@@ -354,7 +355,7 @@ def run(base: str, fixture: str, factor: int, out_json: str,
 
 if __name__ == "__main__":
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    fixture = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/fixtures/x10"
+    fixture = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "fixtures", "x10")
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     out_json = sys.argv[4] if len(sys.argv) > 4 else "SCALING_DATA.json"
     target_set = sys.argv[5] if len(sys.argv) > 5 else "dedup"
