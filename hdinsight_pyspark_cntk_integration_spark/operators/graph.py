@@ -14,10 +14,89 @@ order and its gate would be rows-only; integer PageRank is provable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 _MICRO = 1_000_000
+
+
+def counted_checkpoint(df: DataFrame, agg: Column) -> tuple[DataFrame, int]:
+    """Eager ``localCheckpoint`` of ``df`` plus one aggregate over its
+    rows, read through ``df.observe``: the value arrives with the
+    checkpoint's own jobs, so a fixpoint loop's convergence check costs
+    no extra blocking job per round. An aggregate over zero rows (a
+    ``sum``, say) observes NULL; it reads as 0."""
+    obs = Observation()
+    cp = df.observe(obs, agg.alias("value")).localCheckpoint(eager=True)
+    return cp, obs.get["value"] or 0
+
+
+def symmetric_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Both directed copies (s, d) of every (a, b) edge, de-duplicated
+    and eagerly checkpointed, hash-partitioned on s. Callers that drop
+    self-loops filter ``a != b`` first (which also drops NULL
+    endpoints)."""
+    # ONE explode emits both directions from a single evaluation of the
+    # upstream plan; a two-branch union would derive it twice. The
+    # frame is repartitioned on s BEFORE the distinct: hash(s) clusters
+    # every (s, d) duplicate, so the distinct runs exchange-free and
+    # the one-time layout costs one edge exchange, not two. The
+    # checkpoint keeps the hash(s) layout, so every per-round join or
+    # groupBy on s moves only the node-sized frame, never the edges;
+    # by symmetry, a join on s grouped by d equals one on d grouped by s.
+    return (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(a).alias("s"), F.col(b).alias("d")),
+                    F.struct(F.col(b).alias("s"), F.col(a).alias("d")),
+                )
+            ).alias("__p")
+        )
+        .select("__p.s", "__p.d")
+        .repartition("s")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _undirected_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """One lazy (a, b) row per undirected edge, a < b: reversed and
+    duplicate copies collapse, self-loops and NULL endpoints drop."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(
+            (F.col("a") != F.col("b")) & F.col("a").isNotNull() & F.col("b").isNotNull()
+        )
+        .distinct()
+    )
+
+
+def _bfs_rounds(
+    e: DataFrame, reached: DataFrame, max_hops: int, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Frontier BFS over the s-partitioned edge frame ``e``: ``reached``
+    holds (*keys, node, hop) and grows by one hop per round. Each round
+    joins only the FRONTIER (rows at hop i−1) to the edges on s, then a
+    min-hop partial-agg per (*keys, node); ``localCheckpoint`` keeps
+    round plans constant-size."""
+    for i in range(1, max_hops + 1):
+        frontier = reached.filter(F.col("hop") == i - 1).select(
+            *keys, F.col("node").alias("s")
+        )
+        nxt = frontier.join(e, "s").select(
+            *keys, F.col("d").alias("node"), F.lit(i).cast("int").alias("hop")
+        )
+        reached = (
+            reached.unionByName(nxt)
+            .groupBy(*keys, "node")
+            .agg(F.min("hop").alias("hop"))
+            .localCheckpoint(eager=True)
+        )
+    return reached
 
 
 def pagerank_integer(
@@ -145,14 +224,7 @@ def triangle_count(
     self-join on the apex (one shuffle on u) → closure semi-join of
     wedges against the oriented edge set (one shuffle) → global count.
     """
-    a = F.least(F.col(src), F.col(dst))
-    b = F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(a.alias("a"), b.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    )
+    e = _undirected_pairs(edges, src, dst)
     deg = (
         e.select(F.explode(F.array("a", "b")).alias("n"))
         .groupBy("n")
@@ -214,54 +286,25 @@ def bfs_hops(
     unroll the rounds as CTEs and hash-match (same discipline as
     pagerank_integer above).
 
-    Shape per round: one key-partitioned join of the FRONTIER (only
-    rows at hop i−1, never the whole reached set) against the edge
-    list, then a min-hop partial-agg groupBy. ``localCheckpoint`` after
-    each round truncates lineage so round plans stay constant-size —
-    the same guard dedup.connected_components uses. Rounds = max_hops
-    (a constant), frontier ≤ |V|; at 100 TB the edge list is the only
-    big side and it is shuffled on its join key once per round.
+    Shape per round (the frontier loop shared with
+    ``harmonic_centrality``): one join of the FRONTIER (only rows at
+    hop i−1, never the whole reached set) against the s-partitioned
+    edge list, then a min-hop partial-agg groupBy. ``localCheckpoint``
+    after each round truncates lineage so round plans stay
+    constant-size. Rounds = max_hops (a constant), frontier ≤ |V|; the
+    edge list is the only big side and it is laid out on its join key
+    once, so per round only the frontier moves.
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1 (got {max_hops})")
-    spark = edges.sparkSession
     e = edges.select(F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d"))
     if symmetric:
-        # Optimization r14: symmetrize via ONE explode instead of a
-        # two-branch union (each branch re-derives and re-scans the
-        # source) — see assortativity.
-        e = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("__p")
-        ).select("__p.s", "__p.d")
-    # Optimization r14: hash(s)-partition BEFORE the one-time checkpoint
-    # — distinct's hash(s, d) layout does not satisfy the per-round
-    # frontier join's hash(s) requirement, so every round used to
-    # re-shuffle the full edge list; now only the frontier moves.
-    # Optimization r15: repartition FIRST, then distinct — hash(s)
-    # clusters every (s, d) duplicate into one partition, so the
-    # distinct's aggregate runs exchange-free on the s-layout (subset
-    # rule) and the one-time premium is ONE full-edge exchange, not two.
-    e = e.repartition(F.col("s")).distinct().localCheckpoint()
-    reached = spark.createDataFrame([(int(source), 0)], "node bigint, hop int")
-    for i in range(1, max_hops + 1):
-        frontier = reached.filter(F.col("hop") == i - 1).select(
-            F.col("node").alias("s")
-        )
-        nxt = frontier.join(e, "s").select(
-            F.col("d").alias("node"), F.lit(i).cast("int").alias("hop")
-        )
-        reached = (
-            reached.unionByName(nxt)
-            .groupBy("node")
-            .agg(F.min("hop").alias("hop"))
-            .localCheckpoint()
-        )
-    return reached
+        e = symmetric_edges(e, "s", "d")
+    else:
+        # the symmetric_edges layout, one direction only
+        e = e.repartition("s").distinct().localCheckpoint(eager=True)
+    reached = edges.sparkSession.createDataFrame([(int(source), 0)], "node bigint, hop int")
+    return _bfs_rounds(e, reached, max_hops)
 
 
 def k_core(
@@ -284,68 +327,40 @@ def k_core(
     no broadcast of anything corpus-sized. Rounds are data-bounded
     (degeneracy cascades, usually a handful); the loop stops the first
     round nothing peels and raises if ``max_iters`` exhausts with the
-    cascade still running. ``localCheckpoint`` per round keeps lineage
-    flat. Returns (node, degree) of the surviving core subgraph.
+    cascade still running. Every node of the edge frame has degree
+    >= 1, so "nothing peeled" is exactly "the surviving edge count did
+    not change"; that count is observed by the round's own
+    ``localCheckpoint`` job (:func:`counted_checkpoint`), so the
+    convergence check runs no extra job. Returns (node, degree) of the
+    surviving core subgraph.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1 (got {k})")
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1 (got {max_iters})")
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        # Optimization r14: one-explode symmetrization (see
-        # assortativity) — the old two-branch union re-scanned the
-        # edge source once per direction.
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("__p")
-        )
-        .select("__p.s", "__p.d")
-        # Optimization r15 (repartition-before-checkpoint, the r14
-        # bfs/sssp layout): the surviving-edge frame is kept hash-
-        # partitioned on s across rounds, so the per-round degree count
-        # AND the s-side semi-join reuse the checkpoint's partitioning
-        # (only the node-sized keep frame moves). The d-side semi-join
-        # is the one edge-sized exchange left per round — and its
-        # output, partitioned by d, is re-labeled via the SYMMETRY of
-        # und (the surviving edge set equals its own swap, because an
-        # edge survives iff BOTH endpoints are kept): swapping the
-        # column names yields the same set, already partitioned by the
-        # new s, so no repartition is ever paid again. Previously every
-        # round reshuffled the full edge frame twice (both semi-joins).
-        # repartition BEFORE distinct: the s-layout clusters (s, d)
-        # duplicates, so the distinct runs exchange-free on it.
-        .filter(F.col("s") != F.col("d"))
-        .repartition("s")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cur = und
-    n_nodes = cur.select("s").distinct().count()
+    cur = symmetric_edges(edges.filter(F.col(src) != F.col(dst)), src, dst)
+    n_cur = cur.count()
     for _ in range(max_iters):
-        deg = cur.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select(F.col("s").alias("node"))
-        n_keep = keep.count()
-        if n_keep == n_nodes:
-            return deg.select(F.col("s").alias("node"), F.col("deg").cast("long").alias("degree"))
-        if n_keep == 0:
-            return deg.filter(F.lit(False)).select(
-                F.col("s").alias("node"), F.col("deg").cast("long").alias("degree")
-            )
-        cur = (
+        deg = cur.groupBy(F.col("s").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
+        )
+        keep = deg.filter(F.col("degree") >= k).select("node")
+        # The edge set stays symmetric (an edge survives iff BOTH ends
+        # are kept), so the d-side semi-join's output, partitioned by
+        # d, is relabeled by swapping the columns: the same set, already
+        # partitioned by the new s, for the next round's groupBy and
+        # s-side semi-join.
+        nxt, n_nxt = counted_checkpoint(
             cur.join(keep, cur.s == keep.node, "left_semi")
             .join(keep.withColumnRenamed("node", "node2"), cur.d == F.col("node2"), "left_semi")
-            # swap, not repartition: the set is symmetric and the d-side
-            # semi-join left it partitioned by d — renaming d to s hands
-            # the next round its required layout for free.
-            .select(F.col("d").alias("s"), F.col("s").alias("d"))
-            .localCheckpoint(eager=True)
+            .select(F.col("d").alias("s"), F.col("s").alias("d")),
+            F.count(F.lit(1)),
         )
-        n_nodes = n_keep
+        if n_nxt == n_cur:
+            return deg
+        if n_nxt == 0:
+            return deg.filter(F.lit(False))
+        cur, n_cur = nxt, n_nxt
     raise RuntimeError(f"k_core did not converge within {max_iters} rounds")
 
 
@@ -370,46 +385,24 @@ def label_propagation(
     after exactly ``rounds`` rounds.
 
     Scale shape: per round ONE edge⋈label join hash-partitioned on the
-    neighbor id, one (node, label) partial-agg count, and one max_by
-    argmax per node — frontier is the whole node set (synchronous LPA
-    converges in O(log n) rounds in practice; callers pick ``rounds``).
-    ``localCheckpoint`` per round keeps lineage flat. The deterministic
-    min-tie-break also damps the label oscillation classic async LPA
-    suffers.
+    neighbor id (the edge frame's s; by symmetry each node's neighbor
+    labels are the rows grouped by d), one (node, label) partial-agg
+    count, and one max_by argmax per node — frontier is the whole node
+    set (synchronous LPA converges in O(log n) rounds in practice;
+    callers pick ``rounds``). ``localCheckpoint`` per round keeps
+    lineage flat. The deterministic min-tie-break also damps the label
+    oscillation classic async LPA suffers.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1 (got {rounds})")
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        # Optimization r14: one-explode symmetrization (see
-        # assortativity) — the old two-branch union re-scanned the
-        # edge source once per direction.
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("__p")
-        )
-        .select("__p.s", "__p.d")
-        .filter(F.col("s") != F.col("d"))
-        # Optimization r15: the per-round neighbor join keys on und.d,
-        # so checkpoint the edge frame d-partitioned (the bfs_hops
-        # layout) — only the |nodes|-row label frame moves per round.
-        # repartition BEFORE distinct: the d-layout clusters (s, d)
-        # duplicates, so the distinct runs exchange-free on it.
-        .repartition(F.col("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = symmetric_edges(edges.filter(F.col(src) != F.col(dst)), src, dst)
     labels = und.select(F.col("s").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
     for _ in range(rounds):
         nbr = (
-            und.join(labels, und.d == labels.node)
-            .select(F.col("s").alias("node"), "label")
+            und.join(labels, und.s == labels.node)
+            .select(F.col("d").alias("node"), "label")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -458,8 +451,6 @@ def adamic_adar(
 
     Returns (a, b, n_common, aa_micro) with a < b.
     """
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
     # e is referenced FIVE times downstream (both adjacency directions,
     # through deg/apex twice each, and the anti-join) and each
     # reference re-derives the whole upstream plan — for a gate graph
@@ -467,13 +458,7 @@ def adamic_adar(
     # materialized at sf0.1. The canonical edge set is the bounded
     # intermediate; localCheckpoint collapses it to one derivation
     # (the theil_sen / repeated_passages_maximal pattern).
-    e = (
-        edges.select(lo.alias("a"), hi.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected_pairs(edges, src, dst).localCheckpoint(eager=True)
     adj = e.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
         e.select(F.col("b").alias("z"), F.col("a").alias("x"))
     )
@@ -527,8 +512,9 @@ def harmonic_centrality(
     H is then a pure integer sum, order-independent (the
     pagerank_integer/adamic_adar discipline).
 
-    Scale shape: per round ONE frontier⋈edges join hash-partitioned on
-    the node and one min-hop partial-agg on (source, node);
+    Scale shape (the ``bfs_hops`` frontier loop, keyed by source): per
+    round ONE frontier⋈edges join hash-partitioned on the node and one
+    min-hop partial-agg on (source, node);
     ``localCheckpoint`` per round keeps lineage flat. State is
     O(Σ |B(u, max_hops)|) pairs — the inherent cost of all-sources
     BFS; ``max_hops`` is the radius bound that keeps it tractable
@@ -541,48 +527,11 @@ def harmonic_centrality(
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1 (got {max_hops})")
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        # Optimization r14: one-explode symmetrization (see
-        # assortativity) — the old two-branch union re-scanned the
-        # edge source once per direction.
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("__p")
-        )
-        .select("__p.s", "__p.d")
-        .filter(F.col("s") != F.col("d"))
-        .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
-        # Optimization r14: s-partitioned before the one-time
-        # checkpoint so the per-round frontier join reuses the edge
-        # layout instead of re-shuffling the edge list every round
-        # (see bfs_hops). r15: repartition BEFORE distinct — the
-        # s-layout clusters (s, d) duplicates, so the distinct runs
-        # exchange-free and the layout premium is one exchange, not two.
-        .repartition(F.col("s"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = symmetric_edges(edges.filter(F.col(src) != F.col(dst)), src, dst)
     reached = und.select(F.col("s").alias("source")).distinct().select(
         "source", F.col("source").alias("node"), F.lit(0).cast("int").alias("hop")
     ).localCheckpoint(eager=True)
-    for i in range(1, max_hops + 1):
-        frontier = reached.filter(F.col("hop") == i - 1).select(
-            "source", F.col("node").alias("s")
-        )
-        nxt = frontier.join(und, "s").select(
-            "source", F.col("d").alias("node"), F.lit(i).cast("int").alias("hop")
-        )
-        reached = (
-            reached.unionByName(nxt)
-            .groupBy("source", "node")
-            .agg(F.min("hop").alias("hop"))
-            .localCheckpoint(eager=True)
-        )
+    reached = _bfs_rounds(und, reached, max_hops, keys=("source",))
     term = F.floor(F.lit(1_000_000.0) / F.col("hop").cast("double")).cast("long")
     return (
         reached.filter(F.col("hop") > 0)
@@ -631,11 +580,8 @@ def hierarchy_rollup(
     e = edges.select(
         F.col(child).alias("__c"), F.col(parent).alias("__p")
     ).filter(F.col("__c").isNotNull() & F.col("__p").isNotNull())
-    # Optimization r14: child-partitioned before the one-time
-    # checkpoint — the per-round lift joins on __c, so only the
-    # frontier moves per round (see bfs_hops). r15: repartition BEFORE
-    # distinct — the __c layout clusters (__c, __p) duplicates, so the
-    # distinct runs exchange-free (one layout exchange, not two).
+    # the symmetric_edges layout, keyed on __c: the per-round lift
+    # joins on __c, so only the frontier moves per round
     e = e.repartition(F.col("__c")).distinct().localCheckpoint(eager=True)
     base = values.select(
         F.col(node).alias("__n"), F.col(value).cast("long").alias("__v")
@@ -714,8 +660,9 @@ def sssp_weighted(
     whose dist improved last round, never the whole reached set) joins
     the edge list on its key, one min-dist partial agg, one merge
     against the running dist table; ``localCheckpoint`` keeps round
-    plans flat. Early exit at fixpoint (one bounded driver-side
-    isEmpty per round, <= max_rounds of them).
+    plans flat. Early exit at fixpoint: the improved-row count is
+    observed by the frontier's own checkpoint job
+    (:func:`counted_checkpoint`), so the check runs no extra job.
 
     Returns (node, dist).
     """
@@ -737,12 +684,8 @@ def sssp_weighted(
         .filter(
             F.col("s").isNotNull() & F.col("d").isNotNull() & F.col("w").isNotNull()
         )
-        # Optimization r14: s-partitioned before the one-time checkpoint
-        # so the per-round frontier join reuses the edge layout instead
-        # of re-shuffling the edge list every round (see bfs_hops).
-        # r15: repartition BEFORE the min-weight groupBy — the s-layout
-        # clusters every (s, d) group, so the aggregate runs
-        # exchange-free (one layout exchange, not two).
+        # the symmetric_edges layout: the per-round frontier join keys
+        # on s, and the min-weight aggregate runs exchange-free on it
         .repartition(F.col("s"))
         .groupBy("s", "d")
         .agg(F.min("w").alias("w"))
@@ -758,17 +701,17 @@ def sssp_weighted(
             .groupBy(F.col("d").alias("node"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
         )
-        improved = (
+        improved, n_improved = counted_checkpoint(
             cand.join(
                 dist.select("node", F.col("dist").alias("__old")),
                 "node",
                 "left",
             )
             .filter(F.col("__old").isNull() | (F.col("dist") < F.col("__old")))
-            .select("node", "dist")
-            .localCheckpoint(eager=True)
+            .select("node", "dist"),
+            F.count(F.lit(1)),
         )
-        if improved.isEmpty():
+        if n_improved == 0:
             break
         dist = (
             dist.unionByName(improved)
@@ -800,59 +743,37 @@ def assortativity(
     expression, micro-floored. Regular graphs (zero degree variance)
     emit nothing — r is undefined.
 
-    Shape: one degree partial-agg, two node-keyed joins back to the
-    edge list, one moments aggregate — everything hash-partitioned on
-    node ids, nothing broadcast but the final one-row frame.
+    Shape: one degree partial-agg, one node-keyed join of the degrees
+    back onto the edge list, one degree-table-sized join, one moments
+    aggregate — everything hash-partitioned on node ids, nothing
+    broadcast but the final one-row frame.
 
     Returns one row (n_nodes, n_edges, r_micro) — n_edges counts
     UNDIRECTED edges.
     """
     dec = "decimal(38,0)"
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
-        )
-        .filter(
-            F.col("s").isNotNull() & F.col("d").isNotNull()
-            & (F.col("s") != F.col("d"))
-        )
+    e = edges.select(
+        F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
     )
-    # Optimization r14: symmetrize via ONE explode instead of a
-    # two-branch union — the union's branches each re-derive (and
-    # re-scan) the source; explode(array(fwd, rev)) emits both ordered
-    # pairs from a single pass (measured: und build 7.8 → 5.8 s CPU,
-    # 4.3 → 2.8 s wall at sf0.1).
-    und = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("__p")
-        )
-        .select("__p.s", "__p.d")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Optimization r14 — symmetric-pair moment identities. Over the
-    # symmetrized ordered-pair stream, node s appears as source exactly
-    # deg(s) times, so Σ_pairs 1 = Σ deg, Σ_pairs deg(s) = Σ deg²,
+    und = symmetric_edges(e.filter(F.col("s") != F.col("d")), "s", "d")
+    # Symmetric-pair moment identities: over the symmetrized
+    # ordered-pair stream, node s appears as source exactly deg(s)
+    # times, so Σ_pairs 1 = Σ deg, Σ_pairs deg(s) = Σ deg²,
     # Σ_pairs deg(s)² = Σ deg³, and by symmetry the y-moments equal the
     # x-moments EXACTLY (same decimal sums of the same multiset). Only
     # the cross moment needs the edge list: Σ_pairs deg(s)·deg(d)
-    # = Σ_s deg(s)·(Σ_{d∈N(s)} deg(d)) — ONE node-keyed join to fetch
-    # neighbor degrees plus one degree-table-sized join, instead of the
-    # former TWO full edge-list joins (and the degree table, referenced
-    # three ways, is checkpointed — it was re-aggregated per reference).
+    # = Σ_d deg(d)·(Σ_{s∈N(d)} deg(s)) — one join of the degree table
+    # onto the s-partitioned edges, grouped by d, plus one
+    # degree-table-sized join. The degree table is referenced three
+    # ways, so it is checkpointed.
     deg = (
         und.groupBy(F.col("s").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         .localCheckpoint(eager=True)
     )
     nbr = (
-        und.join(deg.select(F.col("node").alias("d"), F.col("deg").alias("__dy")), "d")
-        .groupBy("s")
+        und.join(deg.select(F.col("node").alias("s"), F.col("deg").alias("__dy")), "s")
+        .groupBy(F.col("d").alias("s"))
         .agg(F.sum(F.col("__dy").cast(dec)).cast(dec).alias("__u"))
     )
     cross = (
@@ -925,15 +846,7 @@ def jaccard_neighbors(
 
     Returns (a, b, n_common, deg_a, deg_b, jaccard_micro), a < b.
     """
-    lo = F.least(F.col(src), F.col(dst))
-    hi = F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(lo.alias("a"), hi.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected_pairs(edges, src, dst).localCheckpoint(eager=True)
     adj = e.select(F.col("a").alias("z"), F.col("b").alias("x")).unionByName(
         e.select(F.col("b").alias("z"), F.col("a").alias("x"))
     )
@@ -1079,7 +992,9 @@ def k_truss(
     under-supported edges; deletions cascade (removing one edge can
     starve another), so the loop runs to fixpoint with an early-exit
     count per round — O(rounds) bounded by ``max_rounds`` with a loud
-    RuntimeError on exhaustion, never a silent partial truss.
+    RuntimeError on exhaustion, never a silent partial truss. The
+    surviving-edge count is observed by the round's own checkpoint job
+    (:func:`counted_checkpoint`), so the check runs no extra job.
 
     Input undirected (dups/reversed collapse, self-loops drop).
     Support counting per round: orient each edge low→high by id (the
@@ -1093,14 +1008,7 @@ def k_truss(
         raise ValueError(f"k must be >= 3 (got {k})")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1 (got {max_rounds})")
-    lo, hi = F.least("src", "dst"), F.greatest("src", "dst")
-    cur = (
-        edges.select(lo.alias("a"), hi.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cur, n_cur = counted_checkpoint(_undirected_pairs(edges, "src", "dst"), F.count(F.lit(1)))
     need = k - 2
     for _ in range(max_rounds):
         x = cur.select(F.col("a").alias("u"), F.col("b").alias("p"))
@@ -1122,23 +1030,19 @@ def k_truss(
         support = edge_hits.groupBy("a", "b").agg(
             F.count(F.lit(1)).cast("long").alias("support")
         )
-        kept = (
+        kept, n_kept = counted_checkpoint(
             cur.join(support, ["a", "b"], "left")
             .select(
                 "a", "b",
                 F.coalesce(F.col("support"), F.lit(0)).cast("long").alias("support"),
             )
-            .filter(F.col("support") >= need)
-            .localCheckpoint(eager=True)
+            .filter(F.col("support") >= need),
+            F.count(F.lit(1)),
         )
-        n_kept, n_cur = kept.count(), cur.count()
-        # kept is already materialized; the projection is free on top of
-        # its checkpoint — no second materialization
-        cur = kept.select("a", "b")
-        if n_kept == n_cur:
+        if n_kept in (n_cur, 0):
             return kept
-        if n_kept == 0:
-            return kept
+        # the projection is free on top of kept's checkpoint
+        cur, n_cur = kept.select("a", "b"), n_kept
     raise RuntimeError(
         f"k_truss did not converge within {max_rounds} rounds"
     )

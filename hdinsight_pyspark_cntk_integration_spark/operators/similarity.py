@@ -500,23 +500,14 @@ def pq_train_codebooks(
         .collect()
     )
     X = np.asarray([r["v"] for r in sample], dtype=np.float64)
-    n, d = X.shape
+    _, d = X.shape
     if d % m_subvectors:
         raise ValueError(f"dim {d} not divisible by m_subvectors={m_subvectors}")
     sub = d // m_subvectors
     rng = np.random.default_rng(seed)
     books = np.empty((m_subvectors, k_codes, sub), dtype=np.float64)
     for m in range(m_subvectors):
-        Xm = X[:, m * sub : (m + 1) * sub]
-        cent = Xm[rng.choice(n, size=k_codes, replace=False)].copy()
-        for _ in range(iters):
-            d2 = ((Xm[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(k_codes):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = Xm[mask].mean(axis=0)
-        books[m] = cent
+        books[m] = _kmeans_np(X[:, m * sub : (m + 1) * sub], k_codes, iters, rng)
     return books
 
 

@@ -690,3 +690,231 @@ def test_reciprocity_fully_reciprocal(spark):
     df = spark.createDataFrame([(0, 1), (1, 0)], "src long, dst long")
     [r] = gr.reciprocity(df).collect()
     assert r["reciprocity_micro"] == 1_000_000
+
+
+# --- counted_checkpoint and the loops built on it ------------------------
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_counted_checkpoint_matches_count_and_conditional_sum(spark):
+    df = spark.range(200).select((F.col("id") % 13).alias("s")).repartition("s")
+    cp, n = gr.counted_checkpoint(df, F.count(F.lit(1)))
+    assert n == df.count() == cp.count() == 200
+    _, n_small = gr.counted_checkpoint(df, F.sum((F.col("s") < 5).cast("long")))
+    assert n_small == df.filter(F.col("s") < 5).count()
+    assert sorted(r["s"] for r in cp.collect()) == sorted(r["s"] for r in df.collect())
+
+
+def test_counted_checkpoint_empty_frame_reads_zero(spark):
+    empty = spark.createDataFrame([], "s long")
+    for agg in (F.count(F.lit(1)), F.sum("s"), F.count_if(F.col("s") > 0)):
+        cp, n = gr.counted_checkpoint(empty, agg)
+        assert n == 0 and n is not None
+        assert cp.count() == 0
+
+
+def test_counted_checkpoint_runs_no_extra_job(spark):
+    df = (
+        spark.range(500)
+        .select((F.col("id") % 37).alias("s"), (F.col("id") % 11).alias("d"))
+        .repartition("s")
+        .distinct()
+    )
+    _, bare = _jobs_in_group(spark, "cc-bare", lambda: df.localCheckpoint(eager=True))
+    (_, n), counted = _jobs_in_group(
+        spark, "cc-counted", lambda: gr.counted_checkpoint(df, F.count(F.lit(1)))
+    )
+    assert n == 407
+    assert bare >= 1
+    assert counted == bare
+
+
+def _py_components(edges):
+    """node -> smallest node id in its connected component."""
+    comp = {}
+    for s, d in edges:
+        comp.setdefault(s, s)
+        comp.setdefault(d, d)
+    changed = True
+    while changed:
+        changed = False
+        for s, d in edges:
+            low = min(comp[s], comp[d])
+            if comp[s] != low or comp[d] != low:
+                comp[s] = comp[d] = low
+                changed = True
+    return comp
+
+
+def test_loops_invariant_to_partition_count_without_aqe(spark):
+    import random
+
+    from hdinsight_pyspark_cntk_integration_spark.operators import dedup as dd
+
+    rng = random.Random(3)
+    edges = [(rng.randrange(14), rng.randrange(14)) for _ in range(40)]
+    edges += [(i, i + 1) for i in range(20, 40)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    pairs = df.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+
+    def run():
+        return (
+            sorted(tuple(r) for r in gr.k_core(df, k=2).collect()),
+            sorted(tuple(r) for r in gr.label_propagation(df, rounds=3).collect()),
+            sorted(tuple(r) for r in dd.connected_components(pairs).collect()),
+        )
+
+    conf = spark.conf
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: conf.get(k) for k in keys}
+    got = {}
+    try:
+        conf.set("spark.sql.adaptive.enabled", "false")
+        for parts in (1, 7):
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+            got[parts] = run()
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+    assert got[1] == got[7]
+    core, labels, comps = got[1]
+    assert dict(core) == _py_k_core(edges, 2)
+    assert dict(labels) == _py_lpa(edges, 3)
+    assert dict(comps) == _py_components(edges)
+
+
+def _py_k_core(edges, k):
+    """Reference peeling over the undirected simple graph."""
+    nbrs: dict[int, set] = {}
+    for s, d in edges:
+        if s != d:
+            nbrs.setdefault(s, set()).add(d)
+            nbrs.setdefault(d, set()).add(s)
+    while True:
+        low = {n for n, ns in nbrs.items() if len(ns) < k}
+        if not low:
+            return {n: len(ns) for n, ns in nbrs.items()}
+        nbrs = {n: ns - low for n, ns in nbrs.items() if n not in low}
+        nbrs = {n: ns for n, ns in nbrs.items() if ns}
+
+
+def test_k_core_asymmetric_degrees_column_swap_invariant(spark):
+    """Each undirected edge is listed once, oriented so that out- and
+    in-degrees differ wildly (a hub that only emits, leaves that only
+    receive). k_core relabels the d-side semi-join's output as the next
+    round's s, which is only sound because the edge set is symmetric:
+    the core must match the reference and not depend on which column
+    holds which endpoint."""
+    hub = [(0, i) for i in range(1, 9)]
+    ring = [(i, i % 8 + 1) for i in range(1, 9)]
+    chords = [(1, 5), (2, 6), (3, 7)]
+    tail = [(20, 8), (21, 20), (21, 8)]
+    edges = hub + ring + chords + tail + [(5, 1), (4, 4)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    swapped = df.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    for k in (1, 3, 4):
+        want = _py_k_core(edges, k)
+        got = {r["node"]: r["degree"] for r in gr.k_core(df, k=k).collect()}
+        assert got == want, k
+        got_swapped = {r["node"]: r["degree"] for r in gr.k_core(swapped, k=k).collect()}
+        assert got_swapped == want, k
+    assert _py_k_core(edges, 3) and not _py_k_core(edges, 4)
+
+
+def _empty_cases():
+    from hdinsight_pyspark_cntk_integration_spark.operators import dedup as dd
+
+    return {
+        "bfs_hops": (lambda e: gr.bfs_hops(e, 0, 2), "node bigint, hop int", [(0, 0)]),
+        "bfs_hops_directed": (
+            lambda e: gr.bfs_hops(e, 0, 2, symmetric=False), "node bigint, hop int", [(0, 0)]
+        ),
+        "k_core": (lambda e: gr.k_core(e, 2), "node bigint, degree bigint", []),
+        "label_propagation": (
+            lambda e: gr.label_propagation(e, 2), "node bigint, label bigint", []
+        ),
+        "harmonic_centrality": (
+            lambda e: gr.harmonic_centrality(e, 2),
+            "node bigint, n_reached bigint, harmonic_micro bigint",
+            [],
+        ),
+        "assortativity": (
+            gr.assortativity, "n_nodes bigint, n_edges bigint, r_micro bigint", []
+        ),
+        "triangle_count": (
+            gr.triangle_count,
+            "n_nodes bigint, n_edges bigint, n_triangles bigint",
+            [(0, 0, 0)],
+        ),
+        "adamic_adar": (
+            gr.adamic_adar, "a bigint, b bigint, n_common bigint, aa_micro bigint", []
+        ),
+        "jaccard_neighbors": (
+            gr.jaccard_neighbors,
+            "a bigint, b bigint, n_common bigint, deg_a bigint, deg_b bigint,"
+            " jaccard_micro bigint",
+            [],
+        ),
+        "k_truss": (gr.k_truss, "a bigint, b bigint, support bigint", []),
+        "sssp_weighted": (
+            lambda e: gr.sssp_weighted(e.withColumn("weight", F.lit(1).cast("long")), [0], 2),
+            "node bigint, dist bigint",
+            [(0, 0)],
+        ),
+        "connected_components": (
+            lambda e: dd.connected_components(e, id_a="src", id_b="dst"),
+            "node bigint, component bigint",
+            [],
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_empty_cases()))
+def test_rewritten_loops_on_empty_edges(spark, name):
+    """Every operator on the shared edge build / BFS loop / counted
+    checkpoint returns defined rows on an empty edge frame (an observed
+    aggregate over zero rows is NULL, and must read as 0)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    fn, schema, rows = _empty_cases()[name]
+    out = fn(spark.createDataFrame([], "src long, dst long"))
+    assert out.schema.simpleString() == _parse_datatype_string(schema).simpleString()
+    assert sorted(tuple(r) for r in out.collect()) == rows
+
+
+def test_k_core_then_classifier_in_one_session(spark):
+    """k_core touches the session's Observation machinery; a logistic
+    regression fitted and scored afterwards in the same session must
+    still serialize its transform() closure."""
+    import numpy as np
+
+    from hdinsight_pyspark_cntk_integration_spark import ml as eml
+    from hdinsight_pyspark_cntk_integration_spark.operators import relational as rel
+
+    clique = [(a, b) for a in range(4) for b in range(4) if a < b]
+    core = gr.k_core(spark.createDataFrame(clique, "src long, dst long"), k=3)
+    assert core.count() == 4
+
+    rng = np.random.default_rng(5)
+    x = rng.normal(0, 1, size=(120, 4))
+    y = (x[:, 0] > 0).astype(int)
+    x[:, 0] += np.where(y == 1, 2.0, -2.0)
+    df = spark.createDataFrame(
+        [(x[i].astype(float).tolist(), int(y[i])) for i in range(len(y))],
+        "embedding array<float>, label int",
+    )
+    model = eml.fit_classifier(df, max_iter=20)
+    acc = rel.accuracy(eml.score_with_model(model, df), "label", "predicted_label").collect()[0]
+    assert acc["num_total"] == 120
+    assert acc["num_correct"] >= 115
