@@ -1,21 +1,34 @@
-"""Two-sample nonparametric statistics, distributed (SURVEY.md §2.7
-statistics family — next to the moments/correlation and contingency
-operators): Mann-Whitney U (rank-sum) and Kolmogorov-Smirnov D.
+"""Distributed statistics (SURVEY.md §2.7 statistics family): moments,
+correlation, contingency, agreement, drift, time-series and rank tests.
 
-Both statistics are textbook-defined over GLOBAL ranks / empirical CDFs,
-and the naive implementation is a global row-level sort — the 100 TB
-antipattern. Both are computed here from the DISTINCT-VALUE aggregate
-instead: one partial-agg shuffle collapses the table to (value,
-count_per_group) rows — bounded by the value DOMAIN, not the row count —
-and the only window runs over that aggregate. Average-rank tie handling
-falls out exactly: every row sharing value v has rank
-cum_before(v) + (count(v)+1)/2.
+The rank and two-sample operators share three private helpers instead
+of each re-deriving global ranks. A global rank is textbook-defined
+over a row-level sort — the 100 TB antipattern — so every one of them
+reads a DISTINCT-VALUE aggregate instead (one partial-agg shuffle,
+bounded by the value DOMAIN, not the row count) and the only window
+runs over that aggregate:
 
-Exactness: counts are integers; average ranks are half-integers (exact
-in fp64 far beyond any realistic cardinality); U is a sum of
-count×half-integer products — exact, order-independent, hash-gate-safe.
-The KS statistic is a max over per-value deterministic fp expressions —
-also order-independent.
+- ``_two_group_value_counts`` is the one table the two-group
+  operators read (mann_whitney_u, auc, ks_statistic, cliffs_delta,
+  wasserstein_1d, tv_distance, hellinger_distance, cvm_distance,
+  ad_distance, brunner_munzel): per distinct non-NULL value the two
+  group counts, their running counts in value order and the two group
+  totals, which are the table's own column sums.
+- ``_doubled_midrank`` is the one midrank window. Average ranks are
+  half-integers, so every rank statistic carries them DOUBLED:
+  ``2·cum_before + count + 1``, a BIGINT.
+- ``_pooled_rank_sums`` is the k-group rank table of kruskal_wallis
+  and dunn_test: per-group doubled rank sums over pooled ranks, plus
+  the pooled count and tie sum.
+
+NULL policy: NULL values (and NULL groups) are dropped by every rank
+and two-sample operator. Degenerate input (empty, one group empty,
+all values NULL) reports zero counts and a NULL statistic wherever the
+statistic's denominator is 0.
+
+Exactness: counts and doubled ranks are integers; sums of their
+products are exact (in DECIMAL, or in fp64 below 2^53), so results do
+not depend on summation order or partitioning — hash-gate-safe.
 """
 
 from __future__ import annotations
@@ -24,15 +37,87 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _doubled_midrank(count, order, *partition) -> Column:
+    """Twice the average rank of a block of ``count`` tied rows in a
+    distinct-value table: ``2·Σ count over the rows before + count + 1``
+    as a BIGINT, ranked in ``order`` within ``partition`` (global when
+    no partition is given). ``count`` is a column or column name."""
+    c = F.col(count) if isinstance(count, str) else count
+    w = (
+        Window.partitionBy(*partition)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return (
+        F.lit(2) * F.coalesce(F.sum(c).over(w), F.lit(0)) + c + F.lit(1)
+    ).cast("long")
+
+
 def _two_group_value_counts(
     df: DataFrame, group_col: str, value_col: str, group_a, group_b
 ) -> DataFrame:
-    """(value, n_a, n_b) per distinct value across the two groups."""
-    sub = df.filter(F.col(group_col).isin([group_a, group_b]))
-    return sub.groupBy(F.col(value_col).alias("v")).agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).alias("n_b"),
+    """The value-count table of two groups: one row per distinct
+    non-NULL value ``v`` with the group counts ``n_a``/``n_b``, the
+    running counts ``cum_a``/``cum_b`` up to and including ``v``, and
+    the group totals ``tot_a``/``tot_b`` on every row. NULL values and
+    NULL groups drop. The totals are a 1-row aggregate of this same
+    table (AQE reuses its exchange, so the rows are read once); the
+    running-count window is pruned by the optimizer when unused."""
+    g = F.col(group_col)
+    vc = (
+        df.filter(g.isin([group_a, group_b]) & F.col(value_col).isNotNull())
+        .groupBy(F.col(value_col).alias("v"))
+        .agg(
+            F.sum((g == group_a).cast("long")).alias("n_a"),
+            F.sum((g == group_b).cast("long")).alias("n_b"),
+        )
     )
+    tot = vc.agg(F.sum("n_a").alias("tot_a"), F.sum("n_b").alias("tot_b"))
+    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    return vc.crossJoin(F.broadcast(tot)).select(
+        "v",
+        "n_a",
+        "n_b",
+        F.sum("n_a").over(w).alias("cum_a"),
+        F.sum("n_b").over(w).alias("cum_b"),
+        "tot_a",
+        "tot_b",
+    )
+
+
+def _group_totals() -> list:
+    """The ``(n_a, n_b)`` cells of a 1-row reduce over the value-count
+    table: the two group totals, 0 for an empty table."""
+    return [
+        F.coalesce(F.max("tot_a"), F.lit(0)).cast("long").alias("n_a"),
+        F.coalesce(F.max("tot_b"), F.lit(0)).cast("long").alias("n_b"),
+    ]
+
+
+def _pooled_rank_sums(
+    df: DataFrame, group_col: str, value_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The k-group rank tables ``(per_g, pooled)``: ``per_g`` has one
+    row per group ``g`` with its size ``n_g`` and doubled rank sum
+    ``r2_g = Σ_v n_gv·r2_v`` over POOLED doubled midranks; ``pooled``
+    is one row with the pooled size ``n`` and tie sum
+    ``tie_num = Σ_v (t_v³ − t_v)``. NULL groups and NULL values drop."""
+    gv = (
+        df.filter(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
+        .groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
+        .agg(F.count("*").cast("long").alias("n_gv"))
+    )
+    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
+    ranks = tv.select("v", _doubled_midrank("t", "v").alias("r2"))
+    pooled = tv.agg(
+        F.sum("t").cast("long").alias("n"),
+        F.sum(F.expr("CAST(t AS DECIMAL(38,0)) * t * t - t")).alias("tie_num"),
+    )
+    per_g = gv.join(ranks, "v").groupBy("g").agg(
+        F.sum("n_gv").cast("long").alias("n_g"),
+        F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
+    )
+    return per_g, pooled
 
 
 def mann_whitney_u(
@@ -44,28 +129,20 @@ def mann_whitney_u(
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) for two groups, with exact
     average-rank tie handling, computed WITHOUT a global row sort: the
-    window ordering runs over the distinct-value aggregate. Returns one
-    row (n_a, n_b, u_a, u_b) — u_a + u_b == n_a·n_b is the built-in
+    midrank window runs over the two-group value-count table. Returns
+    one row (n_a, n_b, u_a, u_b) — u_a + u_b == n_a·n_b is the built-in
     self-check (asserted in pytest). The z-approximation is left to the
     caller: its tie-corrected variance adds nothing to the distributed
-    story and everything emitted here is exact.
+    story and everything emitted here is exact. NULL values drop; an
+    empty group gives u_a = u_b = 0.
     """
     vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    tot = (F.col("n_a") + F.col("n_b")).cast("double")
-    cum_before = F.coalesce(
-        F.sum(F.col("n_a") + F.col("n_b")).over(w), F.lit(0)
-    ).cast("double")
-    avg_rank = cum_before + (tot + F.lit(1.0)) / F.lit(2.0)
-    agg = vc.select(
-        "n_a", "n_b", (F.col("n_a").cast("double") * avg_rank).alias("ra_part")
-    ).agg(
-        F.sum("n_a").cast("long").alias("n_a"),
-        F.sum("n_b").cast("long").alias("n_b"),
-        F.sum("ra_part").alias("r_a"),
+    r2 = _doubled_midrank(F.col("n_a") + F.col("n_b"), "v")
+    agg = vc.select("tot_a", "tot_b", (F.col("n_a") * r2).alias("__ra")).agg(
+        *_group_totals(), F.coalesce(F.sum("__ra"), F.lit(0)).alias("r2_a")
     )
     n_a, n_b = F.col("n_a").cast("double"), F.col("n_b").cast("double")
-    u_a = F.col("r_a") - n_a * (n_a + F.lit(1.0)) / F.lit(2.0)
+    u_a = F.col("r2_a") / F.lit(2.0) - n_a * (n_a + F.lit(1.0)) / F.lit(2.0)
     return agg.select(
         F.col("n_a"),
         F.col("n_b"),
@@ -84,25 +161,17 @@ def ks_statistic(
     """Two-sample Kolmogorov-Smirnov statistic D = max |F_a(v) − F_b(v)|
     over the pooled distinct values — the distribution-shift detector
     (train-vs-serve drift, corpus-version drift on a numeric feature).
-    Same distinct-value shape as the U test: empirical CDFs are running
-    integer counts over the value aggregate divided by exact totals;
-    the max of deterministic per-value fp64 expressions is
-    order-independent, so the gate hash-matches.
+    Empirical CDFs are the running counts of the value-count table
+    divided by its exact totals; the max of deterministic per-value
+    fp64 expressions is order-independent, so the gate hash-matches.
+    NULL values drop; ks_d is NULL when a group is empty.
     """
     vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cum_a = F.sum("n_a").over(w).cast("double")
-    cum_b = F.sum("n_b").over(w).cast("double")
-    totals = vc.agg(
-        F.sum("n_a").cast("long").alias("ta"), F.sum("n_b").cast("long").alias("tb")
-    ).head()
-    ta, tb = float(totals["ta"]), float(totals["tb"])
-    diff = F.abs(cum_a / F.lit(ta) - cum_b / F.lit(tb))
-    return vc.select(diff.alias("d")).agg(
-        F.lit(int(ta)).cast("long").alias("n_a"),
-        F.lit(int(tb)).cast("long").alias("n_b"),
-        F.max("d").alias("ks_d"),
+    diff = F.abs(
+        F.col("cum_a") / F.nullif("tot_a", F.lit(0))
+        - F.col("cum_b") / F.nullif("tot_b", F.lit(0))
     )
+    return vc.agg(*_group_totals(), F.max(diff).alias("ks_d"))
 
 
 def spearman_corr(
@@ -131,17 +200,8 @@ def spearman_corr(
         vc = df.groupBy(group_col, F.col(col).alias("v")).agg(
             F.count(F.lit(1)).alias("c")
         )
-        w = (
-            Window.partitionBy(group_col)
-            .orderBy("v")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        cum_before = F.coalesce(F.sum("c").over(w), F.lit(0))
-        return vc.select(
-            group_col,
-            F.col("v"),
-            (F.lit(2) * cum_before + F.col("c") + F.lit(1)).cast("long").alias(out),
-        )
+        r2 = _doubled_midrank("c", "v", group_col)
+        return vc.select(group_col, "v", r2.alias(out))
     rx = doubled_ranks(x_col, "r2x")
     ry = doubled_ranks(y_col, "r2y")
     joined = (
@@ -1435,49 +1495,25 @@ def auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     """ROC AUC, exactly, without a global row sort: AUC is the
     probability a random positive outscores a random negative, i.e.
     the Mann-Whitney U of the positive class normalized by
-    n_pos·n_neg — so it computes from the DISTINCT-SCORE aggregate
-    with average-rank tie handling (ties contribute 1/2), the same
-    bounded-domain shape as ``mann_whitney_u`` (stats.py:38).
+    n_pos·n_neg — so it is ``mann_whitney_u`` with the label cast to
+    boolean as the group (True vs False), average-rank ties
+    contributing 1/2.
 
-    Exactness: counts are integers; average ranks are half-integers
-    (exact in fp64); U is a sum of count×half-integer products; AUC is
-    one final double ratio, micro-floored. NULL scores/labels drop.
+    Exactness: U is exact (doubled midranks are integers); AUC is one
+    final double ratio, micro-floored. NULL scores/labels drop.
     Degenerate inputs (no positives or no negatives) emit nothing.
-
-    Shape: one partial-agg groupBy collapsing rows to distinct score
-    values; the only window runs over that aggregate (bounded by the
-    score DOMAIN, never the row count).
 
     Returns one row (n_pos, n_neg, auc_micro).
     """
-    vc = (
-        df.filter(F.col(score_col).isNotNull() & F.col(label_col).isNotNull())
-        .groupBy(F.col(score_col).alias("v"))
-        .agg(
-            F.sum(F.when(F.col(label_col).cast("boolean"), 1).otherwise(0))
-            .cast("long").alias("n_p"),
-            F.sum(F.when(F.col(label_col).cast("boolean"), 0).otherwise(1))
-            .cast("long").alias("n_n"),
-        )
-    )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    tot = (F.col("n_p") + F.col("n_n")).cast("double")
-    cum_before = F.coalesce(
-        F.sum(F.col("n_p") + F.col("n_n")).over(w), F.lit(0)
-    ).cast("double")
-    avg_rank = cum_before + (tot + F.lit(1.0)) / F.lit(2.0)
-    agg = vc.select(
-        "n_p", "n_n", (F.col("n_p").cast("double") * avg_rank).alias("__rp")
-    ).agg(
-        F.sum("n_p").cast("long").alias("n_pos"),
-        F.sum("n_n").cast("long").alias("n_neg"),
-        F.sum("__rp").alias("__r_pos"),
-    ).filter((F.col("n_pos") > 0) & (F.col("n_neg") > 0))
-    np_, nn_ = F.col("n_pos").cast("double"), F.col("n_neg").cast("double")
-    u = F.col("__r_pos") - np_ * (np_ + F.lit(1.0)) / F.lit(2.0)
-    return agg.select(
-        "n_pos", "n_neg",
-        F.floor(u / (np_ * nn_) * F.lit(1_000_000.0)).cast("long")
+    y = F.col(label_col).cast("boolean").alias("__y")
+    u = mann_whitney_u(
+        df.select(y, F.col(score_col).alias("__s")), "__y", "__s", True, False
+    ).filter((F.col("n_a") > 0) & (F.col("n_b") > 0))
+    np_, nn_ = F.col("n_a").cast("double"), F.col("n_b").cast("double")
+    return u.select(
+        F.col("n_a").alias("n_pos"),
+        F.col("n_b").alias("n_neg"),
+        F.floor(F.col("u_a") / (np_ * nn_) * F.lit(1_000_000.0)).cast("long")
         .alias("auc_micro"),
     )
 
@@ -3382,24 +3418,21 @@ def cliffs_delta(
     from a prefix sum over that aggregate. ``#{a < b}`` falls out of
     the identity gt + lt + ties = n_a·n_b. Every cell is an exact
     integer; delta_micro is a truncating DECIMAL DIV (negative deltas
-    truncate identically in Spark and DuckDB).
+    truncate identically in Spark and DuckDB). NULL values drop;
+    delta_micro is NULL when a group is empty.
 
     Returns one row (n_a, n_b, n_gt, n_lt, n_ties, delta_micro).
     """
     vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    c = vc.select(
-        "n_a",
-        "n_b",
-        F.coalesce(F.sum("n_b").over(w), F.lit(0)).cast("long").alias("cb"),
-    )
+    zero = F.lit(0)
     return (
-        c.groupBy()
-        .agg(
-            F.sum("n_a").cast("long").alias("n_a"),
-            F.sum("n_b").cast("long").alias("n_b"),
-            F.sum(F.col("n_a") * F.col("cb")).cast("long").alias("n_gt"),
-            F.sum(F.col("n_a") * F.col("n_b")).cast("long").alias("n_ties"),
+        vc.agg(
+            *_group_totals(),
+            F.coalesce(
+                F.sum(F.col("n_a") * (F.col("cum_b") - F.col("n_b"))), zero
+            ).cast("long").alias("n_gt"),
+            F.coalesce(F.sum(F.col("n_a") * F.col("n_b")), zero)
+            .cast("long").alias("n_ties"),
         )
         .select(
             "n_a",
@@ -3412,7 +3445,7 @@ def cliffs_delta(
             F.expr(
                 "CAST((CAST(n_gt AS DECIMAL(38,0))"
                 " - (n_a * n_b - n_gt - n_ties)) * 1000000"
-                " DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
+                " DIV NULLIF(CAST(n_a AS DECIMAL(38,0)) * n_b, 0) AS BIGINT)"
             ).alias("delta_micro"),
         )
     )
@@ -4074,7 +4107,7 @@ def wilcoxon_signed_rank(
     All-integer discipline: ranks are carried DOUBLED (average ranks
     are half-integers; 2·rank is always integral), built without any
     global sort from the per-|d| value counts and a cumulative count
-    over the bounded DISTINCT-|d| table (the cliffs_delta shape):
+    over the bounded DISTINCT-|d| table (``_doubled_midrank``):
     a value with cb smaller |d|'s below it and t occurrences spans
     doubled-ranks ``2·cb + 1 … 2·cb + 2t - 1``, averaging
     ``2·cb + t + 1``. W+ (doubled) sums those over positive d's. The
@@ -4092,8 +4125,6 @@ def wilcoxon_signed_rank(
     Returns one row (n_pairs, n_zero, w_plus_double, w_minus_double,
     z_micro).
     """
-    from pyspark.sql import Window
-
     d = F.col(x_col).cast("long") - F.col(y_col).cast("long")
     base = df.select(d.alias("__d")).filter(F.col("__d").isNotNull())
     nz = base.filter(F.col("__d") != 0).select(
@@ -4103,11 +4134,7 @@ def wilcoxon_signed_rank(
         F.count(F.lit(1)).cast("long").alias("t"),
         F.sum("__p").cast("long").alias("np"),
     )
-    w = Window.orderBy("__a").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = vc.select(
-        "__a", "t", "np",
-        F.coalesce(F.sum("t").over(w), F.lit(0)).cast("long").alias("cb"),
-    )
+    ranked = vc.select("t", "np", _doubled_midrank("t", "__a").alias("r2"))
     zero = F.lit(0).cast("long")
     # COALESCE to 0: an all-zero-difference sample leaves `ranked`
     # empty, and a global aggregate over zero rows yields NULL sums —
@@ -4116,17 +4143,10 @@ def wilcoxon_signed_rank(
     # property).
     agg = ranked.groupBy().agg(
         F.coalesce(F.sum("t"), zero).cast("long").alias("n"),
-        F.coalesce(
-            F.sum(F.col("np") * (F.lit(2) * F.col("cb") + F.col("t") + 1)),
-            zero,
-        ).cast("long").alias("w2p"),
-        F.coalesce(
-            F.sum(
-                (F.col("t") - F.col("np"))
-                * (F.lit(2) * F.col("cb") + F.col("t") + 1)
-            ),
-            zero,
-        ).cast("long").alias("w2m"),
+        F.coalesce(F.sum(F.col("np") * F.col("r2")), zero)
+        .cast("long").alias("w2p"),
+        F.coalesce(F.sum((F.col("t") - F.col("np")) * F.col("r2")), zero)
+        .cast("long").alias("w2m"),
     )
     n_zero = base.filter(F.col("__d") == 0).groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("n_zero")
@@ -5237,16 +5257,13 @@ def spearman_rho(
     exact integers, so the only float is ONE division by the sqrt of
     their exact product, floored to micro.
 
-    Scale shape (optimization r14): ONE pass over the rows collapses to
-    the (x, y) CELL counts — bounded by the product of the two value
-    domains, the same boundedness assumption the per-variable rank
-    windows already make — and the cell table is materialized
-    (localCheckpoint, the house idiom for bounded frames). The previous
-    form re-derived the row projection three times (once per rank
-    branch, once for the moment sums) and shuffled ROW-scale data
-    through two rank joins; now every post-scan step — rank windows,
-    rank joins, moment sums (count-weighted, arithmetically identical)
-    — is cell-scale. NULLs in either column drop (documented).
+    Scale shape: ONE pass over the rows collapses to the (x, y) CELL
+    counts — bounded by the product of the two value domains, the same
+    boundedness assumption the per-variable rank windows already make —
+    and the cell table is materialized (localCheckpoint, the house
+    idiom for bounded frames). Every post-scan step — rank windows,
+    rank joins, count-weighted moment sums — is cell-scale. NULLs in
+    either column drop (documented).
 
     Returns one row (n, rho_micro).
     """
@@ -5261,15 +5278,7 @@ def spearman_rho(
 
     def doubled_ranks(col: str) -> DataFrame:
         vc = cells.groupBy(col).agg(F.sum("__cn").cast("long").alias("c"))
-        w = Window.orderBy(F.col(col)).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        return vc.select(
-            col,
-            (
-                (F.sum("c").over(w) - F.col("c")) * 2 + F.col("c") + 1
-            ).cast("long").alias(f"{col}_2r"),
-        )
+        return vc.select(col, _doubled_midrank("c", col).alias(f"{col}_2r"))
 
     rx = doubled_ranks("__x")
     ry = doubled_ranks("__y")
@@ -5720,49 +5729,28 @@ def wasserstein_1d(
 
     Scale shape: one partial-agg shuffle to the pooled value domain,
     one value-domain window (the rank_sum_test class), a 1-row reduce.
-    Values must be integers (quantize upstream).
+    Values must be integers (quantize upstream). NULL values drop;
+    w1_micro is NULL when a group is empty.
 
     Returns one row (n_a, n_b, w1_micro) — w1 in VALUE units × 1e-6.
     """
     vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
-    # Optimization r14: the group totals n_a/n_b are EXACTLY the column
-    # sums of the value-counts table — the old second corpus scan
-    # (filter + 1-row aggregate, broadcast-joined back) recomputed the
-    # same integers. An unbounded frame over the SAME (no-partition,
-    # ORDER BY v) window spec shares the cumulative window's single
-    # sort, so the totals now cost nothing: one corpus scan total, no
-    # BroadcastNestedLoopJoin (guide §2.3 "aggregate before you
-    # shuffle" / §2.4).
-    w = Window.orderBy(F.col("v")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.orderBy(F.col("v")).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    lead_w = Window.orderBy(F.col("v"))
-    cum = vc.select(
-        F.col("v").cast("long").alias("v"),
-        F.sum("n_a").over(w).cast("long").alias("ca"),
-        F.sum("n_b").over(w).cast("long").alias("cb"),
-        F.sum("n_a").over(w_all).cast("long").alias("n_a"),
-        F.sum("n_b").over(w_all).cast("long").alias("n_b"),
-        F.lead(F.col("v").cast("long")).over(lead_w).alias("vn"),
-    )
-    terms = cum.filter(F.col("vn").isNotNull()).select(
-        "n_a",
-        "n_b",
+    v = F.col("v").cast("long")
+    terms = vc.select(
+        "tot_a",
+        "tot_b",
         F.expr(
-            "ABS(CAST(ca AS DECIMAL(38,0)) * n_b"
-            " - CAST(cb AS DECIMAL(38,0)) * n_a)"
-            " * (vn - v)"
-        ).alias("__t"),
+            "ABS(CAST(cum_a AS DECIMAL(38,0)) * tot_b"
+            " - CAST(cum_b AS DECIMAL(38,0)) * tot_a)"
+        ).alias("__gap"),
+        # the last value has no segment to its right
+        F.coalesce(F.lead(v).over(Window.orderBy("v")) - v, F.lit(0)).alias("__dv"),
     )
     return terms.groupBy().agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
+        *_group_totals(),
         F.expr(
-            "CAST(SUM(__t) * 1000000"
-            " DIV NULLIF(CAST(MAX(n_a) AS DECIMAL(38,0)) * MAX(n_b), 0)"
+            "CAST(SUM(__gap * __dv) * 1000000"
+            " DIV NULLIF(CAST(MAX(tot_a) AS DECIMAL(38,0)) * MAX(tot_b), 0)"
             " AS BIGINT)"
         ).alias("w1_micro"),
     )
@@ -6269,33 +6257,18 @@ def tv_distance(
     FULLY exact: per distinct value ``|c_a·n_b − c_b·n_a|`` is an
     exact DECIMAL integer, the sum is exact, and the single division
     ``Σ·1e6 DIV (2·n_a·n_b)`` truncates once. No float, no window —
-    one value-domain partial-agg shuffle and a reduce.
+    one value-domain partial-agg shuffle and a reduce. NULL values
+    drop; tv_micro is NULL when a group is empty.
 
     Returns one row (n_a, n_b, tv_micro).
     """
-    vc = _two_group_value_counts(
-        df, group_col, value_col, group_a, group_b
-    ).select(
-        F.col("n_a").alias("ca"), F.col("n_b").alias("cb")
-    )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
-    terms = vc.join(F.broadcast(tot)).select(
-        "n_a",
-        "n_b",
+    vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
+    return vc.agg(
+        *_group_totals(),
         F.expr(
-            "ABS(CAST(ca AS DECIMAL(38,0)) * n_b"
-            " - CAST(cb AS DECIMAL(38,0)) * n_a)"
-        ).alias("__t"),
-    )
-    return terms.groupBy().agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-        F.expr(
-            "CAST(SUM(__t) * 1000000"
-            " DIV NULLIF(2 * CAST(MAX(n_a) AS DECIMAL(38,0)) * MAX(n_b), 0)"
+            "CAST(SUM(ABS(CAST(n_a AS DECIMAL(38,0)) * tot_b"
+            " - CAST(n_b AS DECIMAL(38,0)) * tot_a)) * 1000000"
+            " DIV NULLIF(2 * CAST(MAX(tot_a) AS DECIMAL(38,0)) * MAX(tot_b), 0)"
             " AS BIGINT)"
         ).alias("tv_micro"),
     )
@@ -6320,33 +6293,19 @@ def hellinger_distance(
     expression over exact integer counts floored to micro at birth
     (the ln-micro discipline's sqrt sibling), so the reduction is an
     exact BIGINT sum; one value-domain partial agg, one reduce, no
-    window.
+    window. NULL values drop; h2_micro is NULL when a group is empty.
 
     Returns one row (n_a, n_b, h2_micro).
     """
-    vc = _two_group_value_counts(
-        df, group_col, value_col, group_a, group_b
-    ).select(
-        F.col("n_a").alias("ca"), F.col("n_b").alias("cb")
-    )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
-    terms = vc.join(F.broadcast(tot)).select(
-        "n_a",
-        "n_b",
+    vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
+    p = "SQRT(CAST(n_a AS DOUBLE) / NULLIF(tot_a, 0))"
+    q = "SQRT(CAST(n_b AS DOUBLE) / NULLIF(tot_b, 0))"
+    return vc.agg(
+        *_group_totals(),
         F.expr(
-            """CAST(FLOOR(
-              (SQRT(CAST(ca AS DOUBLE) / n_a) - SQRT(CAST(cb AS DOUBLE) / n_b))
-              * (SQRT(CAST(ca AS DOUBLE) / n_a) - SQRT(CAST(cb AS DOUBLE) / n_b))
-              * 500000) AS BIGINT)"""
-        ).alias("__t"),
-    )
-    return terms.groupBy().agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-        F.sum("__t").cast("long").alias("h2_micro"),
+            f"CAST(SUM(CAST(FLOOR(({p} - {q}) * ({p} - {q}) * 500000) AS BIGINT))"
+            " AS BIGINT)"
+        ).alias("h2_micro"),
     )
 
 
@@ -6376,42 +6335,22 @@ def cvm_distance(
     DECIMAL bound (documented): the summed term reaches ~n⁵ at equal
     slice sizes; DECIMAL(38,0) holds exactly to ~10^6 rows per slice —
     beyond that, quantize values into bounded bins first (the
-    histogram discipline all drift scalars share).
+    histogram discipline all drift scalars share). NULL values drop;
+    cvm_micro is NULL when a group is empty.
 
     Returns one row (n_a, n_b, cvm_micro).
     """
     vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
-    w = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    gap = (
+        "(CAST(cum_a AS DECIMAL(38,0)) * tot_b"
+        " - CAST(cum_b AS DECIMAL(38,0)) * tot_a)"
     )
-    cum = vc.select(
-        F.col("n_a").alias("ca"),
-        F.col("n_b").alias("cb"),
-        F.sum("n_a").over(w).cast("long").alias("cuma"),
-        F.sum("n_b").over(w).cast("long").alias("cumb"),
-    )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
-    )
-    terms = cum.join(F.broadcast(tot)).select(
-        "n_a",
-        "n_b",
+    return vc.agg(
+        *_group_totals(),
         F.expr(
-            "CAST(ca + cb AS DECIMAL(38,0))"
-            " * (CAST(cuma AS DECIMAL(38,0)) * n_b"
-            "    - CAST(cumb AS DECIMAL(38,0)) * n_a)"
-            " * (CAST(cuma AS DECIMAL(38,0)) * n_b"
-            "    - CAST(cumb AS DECIMAL(38,0)) * n_a)"
-        ).alias("__t"),
-    )
-    return terms.groupBy().agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-        F.expr(
-            "CAST(SUM(__t) * 1000000"
-            " DIV NULLIF(CAST(MAX(n_a) AS DECIMAL(38,0)) * MAX(n_b)"
-            "   * (MAX(n_a) + MAX(n_b)) * (MAX(n_a) + MAX(n_b)), 0)"
+            f"CAST(SUM(CAST(n_a + n_b AS DECIMAL(38,0)) * {gap} * {gap}) * 1000000"
+            " DIV NULLIF(CAST(MAX(tot_a) AS DECIMAL(38,0)) * MAX(tot_b)"
+            "   * (MAX(tot_a) + MAX(tot_b)) * (MAX(tot_a) + MAX(tot_b)), 0)"
             " AS BIGINT)"
         ).alias("cvm_micro"),
     )
@@ -6447,60 +6386,54 @@ def ad_distance(
     beyond that, quantize values into bounded bins first (the
     histogram discipline all drift scalars share).
 
+    NULL values drop; ad_micro is NULL when a group is empty.
+
     Returns one row (n_a, n_b, ad_micro) with ad_micro = floor(A2·1e6)
     up to the documented per-block truncation.
     """
     vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
-    w = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     cum = vc.select(
-        (F.col("n_a") + F.col("n_b")).cast("long").alias("l"),
-        F.sum("n_a").over(w).cast("long").alias("cuma"),
-        F.sum(F.col("n_a") + F.col("n_b")).over(w).cast("long").alias("bj"),
-    )
-    tot = df.filter(F.col(group_col).isin([group_a, group_b])).groupBy().agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).cast("long").alias("n_a"),
-        F.sum((F.col(group_col) == group_b).cast("long")).cast("long").alias("n_b"),
+        "tot_a",
+        "tot_b",
+        (F.col("n_a") + F.col("n_b")).alias("l"),
+        "cum_a",
+        (F.col("cum_a") + F.col("cum_b")).alias("bj"),
+        (F.col("tot_a") + F.col("tot_b")).alias("n"),
     )
     # the bj = N block contributes 0 by definition and is zeroed in
     # the term (not filtered out): an all-tied pooled sample must
     # yield ad_micro = 0, not an empty frame aggregating to NULL
     # (hypothesis-caught edge)
     terms = (
-        cum.join(F.broadcast(tot))
-        .withColumn(
+        cum.withColumn(
             "__a",
             F.expr(
                 "CAST(l AS DECIMAL(38,0)) * 1000000"
-                " * (CAST(cuma AS DECIMAL(38,0)) * (n_a + n_b)"
-                "    - CAST(bj AS DECIMAL(38,0)) * n_a)"
-                " * (CAST(cuma AS DECIMAL(38,0)) * (n_a + n_b)"
-                "    - CAST(bj AS DECIMAL(38,0)) * n_a)"
+                " * (CAST(cum_a AS DECIMAL(38,0)) * n"
+                "    - CAST(bj AS DECIMAL(38,0)) * tot_a)"
+                " * (CAST(cum_a AS DECIMAL(38,0)) * n"
+                "    - CAST(bj AS DECIMAL(38,0)) * tot_a)"
             ),
         )
-        .withColumn(
-            "__b", F.expr("CAST(bj AS DECIMAL(38,0)) * (n_a + n_b - bj)")
-        )
+        .withColumn("__b", F.expr("CAST(bj AS DECIMAL(38,0)) * (n - bj)"))
         .select(
-            "n_a",
-            "n_b",
+            "tot_a",
+            "tot_b",
             # pmod identity, not DIV (BIGINT-narrowing): the per-block
             # quotient can pass int64 under heavy ties near the slice
             # bound; this keeps the truncating quotient in DECIMAL
             F.expr(
-                "CASE WHEN bj < n_a + n_b THEN"
+                "CASE WHEN bj < n THEN"
                 " CAST((__a - pmod(__a, __b)) / __b AS DECIMAL(38,0))"
                 " ELSE CAST(0 AS DECIMAL(38,0)) END"
             ).alias("__t"),
         )
     )
     return terms.groupBy().agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
+        *_group_totals(),
         F.expr(
-            "CAST(SUM(__t) * (MAX(n_a) + MAX(n_b) - 1)"
-            " DIV NULLIF(CAST(MAX(n_a) AS DECIMAL(38,0)) * MAX(n_b), 0)"
+            "CAST(SUM(__t) * (MAX(tot_a) + MAX(tot_b) - 1)"
+            " DIV NULLIF(CAST(MAX(tot_a) AS DECIMAL(38,0)) * MAX(tot_b), 0)"
             " AS BIGINT)"
         ).alias("ad_micro"),
     )
@@ -6526,54 +6459,26 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     scale.  DECIMAL bound: R2_g^2·3e6 ~ 1.2e7·N^4 fits DECIMAL(38,0)
     to N ~ 4e7 rows; quantize first beyond that.
 
+    NULL groups and NULL values drop; an empty input gives n = k = 0
+    and NULL statistics.
+
     Returns one row (n, k, h_micro, h_tie_micro); under H0 compare
     against chi-square(k-1).
     """
-    sub = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
+    per_g, pooled = _pooled_rank_sums(df, group_col, value_col)
+    terms = per_g.select(
+        # pmod identity, not DIV: the per-group quotient
+        # R2^2 3e6 / n_g passes int64 around N ~ 1e5 and Spark's
+        # DIV narrows to BIGINT (silent wrap); this keeps the
+        # exact truncating quotient in DECIMAL(38,0)
+        F.expr(
+            "CAST((CAST(r2_g AS DECIMAL(38,0)) * r2_g * 3000000"
+            " - pmod(CAST(r2_g AS DECIMAL(38,0)) * r2_g * 3000000, n_g))"
+            " / n_g AS DECIMAL(38,0))"
+        ).alias("__t"),
     )
-    gv = sub.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
-    ).agg(F.count("*").cast("long").alias("n_gv"))
-    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranks = tv.select(
-        "v",
-        "t",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-            + F.col("t")
-            + F.lit(1)
-        ).cast("long").alias("r2"),
-    )
-    per_g = (
-        gv.join(ranks, "v")
-        .groupBy("g")
-        .agg(
-            F.sum("n_gv").cast("long").alias("n_g"),
-            F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
-        )
-        .select(
-            "n_g",
-            # pmod identity, not DIV: the per-group quotient
-            # R2^2 3e6 / n_g passes int64 around N ~ 1e5 and Spark's
-            # DIV narrows to BIGINT (silent wrap); this keeps the
-            # exact truncating quotient in DECIMAL(38,0)
-            F.expr(
-                "CAST((CAST(r2_g AS DECIMAL(38,0)) * r2_g * 3000000"
-                " - pmod(CAST(r2_g AS DECIMAL(38,0)) * r2_g * 3000000, n_g))"
-                " / n_g AS DECIMAL(38,0))"
-            ).alias("__t"),
-        )
-    )
-    ties = tv.groupBy().agg(
-        F.sum(
-            F.expr("CAST(t AS DECIMAL(38,0)) * t * t - t")
-        ).alias("tie_num"),
-        F.sum("t").cast("long").alias("n"),
-    )
-    return per_g.join(F.broadcast(ties)).groupBy().agg(
-        F.max("n").alias("n"),
+    return terms.join(F.broadcast(pooled)).groupBy().agg(
+        F.coalesce(F.max("n"), F.lit(0)).cast("long").alias("n"),
         F.count("*").cast("long").alias("k"),
         F.expr(
             "CAST(SUM(__t) DIV (CAST(MAX(n) AS DECIMAL(38,0)) * (MAX(n) + 1))"
@@ -7285,8 +7190,10 @@ def brunner_munzel(
     equal-variance/shape assumption — the robust default for two-slice
     comparisons with different spreads (the nonparametric analogue of
     Welch vs Student).  Everything derives from the two midrank
-    systems (pooled and within-group), both read off the
-    DISTINCT-VALUE aggregate — never a row sort:
+    systems (pooled and within-group), both read off the two-group
+    value-count table (pooled ranks from the summed counts,
+    within-group ranks from each group's own counts) — never a row
+    sort:
 
         phat = (Rbar_b - (n_b+1)/2) / n_a     (common-language effect)
         W = n_a·n_b·(Rbar_b - Rbar_a) / ((n_a+n_b)·sqrt(n_a·S2_a + n_b·S2_b))
@@ -7302,73 +7209,49 @@ def brunner_munzel(
     pooled rank sum).  W and the Welch-type df close in ONE
     deterministic fp64 expression each, micro-floored.  DECIMAL
     bound: the deviation sum reaches ~n_i²·N²·n ~ N^5; quantize past
-    ~1e6 rows per slice (the drift-family discipline).
+    ~1e6 rows per slice (the drift-family discipline). NULL values
+    drop; p_hat is NULL when a group is empty, W and df when a group
+    has fewer than 2 values or both deviation sums are 0.
 
     Returns one row (n_a, n_b, p_hat_micro, w_micro, df_micro).
     """
-    sub = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        F.when(F.col(group_col) == group_a, F.lit("a"))
-        .otherwise(F.lit("b"))
-        .alias("g"),
-        F.col(value_col).alias("v"),
+    vc = _two_group_value_counts(df, group_col, value_col, group_a, group_b)
+    # per value: pooled doubled midrank r2p, within-group r2w_a / r2w_b
+    r2p = _doubled_midrank(F.col("n_a") + F.col("n_b"), "v")
+    cells = vc.select(
+        "n_a", "n_b", "tot_a", "tot_b",
+        (r2p - _doubled_midrank("n_a", "v")).alias("d_a"),
+        (r2p - _doubled_midrank("n_b", "v")).alias("d_b"),
+        r2p.alias("r2p"),
     )
-    gv = sub.groupBy("g", "v").agg(F.count("*").cast("long").alias("n_gv"))
-    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
-    wp = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    pooled = tv.select(
-        "v",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(wp), F.lit(0))
-            + F.col("t")
-            + F.lit(1)
-        ).cast("long").alias("r2p"),
+    dec = "DECIMAL(38,0)"
+    wide = cells.agg(
+        *_group_totals(),
+        F.sum(F.col("n_a") * F.col("r2p")).alias("a_r2"),
+        F.sum(F.col("n_b") * F.col("r2p")).alias("b_r2"),
+        F.expr(f"SUM(CAST(n_a AS {dec}) * d_a * d_a)").alias("a_ss"),
+        F.expr(f"SUM(CAST(n_b AS {dec}) * d_b * d_b)").alias("b_ss"),
+    ).withColumns(
+        {"a_n": F.nullif("n_a", F.lit(0)), "b_n": F.nullif("n_b", F.lit(0))}
     )
-    ww = Window.partitionBy("g").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cells = gv.select(
-        "g",
-        "v",
-        "n_gv",
-        (
-            F.lit(2) * F.coalesce(F.sum("n_gv").over(ww), F.lit(0))
-            + F.col("n_gv")
-            + F.lit(1)
-        ).cast("long").alias("r2w"),
-    ).join(pooled, "v")
-    per_g = cells.groupBy("g").agg(
-        F.sum("n_gv").cast("long").alias("n_g"),
-        F.sum(F.col("n_gv") * F.col("r2p")).cast("long").alias("r2_g"),
-    )
-    staged = cells.join(per_g, "g").groupBy("g").agg(
-        F.max("n_g").alias("n_g"),
-        F.max("r2_g").alias("r2_g"),
-        F.sum(
-            F.expr(
-                "CAST(n_gv AS DECIMAL(38,0))"
-                " * (CAST(n_g AS DECIMAL(38,0)) * (r2p - r2w)"
-                "    - (CAST(r2_g AS DECIMAL(38,0)) - CAST(n_g AS DECIMAL(38,0)) * (n_g + 1)))"
-                " * (CAST(n_g AS DECIMAL(38,0)) * (r2p - r2w)"
-                "    - (CAST(r2_g AS DECIMAL(38,0)) - CAST(n_g AS DECIMAL(38,0)) * (n_g + 1)))"
-            )
-        ).alias("dev2"),
-    )
-    wide = (
-        staged.groupBy()
-        .pivot("g", ["a", "b"])
-        .agg(
-            F.max("n_g").alias("n"),
-            F.max("r2_g").alias("r2"),
-            F.max("dev2").alias("dev2"),
+    # Σ n_iv·d_iv = D_i exactly (within-group doubled ranks sum to
+    # n_i(n_i+1)), so the deviation sum Σ n_iv·(n_i·d_iv − D_i)² is
+    # n_i²·Σ n_iv·d_iv² − n_i·D_i²
+    wide = wide.withColumns({
+        f"{i}_dev2": F.expr(
+            f"CAST({i}_n AS {dec}) * {i}_n * {i}_ss - CAST({i}_n AS {dec})"
+            f" * ({i}_r2 - CAST({i}_n AS {dec}) * ({i}_n + 1))"
+            f" * ({i}_r2 - CAST({i}_n AS {dec}) * ({i}_n + 1))"
         )
-    )
+        for i in ("a", "b")
+    })
     # s2v_i = n_i * S2_i = dev2_i / (4*n_i*(n_i-1))  [exact ratio,
     # evaluated in fp64]; W and df close deterministically
-    s2va = "(CAST(a_dev2 AS DOUBLE) / (4.0 * a_n * (a_n - 1)))"
-    s2vb = "(CAST(b_dev2 AS DOUBLE) / (4.0 * b_n * (b_n - 1)))"
+    s2va = "(CAST(a_dev2 AS DOUBLE) / NULLIF(4.0 * a_n * (a_n - 1), 0))"
+    s2vb = "(CAST(b_dev2 AS DOUBLE) / NULLIF(4.0 * b_n * (b_n - 1), 0))"
     return wide.select(
-        F.col("a_n").alias("n_a"),
-        F.col("b_n").alias("n_b"),
+        "n_a",
+        "n_b",
         F.expr(
             "CAST((CAST(b_r2 AS DECIMAL(38,0)) - CAST(b_n AS DECIMAL(38,0)) * (b_n + 1))"
             " * 1000000 DIV (2 * CAST(b_n AS DECIMAL(38,0)) * a_n) AS BIGINT)"
@@ -7387,8 +7270,8 @@ def brunner_munzel(
             f"""CASE WHEN a_dev2 + b_dev2 = 0 THEN NULL ELSE
             CAST(FLOOR(
               ({s2va} + {s2vb}) * ({s2va} + {s2vb})
-              / ({s2va} * {s2va} / (a_n - 1)
-                 + {s2vb} * {s2vb} / (b_n - 1))
+              / ({s2va} * {s2va} / NULLIF(a_n - 1, 0)
+                 + {s2vb} * {s2vb} / NULLIF(b_n - 1, 0))
               * 1000000) AS BIGINT) END"""
         ).alias("df_micro"),
     )
@@ -8085,37 +7968,10 @@ def dunn_test(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     everywhere, one fp64 close per pair, micro-floored.  The k-row
     per-group rank table self-joins (k² pairs, group-domain bounded).
     Feed the emitted pairs to benjamini_hochberg/holm for the
-    multiplicity correction.  Returns (g_i, g_j, z_micro) for every
-    i < j by group name order.
+    multiplicity correction.  NULL groups and NULL values drop.
+    Returns (g_i, g_j, z_micro) for every i < j by group name order.
     """
-    sub = df.filter(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
-    )
-    gv = sub.groupBy(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
-    ).agg(F.count("*").cast("long").alias("n_gv"))
-    tv = gv.groupBy("v").agg(F.sum("n_gv").cast("long").alias("t"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranks = tv.select(
-        "v",
-        (
-            F.lit(2) * F.coalesce(F.sum("t").over(w), F.lit(0))
-            + F.col("t")
-            + F.lit(1)
-        ).cast("long").alias("r2"),
-    )
-    per_g = (
-        gv.join(ranks, "v")
-        .groupBy("g")
-        .agg(
-            F.sum("n_gv").cast("long").alias("n_g"),
-            F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
-        )
-    )
-    ties = tv.groupBy().agg(
-        F.sum(F.expr("CAST(t AS DECIMAL(38,0)) * t * t - t")).alias("tie_num"),
-        F.sum("t").cast("long").alias("n"),
-    )
+    per_g, pooled = _pooled_rank_sums(df, group_col, value_col)
     lo = per_g.select(
         F.col("g").alias("g_i"),
         F.col("n_g").alias("n_i"),
@@ -8126,7 +7982,7 @@ def dunn_test(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
         F.col("n_g").alias("n_j"),
         F.col("r2_g").alias("r2_j"),
     )
-    pairs = lo.join(hi, F.col("g_i") < F.col("g_j")).join(F.broadcast(ties))
+    pairs = lo.join(hi, F.col("g_i") < F.col("g_j")).join(F.broadcast(pooled))
     return pairs.select(
         "g_i",
         "g_j",

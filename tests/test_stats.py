@@ -4,9 +4,35 @@ algebraic self-checks."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
+
+# The operators built on the shared value-count table or pooled rank
+# sums, each called on a (g string, v long) frame whose groups of
+# interest are "a" and "b".
+_REWRITTEN = {
+    "mann_whitney_u": lambda df: st.mann_whitney_u(df, "g", "v", "a", "b"),
+    "auc": lambda df: st.auc(
+        df.select(F.col("v").alias("s"), (F.col("g") == "a").alias("y")), "s", "y"
+    ),
+    "ks_statistic": lambda df: st.ks_statistic(df, "g", "v", "a", "b"),
+    "cliffs_delta": lambda df: st.cliffs_delta(df, "g", "v", "a", "b"),
+    "wasserstein_1d": lambda df: st.wasserstein_1d(df, "g", "v", "a", "b"),
+    "tv_distance": lambda df: st.tv_distance(df, "g", "v", "a", "b"),
+    "hellinger_distance": lambda df: st.hellinger_distance(df, "g", "v", "a", "b"),
+    "cvm_distance": lambda df: st.cvm_distance(df, "g", "v", "a", "b"),
+    "ad_distance": lambda df: st.ad_distance(df, "g", "v", "a", "b"),
+    "brunner_munzel": lambda df: st.brunner_munzel(df, "g", "v", "a", "b"),
+    "kruskal_wallis": lambda df: st.kruskal_wallis(df, "g", "v"),
+    "dunn_test": lambda df: st.dunn_test(df, "g", "v"),
+}
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
 
 
 def test_mann_whitney_u_known_case(spark):
@@ -28,17 +54,107 @@ def test_mann_whitney_u_ties_and_identity(spark):
     assert r["u_a"] == 1.0
 
 
-def test_mann_whitney_partition_invariance(spark):
-    import numpy as np
-
+@pytest.mark.parametrize("name", sorted(_REWRITTEN))
+def test_mann_whitney_partition_invariance(spark, name):
+    """Same rows whatever the physical plan: the input repartitioned 13
+    ways, and 1 or 7 shuffle partitions with AQE off."""
     rng = np.random.default_rng(6)
-    rows = [("a", float(v)) for v in rng.integers(0, 50, 500)] + [
-        ("b", float(v)) for v in rng.integers(10, 60, 400)
+    rows = (
+        [("a", int(v)) for v in rng.integers(0, 50, 500)]
+        + [("b", int(v)) for v in rng.integers(10, 60, 400)]
+        + [("c", int(v)) for v in rng.integers(5, 30, 100)]
+    )
+    df = spark.createDataFrame(rows, "g string, v long")
+    op = _REWRITTEN[name]
+    base = _rows(op(df.repartition(13)))
+    assert base
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            assert _rows(op(df)) == base, n
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+# what each one-row two-group operator reports when a group is empty:
+# counts read 0, a statistic whose denominator is 0 reads NULL
+_EMPTY_GROUP_STATS = {
+    "mann_whitney_u": {"u_a": 0.0, "u_b": 0.0},
+    "ks_statistic": {"ks_d": None},
+    "cliffs_delta": {"n_gt": 0, "n_lt": 0, "n_ties": 0, "delta_micro": None},
+    "wasserstein_1d": {"w1_micro": None},
+    "tv_distance": {"tv_micro": None},
+    "hellinger_distance": {"h2_micro": None},
+    "cvm_distance": {"cvm_micro": None},
+    "ad_distance": {"ad_micro": None},
+    "brunner_munzel": {"p_hat_micro": None, "w_micro": None, "df_micro": None},
+}
+
+
+@pytest.mark.parametrize("case", ["empty", "one_group_empty", "all_null"])
+@pytest.mark.parametrize("name", sorted(_REWRITTEN))
+def test_rank_ops_degenerate_input(spark, name, case):
+    """Empty input, an empty group and all-NULL values give defined
+    output, never an error."""
+    rows = {
+        "empty": [],
+        "one_group_empty": [("a", v) for v in (1, 2, 2, 5, 7)],
+        "all_null": [("a", None), ("b", None), ("b", None)],
+    }[case]
+    n_a = 5 if case == "one_group_empty" else 0
+    out = _REWRITTEN[name](spark.createDataFrame(rows, "g string, v long")).collect()
+    if name in ("auc", "dunn_test"):
+        # fewer than two classes / groups: nothing to emit
+        assert out == []
+    elif name == "kruskal_wallis":
+        [r] = out
+        assert (r["n"], r["k"]) == (n_a, 1 if n_a else 0)
+        assert r["h_micro"] == (0 if n_a else None)
+    else:
+        [r] = out
+        assert (r["n_a"], r["n_b"]) == (n_a, 0)
+        for col, want in _EMPTY_GROUP_STATS[name].items():
+            assert r[col] == want, col
+
+
+@pytest.mark.parametrize("name", sorted(_REWRITTEN))
+def test_rank_ops_drop_null_values(spark, name):
+    """NULL values (and NULL groups) drop: adding them changes nothing."""
+    rng = np.random.default_rng(21)
+    rows = [("a", int(v)) for v in rng.integers(0, 9, 40)] + [
+        ("b", int(v)) for v in rng.integers(3, 12, 30)
     ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r1 = st.mann_whitney_u(df, "g", "v", "a", "b").collect()[0]
-    r2 = st.mann_whitney_u(df.repartition(13), "g", "v", "a", "b").collect()[0]
-    assert (r1["u_a"], r1["u_b"]) == (r2["u_a"], r2["u_b"])
+    nulls = [("a", None)] * 3 + [("b", None)] * 2 + [(None, 4), (None, None)]
+    op = _REWRITTEN[name]
+    clean = _rows(op(spark.createDataFrame(rows, "g string, v long")))
+    assert _rows(op(spark.createDataFrame(rows + nulls, "g string, v long"))) == clean
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_doubled_midrank_matches_average_rank(spark, partitioned):
+    """2 x the average rank of each value among its partition's rows,
+    from a pure-Python sort of a heavily tied multiset."""
+    rng = np.random.default_rng(11)
+    keys, values = rng.integers(0, 3, 300), rng.integers(0, 12, 300)
+    vals = [(int(k), int(v)) for k, v in zip(keys, values)]
+    part = ("k",) if partitioned else ()
+    vc = spark.createDataFrame(vals, "k long, v long").groupBy(*part, "v").count()
+    r2 = st._doubled_midrank("count", "v", *part).alias("r2")
+    got = {
+        (r["k"] if partitioned else 0, r["v"]): r["r2"]
+        for r in vc.select(*part, "v", r2).collect()
+    }
+    expected = {}
+    for key in {k if partitioned else 0 for k, _ in vals}:
+        xs = sorted(v for k, v in vals if not partitioned or k == key)
+        for v in set(xs):
+            pos = [i + 1 for i, x in enumerate(xs) if x == v]
+            expected[(key, v)] = 2 * sum(pos) / len(pos)
+    assert got == expected
 
 
 def test_ks_statistic_disjoint_and_identical(spark):
