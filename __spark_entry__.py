@@ -2643,23 +2643,16 @@ def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     — over the FULL documents table at 32 hashes / 8 bands (S-curve
     threshold ≈ (1/8)^(1/4) ≈ 0.59 Jaccard), so DuckDB replays the
     ENTIRE pipeline bit-for-bit and the driver row is hash-checked, not
-    rows-only. Since round 13 the VERIFY-stage shingle sets are also
-    md5 (ADVICE r12: all three hash sites, not just signature + band),
-    so the replay is exact even under intra-document hash collisions. The production default stays the 2-3x-faster xxhash64
-    family (operators.dedup.minhash_lsh_candidates default), pinned by
-    the planted-pair pytest (tests/test_dedup.py) and identical in plan
-    shape. Differs from the minhash_provable twin in scope (unbounded)
+    rows-only. The verify reads the same md5 shingle table as candidate
+    generation (operators.dedup.minhash_pairs), so the replay is exact
+    even under intra-document hash collisions. The production default
+    stays the 2-3x-faster xxhash64 family (the minhash_pairs default),
+    pinned by the planted-pair pytest (tests/test_dedup_text.py) and
+    identical in plan shape. Differs from the minhash_provable twin in scope (unbounded)
     and banding (32/8 vs 16/4)."""
     docs = load_table(spark, sf_dir, "documents")
-    # Optimization r14: ONE hashed-shingle materialization shared by
-    # candidate generation and verify (dd.hashed_shingle_table) — the
-    # projection is the pipeline's dominant CPU and used to run twice.
-    sh = dd.hashed_shingle_table(docs, hash_family="md5")
-    cands = dd.minhash_lsh_candidates(
-        docs, num_hashes=32, bands=8, hash_family="md5", shingles=sh
-    )
-    return dd.jaccard_pairs(
-        docs, cands, threshold=0.5, hash_family="md5", shingles=sh
+    return dd.minhash_pairs(
+        docs, threshold=0.5, num_hashes=32, bands=8, hash_family="md5"
     )
 
 
@@ -5619,14 +5612,8 @@ def q_minhash_provable(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-join verify stays cheap; the production path keeps the
     xxhash64 family (2-3x faster) with identical plan shape."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1500)
-    # Optimization r14: shared shingle materialization (see
-    # q_minhash_near_dup).
-    sh = dd.hashed_shingle_table(docs, hash_family="md5")
-    cands = dd.minhash_lsh_candidates(
-        docs, num_hashes=16, bands=4, hash_family="md5", shingles=sh
-    )
-    return dd.jaccard_pairs(
-        docs, cands, threshold=0.5, hash_family="md5", shingles=sh
+    return dd.minhash_pairs(
+        docs, threshold=0.5, num_hashes=16, bands=4, hash_family="md5"
     )
 
 
@@ -14538,8 +14525,8 @@ def oracle_sql() -> dict[str, str]:
     # replay as minhash_provable, but UNBOUNDED scope and the gate's
     # 32-hash/8-band configuration. Generated from the engine's own
     # affine constants (operators.dedup._P/_A_MULT/_B_MULT) so the SQL
-    # stays in lock-step with minhash_cols by construction instead of
-    # by hand-copied literals.
+    # stays in lock-step with minhash_lsh_candidates by construction
+    # instead of by hand-copied literals.
     _mh_P, _mh_A, _mh_B = dd._P, dd._A_MULT, dd._B_MULT
     _mh_mins = ",\n            ".join(
         f"MIN(({(2 * j + 1) * _mh_A % _mh_P} * hv + {(j + 1) * _mh_B % _mh_P})"

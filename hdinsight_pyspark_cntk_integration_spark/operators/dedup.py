@@ -4,7 +4,8 @@ No counterpart in the reference — these are the BASELINE.json scale-out
 additions. Five families:
 
 * exact          — fingerprint (md5 of normalized text) + keep-min-id
-* MinHash + LSH  — char-shingles → 128 minhashes → banded buckets → pair join
+* MinHash + LSH  — word 3-shingles (default) → 128 minhashes → 32 banded
+                   buckets → pair join
 * SimHash        — 64-bit token-hash sign aggregate, hamming-radius pairs
 * n-gram Jaccard — exact verify on candidate pairs (array_intersect/union)
 * embedding      — cosine near-dup via random-hyperplane sign buckets
@@ -18,6 +19,9 @@ cardinality rather than n² — the standard 100 TB-safe near-dup plan.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
@@ -71,19 +75,6 @@ def _bind_once(value: Column, build) -> Column:
     return F.transform(F.array(value), build)[0]
 
 
-def char_shingles(text: Column | str, k: int = 5) -> Column:
-    """Distinct character k-shingles of normalized text, as array<string>.
-    Pure Catalyst: substring over a generated index sequence; the
-    normalized string is lambda-bound so it evaluates once, not per
-    shingle."""
-
-    def build(t: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.length(t) - F.lit(k - 1), F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, k)))
-
-    return _bind_once(normalized_text(text), build)
-
-
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
     """ALL word n-grams of normalized text in document order (duplicates
     kept), as array<string> — the counting form used by repetition
@@ -108,24 +99,18 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.array_distinct(word_ngrams(text, n))
 
 
-def hashed_shingles(text: Column | str, k: int = 3, mode: str = "word") -> Column:
-    """Distinct shingles reduced to the 31-bit hash field (one xxhash64
-    per shingle) — the input to all minhash/jaccard computations.
-    ``mode``: 'word' (n-gram of tokens, default) or 'char'."""
-    sh = word_shingles(text, k) if mode == "word" else char_shingles(text, k)
-    return F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-
-
 def _hashed_shingles_sql(
     text_col: str, k: int = 3, mode: str = "word", hash_family: str = "xxhash64"
 ) -> str:
-    """SQL-text form of ``hashed_shingles`` (same semantics).
+    """SQL text of a document's distinct shingles reduced to the 31-bit
+    hash field: the ``hs`` column of ``hashed_shingle_table``.
+    ``mode``: 'word' (n-grams of tokens, the ``word_shingles`` sets) or
+    'char' (character k-grams). ``hash_family``: 'xxhash64' or 'md5'.
 
-    The wide dedup operators build hundreds of sub-expressions; composing
+    The MinHash operators build hundreds of sub-expressions; composing
     them as SQL strings parsed JVM-side in ONE call is ~10× cheaper on
     the driver than building the equivalent pyspark Column tree lambda by
-    lambda over py4j. Hot paths below use these; the Column APIs above
-    remain for composition with arbitrary expressions.
+    lambda over py4j.
     """
     # The normalized/tokenized input is lambda-bound (transform over a
     # single-element array) so it evaluates ONCE per document — inlining
@@ -161,35 +146,6 @@ def _hashed_shingles_sql(
     raise ValueError(f"unknown hash_family {hash_family!r} (xxhash64|md5)")
 
 
-def minhash_cols(hashes: Column, num_hashes: int = 128) -> list[Column]:
-    """The ``num_hashes`` minhash expressions over a hashed-shingle array.
-
-    Returned as separate columns (not one array) so callers can consume
-    each expression exactly once — Catalyst's projection collapse
-    duplicates expression trees per use, and these are the expensive ones.
-    """
-
-    def affine(j: int):
-        a = F.lit((j * 2 + 1) * _A_MULT % _P)
-        b = F.lit((j + 1) * _B_MULT % _P)
-        return lambda h: F.pmod(a * h + b, F.lit(_P))
-
-    return [F.array_min(F.transform(hashes, affine(j))) for j in range(num_hashes)]
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature as array<bigint>, length ``num_hashes``. All
-    codegen'd JVM expressions — no Python worker in the loop."""
-    base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-
-    def affine(j: int):
-        a = F.lit((j * 2 + 1) * _A_MULT % _P)
-        b = F.lit((j + 1) * _B_MULT % _P)
-        return lambda h: F.pmod(a * h + b, F.lit(_P))
-
-    return F.array(*[F.array_min(F.transform(base, affine(j))) for j in range(num_hashes)])
-
-
 def hashed_shingle_table(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -198,16 +154,27 @@ def hashed_shingle_table(
     shingle_mode: str = "word",
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """Materialized (id, hs) hashed-shingle-set table (optimization
-    r14): minhash_lsh_candidates and jaccard_pairs each consume the
-    hashed-shingle projection — the near-dup pipeline's dominant CPU —
-    and composed (minhash_dedup, the near-dup gates) they used to run
-    it once PER STAGE. Build it here once and pass it to both via
-    their ``shingles=`` parameter; expressions are identical, so
-    results are bit-for-bit the same. ``_spread`` + the explicit
-    id-keyed exchange parallelize the projection before the one-time
-    materialization (see minhash_lsh_candidates' comment)."""
-    src, n_parts = _spread(df)
+    """Materialized (id, hs) table: each document's distinct shingles as
+    31-bit ``hash_family`` hashes — the one input of
+    ``minhash_lsh_candidates`` and ``jaccard_pairs``. The hashed-shingle
+    projection is the near-dup pipeline's dominant CPU; materialized, it
+    runs once per query although candidate generation and both sides of
+    the verify join read it. The hashed set (8 B per shingle) is smaller
+    than the text it replaces.
+
+    Rows with NULL text are dropped, so they never become candidates or
+    verified pairs (the DuckDB oracles give them no shingle rows). Kept,
+    NULL would shingle to ``[NULL]``, whose hash is a constant, and any
+    two NULL-text documents would pair at Jaccard 1.0.
+    """
+    # Shingling is CPU-bound: _spread runs it at full parallelism
+    # (fixtures arrive as one file = one partition) without ever
+    # round-tripping raw text when the scan is already wide. The exchange
+    # has an EXPLICIT partition count: AQE would otherwise coalesce the
+    # tiny-bytes shingle exchange to one partition and serialize the
+    # minhash projection that reads the table (CPU-bound, not
+    # bytes-bound).
+    src, n_parts = _spread(df.filter(F.col(text_col).isNotNull()))
     return (
         src.selectExpr(
             id_col,
@@ -219,59 +186,38 @@ def hashed_shingle_table(
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
+    shingles: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 128,
     bands: int = 32,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
     hash_family: str = "xxhash64",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) via banded MinHash-LSH.
+    """Candidate near-dup pairs (id_a < id_b) via banded MinHash-LSH over
+    a ``hashed_shingle_table``.
 
     rows = num_hashes/bands hashes per band; docs colliding on any band's
     hash become candidates. With r=4, b=32 the S-curve threshold is
-    ≈ (1/b)^(1/r) ≈ 0.42 Jaccard.
+    ≈ (1/b)^(1/r) ≈ 0.42 Jaccard. Raises ``ValueError`` unless
+    1 <= bands <= num_hashes and ``bands`` divides ``num_hashes``.
 
-    ``hash_family="md5"`` swaps both hash sites (shingle hash AND band
-    bucket key) for engine-portable forms — the md5-prefix integer the
-    oracle layer already uses, and the band's raw min-value tuple joined
-    as a string instead of an xxhash64 of it — so the ENTIRE candidate
-    generation is replayable in ANSI SQL and the minhash gate can be
-    oracle-PAIRED rather than rows-only. The affine minhash transforms
-    are pure integer arithmetic in both families.
+    ``hash_family`` is the table's family. "md5" also makes each band's
+    bucket key its raw min-value tuple joined as a string instead of an
+    xxhash64 of it, so together with the table's md5-prefix shingle
+    integers the ENTIRE candidate generation is replayable in ANSI SQL
+    and the minhash gate can be oracle-PAIRED rather than rows-only. The
+    affine minhash transforms are pure integer arithmetic in both
+    families.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must divide evenly into bands")
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            "bands must divide num_hashes evenly, with 1 <= bands <= num_hashes "
+            f"(got num_hashes={num_hashes}, bands={bands})"
+        )
     r = num_hashes // bands
-    # Shingling is the CPU-heavy projection; _spread makes sure it runs at
-    # full parallelism (fixtures arrive as one file = one partition)
-    # without ever round-tripping raw text when the scan is already wide.
-    # Then ONE exchange with an EXPLICIT partition count (AQE would
-    # otherwise coalesce the tiny-bytes shingle exchange to one partition
-    # and serialize the minhash projection, which is CPU-bound, not
-    # bytes-bound) acting as the anti-collapse barrier: without it,
-    # projection collapse would inline the (regexp + split + xxhash64)
-    # shingle tree into every minhash use — a num_hashes× recompute. (A
-    # barrier-free single-pass fold formulation was tried and is ~25×
-    # slower: expressions inside higher-order-function lambdas are
-    # re-evaluated per element and allocate per shingle; see git
-    # history.) All expressions are SQL text parsed JVM-side in one call —
-    # ~10× cheaper to build than the equivalent py4j Column tree.
-    # Optimization r14: accept a prebuilt materialized shingle table
-    # (``hashed_shingle_table``) — composed with jaccard_pairs the
-    # hashed-shingle projection is the pipeline's dominant CPU and used
-    # to run once per stage; shared, it runs once per query.
-    if shingles is not None:
-        hashed = shingles
-    else:
-        src, n_parts = _spread(df)
-        hashed = src.selectExpr(
-            id_col,
-            f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS hs",
-        ).repartition(n_parts, F.col(id_col))
+    # One array_min(transform) per hash function. A single-pass fold over
+    # all num_hashes at once was tried and is ~25× slower: expressions
+    # inside higher-order-function lambdas are re-evaluated per element
+    # and allocate per shingle.
     mins = [
         f"array_min(transform(hs, h -> pmod({(j * 2 + 1) * _A_MULT % _P}L * h"
         f" + {(j + 1) * _B_MULT % _P}L, {_P}L)))"
@@ -290,14 +236,13 @@ def minhash_lsh_candidates(
     structs = ", ".join(
         f"struct({b} AS band, {_bh(b)} AS bh)" for b in range(bands)
     )
-    # Optimization r14: the band table is materialized — BOTH sides of
-    # the bucket self-join below read it, and unmaterialized each side
-    # re-ran the full shingle + num_hashes-transform projection (the
-    # query's dominant CPU). (id, band, bh) is the LSH signature index
-    # every production near-dup system persists; it is num_hashes/r
-    # short rows per doc, far smaller than the text it replaces.
+    # The band table is materialized: BOTH sides of the bucket self-join
+    # below read it, and unmaterialized each side would re-run the
+    # num_hashes-transform projection. (id, band, bh) is the LSH
+    # signature index every production near-dup system persists; it is
+    # num_hashes/r short rows per doc.
     banded = (
-        hashed.select(
+        shingles.select(
             F.col(id_col), F.expr(f"explode(array({structs}))").alias("x")
         )
         .select(id_col, "x.band", "x.bh")
@@ -317,47 +262,28 @@ def minhash_lsh_candidates(
 
 
 def jaccard_pairs(
-    df: DataFrame,
+    shingles: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
     threshold: float = 0.8,
-    shingle_mode: str = "word",
-    hash_family: str = "xxhash64",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """n-gram Jaccard verification of candidate pairs: |A∩B| / |A∪B| via
-    array_intersect/array_union over hashed shingle sets (31-bit hashes —
+    """n-gram Jaccard verification of candidate ``pairs`` (id_a, id_b)
+    over a ``hashed_shingle_table``: |A∩B| / |A∪B| via
+    array_intersect/array_union of the hashed shingle sets (31-bit hashes —
     collision effect on Jaccard is ≤ |A|²/2³¹, negligible; set semantics
     hold even under collision because array_intersect/array_union both
-    de-duplicate, matching an oracle's DISTINCT-hash sets).
-    ``hash_family`` selects the shingle hash so an md5-family candidate
-    pipeline verifies over the SAME hash values end-to-end (ADVICE r12:
-    previously the verify stage was pinned to xxhash64, so md5 gates
-    held only while neither family had an intra-document collision).
-    Two hash joins keyed by doc id — linear in candidates, never n²."""
-    # _spread parallelizes the CPU-heavy shingle projection; the join's
-    # own exchange then materializes the shingle arrays, so the post-join
-    # jaccard projection (which references each side twice: intersect +
-    # union) reads computed values instead of recomputing the tree.
-    # Optimization r14: materialized — the shingle-set table feeds BOTH
-    # sides of the verify join; unmaterialized, each side re-ran the
-    # regex + shingle + hash projection over the corpus. The hashed set
-    # (8 B per token) is strictly smaller than the text it derives from.
-    # A prebuilt table (``hashed_shingle_table``, shared with the
-    # candidate stage) skips even that single pass.
-    if shingles is not None:
-        sh = shingles.withColumnRenamed("hs", "sh")
-    else:
-        src, _ = _spread(df)
-        sh = src.selectExpr(
-            id_col,
-            f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS sh",
-        ).localCheckpoint(eager=True)
+    de-duplicate, matching an oracle's DISTINCT-hash sets). Verifying on
+    the table the candidates came from keeps one hash family end to end,
+    so an md5-family pipeline replays exactly even under intra-document
+    hash collisions. Returns (id_a, id_b, jaccard) with jaccard >=
+    ``threshold``; a document with NULL text has no table row and never
+    pairs. Two hash joins keyed by doc id — linear in candidates, never n².
+    """
+    sh_a = shingles.select(F.col(id_col).alias("id_a"), F.col("hs").alias("sh_a"))
+    sh_b = shingles.select(F.col(id_col).alias("id_b"), F.col("hs").alias("sh_b"))
     out = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        pairs.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
         .select(
             "id_a",
             "id_b",
@@ -368,6 +294,25 @@ def jaccard_pairs(
         )
     )
     return out.filter(F.col("jaccard") >= threshold)
+
+
+def minhash_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    num_hashes: int = 128,
+    bands: int = 32,
+    shingle_k: int = 3,
+    shingle_mode: str = "word",
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """Verified near-dup pairs (id_a < id_b, jaccard >= ``threshold``):
+    one ``hashed_shingle_table`` read by ``minhash_lsh_candidates`` and
+    ``jaccard_pairs``. Documents with NULL text never pair."""
+    sh = hashed_shingle_table(df, id_col, text_col, shingle_k, shingle_mode, hash_family)
+    cands = minhash_lsh_candidates(sh, id_col, num_hashes, bands, hash_family)
+    return jaccard_pairs(sh, cands, id_col, threshold)
 
 
 def minhash_dedup(
@@ -382,8 +327,9 @@ def minhash_dedup(
     transitive: bool = False,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """End-to-end near-dedup: LSH candidates → exact Jaccard filter →
-    survivors. Returns the deduplicated rows of ``df``.
+    """End-to-end near-dedup: ``minhash_pairs`` (LSH candidates → exact
+    Jaccard filter) → survivors. Returns the deduplicated rows of ``df``;
+    rows with NULL text are never duplicates, so they are all kept.
 
     ``transitive=False`` (default) uses single-link "drop any row matched
     to a smaller id" — one pass, but a chain A~B~C can keep both A and C.
@@ -391,16 +337,9 @@ def minhash_dedup(
     (``connected_components``) and keeps exactly one representative (min
     id) per duplicate cluster.
     """
-    sh = hashed_shingle_table(
-        df, id_col, text_col, shingle_k, shingle_mode, hash_family
-    )
-    cands = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, shingle_k, shingle_mode,
-        hash_family, shingles=sh,
-    )
-    confirmed = jaccard_pairs(
-        df, cands, id_col, text_col, shingle_k, threshold, shingle_mode,
-        hash_family, shingles=sh,
+    confirmed = minhash_pairs(
+        df, id_col, text_col, threshold, num_hashes, bands, shingle_k,
+        shingle_mode, hash_family,
     )
     if transitive:
         return dedup_by_components(df, confirmed, id_col)
@@ -1317,6 +1256,123 @@ def strip_passages(
     return df.select(F.col(id_col), F.trim(out).alias("clean_text"))
 
 
+def _threshold_fraction(threshold: float) -> tuple[int, int]:
+    """(num, den) with ``threshold`` = num/den exactly, so the prefix
+    joins test the threshold in integer arithmetic and a brute-force
+    oracle matches bit-for-bit. Raises ``ValueError`` unless the
+    threshold is in (0, 1]."""
+    if not 0 < threshold <= 1:
+        raise ValueError(f"threshold must be in (0, 1] (got {threshold})")
+    frac = Fraction(str(threshold))
+    return frac.numerator, frac.denominator
+
+
+def _prefix_shingle_table(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, num: int, den: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The ranked shingle table of the prefix-filter joins
+    (``set_similarity_join``, ``containment_join``) at threshold
+    t = num/den. Returns ``(sh, tokens, prefix)``:
+
+    * ``sh`` — materialized (__id, __s, __h): each document's distinct
+      word ``shingle_n``-gram strings and, positionally aligned, their
+      xxhash64 values;
+    * ``tokens`` — (__id, __sz, __tok): one row per element of __h,
+      __sz = |S|;
+    * ``prefix`` — (__id, __sz, __pos, __tok): the ``tokens`` rows whose
+      rarest-first rank __pos (by global frequency, ties by token) is
+      within the prefix length |S| - ceil(t·|S|) + 1.
+
+    Rows with NULL text are dropped, so they never pair (the oracles
+    filter ``text IS NOT NULL``); kept, NULL would shingle to ``[NULL]``
+    with a constant hash. Every non-NULL text has at least one shingle.
+
+    Hashed tokens keep the prefix filters exact: __h is NOT
+    de-duplicated, so a cross-string hash collision leaves duplicate
+    longs, which only merge posting lists and enlarge the verify's
+    upper bound — candidates are only ever added. The operators'
+    prefix arguments run on hash VALUES: common hashes (counted with
+    A-side multiplicity) are >= |A∩B| strings, and equal hash values
+    occupy contiguous positions under the (__cnt, __tok) order, so the
+    first occurrence of the smallest common hash bounds every common
+    element's position.
+    """
+    # Materialized ONCE: global frequencies, the ranked prefix, the
+    # postings side and both verify passes all read it; without it each
+    # re-ran the regex + shingling pass over the corpus. __h moves
+    # 8-byte longs through candidate generation and the pass-1 verify
+    # instead of ~25-byte shingle strings. No _spread here: it lost a
+    # median-of-3 wall A/B (set_similarity 1.89 s without vs 3.02 s
+    # with; containment 2.24 vs 3.35) — the repartition round-trip of
+    # the text costs more than parallelizing this projection buys.
+    sh = (
+        df.filter(F.col(text_col).isNotNull())
+        .select(F.col(id_col).alias("__id"), word_shingles(text_col, shingle_n).alias("__s"))
+        .withColumn("__h", F.transform("__s", lambda x: F.xxhash64(x)))
+        .localCheckpoint(eager=True)
+    )
+    tokens = sh.select("__id", F.size("__h").alias("__sz"), F.explode("__h").alias("__tok"))
+    freq = tokens.groupBy("__tok").agg(F.count(F.lit(1)).alias("__cnt"))
+    w = Window.partitionBy("__id").orderBy("__cnt", "__tok")
+    # prefix length |S| - ceil(t|S|) + 1, all-integer: ceil(a/b) = (a+b-1) div b
+    # (integer `div`, not float /+floor — a float quotient can round up
+    # across the integer boundary for large sizes)
+    plen = (
+        F.col("__sz")
+        - F.expr(f"(({num}L * __sz + {den - 1}L) div {den}L)")
+        + F.lit(1)
+    )
+    prefix = (
+        tokens.join(freq, "__tok")
+        .withColumn("__pos", F.row_number().over(w))
+        .filter(F.col("__pos") <= plen)
+        .select("__id", "__sz", "__pos", "__tok")
+    )
+    return sh, tokens, prefix
+
+
+def _two_pass_verify(
+    sh: DataFrame, cand: DataFrame, keep: Callable[[Column, Column, Column], Column]
+) -> DataFrame:
+    """Exact verify of candidate pairs ``cand`` (__ida, __idb) over the
+    prefix table ``sh``. ``keep(inter, size_a, size_b)`` is the
+    operator's threshold test and must be monotone (non-decreasing) in
+    ``inter``. Returns the kept pairs as (__ida, __idb, __sa, __sb, __i)
+    with __i = |A∩B| over the shingle strings.
+
+    Pass 1 bounds the intersection from the hashed arrays: every string
+    shingle s in A∩B has xxhash64(s) in both __ha and __hb, hence NOT in
+    array_except(__ha, __hb); the map from A∩B into A's positions is
+    injective, so
+      |A∩B| <= |{elements of __ha whose value is in __hb}|
+             <= size(__ha) - size(array_except(__ha, __hb)) =: ub
+    (array_except returns DISTINCT values, which can only shrink the
+    subtrahend — ub stays an upper bound). ``keep`` is monotone in the
+    intersection, so testing ub keeps a guaranteed superset. Pass 2
+    recomputes the intersection EXACTLY on the string arrays for the
+    (output-sized) survivor set: the result is bit-identical, the
+    expensive string array_intersect runs on ~0.1% of the pairs, and the
+    per-pair pass-1 join ships long arrays, not strings.
+    """
+    ha = sh.select(F.col("__id").alias("__ida"), F.col("__h").alias("__ha"))
+    hb = sh.select(F.col("__id").alias("__idb"), F.col("__h").alias("__hb"))
+    ub = F.size("__ha") - F.size(F.array_except("__ha", "__hb"))
+    survivors = (
+        cand.join(ha, "__ida")
+        .join(hb, "__idb")
+        .filter(keep(ub, F.size("__ha"), F.size("__hb")))
+        .select("__ida", "__idb")
+    )
+    sa = sh.select(F.col("__id").alias("__ida"), F.col("__s").alias("__sa"))
+    sb = sh.select(F.col("__id").alias("__idb"), F.col("__s").alias("__sb"))
+    return (
+        survivors.join(sa, "__ida")
+        .join(sb, "__idb")
+        .withColumn("__i", F.size(F.array_intersect("__sa", "__sb")))
+        .filter(keep(F.col("__i"), F.size("__sa"), F.size("__sb")))
+    )
+
+
 def set_similarity_join(
     df: DataFrame,
     threshold: float = 0.6,
@@ -1337,9 +1393,10 @@ def set_similarity_join(
     the suffix of size ceil(t|S|)-1 < t|S| <= |A∩B|, contradiction), so
     joining prefix tokens against prefix tokens generates a guaranteed
     candidate superset. Verification is exact set intersection; the
-    threshold test is exact integer arithmetic (inter · den >= num ·
-    uni with threshold = num/den), so the DuckDB brute-force oracle
-    matches bit-for-bit.
+    threshold test is exact integer arithmetic (inter · (num + den) >=
+    num · (|A| + |B|), i.e. inter / uni >= num/den = threshold), so the
+    DuckDB brute-force oracle matches bit-for-bit. Documents with NULL
+    text never pair.
 
     Scale shape: candidate cost is Σ over PREFIX-token postings of
     |posting|² — prefix tokens are the RAREST tokens of each set, which
@@ -1348,78 +1405,19 @@ def set_similarity_join(
     the only window is per-document token ranking (state = one doc's
     token set). Brute-force n² never happens.
     """
-    from fractions import Fraction
-
-    from pyspark.sql import Window
-
-    frac = Fraction(str(threshold))
-    num, den = frac.numerator, frac.denominator
-    if not 0 < threshold <= 1:
-        raise ValueError(f"threshold must be in (0, 1] (got {threshold})")
-
-    # Optimization r14: the shingle table is materialized ONCE — it used
-    # to be re-derived FIVE times in one plan (global frequencies, the
-    # ranked prefix stream, the postings side, and both verify sides),
-    # each a full regex + shingling pass over the corpus. The shingle
-    # arrays are comparable in size to the text they replace, and every
-    # downstream step (two explodes, the ranking window, the verify
-    # joins) now reads the materialized arrays instead.
-    # Optimization r15: the table also carries __h = xxhash64 per
-    # shingle, so candidate generation and the pass-1 verify below move
-    # 8-byte longs through every exchange instead of ~25-byte shingle
-    # strings (§2.3 narrower types). __h is positionally aligned with
-    # __s and NOT deduplicated: a cross-string hash collision may leave
-    # duplicate longs, which only ever ENLARGES posting lists and the
-    # pass-1 upper bound — superset-safe at every site (proofs below).
-    # _spread was tried here (r15) and REJECTED on a median-of-3 wall
-    # A/B (set_similarity 1.89 s without vs 3.02 s with; containment
-    # 2.24 vs 3.35): the repartition round-trip of the text costs more
-    # than parallelizing the shingle projection buys at this weight.
-    sh = (
-        df.select(
-            F.col(id_col).alias("__id"), word_shingles(text_col, shingle_n).alias("__s")
-        )
-        .filter(F.size("__s") > 0)
-        .withColumn("__h", F.transform("__s", lambda x: F.xxhash64(x)))
-        .localCheckpoint(eager=True)
-    )
-
-    exploded = sh.select(
-        "__id", F.size("__h").alias("__sz"), F.explode("__h").alias("__tok")
-    )
-    freq = exploded.groupBy("__tok").agg(F.count(F.lit(1)).alias("__cnt"))
-    toks = exploded.join(freq, "__tok")
-    w = Window.partitionBy("__id").orderBy("__cnt", "__tok")
-    # prefix length |S| - ceil(t|S|) + 1, all-integer: ceil(a/b) = (a+b-1) div b
-    # (integer `div`, not float /+floor — a float quotient can round up
-    # across the integer boundary for large sizes)
-    plen = (
-        F.col("__sz")
-        - F.expr(f"(({num}L * __sz + {den - 1}L) div {den}L)")
-        + F.lit(1)
-    )
-    # Optimization r15 (All-Pairs, Bayardo WWW'07): candidates come from
-    # PREFIX x PREFIX, not prefix x full postings. Correctness: for any
-    # pair with Jaccard >= t, the globally SMALLEST common token w* must
-    # sit inside BOTH prefixes — if w* fell outside side S's prefix of
+    num, den = _threshold_fraction(threshold)
+    sh, _, ranked = _prefix_shingle_table(df, id_col, text_col, shingle_n, num, den)
+    # All-Pairs (Bayardo WWW'07): candidates come from PREFIX x PREFIX,
+    # not prefix x full postings. Correctness: for any pair with
+    # Jaccard >= t, the globally SMALLEST common token w* must sit
+    # inside BOTH prefixes — if w* fell outside side S's prefix of
     # length |S| - ceil(t|S|) + 1, every common token (all >= w* in the
     # order, hence at later positions) would fit in the ceil(t|S|) - 1
     # suffix slots, giving |A∩B| < t|S| <= t|A∪B| <= |A∩B|,
-    # contradiction. The argument survives hashed tokens: "common token"
-    # becomes "common hash VALUE" (a superset of common strings, counted
-    # with A-side multiplicity >= |A∩B|), positions of equal hashes are
-    # contiguous under the (__cnt, __tok) order so the first occurrence
-    # of w* bounds every common-hash element's position, and the same
-    # counting contradiction applies. Collisions only merge posting
-    # lists — candidates are only ever ADDED.
+    # contradiction (on hashed tokens too; see _prefix_shingle_table).
     # Materialized once: both join sides read the same ranked table, and
     # as a lazy reference each side would re-run the freq join + window.
-    prefix = (
-        toks.withColumn("__pos", F.row_number().over(w))
-        .filter(F.col("__pos") <= plen)
-        .select("__id", "__sz", "__pos", "__tok")
-        .localCheckpoint(eager=True)
-    )
+    prefix = ranked.localCheckpoint(eager=True)
     pa = prefix.select(
         F.col("__id").alias("__ida"),
         F.col("__sz").alias("__sza"),
@@ -1468,51 +1466,19 @@ def set_similarity_join(
             * F.lit(num + den)
             >= F.lit(num) * (F.col("__sza") + F.col("__szb"))
         )
-        .select("__ida", "__idb", "__sza", "__szb")
-    )
-    # Optimization r15: TWO-PASS verify (the r14 passage-mining
-    # pattern). Pass 1 bounds the intersection from the hashed arrays:
-    # every string shingle s in A∩B has xxhash64(s) present in both __ha
-    # and __hb, hence NOT in array_except(__ha, __hb); the map from A∩B
-    # into A's positions is injective, so
-    #   |A∩B| <= |{elements of __ha whose value is in __hb}|
-    #          <= size(__ha) - size(array_except(__ha, __hb)) =: ub
-    # (array_except returns DISTINCT values, which can only shrink the
-    # subtrahend — ub stays an upper bound). Jaccard >= t = num/den is
-    # equivalent to inter·(num+den) >= num·(|A|+|B|), monotone in inter,
-    # so testing ub keeps a guaranteed superset. Pass 2 recomputes the
-    # intersection EXACTLY on the string arrays for the (output-sized)
-    # survivor set — the declared result is bit-identical, but the
-    # expensive string array_intersect now runs on ~0.1% of the pairs
-    # and the per-pair verify join ships long arrays, not strings.
-    ha = sh.select(F.col("__id").alias("__ida"), F.col("__h").alias("__ha"))
-    hb = sh.select(F.col("__id").alias("__idb"), F.col("__h").alias("__hb"))
-    ub = F.size("__ha") - F.size(F.array_except("__ha", "__hb"))
-    pass1 = (
-        cand.join(ha, "__ida")
-        .join(hb, "__idb")
-        .withColumn("__ub", ub)
-        .filter(
-            F.col("__ub") * F.lit(num + den)
-            >= F.lit(num) * (F.col("__sza") + F.col("__szb"))
-        )
         .select("__ida", "__idb")
     )
-    a = sh.select(F.col("__id").alias("__ida"), F.col("__s").alias("__sa"))
-    b = sh.select(F.col("__id").alias("__idb"), F.col("__s").alias("__sb"))
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    uni = F.size("__sa") + F.size("__sb") - inter
-    return (
-        pass1.join(a, "__ida")
-        .join(b, "__idb")
-        .withColumn("__i", inter)
-        .withColumn("__u", uni)
-        .filter(F.col("__i") * F.lit(den) >= F.lit(num) * F.col("__u"))
-        .select(
-            F.col("__ida").alias("id_a"),
-            F.col("__idb").alias("id_b"),
-            (F.col("__i").cast("double") / F.col("__u").cast("double")).alias("jaccard"),
-        )
+    # the same Jaccard test, monotone in the intersection
+    verified = _two_pass_verify(
+        sh, cand, lambda inter, na, nb: inter * F.lit(num + den) >= F.lit(num) * (na + nb)
+    )
+    return verified.select(
+        F.col("__ida").alias("id_a"),
+        F.col("__idb").alias("id_b"),
+        (
+            F.col("__i").cast("double")
+            / (F.size("__sa") + F.size("__sb") - F.col("__i")).cast("double")
+        ).alias("jaccard"),
     )
 
 
@@ -1580,15 +1546,14 @@ def near_dup_against(
     100 TB you persist the base corpus's band table once and only the
     new slice is shingled per batch); candidates come from band-bucket
     equality ACROSS the two tables only (never base×base or new×new),
-    then exact n-gram Jaccard verifies. ``hash_family="md5"`` swaps
-    ALL THREE hash sites — shingle hashing for signatures, band keys,
-    AND the verify-stage shingle sets (ADVICE r12: the verify site was
-    previously pinned to xxhash64, so the oracle replay was exact only
-    absent intra-document collisions mod 2^31-1) — for the
+    then exact n-gram Jaccard verifies on the same shingle table.
+    ``hash_family="md5"`` swaps every hash site — the shingle hashes
+    behind both signatures and verify, and the band keys — for the
     engine-portable forms (the minhash_lsh_candidates provable path),
     making the WHOLE cross-corpus pipeline oracle-replayable hash-for-
-    hash; production keeps the 2-3x-faster xxhash64 default. Returns (new_id, base_id,
-    jaccard ≥ threshold) — consumers drop flagged new docs.
+    hash; production keeps the 2-3x-faster xxhash64 default. Returns
+    (new_id, base_id, jaccard ≥ threshold) — consumers drop flagged new
+    docs. Documents with NULL text never pair.
     """
     # Band both sides with identical parameters by tagging ids into
     # disjoint parity classes (new = odd, base = even) and running the
@@ -1627,18 +1592,14 @@ def near_dup_against(
 
     tagged_new = new_df.select(_tag(1).alias("__tid"), F.col(text_col))
     tagged_base = base_df.select(_tag(0).alias("__tid"), F.col(text_col))
-    union = tagged_new.unionByName(tagged_base)
-    cands = minhash_lsh_candidates(
-        union,
-        id_col="__tid",
-        text_col=text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        shingle_mode=shingle_mode,
-        hash_family=hash_family,
+    sh = hashed_shingle_table(
+        tagged_new.unionByName(tagged_base), "__tid", text_col, shingle_k,
+        shingle_mode, hash_family,
     )
-    # keep NEW×BASE collisions only (odd tid = new, even = base).
+    cands = minhash_lsh_candidates(sh, "__tid", num_hashes, bands, hash_family)
+    # keep NEW×BASE collisions only (odd tid = new, even = base), as
+    # (id_a = new tid, id_b = base tid); distinct candidates map to
+    # distinct oriented pairs, so no second distinct is needed.
     # pmod, not %: Spark's % keeps the dividend's sign, so a NEGATIVE
     # odd tid gives tid % 2 == -1 — it would fail both the ==1 and ==0
     # branches and silently mangle the pair. pmod(tid, 2) is 0/1 for
@@ -1646,37 +1607,14 @@ def near_dup_against(
     par_a = F.pmod(F.col("id_a"), F.lit(2))
     par_b = F.pmod(F.col("id_b"), F.lit(2))
     cross = cands.filter(par_a != par_b).select(
-        F.when(par_a == 1, F.col("id_a")).otherwise(F.col("id_b")).alias("__tnew"),
-        F.when(par_a == 0, F.col("id_a")).otherwise(F.col("id_b")).alias("__tbase"),
-    ).distinct()
-    pairs = cross.select(
-        F.shiftright(F.col("__tnew"), 1).cast("long").alias("id_a"),
-        F.shiftright(F.col("__tbase"), 1).cast("long").alias("id_b"),
+        F.when(par_a == 1, F.col("id_a")).otherwise(F.col("id_b")).alias("id_a"),
+        F.when(par_a == 0, F.col("id_a")).otherwise(F.col("id_b")).alias("id_b"),
     )
-    # exact verify joining each side to ITS corpus
-    src_new, _ = _spread(new_df)
-    src_base, _ = _spread(base_df)
-    sh_new = src_new.selectExpr(
-        f"{id_col} AS id_a",
-        f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS sh_a",
+    return jaccard_pairs(sh, cross, "__tid", threshold).select(
+        F.shiftright(F.col("id_a"), 1).cast("long").alias("new_id"),
+        F.shiftright(F.col("id_b"), 1).cast("long").alias("base_id"),
+        "jaccard",
     )
-    sh_base = src_base.selectExpr(
-        f"{id_col} AS id_b",
-        f"{_hashed_shingles_sql(text_col, shingle_k, shingle_mode, hash_family)} AS sh_b",
-    )
-    out = (
-        pairs.join(sh_new, "id_a")
-        .join(sh_base, "id_b")
-        .select(
-            F.col("id_a").alias("new_id"),
-            F.col("id_b").alias("base_id"),
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-    return out.filter(F.col("jaccard") >= float(threshold))
 
 
 def embedding_dedup(
@@ -1920,76 +1858,28 @@ def containment_join(
     superset; |A∩B| <= |B| additionally forces ceil(t·|A|) <= |B|, an
     all-integer length prune. Verification is exact set intersection
     with an integer threshold test (inter · den >= num · |A|), so a
-    brute-force oracle matches bit-for-bit.
+    brute-force oracle matches bit-for-bit. Documents with NULL text
+    never pair.
 
     Scale shape: candidate cost is Σ over A-prefix-token postings of
     |posting|² with the rarest tokens doing the probing (frequent
     tokens never enter the prefix); everything else is id/token-keyed
     joins and one per-document ranking window. Brute-force n² never
-    happens. Cites set_similarity_join (dedup.py:988) for the shared
-    discipline.
+    happens. Shares its ranked shingle table and two-pass verify with
+    ``set_similarity_join``.
     """
-    from fractions import Fraction
-
-    from pyspark.sql import Window
-
-    if not 0 < threshold <= 1:
-        raise ValueError(f"threshold must be in (0, 1] (got {threshold})")
-    frac = Fraction(str(threshold))
-    num, den = frac.numerator, frac.denominator
-
-    # Optimization r14: shingle table materialized once (see
-    # set_similarity_join — identical five-derivation pattern).
-    # Optimization r15: it also carries __h = xxhash64 per shingle,
-    # positionally aligned with __s, so candidate generation and the
-    # pass-1 verify move longs through every exchange instead of
-    # shingle strings (§2.3). A positional PPJoin filter was tried here
-    # and REJECTED on measurement: it requires ranking the FULL
-    # postings side (an extra window + materialization the asymmetric
-    # join otherwise avoids) and cut candidates only ~19% at t=0.6 —
-    # CPU went UP (11.2 → 12.0 s at sf0.1). The two-pass hash verify
-    # below attacks the actual dominant cost instead.
-    # _spread was tried here (r15) and REJECTED on a median-of-3 wall
-    # A/B (set_similarity 1.89 s without vs 3.02 s with; containment
-    # 2.24 vs 3.35): the repartition round-trip of the text costs more
-    # than parallelizing the shingle projection buys at this weight.
-    sh = (
-        df.select(
-            F.col(id_col).alias("__id"), word_shingles(text_col, shingle_n).alias("__s")
-        )
-        .filter(F.size("__s") > 0)
-        .withColumn("__h", F.transform("__s", lambda x: F.xxhash64(x)))
-        .localCheckpoint(eager=True)
+    num, den = _threshold_fraction(threshold)
+    sh, tokens, ranked = _prefix_shingle_table(df, id_col, text_col, shingle_n, num, den)
+    # A positional PPJoin filter was tried here and REJECTED on
+    # measurement: it requires ranking the FULL postings side (an extra
+    # window + materialization the asymmetric join otherwise avoids) and
+    # cut candidates only ~19% at t=0.6 — CPU went UP (11.2 → 12.0 s at
+    # sf0.1). The two-pass verify attacks the dominant cost instead.
+    prefix = ranked.select(
+        F.col("__id").alias("__ida"), F.col("__sz").alias("__sza"), "__tok"
     )
-
-    exploded = sh.select(
-        "__id", F.size("__h").alias("__sz"), F.explode("__h").alias("__tok")
-    )
-    freq = exploded.groupBy("__tok").agg(F.count(F.lit(1)).alias("__cnt"))
-    toks = exploded.join(freq, "__tok")
-    w = Window.partitionBy("__id").orderBy("__cnt", "__tok")
-    # prefix length |A| - ceil(t|A|) + 1; integer ceil via div
-    plen = (
-        F.col("__sz")
-        - F.expr(f"(({num}L * __sz + {den - 1}L) div {den}L)")
-        + F.lit(1)
-    )
-    # Hashed-token prefix correctness: the docstring's contradiction
-    # argument runs on hash VALUES — common hashes (counted with A-side
-    # multiplicity) are >= |A∩B| strings, equal hash values occupy
-    # contiguous positions under the (__cnt, __tok) order so the first
-    # occurrence of the smallest common hash bounds every common
-    # element's position, and collisions only MERGE posting lists —
-    # candidates are only ever added, never lost.
-    prefix = (
-        toks.withColumn("__pos", F.row_number().over(w))
-        .filter(F.col("__pos") <= plen)
-        .select(F.col("__id").alias("__ida"), F.col("__sz").alias("__sza"), "__tok")
-    )
-    postings = exploded.select(
-        F.col("__id").alias("__idb"),
-        F.col("__sz").alias("__szb"),
-        "__tok",
+    postings = tokens.select(
+        F.col("__id").alias("__idb"), F.col("__sz").alias("__szb"), "__tok"
     )
     # length prune: |A∩B| <= |B| forces ceil(t·|A|) <= |B|
     cand = (
@@ -1999,44 +1889,17 @@ def containment_join(
             & (F.expr(f"(({num}L * __sza + {den - 1}L) div {den}L)")
                <= F.col("__szb"))
         )
-        .select("__ida", "__idb", "__sza")
+        .select("__ida", "__idb")
         .distinct()
     )
-    # Optimization r15: TWO-PASS verify (the r14 passage-mining
-    # pattern; full proof at the set_similarity_join twin). Pass 1
-    # bounds the intersection from the hashed arrays —
-    #   |A∩B| <= size(__ha) - size(array_except(__ha, __hb)) =: ub
-    # — and containment >= t = num/den is monotone in the intersection
-    # (inter·den >= num·|A|), so testing ub keeps a guaranteed
-    # superset. Pass 2 recomputes the intersection EXACTLY on the
-    # string arrays for the output-sized survivor set: bit-identical
-    # result, with the expensive string array_intersect on ~0.1% of
-    # the candidate pairs and long arrays (not strings) shipped
-    # through the per-pair verify join.
-    ha = sh.select(F.col("__id").alias("__ida"), F.col("__h").alias("__ha"))
-    hb = sh.select(F.col("__id").alias("__idb"), F.col("__h").alias("__hb"))
-    ub = F.size("__ha") - F.size(F.array_except("__ha", "__hb"))
-    pass1 = (
-        cand.join(ha, "__ida")
-        .join(hb, "__idb")
-        .withColumn("__ub", ub)
-        .filter(F.col("__ub") * F.lit(den) >= F.lit(num) * F.col("__sza"))
-        .select("__ida", "__idb")
+    verified = _two_pass_verify(
+        sh, cand, lambda inter, na, nb: inter * F.lit(den) >= F.lit(num) * na
     )
-    a = sh.select(F.col("__id").alias("__ida"), F.col("__s").alias("__sa"))
-    b = sh.select(F.col("__id").alias("__idb"), F.col("__s").alias("__sb"))
-    inter = F.size(F.array_intersect("__sa", "__sb"))
-    return (
-        pass1.join(a, "__ida")
-        .join(b, "__idb")
-        .withColumn("__i", inter)
-        .filter(F.col("__i") * F.lit(den) >= F.lit(num) * F.size("__sa"))
-        .select(
-            F.col("__ida").alias("id_a"),
-            F.col("__idb").alias("id_b"),
-            (F.col("__i").cast("double") / F.size("__sa").cast("double"))
-            .alias("containment"),
-        )
+    return verified.select(
+        F.col("__ida").alias("id_a"),
+        F.col("__idb").alias("id_b"),
+        (F.col("__i").cast("double") / F.size("__sa").cast("double"))
+        .alias("containment"),
     )
 
 

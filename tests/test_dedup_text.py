@@ -33,11 +33,12 @@ def test_exact_dedup_planted(spark):
 
 def test_minhash_near_dup_recall_and_precision(spark):
     docs = _docs_with_planted_dups(spark)
-    cands = dd.minhash_lsh_candidates(docs, num_hashes=64, bands=16)
+    sh = dd.hashed_shingle_table(docs)
+    cands = dd.minhash_lsh_candidates(sh, num_hashes=64, bands=16)
     pairs = {(r["id_a"], r["id_b"]) for r in cands.collect()}
     assert (1, 3) in pairs  # exact dup must collide
     assert (1, 4) in pairs or (3, 4) in pairs  # near dup should collide
-    verified = dd.jaccard_pairs(docs, cands, threshold=0.6)
+    verified = dd.jaccard_pairs(sh, cands, threshold=0.6)
     vp = {(r["id_a"], r["id_b"]): r["jaccard"] for r in verified.collect()}
     assert vp[(1, 3)] == 1.0
     assert all(a != 2 and b != 2 for a, b in vp)  # unrelated doc never verified
@@ -1117,6 +1118,25 @@ def test_similarity_two_pass_verify_borderline(spark):
     assert got_c == pytest.approx(want_c)
 
 
+def test_two_pass_verify_exact_under_hash_collisions(spark):
+    """The pass-1 hash bound may only over-admit: docs 1 and 2 share
+    every hash value but one shingle string, so they pass pass 1 and
+    pass 2 must drop them on the exact string intersection; the true
+    pair (3, 4) survives both passes."""
+    sh = spark.createDataFrame(
+        [
+            (1, ["a", "b", "c"], [10, 20, 30]),
+            (2, ["a", "x", "y"], [10, 20, 30]),
+            (3, ["p", "q"], [1, 2]),
+            (4, ["p", "q"], [1, 2]),
+        ],
+        "__id long, __s array<string>, __h array<bigint>",
+    )
+    cand = spark.createDataFrame([(1, 2), (3, 4)], "__ida long, __idb long")
+    got = dd._two_pass_verify(sh, cand, lambda inter, na, nb: inter * 2 >= na + nb)
+    assert [(r["__ida"], r["__idb"], r["__i"]) for r in got.collect()] == [(3, 4, 2)]
+
+
 # --- oov_rate -------------------------------------------------------------
 
 
@@ -1169,19 +1189,129 @@ def test_minhash_md5_family_agrees_with_xxhash64_on_planted_dups(spark):
         got = {
             (r["id_a"], r["id_b"])
             for r in dd.minhash_lsh_candidates(
-                df, num_hashes=32, bands=8, hash_family=fam
+                dd.hashed_shingle_table(df, hash_family=fam),
+                num_hashes=32, bands=8, hash_family=fam,
             ).collect()
         }
         assert (1, 2) in got, fam
         assert not any(3 in p for p in got), fam
 
 
-def test_minhash_unknown_hash_family_raises(spark):
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    import pytest
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"num_hashes": 8, "bands": 2, "hash_family": "sha9"}, "hash_family"),
+        ({"num_hashes": 8, "bands": 0}, "bands must divide num_hashes"),
+        ({"num_hashes": 0, "bands": 1}, "bands must divide num_hashes"),
+        ({"num_hashes": 8, "bands": 16}, "bands must divide num_hashes"),
+        ({"num_hashes": 8, "bands": 3}, "bands must divide num_hashes"),
+    ],
+    ids=["unknown_family", "zero_bands", "zero_hashes", "bands_over_hashes", "not_divisor"],
+)
+def test_minhash_bad_arguments_raise(spark, kwargs, match):
+    df = spark.createDataFrame([(1, "a b c"), (2, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=match):
+        dd.minhash_pairs(df, **kwargs)
+    if "hash_family" not in kwargs:
+        with pytest.raises(ValueError, match=match):
+            dd.minhash_lsh_candidates(dd.hashed_shingle_table(df), **kwargs)
 
-    with pytest.raises(ValueError, match="hash_family"):
-        dd.minhash_lsh_candidates(df, num_hashes=8, bands=2, hash_family="sha9")
+
+def _null_text_docs(spark):
+    text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    rows = [
+        (1, text),
+        (2, text),
+        (3, None),
+        (4, None),
+        (5, "a completely different document about spark query engines and shuffles"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("fam", ["xxhash64", "md5"])
+def test_minhash_null_text_never_pairs(spark, fam):
+    """NULL text has no shingles (as in the DuckDB oracles): the two
+    NULL-text documents never pair, only the planted pair (1, 2) comes
+    back, and minhash_dedup keeps both NULL rows."""
+    docs = _null_text_docs(spark)
+    mh = {"num_hashes": 16, "bands": 4, "hash_family": fam}
+    sh = dd.hashed_shingle_table(docs, hash_family=fam)
+    cands = dd.minhash_lsh_candidates(sh, **mh)
+    assert [tuple(r) for r in cands.collect()] == [(1, 2)]
+    assert [tuple(r) for r in dd.jaccard_pairs(sh, cands, threshold=0.5).collect()] == [
+        (1, 2, 1.0)
+    ]
+    assert [tuple(r) for r in dd.minhash_pairs(docs, threshold=0.5, **mh).collect()] == [
+        (1, 2, 1.0)
+    ]
+    new = docs.filter(F.col("doc_id") % 2 == 0)
+    base = docs.filter(F.col("doc_id") % 2 == 1)
+    got = dd.near_dup_against(new, base, threshold=0.5, **mh).collect()
+    assert [tuple(r) for r in got] == [(2, 1, 1.0)]
+    kept = dd.minhash_dedup(docs, threshold=0.5, **mh)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 4, 5]
+
+
+def test_prefix_joins_null_text_never_pair(spark):
+    docs = _null_text_docs(spark)
+    got = dd.set_similarity_join(docs, threshold=0.5).collect()
+    assert [tuple(r) for r in got] == [(1, 2, 1.0)]
+    got = dd.containment_join(docs, threshold=0.5).collect()
+    assert sorted(tuple(r) for r in got) == [(1, 2, 1.0), (2, 1, 1.0)]
+
+
+_NEAR_DUP_OPS = {
+    "minhash_pairs_md5": lambda df: dd.minhash_pairs(
+        df, threshold=0.5, num_hashes=16, bands=4, hash_family="md5"
+    ),
+    "minhash_pairs_xxhash64": lambda df: dd.minhash_pairs(
+        df, threshold=0.5, num_hashes=16, bands=4
+    ),
+    "near_dup_against": lambda df: dd.near_dup_against(
+        df.filter(F.col("doc_id") % 2 == 1),
+        df.filter(F.col("doc_id") % 2 == 0),
+        threshold=0.5,
+        num_hashes=16,
+        bands=4,
+    ),
+    "set_similarity_join": lambda df: dd.set_similarity_join(df, threshold=0.5),
+    "containment_join": lambda df: dd.containment_join(df, threshold=0.5),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NEAR_DUP_OPS))
+def test_near_dup_partition_invariance(spark, name):
+    """Same rows under 1 and 7 shuffle partitions with AQE off. Four
+    planted clusters of three 24-word documents, 0-2 words edited
+    apiece."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(60)]
+    rows = []
+    for _ in range(4):
+        words = [rng.choice(vocab) for _ in range(24)]
+        for edits in range(3):
+            doc = list(words)
+            for _ in range(edits):
+                doc[rng.randrange(len(doc))] = rng.choice(vocab)
+            rows.append((len(rows), " ".join(doc)))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    op = _NEAR_DUP_OPS[name]
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    got = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            got[n] = sorted(tuple(r) for r in op(df).collect())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got[1]
+    assert got[1] == got[7]
 
 
 def test_minhash_md5_shingle_hash_matches_duckdb_recipe(spark):

@@ -59,10 +59,11 @@ def test_ml_minhash_agrees_with_native(spark):
         (r["id_a"], r["id_b"])
         for r in eml.ml_minhash_candidates(docs, jaccard_distance_threshold=0.6).collect()
     }
-    native_cands = dd.minhash_lsh_candidates(docs, num_hashes=64, bands=16)
+    native_sh = dd.hashed_shingle_table(docs)
+    native_cands = dd.minhash_lsh_candidates(native_sh, num_hashes=64, bands=16)
     native_pairs = {
         (r["id_a"], r["id_b"])
-        for r in dd.jaccard_pairs(docs, native_cands, threshold=0.4).collect()
+        for r in dd.jaccard_pairs(native_sh, native_cands, threshold=0.4).collect()
     }
     assert (1, 3) in ml_pairs and (1, 3) in native_pairs
     # both find the near-dup chain around 1/3/4, neither drags in 2 or 5

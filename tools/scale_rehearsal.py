@@ -249,7 +249,9 @@ def _targets(spark, sf_dir):
             docs, ns=(8, 16, 32), min_docs=2, adaptive=True
         ),
         "sentence_dedup": lambda: dd.sentence_dedup(docs, min_docs=2),
-        "minhash_lsh_candidates": lambda: dd.minhash_lsh_candidates(docs),
+        "minhash_lsh_candidates": lambda: dd.minhash_lsh_candidates(
+            dd.hashed_shingle_table(docs)
+        ),
         "embedding_dedup": lambda: dd.embedding_dedup(emb),
         "ivf_topk": lambda: sim.ivf_topk(
             emb,
