@@ -8480,10 +8480,8 @@ def _split_bound(frac: float) -> int:
 
 
 _NORM_TEXT = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-_N_TOKENS = (
-    "CASE WHEN length(trim(text)) = 0 THEN 0 "
-    r"ELSE len(string_split_regex(trim(text), '\s+')) END"
-)
+# functions.textfns.tokens: the runs of non-whitespace (0 for NULL text)
+_N_TOKENS = r"len(regexp_extract_all(coalesce(text, ''), '\S+'))"
 
 
 def _lang_scores_sql() -> str:
@@ -8495,8 +8493,10 @@ def _lang_scores_sql() -> str:
     }
     parts = []
     for lang, words in stop.items():
-        hits = " + ".join(
-            f"(len(string_split(' ' || lower(text) || ' ', ' {w} ')) - 1)" for w in words
+        in_list = ", ".join(f"'{w}'" for w in words)
+        hits = (
+            r"len(list_filter(regexp_extract_all(lower(coalesce(text, '')), '\S+'),"
+            f" t -> t IN ({in_list})))"
         )
         parts.append(
             f"CASE WHEN nt = 0 THEN 0.0 ELSE CAST({hits} AS DOUBLE) / CAST(nt AS DOUBLE) END"

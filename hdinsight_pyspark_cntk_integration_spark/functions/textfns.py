@@ -3,6 +3,13 @@
 No counterpart in the reference (SURVEY.md §2.7) — these are the
 training-data-pipeline additions. All are per-row Catalyst expressions:
 deterministic, codegen-friendly, shuffle-free.
+
+Tokenization policy (one for the whole engine): a word is a maximal
+run of non-whitespace characters of the lowercased text, in document
+order — :func:`tokens`. Every word-level operator reads that array
+(or ``operators.text.token_table``, its exploded form), so no two
+operators can disagree on tabs, newlines, doubled spaces, blank or
+NULL text.
 """
 
 from __future__ import annotations
@@ -18,14 +25,21 @@ def _c(col: Column | str) -> Column:
 
 
 def tokens(col: Column | str) -> Column:
-    """Whitespace tokenization of trimmed text → array<string>."""
-    return F.split(F.trim(_c(col)), _WS)
+    """The engine's one tokenizer → array<string>: the runs of
+    non-whitespace characters of the lowercased text, in document order.
+
+    The array never holds an empty string. NULL text and blank text
+    both give ``[]`` (the text has no tokens), so callers need no
+    ``coalesce`` and no empty-token filter. Whitespace is Java's ``\\s``
+    (space, tab, newline, CR, FF and VT); DuckDB's RE2 ``\\s`` leaves VT
+    out, which is the one place an oracle's ``regexp_extract_all(text,
+    '\\S+')`` can differ."""
+    return F.regexp_extract_all(F.lower(F.coalesce(_c(col), F.lit(""))), F.lit(r"\S+"), 0)
 
 
 def token_count(col: Column | str) -> Column:
-    """Whitespace token count, 0 for empty/blank strings."""
-    t = F.trim(_c(col))
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, _WS))).cast("long")
+    """Number of :func:`tokens` as long; 0 for NULL, empty or blank text."""
+    return F.size(tokens(col)).cast("long")
 
 
 def punct_ratio(col: Column | str) -> Column:

@@ -28,7 +28,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hdinsight_pyspark_cntk_integration_spark.functions.textfns import fingerprint_md5, normalized_text
+from hdinsight_pyspark_cntk_integration_spark.functions.textfns import (
+    fingerprint_md5,
+    normalized_text,
+    tokens,
+)
 from hdinsight_pyspark_cntk_integration_spark.operators.graph import counted_checkpoint, symmetric_edges
 
 # Deterministic affine minhash parameters: h_j(x) = (a_j*x + b_j) mod p.
@@ -76,17 +80,19 @@ def _bind_once(value: Column, build) -> Column:
 
 
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
-    """ALL word n-grams of normalized text in document order (duplicates
+    """ALL word n-grams of ``tokens(text)`` in document order (duplicates
     kept), as array<string> — the counting form used by repetition
     statistics. The token array is lambda-bound (``_bind_once``) so the
-    regexp+split pipeline evaluates once per document, not once per gram.
+    tokenizer evaluates once per document, not once per gram. A document
+    shorter than n words emits its tokens as one short gram (``""`` when
+    it has none).
     """
 
     def build(toks: Column) -> Column:
         idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - F.lit(n), F.lit(0)))
         return F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
 
-    return _bind_once(F.split(normalized_text(text), r"\s+"), build)
+    return _bind_once(tokens(text), build)
 
 
 def word_shingles(text: Column | str, n: int = 3) -> Column:
@@ -791,7 +797,7 @@ def repeated_passages(
         # sweep, where the same A/B kept it).
         toks = df.select(
             F.col(id_col),
-            F.split(normalized_text(text_col), r"\s+").alias("__toks"),
+            tokens(text_col).alias("__toks"),
         ).localCheckpoint(eager=True)
 
         def slices(as_hash: bool) -> Column:
@@ -1013,15 +1019,14 @@ def repeated_passages_maximal(
         # survivor's (level, hash) group count >= its own doc count, so
         # no false negatives); the exact recount and min_docs re-cut in
         # pass 2 make the result bit-identical to the string-key plan.
-        # Optimization r15: _spread before the tokenize checkpoint (see
-        # repeated_passages) — the tokenize and BOTH gram explodes run
-        # at the checkpoint's width, and a single-file scan serialized
-        # them on one core (stage profile at sf0.1: 1.9 s + 3.6 s CPU
-        # in two 1-task stages). No-op on wide scans.
+        # _spread before the tokenize checkpoint: the tokenize and BOTH
+        # gram explodes run at the checkpoint's width, and a single-file
+        # scan would serialize them on one core (stage profile at sf0.1:
+        # 1.9 s + 3.6 s CPU in two 1-task stages). No-op on wide scans.
         src, _ = _spread(df)
         toks = src.select(
             F.col(id_col),
-            F.split(normalized_text(text_col), r"\s+").alias("__toks"),
+            tokens(text_col).alias("__toks"),
         ).localCheckpoint(eager=True)
 
         def level_structs(tcol: Column, value_builder) -> Column:
@@ -1120,18 +1125,17 @@ def repeated_passages_maximal(
         # documents with >= L tokens (which also guarantees every
         # emitted gram has exactly L words — no whole-short-doc
         # emissions), one partial-agg groupBy, bounded localCheckpoint.
-        # Optimization r14: the rounds run off the materialized token
-        # table (the via_hash path, which has none, builds it here
-        # once) — the old form re-ran the regexp split per round for
-        # the length filter, the frontier explode AND the extension
-        # explode; and the frontier semi-join now matches on slice
-        # HASHES (no string build — collisions only widen the
+        # The rounds run off the materialized token table (the via_hash
+        # path, which has none, builds it here once), so no round
+        # re-tokenizes for the length filter, the frontier explode or
+        # the extension explode; and the frontier semi-join matches on
+        # slice HASHES (no string build — collisions only widen the
         # frontier, which the exact extension recount absorbs).
         if via_hash:
             src, _ = _spread(df)
             toks = src.select(
                 F.col(id_col),
-                F.split(normalized_text(text_col), r"\s+").alias("__toks"),
+                tokens(text_col).alias("__toks"),
             ).localCheckpoint(eager=True)
 
         def slice_grams(n: int, as_hash: bool) -> Column:

@@ -572,16 +572,13 @@ def shard_manifest(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1 (got {n_shards})")
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
+    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import token_count
 
-    n_tokens = F.when(F.length(normalized_text(text_col)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(normalized_text(text_col), r"\s+"))
-    )
     assigned = df.select(
         F.pmod(hash_bucket(id_col, method=method), F.lit(n_shards)).alias("shard"),
         F.col(id_col),
         hash_bucket(id_col, method=method).alias("__idh"),
-        n_tokens.cast("long").alias("__nt"),
+        token_count(text_col).alias("__nt"),
     )
     return assigned.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -773,19 +770,18 @@ def fk_violations(
 
 
 def bpe_word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Word-frequency table for BPE training: whitespace words of
-    normalized text with corpus counts. This is the standard reduction
+    """Word-frequency table for BPE training: the ``tokens`` of the text
+    with corpus counts. This is the standard reduction
     that makes BPE training scale-free: every subsequent merge round
     runs over the DISTINCT-word table (vocabulary-sized, ~O(sqrt) of
     corpus tokens by Heaps' law), never over the corpus again — at
     100 TB the corpus is touched exactly once, here, by one explode +
     partial-agg groupBy."""
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
+    from hdinsight_pyspark_cntk_integration_spark.operators.text import token_table
 
     return (
-        df.select(F.explode(F.split(normalized_text(text_col), r"\s+")).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
+        token_table(df, [], text_col)
+        .groupBy(F.col("token").alias("word"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -972,7 +968,7 @@ def bpe_encode(
 
     This is the consumer path the trainer feeds (the same role
     ``tokenize_to_ids_broadcast`` plays for word-level vocab)."""
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
+    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import tokens
 
     if len(merges) <= codegen_max_merges:
         def encode_word(w: Column) -> Column:
@@ -981,12 +977,10 @@ def bpe_encode(
                 out = F.replace(out, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
             return F.split(F.trim(out), "  ")
 
-        words = F.split(normalized_text(text_col), r"\s+")
-        toks = F.flatten(
-            F.transform(
-                F.filter(words, lambda w: F.length(w) > 0),
-                encode_word,
-            )
+        # NULL text encodes to NULL, as in the Arrow path below
+        toks = F.when(
+            F.col(text_col).isNotNull(),
+            F.flatten(F.transform(tokens(text_col), encode_word)),
         )
         return df.select(F.col(id_col), toks.alias("tokens"))
 
@@ -1003,7 +997,7 @@ def bpe_encode(
         # duplicates to match
         pair_rank.setdefault((a, b), r)
     # Java's \s is ASCII-only; Python's is unicode-aware — re.ASCII
-    # mirrors the Catalyst normalized_text split exactly.
+    # mirrors the Catalyst ``tokens`` split exactly.
     ws = _re.compile(r"\s+", _re.ASCII)
 
     id_field = df.schema[id_col]

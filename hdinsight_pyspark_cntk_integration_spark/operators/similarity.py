@@ -1030,16 +1030,12 @@ def sparse_cosine_pairs(
     Returns (doc_a, doc_b, dot, cos_micro) with doc_a < doc_b and
     cos_micro >= ``min_cos_micro``.
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
+    from hdinsight_pyspark_cntk_integration_spark.operators.text import token_table
 
-    toks = F.filter(
-        F.split(F.coalesce(normalized_text(text_col), F.lit("")), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
     dec = "decimal(38,0)"
     tf = (
-        df.select(F.col(id_col).alias("__d"), F.explode(toks).alias("__t"))
-        .groupBy("__d", "__t")
+        token_table(df, [F.col(id_col).alias("__d")], text_col)
+        .groupBy("__d", F.col("token").alias("__t"))
         .agg(F.count(F.lit(1)).cast("long").alias("__tf"))
     )
     if max_df is not None and max_df_ppm is not None:

@@ -194,20 +194,23 @@ def spearman_corr(
     Shape: two distinct-value aggregates + two co-keyed joins back to
     the rows + one moments aggregate — four shuffles on (group, value)
     / (group), no window ever touching the row stream.
+
+    NULL policy: a row with a NULL x or y drops before ranking, so both
+    variables are ranked over the same rows (as ``spearman_rho``).
     """
+    base = df.select(
+        group_col, F.col(x_col).alias("__x"), F.col(y_col).alias("__y")
+    ).filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
 
     def doubled_ranks(col: str, out: str) -> DataFrame:
-        vc = df.groupBy(group_col, F.col(col).alias("v")).agg(
+        vc = base.groupBy(group_col, F.col(col).alias("v")).agg(
             F.count(F.lit(1)).alias("c")
         )
         r2 = _doubled_midrank("c", "v", group_col)
-        return vc.select(group_col, "v", r2.alias(out))
-    rx = doubled_ranks(x_col, "r2x")
-    ry = doubled_ranks(y_col, "r2y")
-    joined = (
-        df.select(group_col, F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
-        .join(rx.withColumnRenamed("v", "__x"), [group_col, "__x"])
-        .join(ry.withColumnRenamed("v", "__y"), [group_col, "__y"])
+        return vc.select(group_col, F.col("v").alias(col), r2.alias(out))
+
+    joined = base.join(doubled_ranks("__x", "r2x"), [group_col, "__x"]).join(
+        doubled_ranks("__y", "r2y"), [group_col, "__y"]
     )
     dec = "decimal(38,0)"
     # products computed in DECIMAL (not long·long) so n up to ~1e12

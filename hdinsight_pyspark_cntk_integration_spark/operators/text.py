@@ -2,6 +2,12 @@
 
 All per-row Catalyst expressions (functions.textfns) — shuffle-free,
 codegen'd, and each exactly reproducible in ANSI SQL for the oracle gate.
+
+One tokenization policy: every word-level operator reads
+``functions.textfns.tokens`` — the lowercased runs of non-whitespace, in
+document order, ``[]`` for NULL or blank text — either as the per-row
+array (positional and per-document operators) or through
+:func:`token_table`, the family's one explode.
 """
 
 from __future__ import annotations
@@ -14,9 +20,14 @@ from pyspark.sql import functions as F
 
 from hdinsight_pyspark_cntk_integration_spark.functions.textfns import (
     fingerprint_md5,
+    normalized_text,
     punct_ratio,
     token_count,
+    tokens,
 )
+
+# Largest vocabulary tokenize_to_ids_broadcast collects to the driver.
+_MAX_VOCAB = 5_000_000
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately small so the oracle SQL stays writable.
@@ -28,18 +39,13 @@ _STOPWORDS = {
 }
 
 
-def _word_hits(col: Column | str, words: tuple[str, ...]) -> Column:
-    """Occurrences of any of ``words`` as whole tokens in lowercased text."""
-    c = F.col(col) if isinstance(col, str) else col
-    padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
-    hits = [
-        F.size(F.split(padded, f" {w} ")) - F.lit(1)
-        for w in words
-    ]
-    total = hits[0]
-    for h in hits[1:]:
-        total = total + h
-    return total
+def token_table(
+    df: DataFrame, keys: Sequence[Column | str], text_col: str
+) -> DataFrame:
+    """(*keys, token): one row per element of ``tokens(text_col)`` — the
+    text family's one explode. A document with no tokens (NULL, empty or
+    blank text) emits no row."""
+    return df.select(*keys, F.explode(tokens(text_col)).alias("token"))
 
 
 def quality_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -53,7 +59,7 @@ def quality_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         F.when(n_tokens == 0, F.lit(0.0))
-        .otherwise(F.length(F.regexp_replace(F.trim(t), r"\s+", "")).cast("double") / n_tokens.cast("double"))
+        .otherwise(F.length(F.regexp_replace(t, r"\s+", "")).cast("double") / n_tokens.cast("double"))
         .alias("mean_token_len"),
         punct_ratio(t).alias("punct_ratio"),
         F.when(n_chars == 0, F.lit(0.0))
@@ -82,8 +88,9 @@ def language_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "text
     n_tokens = token_count(text_col)
     cols = [F.col(id_col)]
     for lang, words in _STOPWORDS.items():
+        hits = F.size(F.filter(tokens(text_col), lambda t: t.isin(*words)))
         score = F.when(n_tokens == 0, F.lit(0.0)).otherwise(
-            _word_hits(text_col, words).cast("double") / n_tokens.cast("double")
+            hits.cast("double") / n_tokens.cast("double")
         )
         cols.append(score.alias(f"score_{lang}"))
     scored = df.select(*cols)
@@ -117,21 +124,12 @@ def repetition_stats(
     Returns (id, n_words, n_distinct_words, dup_word_frac, n_ngrams,
     top_ngram_count, top_ngram_frac) — fractions 0.0 when empty.
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
     from hdinsight_pyspark_cntk_integration_spark.operators.dedup import word_ngrams
 
     ids = df.select(F.col(id_col))
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(normalized_text(text_col), r"\s+")).alias("tok"),
-        )
-        .filter(F.length("tok") > 0)
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.count_distinct("tok").alias("n_distinct_words"),
-        )
+    toks = token_table(df, [id_col], text_col).groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_words"),
+        F.count_distinct("token").alias("n_distinct_words"),
     )
     grams = (
         df.select(F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("gram"))
@@ -173,11 +171,8 @@ def build_vocab(df: DataFrame, text_col: str = "text", top_v: int = 1000) -> Dat
     size you asked for, never by the corpus."""
     from pyspark.sql import Window
 
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
-
     counts = (
-        df.select(F.explode(F.split(normalized_text(text_col), r"\s+")).alias("token"))
-        .filter(F.length("token") > 0)
+        token_table(df, [], text_col)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), "token")
@@ -202,12 +197,9 @@ def tokenize_to_ids(
     lookup) -> one groupBy per doc re-assembling the sequence via
     collect_list(struct(pos,id)) + array_sort. Per-doc state is bounded
     by document length — the same bound as the text column itself."""
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
-
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(normalized_text(text_col), r"\s+")).alias("pos", "tok"),
-    ).filter(F.length("tok") > 0)
+        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok")
+    )
     joined = toks.join(
         F.broadcast(vocab.select("token", "token_id")),
         toks.tok == F.col("token"),
@@ -251,11 +243,15 @@ def tokenize_to_ids_broadcast(
     this form touches each document exactly once, so prefer it whenever
     the vocab fits executor memory (BPE-scale vocabs always do).
 
-    Tokenization mirrors ``functions.textfns.normalized_text`` + split:
-    lowercase, split on ASCII whitespace runs, drop empties. (Exotic
-    unicode whitespace is the one place the JVM and Python regex engines
-    could disagree; both sides here treat only ASCII space/tab/newline/
-    CR/FF/VT as separators.)
+    Tokenization mirrors ``functions.textfns.tokens``: lowercase, split
+    on ASCII whitespace runs, drop empties. (Exotic unicode whitespace is
+    the one place the JVM and Python regex engines could disagree; both
+    sides here treat only ASCII space/tab/newline/CR/FF/VT as
+    separators.)
+
+    The vocabulary must hold at most ``_MAX_VOCAB`` rows; a larger one
+    raises ``ValueError`` after a bounded count, before any row reaches
+    the driver.
 
     Unicode-lowercase caveat: this form lowercases with Python
     ``str.lower()`` while the join-form twin uses Spark's JVM
@@ -271,20 +267,18 @@ def tokenize_to_ids_broadcast(
     """
     import re as _re
 
-    # Size guard (r15): the dict is bounded BY CONTRACT (BPE-scale
-    # vocab), but a caller handing a raw token table would otherwise
-    # OOM the driver silently. limit(N+1) bounds the collect itself
-    # (no extra count job): <= N rows come back whole, N+1 means the
-    # contract is broken — fail loudly before broadcasting.
-    _MAX_VOCAB = 5_000_000
-    rows = vocab.select("token", "token_id").limit(_MAX_VOCAB + 1).collect()
-    if len(rows) > _MAX_VOCAB:
+    # Size guard: the dict is bounded BY CONTRACT (BPE-scale vocab), but
+    # a caller handing a raw token table would otherwise OOM the driver.
+    # Counting limit(N+1) first keeps every row off the driver until the
+    # contract is known to hold.
+    vocab = vocab.select("token", "token_id")
+    if vocab.limit(_MAX_VOCAB + 1).count() > _MAX_VOCAB:
         raise ValueError(
             f"tokenize_to_ids_broadcast: vocabulary exceeds {_MAX_VOCAB} "
             "entries — use the join-form tokenize_to_ids for unbounded "
             "vocabularies"
         )
-    vmap = {r["token"]: r["token_id"] for r in rows}
+    vmap = {r["token"]: r["token_id"] for r in vocab.collect()}
     bc = df.sparkSession.sparkContext.broadcast(vmap)
     ws = _re.compile(r"[ \t\n\r\f\v]+")
 
@@ -307,8 +301,7 @@ def token_histogram(df: DataFrame, text_col: str = "text", top_n: int = 100) -> 
     Partial aggregation combines map-side, so the shuffle carries one row
     per distinct token per partition, not one per token occurrence."""
     return (
-        df.select(F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"))
-        .filter(F.length("token") > 0)
+        token_table(df, [], text_col)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), "token")
@@ -380,12 +373,7 @@ def tfidf_top_terms(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("token"),
-        )
+        token_table(df, [id_col], text_col)
         .filter(F.length("token") >= min_token_len)
         .repartition(n_shuffle, "token")
     )
@@ -393,13 +381,11 @@ def tfidf_top_terms(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
     # one tf row per (doc, token), so rows-per-token == documents-per-token.
-    # Optimization r15 (the unigram_logprob pattern): the per-token
-    # document frequency used to be an unbounded count window — a full
-    # sort of the (doc, token) tf stream to attach one number per
-    # token. Now a vocab-grain aggregate re-attached with a
-    # SHUFFLE_HASH hint: both sides inherit the token repartition
-    # above (zero new exchanges), and the hash join replaces the
-    # window's stream sort (§2.4/§3.1). Same count, same rows.
+    # The per-token document frequency is a vocab-grain aggregate
+    # re-attached with a SHUFFLE_HASH hint, not a count window: both
+    # sides inherit the token repartition above (zero new exchanges),
+    # and the hash join needs no sort of the (doc, token) tf stream
+    # (§2.4/§3.1).
     dfc = tf.groupBy("token").agg(F.count(F.lit(1)).cast("bigint").alias("df_docs"))
     n_docs = df.select(F.count(F.lit(1)).cast("double").alias("n_docs"))
     score = F.col("tf") * F.log(F.col("n_docs") / F.col("df_docs"))
@@ -448,15 +434,11 @@ def bm25_scores(
     terms = list(terms)
     if not terms:
         raise ValueError("bm25_scores needs at least one term")
-    # Optimization r14: N and avgdl used to be TWO driver-blocking
-    # actions (df.count() + a sum collect) — two extra corpus scans and
-    # two py4j syncs before the main job could start. The doc-length
-    # table (id, len — the narrow per-doc proxy) is materialized ONCE;
-    # the (N, avgdl) scalars become a broadcast 1-row aggregate of it
-    # inside the one plan. avgdl = long/long in IEEE double — the exact
-    # division Python performed on the collected ints — and N flows in
-    # as the same double the old float(n_docs) literal held, so every
-    # downstream operand is bit-identical.
+    # N and avgdl come from the doc-length table (id, len — the narrow
+    # per-doc proxy), materialized ONCE, as a broadcast 1-row aggregate
+    # inside the one plan: no driver action, no extra corpus scan, no
+    # py4j sync before the main job. avgdl is long/long in IEEE double,
+    # N the row count as double.
     lens = df.select(
         F.col(id_col), token_count(F.col(text_col)).alias("__dl")
     ).localCheckpoint(eager=True)
@@ -479,10 +461,7 @@ def bm25_scores(
 
     n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
-        )
+        token_table(df, [id_col], text_col)
         .filter(F.col("token").isin(terms))
         .repartition(n_shuffle, "token")
     )
@@ -511,7 +490,7 @@ def bm25_scores(
 
     def term_score(i: int):
         # idf quantized to micro-units at first evaluation (see
-        # docstring) — identical operand order to the pre-r14 form.
+        # docstring); the operand order is the oracle's.
         dfv = F.col(f"__dfv{i}").cast("double")
         idf_micro = F.floor(
             F.log(
@@ -570,33 +549,20 @@ def unigram_logprob(
     partial-agg sum. No self-joins, no float accumulation anywhere.
     """
     n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-        .repartition(n_shuffle, "token")
-    )
+    toks = token_table(df, [id_col], text_col).repartition(n_shuffle, "token")
     tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    # Optimization r14: the corpus total used to be a driver-blocking
-    # .collect() at DataFrame-BUILD time — a full second derivation of
-    # the exploded token stream (explode + tf aggregation) run before
-    # the main job could even start, plus a py4j sync. As a broadcast
-    # 1-row frame the same double value (SUM(tf) cast double — the
-    # identical aggregate) joins into the one plan: one pass total, and
-    # the log operand arithmetic is unchanged (long/double → double).
+    # The corpus total joins as a broadcast 1-row frame inside the one
+    # plan — a build-time collect would derive the token stream a
+    # second time before the main job starts.
     total = tf.agg(F.sum("tf").cast("double").alias("__t"))
-    # Optimization r15: the per-token corpus frequency used to be an
-    # unbounded window (sum over partitionBy(token)) — a full sort of
-    # the (doc, token) tf stream just to attach one number per token.
-    # It is now a vocab-grain aggregate joined back with a SHUFFLE_HASH
-    # hint: both sides inherit the token repartition above (zero new
-    # exchanges), and the hash join replaces the window's stream sort
-    # outright (§2.4 — share one exchange; §3.1 — hash beats sort when
-    # the build side is the bounded vocab slice). lp_micro is a
-    # deterministic function of (ctf, __t), so computing it once per
-    # DISTINCT token instead of per (doc, token) row is value-identical.
+    # The per-token corpus frequency is a vocab-grain aggregate joined
+    # back with a SHUFFLE_HASH hint, not a window over partitionBy(token):
+    # both sides inherit the token repartition above (zero new
+    # exchanges), and the hash join needs no sort of the (doc, token) tf
+    # stream (§2.4 — share one exchange; §3.1 — hash beats sort when the
+    # build side is the bounded vocab slice). lp_micro is a
+    # deterministic function of (ctf, __t), computed once per DISTINCT
+    # token.
     vocab = tf.groupBy("token").agg(F.sum("tf").cast("long").alias("__ctf"))
     lp = vocab.join(F.broadcast(total)).select(
         "token",
@@ -679,14 +645,7 @@ def build_inverted_index(
     deterministically.
     """
     n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("token"),
-        )
-        .filter(F.length("token") > 0)
-        .repartition(n_shuffle, "token")
-    )
+    toks = token_table(df, [id_col], text_col).repartition(n_shuffle, "token")
     tf = toks.groupBy("token", id_col).agg(F.count(F.lit(1)).cast("long").alias("tf"))
     return (
         tf.groupBy("token")
@@ -730,24 +689,10 @@ def corpus_divergence(
     Scale shape: one token groupBy per version (partial agg; vocab-sized
     outputs), one vocab-sized FULL OUTER join serving both the union
     vocabulary and the contributor rows, the three scalar totals as ONE
-    in-plan broadcast 1-row aggregate of that join (no driver actions —
-    Optimization r15, the bm25 pattern from r14 #43: previously two
-    ``.collect()``s and a ``.count()`` cost three blocking jobs and
-    three py4j syncs per call), and a bounded top-k. The corpus is
-    touched once per version.
+    in-plan broadcast 1-row aggregate of that join (no driver actions,
+    so no blocking job or py4j sync per scalar), and a bounded top-k.
+    The corpus is touched once per version.
     """
-    def counts(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.explode(
-                    F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-                ).alias("token")
-            )
-            .filter(F.length("token") > 0)
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
-
     # Materialize the vocab-sized FULL OUTER join ONCE: the totals
     # aggregate and the contributor rows both read it, and as a lazy
     # reference each read would re-run both corpus scans + explodes —
@@ -756,13 +701,17 @@ def corpus_divergence(
     # count(*) over this join IS the union-vocabulary size V; sum over
     # a side's counts (nulls ignored) IS that side's total.
     fo = (
-        counts(df_a)
+        _token_counts(df_a, text_col)
         .withColumnRenamed("c", "ca")
-        .join(counts(df_b).withColumnRenamed("c", "cb"), "token", "full_outer")
+        .join(
+            _token_counts(df_b, text_col).withColumnRenamed("c", "cb"),
+            "token",
+            "full_outer",
+        )
         .localCheckpoint(eager=True)
     )
-    # the 0-coalesce mirrors the old `or 0` on the collected scalars
-    # (an all-NULL side sums to NULL, e.g. when one corpus is empty)
+    # an all-NULL side sums to NULL (e.g. when one corpus is empty):
+    # its total reads 0
     totals = fo.agg(
         F.coalesce(F.sum("ca"), F.lit(0)).cast("long").alias("__ta"),
         F.coalesce(F.sum("cb"), F.lit(0)).cast("long").alias("__tb"),
@@ -779,8 +728,7 @@ def corpus_divergence(
     )
     # operand order mirrors the oracle: (cnt_a · (T_B + V)) / (T_A ·
     # (cnt_b + 1)); the totals are exact BIGINTs well under 2^53, so
-    # casting the in-plan sum to double yields the identical IEEE value
-    # the old float(t_b + v) literal produced.
+    # the double cast of the in-plan sum is exact.
     arg = (
         F.col("cnt_a").cast("double")
         * (F.col("__tb") + F.col("__v")).cast("double")
@@ -805,23 +753,15 @@ def _hashed_token_buckets(
     text_col: str = "text",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Shared hashing-trick token stream: normalize/split ``text_col``,
-    one row per token, with ``bucket`` = md5-hex-prefix int mod ``dim``
+    """Shared hashing-trick token stream: one row per token of
+    ``text_col`` (:func:`token_table`), with ``bucket`` = md5-hex-prefix int mod ``dim``
     (the cross-engine-reproducible hash — NOT xxhash64 — so ANSI oracles
     rebuild bucket ids bit-for-bit). Single definition used by both
     :func:`hashed_bow` and :func:`dsir_weights` so the tokenization and
     bucket hash can never silently diverge between featurizers."""
-    toks = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        F.explode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-            )
-        ).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = token_table(df, [id_col, *extra_cols], text_col)
     bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
+        F.conv(F.substring(F.md5(F.col("token")), 1, 8), 16, 10).cast("long")
         % F.lit(dim)
     ).alias("bucket")
     return toks.select(id_col, *extra_cols, bucket)
@@ -886,15 +826,11 @@ def token_entropy(
     shuffles: (group, token) counts, then per-group sums over the
     count table — never the raw token stream twice.
     """
-    toks = df.select(
-        F.col(group_col),
-        F.explode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-            )
-        ).alias("tok"),
-    ).filter(F.col("tok") != "")
-    counts = toks.groupBy(group_col, "tok").agg(F.count(F.lit(1)).alias("c"))
+    counts = (
+        token_table(df, [group_col], text_col)
+        .groupBy(group_col, "token")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
     ln_micro = F.round(F.log(F.col("c").cast("double")) * 1_000_000).cast("long")
     agg = counts.groupBy(group_col).agg(
         F.sum("c").cast("long").alias("n_tokens"),
@@ -931,43 +867,20 @@ def bigram_logprob(
     (w₁,w₂). Docs with <2 tokens have no bigrams and drop out — same
     semantics both engines.
     """
-    toks = df.select(
-        F.col(id_col),
-        F.split(
-            F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-        ).alias("t"),
+    tf = (
+        _pair_stream(df, text_col, 1, [id_col])
+        .groupBy(id_col, F.col("a").alias("w1"), F.col("b").alias("w2"))
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    pairs = toks.select(
-        F.col(id_col),
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
-                F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")).filter(
-        (F.col("w1") != "") & (F.col("w2") != "")
-    )
-    tf = pairs.groupBy(id_col, "w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
-    # Optimization r14: the LM table is built ONCE and materialized.
-    # The previous form re-derived the exploded bigram stream ~5× in
-    # one plan — corpus and c1 each expanded `tf`, the vocabulary count
-    # was a driver-blocking .count() at BUILD time that exploded the
-    # corpus twice more (w1 and w2 sides), and the final join expanded
-    # `tf` again (15 Exchanges at the gate). Now: the vocabulary size
-    # comes from the distinct-bigram table itself (every token of the
-    # pair stream appears in some corpus row, so distinct(w1 ∪ w2) is
-    # the SAME set — exact same V), joins as a broadcast 1-row frame
-    # instead of a Python literal (identical long addition → double
-    # arithmetic), and the finished |bigram-types|-row model is
-    # localCheckpoint'ed — the model-scale frame a real pipeline would
-    # persist — so the scoring join reads it instead of re-deriving.
-    # The token stream is now derived exactly twice (model build,
-    # scoring), the unavoidable minimum without materializing the
-    # token-scale tf table itself.
+    # The |bigram-types|-row LM table is built ONCE and materialized —
+    # the model-scale frame a real pipeline would persist — so c1, the
+    # vocabulary size and the scoring join read it instead of each
+    # re-deriving the bigram stream. The vocabulary size comes from the
+    # distinct-bigram table itself (every token of the pair stream
+    # appears in some corpus row, so distinct(w1 ∪ w2) is the same set)
+    # and joins as a broadcast 1-row frame, not a build-time count. The
+    # token stream is derived exactly twice (model build, scoring), the
+    # minimum without materializing the token-scale tf table.
     corpus = (
         tf.groupBy("w1", "w2")
         .agg(F.sum("tf").cast("long").alias("c12"))
@@ -1050,11 +963,11 @@ def gopher_rules(
     the 100 TB posture for a first-pass filter.
     """
     t = F.col(text_col)
-    words = F.filter(F.split(F.trim(t), r"\s+"), lambda w: F.length(w) > 0)
+    words = tokens(t)
     lines = F.split(t, "\n")
     n_words = F.size(words).cast("long")
     n_lines = F.size(lines).cast("long")
-    word_chars = F.length(F.regexp_replace(F.trim(t), r"\s+", "")).cast("long")
+    word_chars = F.length(F.regexp_replace(t, r"\s+", "")).cast("long")
     hash_count = (F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))).cast("long")
     # '...' occurrences × 3 (length delta of non-overlapping replace)
     ell3 = (F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))).cast("long")
@@ -1072,7 +985,7 @@ def gopher_rules(
     ).cast("long")
     stop = F.array(*[F.lit(s) for s in ("the", "be", "to", "of", "and", "that", "have", "with")])
     n_stop = F.size(
-        F.filter(words, lambda w: F.array_contains(stop, F.lower(w)))
+        F.filter(words, lambda w: F.array_contains(stop, w))
     ).cast("long")
 
     r_word_count = (n_words >= min_words) & (n_words <= max_words)
@@ -1119,7 +1032,7 @@ def ngram_diversity(
     so output hash-matches any engine.
 
     Same tokenization as the dedup stack (``word_ngrams`` over
-    normalized text, empty grams dropped; a document shorter than n
+    ``tokens``, empty grams dropped; a document shorter than n
     emits itself as its single "n-gram", consistent with the passage
     operators). One projection pass, zero shuffle, codegen'd.
     """
@@ -1155,9 +1068,9 @@ def perplexity_buckets(
     then ONE 1-row global percentile aggregate broadcast back over the
     per-doc score table (|docs| rows, never the token stream).
     """
-    # Optimization r14: `scored` is referenced twice (tercile thresholds
-    # + final projection); unmaterialized, BOTH the LM build and the
-    # scoring join ran twice. The per-doc score table is the narrow
+    # `scored` is referenced twice (tercile thresholds + final
+    # projection); unmaterialized, BOTH the LM build and the scoring
+    # join would run twice. The per-doc score table is the narrow
     # decision proxy (4 numeric cols/doc — guide §8 "decide with small
     # rows"): materializing it costs |docs|·~32 B and halves the
     # pipeline, at any scale cheaper than a second full LM pass.
@@ -1224,13 +1137,10 @@ def dsir_weights(
         extra_cols=("__is_t",),
     )
 
-    # Optimization r14: the model is checkpointed (dim rows — trivially
-    # bounded) and the corpus totals are ITS column sums — exactly the
-    # same integers the old direct aggregate computed, without a third
-    # derivation of the hashed token stream (model, totals and scoring
-    # each re-exploded the corpus before; now the stream is derived
-    # twice — model build and scoring — the minimum without
-    # materializing token-scale data).
+    # The model is checkpointed (dim rows — trivially bounded) and the
+    # corpus totals are ITS column sums, so the hashed token stream is
+    # derived twice — model build and scoring — the minimum without
+    # materializing token-scale data.
     model = (
         tagged.groupBy("bucket")
         .agg(
@@ -1310,15 +1220,14 @@ def zipf_slope(
     """
     from pyspark.sql import Window
 
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
-
     if top_n < 2:
         raise ValueError(f"top_n must be >= 2 (got {top_n})")
     keys = [lang_col] if lang_col else []
-    tok = df.select(
-        *keys, F.explode(F.split(normalized_text(text_col), r"\s+")).alias("token")
-    ).filter(F.length("token") > 0)
-    vocab = tok.groupBy(*keys, "token").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    vocab = (
+        token_table(df, keys, text_col)
+        .groupBy(*keys, "token")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
     w = Window.partitionBy(*keys).orderBy(F.col("cnt").desc(), F.col("token"))
     ranked = (
         vocab.withColumn("rank", F.row_number().over(w))
@@ -1355,20 +1264,20 @@ def zipf_slope(
     )
 
 
-def _pair_stream(df: DataFrame, text_col: str, window: int) -> DataFrame:
-    """Ordered in-window token-pair stream (a precedes b by 1..window),
-    one row per pair SLOT: emitted per document row by a
+def _pair_stream(
+    df: DataFrame, text_col: str, window: int, keys: Sequence[str] = ()
+) -> DataFrame:
+    """Ordered in-window token-pair stream (*keys, a, b) (a precedes b
+    by 1..window), one row per pair SLOT: emitted per document row by a
     transform×transform over the LAMBDA-BOUND token array — zero
     shuffles, no positional self-join, no re-tokenization per slot
     (``_bind_once``). ``window=1`` is exactly the consecutive-bigram
-    stream. Shared by :func:`pmi_cooccur`, :func:`kneser_ney_bigram`
-    and :func:`textrank_keywords`."""
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
+    stream. Shared by :func:`pmi_cooccur`, :func:`kneser_ney_bigram`,
+    :func:`textrank_keywords` and the bigram language models."""
     from hdinsight_pyspark_cntk_integration_spark.operators.dedup import _bind_once
 
     if window < 1:
         raise ValueError(f"window must be >= 1 (got {window})")
-    toks = F.split(normalized_text(text_col), r"\s+")
 
     def pair_slots(t: Column) -> Column:
         # sequence() with stop < start yields a DESCENDING range, never
@@ -1391,10 +1300,8 @@ def _pair_stream(df: DataFrame, text_col: str, window: int) -> DataFrame:
         return F.when(F.size(t) >= 2, slots).otherwise(empty)
 
     return df.select(
-        F.explode(
-            _bind_once(F.filter(toks, lambda x: F.length(x) > 0), pair_slots)
-        ).alias("p")
-    ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        *keys, F.explode(_bind_once(tokens(text_col), pair_slots)).alias("p")
+    ).select(*keys, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
 
 
 def pmi_cooccur(
@@ -1429,14 +1336,10 @@ def pmi_cooccur(
     marginal joins, so the joined stream is the collocation table, not
     the pair stream. The token array is LAMBDA-BOUND (``_bind_once``)
     into the slot expression — element_at references a bound variable,
-    not the split+filter chain, which un-bound would re-tokenize the
+    not the tokenizer, which un-bound would re-tokenize the
     document once per slot reference (measured 32 s → 1 s at sf0.1).
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
-
-    toks = F.split(normalized_text(text_col), r"\s+")
-    base = df.select(F.explode(F.filter(toks, lambda x: F.length(x) > 0)).alias("token"))
-    vocab = base.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    vocab = _token_counts(df, text_col).withColumnRenamed("c", "cnt")
     n_tok = vocab.groupBy().agg(F.sum("cnt").cast("long").alias("n_tokens"))
 
     pairs = _pair_stream(df, text_col, window)
@@ -1669,18 +1572,14 @@ def dictionary_tag(
 
     Returns (id, n_tokens, n_hits, n_terms, score).
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
     from hdinsight_pyspark_cntk_integration_spark.operators.dedup import _bind_once
 
     if not terms:
         raise ValueError("terms dictionary must be non-empty")
     items = sorted(terms.items())
-    # NULL text tags as an empty document (the join path's explode_outer
-    # gives the same) — without the coalesce every output would be NULL
-    toks = F.filter(
-        F.split(F.coalesce(normalized_text(text_col), F.lit("")), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
+    # NULL text tags as an empty document: tokens() gives [], and the
+    # join path's explode_outer keeps the document as one NULL-term row
+    toks = tokens(text_col)
     if use_join:
         spark = df.sparkSession
         dict_df = spark.createDataFrame(items, "__term string, __w long")
@@ -1767,18 +1666,11 @@ def heaps_law(
     Returns one row (n_points, n_tokens, n_types, beta_micro,
     lnk_micro).
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
     from pyspark.sql import Window
 
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2 (got {n_buckets})")
-    toks = F.filter(
-        F.split(F.coalesce(normalized_text(text_col), F.lit("")), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
-    tok = df.select(
-        F.col(id_col).cast("long").alias("__d"), F.explode(toks).alias("__t")
-    )
+    tok = token_table(df, [F.col(id_col).cast("long").alias("__d")], text_col)
     bounds = tok.groupBy().agg(
         F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
     )
@@ -1795,7 +1687,7 @@ def heaps_law(
         .agg(F.sum("__n_tok").cast("long").alias("__n_tok"))
     )
     births = (
-        tok.groupBy("__t")
+        tok.groupBy("token")
         .agg(F.min("__d").alias("__d"))
         .crossJoin(F.broadcast(bounds.select("__lo", width.alias("__width"))))
         .groupBy(bucket_of("__d").alias("__b"))
@@ -1825,7 +1717,7 @@ def heaps_law(
     )
     tot = tok.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        F.count_distinct("__t").cast("long").alias("n_types"),
+        F.count_distinct("token").cast("long").alias("n_types"),
     )
     nD = F.col("n_points").cast(dec)
     sx, sy = F.col("__sx"), F.col("__sy")
@@ -1868,16 +1760,10 @@ def simpson_diversity(
     Returns (group, n_tokens, n_types, simpson_micro,
     gini_simpson_micro).
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
-
-    toks = F.filter(
-        F.split(F.coalesce(normalized_text(text_col), F.lit("")), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
     dec = "decimal(38,0)"
     counts = (
-        df.select(F.col(group_col).alias("__g"), F.explode(toks).alias("__t"))
-        .groupBy("__g", "__t")
+        token_table(df, [F.col(group_col).alias("__g")], text_col)
+        .groupBy("__g", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("__n"))
     )
     nd = F.col("__n").cast(dec)
@@ -1912,8 +1798,8 @@ def readability(
         grade = 0.39·(W/S) + 11.8·(Syl/W) − 15.59
 
     Conventions, fixed and oracle-replicated: sentences S = max(1,
-    #runs of [.!?]) over the raw text; words W = nonempty whitespace
-    tokens of the normalized text; syllables per word = max(1, #vowel
+    #runs of [.!?]) over the raw text; words W = ``tokens`` of the
+    text; syllables per word = max(1, #vowel
     GROUPS [aeiouy]+) — the standard vowel-cluster heuristic (exact
     syllabification needs a dictionary; the heuristic is deterministic
     and language-blind, which is what a corpus screen wants). Docs
@@ -1928,13 +1814,8 @@ def readability(
     Returns (id, n_sentences, n_words, n_syllables, ease_micro,
     grade_micro).
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
     from hdinsight_pyspark_cntk_integration_spark.operators.dedup import _bind_once
 
-    toks = F.filter(
-        F.split(F.coalesce(normalized_text(text_col), F.lit("")), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
     sents = F.greatest(
         F.lit(1).cast("long"),
         F.regexp_count(F.coalesce(F.col(text_col), F.lit("")), F.lit(r"[.!?]+"))
@@ -1958,7 +1839,7 @@ def readability(
     counted = df.select(
         F.col(id_col).alias(id_col),
         sents.alias("n_sentences"),
-        _bind_once(toks, build).alias("__c"),
+        _bind_once(tokens(text_col), build).alias("__c"),
     ).select(
         id_col,
         "n_sentences",
@@ -2013,12 +1894,12 @@ def ngram_novelty(
         )
         # word_ngrams emits one SHORT gram for docs under n words (the
         # repetition-stats convention); novelty is defined over full
-        # n-grams only, so keep exactly-n-token grams
-        .filter(F.size(F.split(F.col("__g"), " ")) == n)
+        # n-grams only, so keep exactly-n-token grams (n - 1 spaces)
+        .filter(F.regexp_count(F.col("__g"), F.lit(" ")) == n - 1)
         .distinct()
-        # Optimization r14: materialized — referenced by BOTH the
-        # doc-frequency aggregate and the join-back; unmaterialized,
-        # each reference re-ran the explode + distinct shuffle.
+        # materialized — referenced by BOTH the doc-frequency aggregate
+        # and the join-back; unmaterialized, each reference would re-run
+        # the explode + distinct shuffle.
         .localCheckpoint(eager=True)
     )
     dfreq = grams.groupBy("__g").agg(F.count(F.lit(1)).cast("long").alias("__df"))
@@ -2133,17 +2014,12 @@ def oov_rate(
 
     Returns (id, n_tokens, n_oov, oov_micro).
     """
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import normalized_text
-
     if top_v < 1:
         raise ValueError(f"top_v must be >= 1 (got {top_v})")
     vocab = build_vocab(df, text_col=text_col, top_v=top_v).select(
         "token", F.lit(True).alias("__in_v")
     )
-    toks = df.select(
-        F.col(id_col).alias("__d"),
-        F.explode(F.split(normalized_text(text_col), r"\s+")).alias("token"),
-    ).filter(F.length("token") > 0)
+    toks = token_table(df, [F.col(id_col).alias("__d")], text_col)
     return (
         toks.join(F.broadcast(vocab), "token", "left")
         .groupBy("__d")
@@ -2190,62 +2066,39 @@ def bigram_crossentropy(
     of the train shingle stream; the eval side (benchmarks/generations —
     orders of magnitude smaller) LEFT-joins those tables co-keyed on
     (w1, w2) and (w1). V_train is one bounded in-plan broadcast 1-row
-    aggregate (r15; was a driver scalar). No broadcast of SF-scaled
-    sides.
+    aggregate, not a driver scalar. No broadcast of SF-scaled sides.
 
     Returns (id, n_bigrams, n_seen, xent_micro, mean_xent_micro) —
     n_seen/n_bigrams is the overlap rate, mean_xent_micro the
     contamination score (LOW = likely contaminated).
     """
-
-    def _pairs(df: DataFrame) -> DataFrame:
-        toks = df.select(
-            F.col(id_col),
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
-            ).alias("t"),
-        )
-        return (
-            toks.select(
-                F.col(id_col),
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))),
-                        F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(0))),
-                        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-                    )
-                ).alias("bg"),
-            )
-            .select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-            .filter((F.col("w1") != "") & (F.col("w2") != ""))
-        )
-
-    tp = _pairs(train)
     # The |bigram-types|-row LM table is the thing a real pipeline
     # persists: materialize it once. It feeds the marginal c1, the
-    # scoring join AND the V_train vocabulary — as lazy references the
-    # train corpus was exploded three times (the scoring-join agg plus
-    # BOTH branches of the old tp-based vocabulary union).
-    corpus = tp.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("c12")
-    ).localCheckpoint(eager=True)
+    # scoring join AND the V_train vocabulary — as lazy references
+    # each would re-explode the train corpus.
+    corpus = (
+        _pair_stream(train, text_col, 1)
+        .groupBy(F.col("a").alias("w1"), F.col("b").alias("w2"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c12"))
+        .localCheckpoint(eager=True)
+    )
     c1 = corpus.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
     # V_train from the materialized bigram table: its distinct w1 ∪ w2
     # is EXACTLY the token set the per-occurrence stream yielded (corpus
     # holds every distinct pair), so the count is unchanged — and the
-    # action reads bigram-type-scale rows, not the corpus.
-    # Optimization r15 (§5): in-plan as a broadcast 1-row aggregate
-    # instead of a driver-blocking .count() + py4j sync; the smoothing
-    # denominator arithmetic is unchanged (long column vs long literal).
+    # action reads bigram-type-scale rows, not the corpus. It joins
+    # in-plan as a broadcast 1-row aggregate (§5): no driver-blocking
+    # count, no py4j sync.
     v_train = (
         corpus.select(F.col("w1").alias("w"))
         .union(corpus.select(F.col("w2").alias("w")))
         .distinct()
         .agg(F.count(F.lit(1)).cast("long").alias("__vt"))
     )
-    ep = _pairs(eval_df)
-    etf = ep.groupBy(id_col, "w1", "w2").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
+    etf = (
+        _pair_stream(eval_df, text_col, 1, [id_col])
+        .groupBy(id_col, F.col("a").alias("w1"), F.col("b").alias("w2"))
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     scored = (
         etf.join(corpus, ["w1", "w2"], "left")
@@ -2389,14 +2242,12 @@ def rouge_n(
     g = gens.select(
         F.col(id_col), F.explode(word_shingles(gen_text_col, n)).alias("g")
     ).filter(F.length("g") > 0)
-    # Optimization r14: ONE full-outer join on the (id, gram) key merges
-    # both sides' distinct-gram sets and ONE id-keyed aggregate yields
-    # all three counts — the previous form exploded each side TWICE
-    # (per-side total + match join) and met the aggregates in two more
-    # id joins. Grams are distinct per (id, side) so the outer join is
-    # 1:1; a gram on one side only contributes to that side's total and
-    # 0 to the match, and the n_ref>0 AND n_gen>0 filter reproduces the
-    # old inner nr⋈ng id universe exactly.
+    # ONE full-outer join on the (id, gram) key merges both sides'
+    # distinct-gram sets and ONE id-keyed aggregate yields all three
+    # counts, so each side explodes once. Grams are distinct per (id,
+    # side) so the outer join is 1:1; a gram on one side only
+    # contributes to that side's total and 0 to the match, and the
+    # n_ref>0 AND n_gen>0 filter keeps ids with grams on both sides.
     merged = r.withColumn("__ir", F.lit(1)).join(
         g.withColumn("__ig", F.lit(1)), [id_col, "g"], "full_outer"
     )
@@ -2430,6 +2281,48 @@ def rouge_n(
         F.expr(
             f"CAST({dec.format(x='n_match')} * 2000000 DIV (n_ref + n_gen) AS BIGINT)"
         ).alias("f1_micro"),
+    )
+
+
+def _clipped_order_totals(
+    refs: DataFrame,
+    hyps: DataFrame,
+    id_col: str,
+    ref_grams: Column,
+    hyp_grams: Column,
+    hyp: str,
+) -> DataFrame:
+    """(n, total_ref, total_<hyp>, total_clipped) — the shared reduce of
+    BLEU's and chrF's clipped multiset counts. ``ref_grams`` /
+    ``hyp_grams`` are per-row array<struct<n, g>> over ``refs`` /
+    ``hyps``; each side explodes once to (id, n, g) counts (empty grams
+    dropped), ONE full-outer join on (id, n, g) merges both sides and
+    ONE groupBy("n") yields all three totals. A gram missing from one
+    side adds 0 to that side's total and 0 to the clip; an order present
+    on EITHER side emits its row (the outer join's key space is that
+    union)."""
+
+    def counts(df: DataFrame, grams: Column, c: str) -> DataFrame:
+        return (
+            df.select(F.col(id_col), F.explode(grams).alias("x"))
+            .select(id_col, F.col("x.n").alias("n"), F.col("x.g").alias("g"))
+            .filter(F.length("g") > 0)
+            .groupBy(id_col, "n", "g")
+            .agg(F.count(F.lit(1)).cast("long").alias(c))
+        )
+
+    zero = F.lit(0).cast("long")
+    rc = F.coalesce(F.col("__rc"), zero)
+    hc = F.coalesce(F.col("__hc"), zero)
+    return (
+        counts(hyps, hyp_grams, "__hc")
+        .join(counts(refs, ref_grams, "__rc"), [id_col, "n", "g"], "full_outer")
+        .groupBy("n")
+        .agg(
+            F.sum(rc).cast("long").alias("total_ref"),
+            F.sum(hc).cast("long").alias(f"total_{hyp}"),
+            F.sum(F.least(hc, rc)).cast("long").alias("total_clipped"),
+        )
     )
 
 
@@ -2472,25 +2365,20 @@ def bleu_clipped_precision(
 
     Returns (n, total_ref, total_gen, total_clipped, precision_micro).
     """
-    from hdinsight_pyspark_cntk_integration_spark.operators.dedup import (
-        _bind_once,
-        normalized_text,
-    )
+    from hdinsight_pyspark_cntk_integration_spark.operators.dedup import _bind_once
 
     if n_max < 1:
         raise ValueError(f"n_max must be >= 1 (got {n_max})")
 
-    def grams(df: DataFrame, text_col: str) -> DataFrame:
-        # Optimization r15: tokenize ONCE per document. The previous
-        # form called word_ngrams(text_col, n) once per order — each
-        # call re-ran the normalize-regex + split pipeline over the
-        # text (n_max full tokenizations per document, §2.3 "don't
-        # compute things twice"). The token array is now lambda-bound a
-        # single time and every order's gram array is built from it;
-        # the n=1 order maps tokens directly instead of paying an
+    def grams(text_col: str) -> Column:
+        # Tokenize ONCE per document (§2.3 "don't compute things
+        # twice"): the token array is lambda-bound a single time and
+        # every order's gram array is built from it — one word_ngrams
+        # call per order would re-run the tokenizer n_max times. The
+        # n=1 order maps tokens directly instead of paying an
         # array_join(slice(...)) per gram. Gram values (including the
         # short-document edge where slice() yields a truncated gram)
-        # are bit-identical to the word_ngrams form.
+        # equal word_ngrams'.
         def all_grams(toks: Column) -> Column:
             def order(n: int) -> Column:
                 if n == 1:
@@ -2512,44 +2400,14 @@ def bleu_clipped_precision(
 
             return F.concat(*[order(n) for n in range(1, n_max + 1)])
 
-        tagged = _bind_once(F.split(normalized_text(text_col), r"\s+"), all_grams)
-        return (
-            df.select(F.col(id_col), F.explode(tagged).alias("x"))
-            .select(id_col, F.col("x.n").alias("n"), F.col("x.g").alias("g"))
-            .filter(F.length("g") > 0)
-            .groupBy(id_col, "n", "g")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        )
+        return _bind_once(tokens(text_col), all_grams)
 
-    # Optimization r14: ONE full-outer join on the (id, n, gram) key
-    # merges both sides' multiset counts, and ONE small aggregate then
-    # produces all three totals — the previous form derived each side's
-    # gram table TWICE (clip join + per-side total) and met the three
-    # aggregates in two more joins. A gram missing from one side
-    # contributes 0 to that side's total and 0 to the clip (least with
-    # a 0-coalesced count == the old inner-join semantics), so the
-    # per-order rows are bit-identical, including the "order present on
-    # either side" row set (the outer join's key space IS that union).
-    rc = grams(refs, ref_text_col)
-    gc = grams(gens, gen_text_col)
-    zero = F.lit(0).cast("long")
-    merged = gc.withColumnRenamed("c", "gc").join(
-        rc.withColumnRenamed("c", "rc"), [id_col, "n", "g"], "full_outer"
+    totals = _clipped_order_totals(
+        refs, gens, id_col, grams(ref_text_col), grams(gen_text_col), "gen"
     )
+    zero = F.lit(0).cast("long")
     return (
-        merged.groupBy("n")
-        .agg(
-            F.sum(F.coalesce(F.col("rc"), zero)).cast("long").alias("total_ref"),
-            F.sum(F.coalesce(F.col("gc"), zero)).cast("long").alias("total_gen"),
-            F.sum(
-                F.least(
-                    F.coalesce(F.col("gc"), zero), F.coalesce(F.col("rc"), zero)
-                )
-            )
-            .cast("long")
-            .alias("total_clipped"),
-        )
-        .select(
+        totals.select(
             F.col("n").cast("int").alias("n"),
             "total_ref",
             "total_gen",
@@ -2685,8 +2543,8 @@ def span_f1(
     unigram clip applied symmetrically (rouge_n is the set-based
     cousin; this is the multiset form QA grading specifies).
 
-    Conventions, all explicit: tokens are lowercased
-    whitespace-splits (the engine-wide normalizer); an item where
+    Conventions, all explicit: tokens are the engine-wide ``tokens``;
+    an item where
     BOTH sides are empty scores F1 = 1e6 (vacuous truth, the SQuAD
     convention); one side empty scores 0. Items present in only one
     input are dropped by the inner id join — pad upstream if absence
@@ -2704,29 +2562,21 @@ def span_f1(
     """
 
     def counts(df: DataFrame, text_col: str, cname: str) -> DataFrame:
-        toks = F.split(
-            F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")),
-            " ",
-        )
         return (
-            df.select(F.col(id_col).alias("__id"), F.explode(toks).alias("__t"))
-            .filter(F.length("__t") > 0)
-            .groupBy("__id", "__t")
+            token_table(df, [F.col(id_col).alias("__id")], text_col)
+            .groupBy("__id", "token")
             .agg(F.count(F.lit(1)).cast("long").alias(cname))
         )
 
     gc = counts(gold, gold_text_col, "cg")
     pc = counts(pred, pred_text_col, "cp")
-    # Optimization r14: ONE full-outer join on the (id, token) key
-    # merges both sides' counts, and ONE id-keyed aggregate then yields
-    # overlap AND both length totals — the previous form derived gc and
-    # pc TWICE each (clip join + per-side total) and met the three
-    # aggregates in two more id joins (10 Exchanges at the gate). A
+    # ONE full-outer join on the (id, token) key merges both sides'
+    # counts, and ONE id-keyed aggregate then yields overlap AND both
+    # length totals, so each side's count table is derived once. A
     # token missing from one side contributes 0 to that side's total
-    # and 0 to the clip (least with a 0-coalesced count == the old
-    # inner-join semantics), so every per-id triple is bit-identical.
+    # and 0 to the clip (least with a 0-coalesced count).
     zero = F.lit(0).cast("long")
-    merged = gc.join(pc, ["__id", "__t"], "full_outer")
+    merged = gc.join(pc, ["__id", "token"], "full_outer")
     per_id = merged.groupBy("__id").agg(
         F.sum(F.least(F.coalesce("cg", zero), F.coalesce("cp", zero)))
         .cast("long")
@@ -2777,12 +2627,7 @@ def _token_counts(df: DataFrame, text_col: str) -> DataFrame:
     two-corpus keyword statistics below (one explode + one partial-agg
     shuffle per corpus, vocab-sized output)."""
     return (
-        df.select(
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-                "token"
-            )
-        )
-        .filter(F.length("token") > 0)
+        token_table(df, [], text_col)
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -2818,32 +2663,20 @@ def two_corpus_vocab_tagged(
     df: DataFrame, is_a, text_col: str = "text"
 ) -> DataFrame:
     """(token, cnt_a, cnt_b) union-vocabulary table from ONE tagged
-    corpus scan (optimization r14): when the two corpora are
+    corpus scan: when the two corpora are
     complementary slices of the SAME frame (the common contrast setup
     — e.g. lang == 'en' vs the rest), `_two_corpus_vocab`'s shape
     (one scan + tokenize pass PER SIDE, then a full-outer join) pays
     twice for what one pass computes: explode once with the boolean
     ``is_a`` tag carried through, then conditional sums per token.
-    Bit-identical table — a token absent from one side gets an exact
-    0 from the conditional sum, exactly what the old join's COALESCE
-    produced. Rows where ``is_a`` is NULL must be pre-filtered by the
+    The same table — a token absent from one side gets an exact 0
+    from the conditional sum, as the join's COALESCE gives. Rows where ``is_a`` is NULL must be pre-filtered by the
     caller (they belong to neither corpus). Materialized
     (localCheckpoint) like `_two_corpus_vocab`, for the same reason.
     Pass the result as the ``vocab=`` argument of g_test_keywords /
     log_odds_dirichlet / jsd_divergence."""
     a_col = F.col(is_a) if isinstance(is_a, str) else is_a
-    tagged = df.select(
-        F.col(text_col).alias("__txt"), a_col.cast("boolean").alias("__a")
-    )
-    exploded = (
-        tagged.select(
-            "__a",
-            F.explode(F.split(F.lower(F.trim(F.col("__txt"))), r"\s+")).alias(
-                "token"
-            ),
-        )
-        .filter(F.length("token") > 0)
-    )
+    exploded = token_table(df, [a_col.cast("boolean").alias("__a")], text_col)
     vocab = exploded.groupBy("token").agg(
         F.sum(F.col("__a").cast("long")).cast("long").alias("cnt_a"),
         F.sum((~F.col("__a")).cast("long")).cast("long").alias("cnt_b"),
@@ -3021,23 +2854,16 @@ def lexical_diversity(
     aggregate; each measure is ONE fixed fp64 expression over them,
     micro-floored at birth. Herdan is NULL at N = 1 (ln 1 = 0 — a
     one-token document has no log-log slope); TTR/Guiraud are defined
-    everywhere (N ≥ 1 after the empty-token filter).
+    everywhere (N ≥ 1: a document without tokens emits no row).
 
     Scale shape: one explode + (doc, token) partial-agg shuffle, one
-    doc-keyed reduce. The whitespace/lowercase tokenization is the
-    yules_k convention.
+    doc-keyed reduce.
 
     Returns (doc_id, n_tokens, n_types, ttr_micro, herdan_c_micro,
     guiraud_r_micro) per document with ≥ 1 token.
     """
     counts = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-                "token"
-            ),
-        )
-        .filter(F.length("token") > 0)
+        token_table(df, [F.col(id_col).alias("doc_id")], text_col)
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -3092,13 +2918,7 @@ def yules_k(
     Returns (group, n_tokens, n_types, k_micro) per slice.
     """
     counts = (
-        df.select(
-            F.col(group_col).alias("group"),
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-                "token"
-            ),
-        )
-        .filter(F.length("token") > 0)
+        token_table(df, [F.col(group_col).alias("group")], text_col)
         .groupBy("group", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -3228,12 +3048,7 @@ def feature_hashing(
         )
     else:
         raise ValueError(f"unknown hash_family {hash_family!r} (xxhash64|md5)")
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "token"
-        ),
-    ).filter(F.length("token") > 0)
+    toks = token_table(df, [F.col(id_col).alias("id")], text_col)
     cell = (
         toks.selectExpr("id", f"{idx} AS idx", f"{sgn} AS sgn")
         .groupBy("id", "idx")
@@ -3281,18 +3096,18 @@ def chrf_score(
         F_beta = (1+b²)·P·R / (b²·P + R)  =  (1+b²)·C / (b²·R + H)
 
     so every per-order score is ONE truncating micro DIV over three
-    exact integers — no float anywhere.  Normalization convention
-    (documented, applied identically both sides): lowercase, collapse
-    internal whitespace runs to one space, trim; spaces participate in
-    n-grams (word-boundary signal).  Orders present on NEITHER side
+    exact integers — no float anywhere.  Both sides read
+    ``normalized_text`` (lowercase, whitespace runs collapsed to one
+    space, trimmed); spaces participate in n-grams (word-boundary
+    signal).  Orders present on NEITHER side
     emit no row; chrf_micro is 0 (not NULL) when b²R + H = 0.  Callers
     wanting the headline chrF average the per-order rows.
 
     Scale shape (the bleu shape exactly): each side explodes once to
     (id, n, gram) — all orders in one pass, ~n_max·len(text) cells per
-    doc — then two partial-agg shuffles (multiset counts keyed
-    (id, n, gram); the clip join co-keyed on the same triple) and a
-    final n_max-row reduce.  Returns
+    doc — into multiset counts keyed (id, n, gram); ONE full-outer join
+    on that triple merges both sides and ONE groupBy("n") yields all
+    three totals (:func:`_clipped_order_totals`).  Returns
     (n, total_ref, total_hyp, total_clipped, chrf_micro).
     """
     if n_max < 1:
@@ -3300,59 +3115,28 @@ def chrf_score(
     if beta < 1:
         raise ValueError(f"beta must be >= 1 (got {beta})")
 
-    def grams(df: DataFrame, text_col: str) -> DataFrame:
-        norm = F.trim(
-            F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
+    def tag(n: int) -> Column:
+        arr = F.expr(
+            f"transform(sequence(1, length(__t) - {n} + 1),"
+            f" i -> struct(CAST({n} AS INT) AS n, substr(__t, i, {n}) AS g))"
         )
-        def tag(n: int):
-            arr = F.expr(
-                f"transform(sequence(1, length(__t) - {n} + 1),"
-                f" i -> struct(CAST({n} AS INT) AS n, substr(__t, i, {n}) AS g))"
-            )
-            return F.when(F.length("__t") >= n, arr).otherwise(
-                F.array().cast("array<struct<n:int,g:string>>")
-            )
-
-        staged = df.select(F.col(id_col), norm.alias("__t"))
-        arrs = [tag(n) for n in range(1, n_max + 1)]
-        return (
-            staged.select(F.col(id_col), F.explode(F.concat(*arrs)).alias("x"))
-            .select(id_col, F.col("x.n").alias("n"), F.col("x.g").alias("g"))
-            .groupBy(id_col, "n", "g")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        return F.when(F.length("__t") >= n, arr).otherwise(
+            F.array().cast("array<struct<n:int,g:string>>")
         )
 
-    rc = grams(refs, ref_text_col)
-    hc = grams(hyps, hyp_text_col)
-    clip = (
-        hc.alias("h")
-        .join(rc.alias("r"), [id_col, "n", "g"])
-        .groupBy("n")
-        .agg(
-            F.sum(F.least(F.col("h.c"), F.col("r.c"))).cast("long").alias(
-                "total_clipped"
-            )
-        )
-    )
-    ht = hc.groupBy("n").agg(F.sum("c").cast("long").alias("total_hyp"))
-    rt = rc.groupBy("n").agg(F.sum("c").cast("long").alias("total_ref"))
-    zero = F.lit(0).cast("long")
+    def staged(df: DataFrame, text_col: str) -> DataFrame:
+        return df.select(F.col(id_col), normalized_text(text_col).alias("__t"))
+
+    grams = F.concat(*[tag(n) for n in range(1, n_max + 1)])
     b2 = beta * beta
-    return (
-        rt.join(ht, "n", "full_outer")
-        .join(clip, "n", "left")
-        .select(
-            "n",
-            F.coalesce("total_ref", zero).alias("total_ref"),
-            F.coalesce("total_hyp", zero).alias("total_hyp"),
-            F.coalesce("total_clipped", zero).alias("total_clipped"),
-        )
-        .withColumn(
-            "chrf_micro",
-            F.expr(
-                f"CAST(COALESCE(CAST({1 + b2} AS DECIMAL(38,0)) * total_clipped"
-                f" * 1000000 DIV NULLIF({b2} * total_ref + total_hyp, 0), 0)"
-                " AS BIGINT)"
-            ),
-        )
+    totals = _clipped_order_totals(
+        staged(refs, ref_text_col), staged(hyps, hyp_text_col), id_col, grams, grams, "hyp"
+    )
+    return totals.withColumn(
+        "chrf_micro",
+        F.expr(
+            f"CAST(COALESCE(CAST({1 + b2} AS DECIMAL(38,0)) * total_clipped"
+            f" * 1000000 DIV NULLIF({b2} * total_ref + total_hyp, 0), 0)"
+            " AS BIGINT)"
+        ),
     )

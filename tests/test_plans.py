@@ -168,25 +168,34 @@ def test_tfidf_single_explode_bounded_shuffles(spark, sf_dir):
     exchanges — the contract is now runtime: AQE must collapse them
     (ReusedExchange in the executed plan; verified via REST metrics:
     the token exchange is written once, read twice), the stream-sorting
-    token Window must stay gone, and no cartesian anywhere."""
-    df = e.q_tfidf_top_terms(spark, sf_dir)
-    plan = P.formatted_plan(df)
-    assert P.has_broadcast_join(df)  # the 1-row n_docs side
-    assert "CartesianProduct" not in plan
+    token Window must stay gone, and no cartesian anywhere. Both
+    Generate branches come from the one ``token_table`` call, which is
+    what makes them byte-identical. AQE is switched on for the test's
+    duration, so it checks the same thing in every session."""
     import re
 
-    assert len(re.findall(r"^\(\d+\) Generate", plan, flags=re.MULTILINE)) <= 2
-    # exactly ONE window remains: the per-document ranking (the
-    # per-token document-frequency window would be a second one);
-    # WindowGroupLimit nodes are the rank<=k pushdown, not windows
-    assert len(re.findall(r"^\(\d+\) Window$", plan, flags=re.MULTILINE)) == 1
-    assert P.count_shuffles(df) <= 4
-    # runtime: the two Generate branches must collapse into one
-    # executed exchange via AQE exchange reuse (collect() executes
-    # THIS df's QueryExecution, so its final adaptive plan is readable)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in executed
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = e.q_tfidf_top_terms(spark, sf_dir)
+        plan = P.formatted_plan(df)
+        assert P.has_broadcast_join(df)  # the 1-row n_docs side
+        assert "CartesianProduct" not in plan
+        assert len(re.findall(r"^\(\d+\) Generate", plan, flags=re.MULTILINE)) <= 2
+        # exactly ONE window remains: the per-document ranking (the
+        # per-token document-frequency window would be a second one);
+        # WindowGroupLimit nodes are the rank<=k pushdown, not windows
+        assert len(re.findall(r"^\(\d+\) Window$", plan, flags=re.MULTILINE)) == 1
+        assert P.count_shuffles(df) <= 4
+        # runtime: the two Generate branches must collapse into one
+        # executed exchange via AQE exchange reuse (collect() executes
+        # THIS df's QueryExecution, so its final adaptive plan is readable)
+        df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        assert "ReusedExchange" in executed
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_min_cost_supplier_broadcasts_dims(spark, sf_dir):

@@ -121,17 +121,29 @@ def test_rank_ops_degenerate_input(spark, name, case):
             assert r[col] == want, col
 
 
-@pytest.mark.parametrize("name", sorted(_REWRITTEN))
+# spearman_corr ranks two columns: (v, w) and (w, v) put the NULL on
+# either side of the pair
+_NULL_DROP = {
+    **_REWRITTEN,
+    "spearman_corr_vw": lambda df: st.spearman_corr(df, "g", "v", "w"),
+    "spearman_corr_wv": lambda df: st.spearman_corr(df, "g", "w", "v"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NULL_DROP))
 def test_rank_ops_drop_null_values(spark, name):
     """NULL values (and NULL groups) drop: adding them changes nothing."""
     rng = np.random.default_rng(21)
-    rows = [("a", int(v)) for v in rng.integers(0, 9, 40)] + [
-        ("b", int(v)) for v in rng.integers(3, 12, 30)
-    ]
-    nulls = [("a", None)] * 3 + [("b", None)] * 2 + [(None, 4), (None, None)]
-    op = _REWRITTEN[name]
-    clean = _rows(op(spark.createDataFrame(rows, "g string, v long")))
-    assert _rows(op(spark.createDataFrame(rows + nulls, "g string, v long"))) == clean
+    v = [int(x) for x in rng.integers(0, 9, 40)] + [int(x) for x in rng.integers(3, 12, 30)]
+    w = [int(x) for x in np.random.default_rng(22).integers(0, 9, 70)]
+    rows = [("a" if i < 40 else "b", v[i], w[i]) for i in range(70)]
+    nulls = (
+        [("a", None, 5)] * 3 + [("b", None, 7)] * 2 + [(None, 4, 4), (None, None, None)]
+    )
+    schema = "g string, v long, w long"
+    op = _NULL_DROP[name]
+    clean = _rows(op(spark.createDataFrame(rows, schema)))
+    assert _rows(op(spark.createDataFrame(rows + nulls, schema))) == clean
 
 
 @pytest.mark.parametrize("partitioned", [False, True])
