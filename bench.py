@@ -293,7 +293,7 @@ N_BENCH_IMAGES = 10_000  # the reference's benchmark cardinality (README.md:194)
 
 def inference_throughput(spark) -> float:
     """Reference-comparable inference bench: score 10k synthetic 3072-dim
-    'images' (deterministic JVM-generated values) through the mapInPandas
+    'images' (deterministic JVM-generated values) through the mapInArrow
     scorer with the full P1-P5 preprocessing chain + linear stub model.
     Baseline to beat: ≈102.2 images/s (BASELINE.md)."""
     import numpy as np

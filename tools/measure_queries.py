@@ -7,7 +7,13 @@ Usage:
   python tools/measure_queries.py --plans-dir plans/r14 --suffix before q1
   python tools/measure_queries.py --time-only q1
 
-Prints one line per query:  <name>  <median>s  [samples]  exchanges=N
+Prints one line per query:  <name>  <median>s  [samples]  compiles=N  exchanges=N
+
+compiles is the number of Janino compilations during the 3 timed runs
+(Spark's CodegenMetrics). The warm run already compiled the query's code,
+so a non-zero count marks a query whose generated code is not
+cache-stable on its own, e.g. an AQE-replanned stage whose code differs
+from run to run.
 """
 
 from __future__ import annotations
@@ -67,6 +73,11 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def _compilations() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     for name in names:
         fn = queries[name]
         spark.sparkContext.setJobDescription(f"measure:{name}")
@@ -96,13 +107,16 @@ def main() -> None:
             continue
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
         samples = []
+        compiled = _compilations()
         for _ in range(3):
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.perf_counter() - t0)
+        compiles = _compilations() - compiled
         med = sorted(samples)[1]
         print(
-            f"{name}  {med:.3f}s  [{', '.join(f'{s:.3f}' for s in samples)}]{extra}",
+            f"{name}  {med:.3f}s  [{', '.join(f'{s:.3f}' for s in samples)}]"
+            f"  compiles={compiles}{extra}",
             flush=True,
         )
         spark.sparkContext.setJobDescription(None)
