@@ -482,8 +482,7 @@ def q_pack_chunks_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polynomial (Rabin-Karp) rolling-hash fingerprint per document —
     pure code-point arithmetic, so the oracle reproduces it exactly
-    (functions.textfns.rolling_hash; windowed form:
-    operators.dedup.winnow_fingerprints)."""
+    (functions.textfns.rolling_hash)."""
     from hdinsight_pyspark_cntk_integration_spark.functions.textfns import rolling_hash
 
     docs = load_table(spark, sf_dir, "documents")
@@ -552,7 +551,7 @@ def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) clustering key over (l_partkey, l_suppkey) —
-    the layout key behind sources.io.write_zordered, exposed as pure
+    the data-skipping layout key, exposed as pure
     bit arithmetic so the oracle checks it bit-for-bit
     (functions.layout.zorder_key2)."""
     from hdinsight_pyspark_cntk_integration_spark.functions.layout import zorder_key2
@@ -591,10 +590,8 @@ def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-id sequences against the top-25 vocab (OOV -> 0) via the
     broadcast-vocab Arrow tokenizer (operators.text.
-    tokenize_to_ids_broadcast — zero token-stream shuffle; the join+
-    regroup form tokenize_to_ids is the unbounded-vocab fallback and is
-    twin-tested against this one); emitted as a joined string so the
-    oracle compares sequences exactly."""
+    tokenize_to_ids_broadcast — zero token-stream shuffle); emitted as
+    a joined string so the oracle compares sequences exactly."""
     from hdinsight_pyspark_cntk_integration_spark.operators.text import (
         build_vocab,
         tokenize_to_ids_broadcast,
@@ -1358,8 +1355,9 @@ def q_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     5..24 at sf0.01, so the cap drops real hubs while apexes and
     non-adjacent wedge pairs survive): the capped-vs-uncapped
     gate pair ordered by VERDICT r8 #4. The cap drops hub APEXES from
-    wedge enumeration (the Σ deg·(deg-1)/2 scale knob profiled in
-    tools/profile_hub_cap.py) while the Jaccard denominator keeps TRUE
+    wedge enumeration (the Σ deg·(deg-1)/2 scale knob; README's hub-cap
+    cost profile, whose one-off profiler tools/profile_hub_cap.py is in
+    git history) while the Jaccard denominator keeps TRUE
     degrees; the oracle applies the identical deg <= 12 apex filter, so
     the lossy cut is deterministic and provable, not approximate."""
     from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr

@@ -13,10 +13,9 @@ pandas UDFs only where built-in operators can't express the semantics
 
 Public surface:
     session      — tuned SparkSession builder
-    sources      — table catalog + IO (parquet/csv/binary readers, sinks)
+    sources      — table catalog + IO (parquet/csv readers, sinks)
     functions    — vector/text scalar helpers built on pyspark.sql.functions
     operators    — relational, scoring, dedup, similarity, text, multimodal
-    plans        — plan-inspection helpers (pushdown/broadcast assertions)
     streaming    — Structured Streaming builders (windows, watermarks, scoring)
 """
 

@@ -6,11 +6,9 @@ the reference's per-record tensor math (SURVEY.md §2.2 P1-P5, §2.3 M2).
 """
 
 from hdinsight_pyspark_cntk_integration_spark.functions.vector import (
-    argmax_index,
     cosine_similarity,
     dot,
     l2_norm,
-    vector_subtract,
 )
 from hdinsight_pyspark_cntk_integration_spark.functions.textfns import (
     fingerprint_md5,
@@ -21,11 +19,9 @@ from hdinsight_pyspark_cntk_integration_spark.functions.textfns import (
 )
 
 __all__ = [
-    "argmax_index",
     "cosine_similarity",
     "dot",
     "l2_norm",
-    "vector_subtract",
     "fingerprint_md5",
     "normalized_text",
     "punct_ratio",

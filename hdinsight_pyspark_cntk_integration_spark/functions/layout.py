@@ -6,8 +6,8 @@ rows so that BOTH columns' parquet min/max row-group stats stay tight —
 a range filter on either column then skips most row groups, where a
 plain lexicographic sort only helps its leading column. This is the
 layout story behind Delta/Iceberg ``OPTIMIZE ZORDER BY``; here it is a
-pure Catalyst bit-arithmetic expression (codegen'd, shuffle-free) fed to
-``sources.io.write_zordered``.
+pure Catalyst bit-arithmetic expression (codegen'd, shuffle-free) to
+sort or range-partition a write by.
 """
 
 from __future__ import annotations

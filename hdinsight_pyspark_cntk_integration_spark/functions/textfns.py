@@ -64,8 +64,7 @@ def fingerprint_md5(col: Column | str) -> Column:
 def rolling_hash(col: Column | str, base: int = 31, mod: int = 1_000_003) -> Column:
     """Polynomial (Rabin-Karp) fingerprint of the text's code points:
     h = Σ cp_i · base^(n-1-i) mod ``mod`` — the streaming-updatable hash
-    family behind rolling-window fingerprinting (see
-    ``operators.dedup.winnow_fingerprints`` for the windowed form).
+    family behind rolling-window fingerprinting.
 
     Pure arithmetic on code points, so an independent SQL engine
     reproduces it bit-for-bit (unlike md5-of-bytes there is no codec in

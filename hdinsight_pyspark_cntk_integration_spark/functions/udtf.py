@@ -48,20 +48,6 @@ def split_sentences():
     return udtf(SplitSentences, returnType="sentence: string, n_tokens: int")
 
 
-def geometric_mean():
-    """Grouped-agg UDF: exp(mean(ln x)) over positive values, NaN-safe."""
-
-    @pandas_udf("double")
-    def gm(v: pd.Series) -> float:
-        x = v.to_numpy(dtype="float64")
-        x = x[np.isfinite(x) & (x > 0)]
-        if x.size == 0:
-            return float("nan")
-        return float(np.exp(np.log(x).mean()))
-
-    return gm
-
-
 def trimmed_mean():
     """Grouped-agg UDF: mean of the middle 80% (10% trimmed each side)."""
 

@@ -2,7 +2,7 @@
 
 The reference does this math in NumPy inside a mapPartitions closure
 (mean-subtract README.md:159, argmax README.md:174). Expressed as
-``zip_with``/``aggregate``/``array_position`` these run inside codegen —
+``zip_with``/``aggregate`` these run inside codegen —
 no Python worker, no Arrow transfer — which is the right hot path for
 per-row vector ops at 100 TB. Batch model *inference* still uses the
 pandas-UDF path (operators.scoring) because matrix-matrix products need
@@ -38,17 +38,3 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a, b) = a·b / (|a| |b|); NaN-free for zero vectors (returns 0)."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-def vector_subtract(a: Column | str, b: Column | str) -> Column:
-    """Elementwise a - b — the relational form of the reference's
-    broadcast mean-image subtraction (README.md:159,165)."""
-    return F.zip_with(_as_double(a), _as_double(b), lambda x, y: x - y)
-
-
-def argmax_index(arr: Column | str) -> Column:
-    """0-based index of the max element (first occurrence on ties) —
-    the reference's ``np.argmax(np.squeeze(dnn_output))`` (README.md:174)
-    as ``array_position(arr, array_max(arr)) - 1``."""
-    c = _as_double(arr)
-    return (F.array_position(c, F.array_max(c)) - F.lit(1)).cast("int")

@@ -321,38 +321,6 @@ def minhash_pairs(
     return jaccard_pairs(sh, cands, id_col, threshold)
 
 
-def minhash_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_hashes: int = 128,
-    bands: int = 32,
-    shingle_k: int = 3,
-    shingle_mode: str = "word",
-    transitive: bool = False,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """End-to-end near-dedup: ``minhash_pairs`` (LSH candidates → exact
-    Jaccard filter) → survivors. Returns the deduplicated rows of ``df``;
-    rows with NULL text are never duplicates, so they are all kept.
-
-    ``transitive=False`` (default) uses single-link "drop any row matched
-    to a smaller id" — one pass, but a chain A~B~C can keep both A and C.
-    ``transitive=True`` runs the iterative connected-components closure
-    (``connected_components``) and keeps exactly one representative (min
-    id) per duplicate cluster.
-    """
-    confirmed = minhash_pairs(
-        df, id_col, text_col, threshold, num_hashes, bands, shingle_k,
-        shingle_mode, hash_family,
-    )
-    if transitive:
-        return dedup_by_components(df, confirmed, id_col)
-    dups = confirmed.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(dups, on=id_col, how="left_anti")
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -389,7 +357,9 @@ def connected_components(
     # and without a checkpoint each round would re-derive the full
     # upstream pair plan — for embedding_dedup that is the all-pairs
     # candidate join + two vector fetches + fp64 cosine, re-executed per
-    # round (measured by tools/profile_embedding_dedup.py).
+    # round (measured by the one-off tools/profile_embedding_dedup.py,
+    # now in git history: closure on the live plan 11.0 s vs 6.4 s on
+    # frozen pairs at sf0.1).
     edges = symmetric_edges(pairs, id_a, id_b)
     # node-partitioned label table: every per-round join below keys on
     # node id, so materializing the layout once makes the rounds
@@ -454,82 +424,6 @@ def connected_components(
             f"({n_changed} labels still changing); raise max_iters"
         )
     return labels.select(F.col("node"), F.col("comp").alias("component"))
-
-
-def dedup_by_components(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop every row whose id belongs to a duplicate component but is not
-    that component's representative (min id) — the transitively-correct
-    form of minhash_dedup's final step."""
-    comps = connected_components(pairs)
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, on=id_col, how="left_anti")
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-    base: int = 31,
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003 —
-    the MOSS algorithm): polynomial hashes of all char k-grams of the
-    normalized text, then per sliding window of ``window`` consecutive
-    k-gram hashes keep the MINIMUM (rightmost on ties — "robust
-    winnowing"). The selected set is position-independent evidence of
-    local substring overlap: any shared run of ≥ k+window-1 chars between
-    two documents is guaranteed to contribute a common fingerprint, which
-    md5/simhash whole-doc fingerprints cannot promise.
-
-    Returns (id, fingerprints array<bigint> — sorted distinct selection).
-    Arrow-vectorized per batch: code points → sliding-window matmul
-    against the base-power vector (k is small) → reduceat-free window min
-    with rightmost-tie argmin. No shuffle; pair generation downstream is
-    explode + join on fingerprint, the same Σ|bucket|² shape as LSH.
-    """
-    mod = _P
-    norm = f"trim(regexp_replace(lower({text_col}), '\\\\s+', ' '))"
-    src, _ = _spread(df)
-    coded = src.selectExpr(
-        id_col, f"transform(split({norm}, ''), ch -> ascii(ch)) AS cps"
-    )
-    powv = np.array(
-        [pow(base, k - 1 - j, mod) for j in range(k)], dtype=np.int64
-    )
-
-    @F.pandas_udf("array<bigint>")
-    def winnow(cps: pd.Series) -> pd.Series:
-        out = []
-        for arr in cps:
-            if arr is None:
-                out.append(None)
-                continue
-            cp = np.asarray(arr, dtype=np.int64)
-            if len(cp) < k:
-                out.append([])
-                continue
-            grams = np.lib.stride_tricks.sliding_window_view(cp, k)
-            # cp < 2^21, pow < 2^31, k terms -> < k*2^52: int64-safe
-            h = (grams @ powv) % mod
-            if len(h) < window:
-                sel = np.array([h.min()])
-            else:
-                wins = np.lib.stride_tricks.sliding_window_view(h, window)
-                # rightmost argmin = (window-1) - argmin of the reversed row
-                rev = wins[:, ::-1]
-                idx = (window - 1) - rev.argmin(axis=1)
-                sel = wins[np.arange(len(wins)), idx]
-            out.append(np.unique(sel).tolist())
-        return pd.Series(out)
-
-    return coded.select(F.col(id_col), winnow(F.col("cps")).alias("fingerprints"))
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -176,31 +176,6 @@ def pagerank_integer(
     return ranks
 
 
-def degree_stats(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Per-node in/out degree — the graph-shape profile (skew in degree
-    distribution is what makes vertex-cut vs edge-cut partitioning
-    matter at scale). One partial-agg pass over the edge list per
-    direction, full-outer merged on node."""
-    out_d = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("out_degree")
-    )
-    in_d = edges.groupBy(F.col(dst).alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("in_degree")
-    )
-    return (
-        out_d.join(in_d, "node", "full_outer")
-        .select(
-            "node",
-            F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-            F.coalesce("in_degree", F.lit(0)).alias("in_degree"),
-        )
-    )
-
-
 def triangle_count(
     edges: DataFrame,
     src: str = "src",

@@ -6,10 +6,11 @@ raw bytes and are decoded/preprocessed in a partition-parallel UDF
 (reference README.md:69-84, 154-160).
 
 The decode kernels themselves (JPEG/PNG/audio codecs) are STUBBED — the
-container has no imaging libraries — behind ``set_decoder``. Everything
-Spark-side is real and tested: schemas, mapInPandas batch shape,
-partitioning, metadata extraction. A deterministic fake decoder ships for
-tests: it expands bytes into a fixed-shape float tensor reproducibly.
+container has no imaging libraries — so every decode takes its codec as a
+``decoder`` argument. Everything Spark-side is real and tested: schemas,
+mapInPandas batch shape, partitioning, metadata extraction. A
+deterministic fake decoder ships for tests: it expands bytes into a
+fixed-shape float tensor reproducibly.
 """
 
 from __future__ import annotations
@@ -22,16 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# decoder: bytes -> np.ndarray (H, W, C) float32. Swappable at runtime.
+# decoder: bytes -> np.ndarray (H, W, C) float32.
 Decoder = Callable[[bytes], np.ndarray]
-
-_DECODER: Decoder | None = None
-
-
-def set_decoder(decoder: Decoder | None) -> None:
-    """Install a real image decoder (e.g. PIL/cv2-based) when available."""
-    global _DECODER
-    _DECODER = decoder
 
 
 def deterministic_fake_decoder(shape: tuple[int, int, int] = (8, 8, 3)) -> Decoder:
@@ -55,14 +48,14 @@ def deterministic_fake_decoder(shape: tuple[int, int, int] = (8, 8, 3)) -> Decod
     return decode
 
 
-def _get_decoder() -> Decoder:
-    if _DECODER is None:
+def _require_decoder(decoder: Decoder | None) -> Decoder:
+    if decoder is None:
         raise NotImplementedError(
-            "No media decoder installed in this environment; call "
-            "set_decoder(...) with a real codec, or use "
+            "No media decoder installed in this environment; pass "
+            "decoder=... with a real codec, or "
             "deterministic_fake_decoder() in tests."
         )
-    return _DECODER
+    return decoder
 
 
 def with_media_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
@@ -95,7 +88,7 @@ def decode_to_tensor(
     flat tensors out. Output is flat + explicit shape column — the
     engine's standard tensor representation (SURVEY.md §1.3).
     """
-    dec = decoder or _get_decoder()
+    dec = _require_decoder(decoder)
     schema = f"{id_col} string, shape array<int>, tensor array<float>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -145,67 +138,6 @@ def resize_tensor(
     return df.mapInPandas(run, schema=fields)
 
 
-def sample_frames(
-    df: DataFrame,
-    every_n: int,
-    frames_col: str = "frames",
-) -> DataFrame:
-    """Frame sampling for video-like array<binary> columns: keep every
-    n-th element. Catalyst-only (filter on transform index) — sampling
-    happens before any decode, which is the right order at scale."""
-    frames = F.col(frames_col)
-    idx = F.sequence(F.lit(0), F.size(frames) - 1)
-    kept = F.filter(
-        F.zip_with(frames, idx, lambda fr, i: F.struct(fr.alias("fr"), i.alias("i"))),
-        lambda s: s["i"] % every_n == 0,
-    )
-    return df.withColumn(frames_col, F.transform(kept, lambda s: s["fr"]))
-
-
-def decode_to_tensor_arrow(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "path",
-    decoder: Decoder | None = None,
-) -> DataFrame:
-    """``decode_to_tensor``'s Arrow-native twin via ``mapInArrow``: the
-    batch arrives as a ``pyarrow.RecordBatch``, so the media BYTES are
-    never copied into pandas object cells (for pure-binary payloads the
-    pandas hop is the dominant per-batch cost — each cell becomes a
-    Python bytes object; Arrow buffers stay contiguous). The decoder
-    still sees ``bytes`` per item, but batch assembly/disassembly is
-    zero-copy columnar on both edges.
-
-    Same output contract as decode_to_tensor (flat float32 tensor +
-    explicit shape column); the pytest twin pins row-for-row equality of
-    the two paths, so either can serve as the production decode surface.
-    """
-    import pyarrow as pa
-
-    dec = decoder or _get_decoder()
-    schema = f"{id_col} string, shape array<int>, tensor array<float>"
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0)  # id_col (projected order below)
-            contents = batch.column(1)
-            shapes, tensors = [], []
-            for buf in contents:
-                arr = dec(buf.as_py())
-                shapes.append(list(arr.shape))
-                tensors.append(arr.astype(np.float32).ravel())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array(shapes, type=pa.list_(pa.int32())),
-                    pa.array(tensors, type=pa.list_(pa.float32())),
-                ],
-                names=[id_col, "shape", "tensor"],
-            )
-
-    return df.select(id_col, content_col).mapInArrow(run, schema=schema)
-
-
 def perceptual_dhash(
     df: DataFrame,
     content_col: str = "content",
@@ -216,7 +148,7 @@ def perceptual_dhash(
     grayscale (channel mean) → area-resize to 8×9 → horizontal-gradient
     sign bits packed into one signed int64. Identical bytes always hash
     identically; visually-similar images land within a few bits (with a
-    REAL codec installed via ``set_decoder`` — the shipped deterministic
+    REAL codec passed as ``decoder`` — the shipped deterministic
     stub makes equality-duplicates exact and near-misses random, which
     is precisely what the oracle-checkable gate needs).
 
@@ -224,7 +156,7 @@ def perceptual_dhash(
     all downstream dedup joins run on — raw media bytes are touched
     exactly once at 100 TB.
     """
-    dec = decoder or _get_decoder()
+    dec = _require_decoder(decoder)
     schema = f"{id_col} long, phash long"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

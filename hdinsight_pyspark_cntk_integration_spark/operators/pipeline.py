@@ -935,121 +935,6 @@ def bpe_merge_table(spark, merges: list[tuple[int, str, str, str]]) -> DataFrame
     )
 
 
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[int, str, str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    codegen_max_merges: int = 512,
-) -> DataFrame:
-    """Apply a learned BPE merge table: tokenize each document into
-    subword symbols by replaying the merges in rank order over each
-    word's wrapped symbol string. Returns (id_col, tokens array<string>).
-
-    Two twin-tested execution paths, selected by merge-table size:
-
-    - ``len(merges) <= codegen_max_merges``: pure Catalyst projection —
-      the merge chain compiles to ``num_merges`` nested ``replace``
-      calls inside one whole-stage-codegen'd transform over the
-      document's words; no Python, no shuffle, corpus touched once.
-    - larger tables (production tokenizers carry 10k-50k merges, where
-      the nested-``replace`` expression tree blows past codegen/stack
-      limits): an Arrow-batched ``mapInPandas`` encoder with identical
-      replay semantics. Per word it replays merges through a rank
-      POINTER — at each step apply the lowest-ranked pair present that
-      is above the last applied rank (a pair first appearing after its
-      rank has been passed is never applied, exactly like the one-pass
-      replay chain) — so cost is O(word_len · applied_merges) with O(1)
-      dict probes, not O(num_merges) scans per word. Encodings are
-      memoized per task across Arrow batches (vocabulary-sized dict, the
-      same bound as the broadcast merge table itself), so each distinct
-      word is encoded once per task. Still no shuffle; corpus touched
-      once.
-
-    This is the consumer path the trainer feeds (the same role
-    ``tokenize_to_ids_broadcast`` plays for word-level vocab)."""
-    from hdinsight_pyspark_cntk_integration_spark.functions.textfns import tokens
-
-    if len(merges) <= codegen_max_merges:
-        def encode_word(w: Column) -> Column:
-            out = _bpe_wrap(w)
-            for _, a, b, _m in merges:
-                out = F.replace(out, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
-            return F.split(F.trim(out), "  ")
-
-        # NULL text encodes to NULL, as in the Arrow path below
-        toks = F.when(
-            F.col(text_col).isNotNull(),
-            F.flatten(F.transform(tokens(text_col), encode_word)),
-        )
-        return df.select(F.col(id_col), toks.alias("tokens"))
-
-    import re as _re
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rank_pair = {r: (a, b) for r, a, b, _m in merges}
-    pair_rank = {}
-    for r, a, b, _m in merges:
-        # first (lowest) rank wins for a duplicated pair, matching the
-        # replay chain where the first replace leaves nothing for later
-        # duplicates to match
-        pair_rank.setdefault((a, b), r)
-    # Java's \s is ASCII-only; Python's is unicode-aware — re.ASCII
-    # mirrors the Catalyst ``tokens`` split exactly.
-    ws = _re.compile(r"\s+", _re.ASCII)
-
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [id_field, T.StructField("tokens", T.ArrayType(T.StringType()), True)]
-    )
-    sub = df.select(id_col, text_col)
-
-    def encode_batches(batches):
-        cache: dict[str, list[str]] = {}
-
-        def encode_word(w: str) -> list[str]:
-            hit = cache.get(w)
-            if hit is not None:
-                return hit
-            s = " " + "  ".join(w) + " "
-            ptr = None
-            while True:
-                syms = s[1:-1].split("  ")
-                best = None
-                for pair in zip(syms, syms[1:]):
-                    r = pair_rank.get(pair)
-                    if (
-                        r is not None
-                        and (ptr is None or r > ptr)
-                        and (best is None or r < best)
-                    ):
-                        best = r
-                if best is None:
-                    cache[w] = syms
-                    return syms
-                a, b = rank_pair[best]
-                s = s.replace(f" {a}  {b} ", f" {a}{b} ")
-                ptr = best
-
-        for pdf in batches:
-            toks = []
-            for t in pdf[text_col]:
-                if t is None:
-                    toks.append(None)
-                    continue
-                norm = ws.sub(" ", t.lower()).strip()
-                out: list[str] = []
-                for w in norm.split(" "):
-                    if w:
-                        out.extend(encode_word(w))
-                toks.append(out)
-            yield pd.DataFrame({id_col: pdf[id_col], "tokens": toks})
-
-    return sub.mapInPandas(encode_batches, out_schema)
-
-
 # --------------------------------------------------------------------------
 # incremental aggregate maintenance (IVM for distributive aggregates)
 # --------------------------------------------------------------------------

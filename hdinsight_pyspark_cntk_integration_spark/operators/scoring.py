@@ -230,39 +230,3 @@ def score(
     elif repartition:
         narrow = narrow.repartition(repartition)
     return narrow.mapInArrow(run_batches, schema=", ".join(out_fields))
-
-
-# ---------------------------------------------------------------------------
-# Model loaders
-# ---------------------------------------------------------------------------
-def make_onnx_loader(model_path: str, input_name: str | None = None) -> ModelLoader:
-    """ModelLoader for an ONNX model via onnxruntime (the public-runtime
-    stand-in for the reference's CNTK ``.dnn`` load, README.md:162-184).
-    Import-gated: this container ships no onnxruntime, so construction
-    raises with a clear message there; the loader contract and the
-    session-per-task lifecycle are what the engine guarantees.
-
-    The returned loader opens one ``InferenceSession`` per task (the M1
-    amortization) and feeds float32 batches to the model's first input.
-    """
-    try:
-        import onnxruntime  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - absent in this container
-        raise ImportError(
-            "onnxruntime is not installed; make_onnx_loader needs it. "
-            "Use make_linear_stub_loader for the deterministic test model."
-        ) from exc
-
-    def loader() -> Callable[[np.ndarray], np.ndarray]:
-        import onnxruntime as ort
-
-        sess = ort.InferenceSession(model_path, providers=["CPUExecutionProvider"])
-        name = input_name or sess.get_inputs()[0].name
-
-        def predict(batch: np.ndarray) -> np.ndarray:
-            out = sess.run(None, {name: batch.astype(np.float32, copy=False)})
-            return np.asarray(out[0], dtype=np.float64)
-
-        return predict
-
-    return loader

@@ -144,8 +144,8 @@ def ivf_topk(
     Cell assignment groups by the ROW ID only (vectors are re-joined
     after), so the assignment shuffle carries (id, cell) pairs, never the
     embedding arrays; centroids for production corpora come from
-    ``ml.kmeans_centroids`` (JVM-side MLlib fit), ``grid_centroids`` below
-    is the deterministic test/oracle stand-in.
+    ``kmeans_lloyd``, ``grid_centroids`` below is the deterministic
+    test/oracle stand-in.
     """
 
     def nearest(df: DataFrame, vec: str, idc: str, n: int, out: str) -> DataFrame:
@@ -181,8 +181,7 @@ def grid_centroids(corpus: DataFrame, num: int, corpus_id: str = "vec_id", corpu
     """Cheap deterministic centroids: every (n/num)-th corpus vector by id
     order. Stands in for a KMeans fit when determinism matters more than
     cell balance (tests, oracles) — production callers should use
-    ``ml.kmeans_centroids`` instead (JVM-side MLlib fit, no driver
-    ``count()``)."""
+    ``kmeans_lloyd`` instead."""
     n = corpus.count()
     step = max(n // num, 1)
     picks = (
@@ -601,50 +600,6 @@ def pq_topk_adc(
         ranked.select(F.explode("top").alias("t"))
         .select(F.col("t.id").alias(id_col), F.col("t.adc_dist").alias("adc_dist"))
     )
-
-
-def pq_save_index(
-    spark,
-    codebooks,
-    encoded: DataFrame,
-    path: str,
-) -> None:
-    """Persist a PQ index: the code table as parquet (the big, per-vector
-    part — written distributed) plus the codebooks flattened into a tiny
-    parquet side table (m·k rows of subvector centroids). An index you
-    can't store and reload is a benchmark toy; this is the build-once /
-    serve-many lifecycle, all in plain parquet so any engine can read it.
-    """
-    import numpy as np
-
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, k, sub = books.shape
-    rows = [
-        (int(j), int(c), [float(x) for x in books[j, c]])
-        for j in range(m)
-        for c in range(k)
-    ]
-    spark.createDataFrame(
-        rows, "subvector int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    encoded.write.mode("overwrite").parquet(f"{path}/codes")
-
-
-def pq_load_index(spark, path: str):
-    """Reload a PQ index written by :func:`pq_save_index`: returns
-    (codebooks ndarray (m,k,sub), encoded DataFrame). The codebook side
-    is a bounded driver collect (m·k rows); the code table stays
-    distributed."""
-    import numpy as np
-
-    brows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = 1 + max(r["subvector"] for r in brows)
-    k = 1 + max(r["code"] for r in brows)
-    sub = len(brows[0]["centroid"])
-    books = np.zeros((m, k, sub), dtype=np.float64)
-    for r in brows:
-        books[r["subvector"], r["code"]] = r["centroid"]
-    return books, spark.read.parquet(f"{path}/codes")
 
 
 # --------------------------------------------------------------------------

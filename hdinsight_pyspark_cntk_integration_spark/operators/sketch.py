@@ -19,36 +19,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def hll_sketch_by_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
-    """One HLL sketch per group: (group, sketch binary, estimate).
-    lg_k=12 → 2^12 registers ≈ 1.6% relative standard error, 4 KB max
-    per sketch — a day×shard matrix of these is megabytes, not a rescan.
-    Partial aggregation applies: executors build per-partition sketches
-    and the shuffle carries sketch bytes, not raw values."""
-    return df.groupBy(group_col).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch")
-    ).select(
-        F.col(group_col),
-        "sketch",
-        F.hll_sketch_estimate("sketch").cast("double").alias("estimate"),
-    )
-
-
-def hll_union_estimate(sketches: DataFrame, sketch_col: str = "sketch") -> DataFrame:
-    """Union a frame of sketches into one estimate — the roll-up step of
-    incremental distinct counting (per-shard sketches → corpus total)."""
-    return sketches.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col), F.lit(True)))
-        .cast("double")
-        .alias("estimate")
-    )
-
-
 def distinct_bounded(
     df: DataFrame,
     group_col: str,
@@ -357,8 +327,8 @@ def cms_build(
     undercount, and overcount by <= e·N/width with probability
     1 − e^−depth. The table form IS the storage contract (like the HLL
     and t-digest operators): per-shard sketches are plain parquet and
-    merge by union + sum (:func:`cms_merge`) — yesterday's cells never
-    need recomputing.
+    merge by union + per-cell sum — yesterday's cells never need
+    recomputing.
 
     Shape: one explode to ``depth`` rows per input row (constant
     factor), ONE partial-agg groupBy; the sketch is depth × width cells
@@ -378,18 +348,6 @@ def cms_build(
         ).alias("x")
     ).select("x.d", "x.bucket")
     return cells.groupBy("d", "bucket").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge CMS cell tables built with the SAME (depth, width): union +
-    per-cell sum — exact integer arithmetic under any merge order, the
-    same mergeability contract as ``hll_union_agg`` storage."""
-    if len(sketches) < 2:
-        raise ValueError("cms_merge needs at least two sketches")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("d", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def cms_estimate(

@@ -182,7 +182,7 @@ def build_vocab(df: DataFrame, text_col: str = "text", top_v: int = 1000) -> Dat
     return counts.withColumn("token_id", F.row_number().over(w))
 
 
-def tokenize_to_ids(
+def tokenize_to_ids_broadcast(
     df: DataFrame,
     vocab: DataFrame,
     id_col: str = "doc_id",
@@ -191,57 +191,10 @@ def tokenize_to_ids(
 ) -> DataFrame:
     """Map each document to its token-id sequence against a vocabulary
     (token, token_id): (id, ids array<int>), OOV tokens -> ``unk_id``.
-
-    Scale shape: posexplode -> BROADCAST vocab join (the vocab is always
-    tiny next to the corpus; the token stream never shuffles for the
-    lookup) -> one groupBy per doc re-assembling the sequence via
-    collect_list(struct(pos,id)) + array_sort. Per-doc state is bounded
-    by document length — the same bound as the text column itself."""
-    toks = df.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok")
-    )
-    joined = toks.join(
-        F.broadcast(vocab.select("token", "token_id")),
-        toks.tok == F.col("token"),
-        "left",
-    )
-    packed = joined.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("pos"),
-                        F.coalesce(F.col("token_id"), F.lit(unk_id)).alias("tid"),
-                    )
-                )
-            ),
-            lambda s: s["tid"],
-        ).alias("ids")
-    )
-    return (
-        df.select(id_col)
-        .join(packed, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("ids"), F.array().cast("array<int>")).alias("ids"),
-        )
-    )
-
-
-def tokenize_to_ids_broadcast(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    unk_id: int = 0,
-) -> DataFrame:
-    """``tokenize_to_ids`` without the token-stream shuffle: collect the
-    (bounded) vocabulary to a plain dict, broadcast it, and map each
-    document to its id sequence in one Arrow-batched projection — the way
-    production tokenizers run (the vocab ships to workers; the corpus
-    never moves). The join form regroups every token through a shuffle;
-    this form touches each document exactly once, so prefer it whenever
-    the vocab fits executor memory (BPE-scale vocabs always do).
+    The (bounded) vocabulary is collected to a plain dict, broadcast,
+    and each document is mapped in one Arrow-batched projection — the
+    way production tokenizers run (the vocab ships to workers; the
+    corpus never moves, so no token-stream shuffle).
 
     Tokenization mirrors ``functions.textfns.tokens``: lowercase, split
     on ASCII whitespace runs, drop empties. (Exotic unicode whitespace is
@@ -254,16 +207,12 @@ def tokenize_to_ids_broadcast(
     the driver.
 
     Unicode-lowercase caveat: this form lowercases with Python
-    ``str.lower()`` while the join-form twin uses Spark's JVM
-    ``lower()``; the two agree on ASCII (and on most of Unicode) but can
-    diverge on locale-sensitive edge cases — e.g. ``'İ'`` (U+0130)
-    lowercases to ``'i̇'`` (two code points) in Python but may map
-    differently on the JVM, and ligatures like ``'ﬁ'`` are not expanded
-    by either engine's ``lower`` (only by case folding). The twin test
-    covers the ASCII fixture; for corpora where these edge cases matter,
-    pre-normalize the text column (e.g. NFKC + casefold in one Arrow
-    pass) before tokenizing with either form, so the dict lookup sees
-    identical keys regardless of engine.
+    ``str.lower()`` while ``tokens`` uses Spark's JVM ``lower()``; the
+    two agree on ASCII (and on most of Unicode) but can diverge on
+    locale-sensitive edge cases — e.g. ``'İ'`` (U+0130) lowercases to
+    ``'i̇'`` (two code points) in Python but may map differently on the
+    JVM. For corpora where these edge cases matter, pre-normalize the
+    text column before building the vocabulary and tokenizing.
     """
     import re as _re
 
@@ -275,8 +224,7 @@ def tokenize_to_ids_broadcast(
     if vocab.limit(_MAX_VOCAB + 1).count() > _MAX_VOCAB:
         raise ValueError(
             f"tokenize_to_ids_broadcast: vocabulary exceeds {_MAX_VOCAB} "
-            "entries — use the join-form tokenize_to_ids for unbounded "
-            "vocabularies"
+            "entries — pass a bounded vocabulary (build_vocab's top_v)"
         )
     vmap = {r["token"]: r["token_id"] for r in vocab.collect()}
     bc = df.sparkSession.sparkContext.broadcast(vmap)
@@ -590,38 +538,6 @@ def unigram_logprob(
             ).alias("mean_nll"),
         )
     )
-
-
-def normalize_casefold(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Unicode NFKC + casefold in one Arrow-batched pass — the
-    normalization pre-step that makes engine-specific lowercasing
-    irrelevant downstream (see the caveat on
-    ``tokenize_to_ids_broadcast``): after NFKC+casefold, 'İ' ('I'+dot),
-    ligatures ('ﬁ'→'fi'), full-width forms and case-sensitive
-    comparisons all collapse to a stable representation, so JVM
-    ``lower()`` twins and Python ``str.lower()`` twins agree on the
-    result. Run it once at ingest; every tokenizer/dedup fingerprint
-    downstream then sees identical keys regardless of engine.
-
-    Pure projection (no shuffle); Python-side by necessity — full
-    Unicode case folding has no Catalyst builtin — but Arrow-batched,
-    never per-row-serialized.
-    """
-    import unicodedata
-
-    target = out_col or text_col
-
-    @F.pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: unicodedata.normalize("NFKC", t).casefold() if t is not None else None
-        )
-
-    return df.withColumn(target, _norm(F.col(text_col)))
 
 
 def build_inverted_index(

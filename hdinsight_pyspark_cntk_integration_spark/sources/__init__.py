@@ -10,11 +10,8 @@ pruning and predicate pushdown for free.
 from hdinsight_pyspark_cntk_integration_spark.sources.catalog import (
     TABLE_NAMES,
     load_table,
-    load_tables,
-    register_views,
 )
 from hdinsight_pyspark_cntk_integration_spark.sources.io import (
-    read_binary_files,
     read_csv,
     read_parquet,
     write_parquet,
@@ -24,9 +21,6 @@ from hdinsight_pyspark_cntk_integration_spark.sources.io import (
 __all__ = [
     "TABLE_NAMES",
     "load_table",
-    "load_tables",
-    "register_views",
-    "read_binary_files",
     "read_csv",
     "read_parquet",
     "write_parquet",

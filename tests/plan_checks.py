@@ -1,9 +1,9 @@
 """Plan-inspection helpers: make physical-plan expectations testable.
 
 The reference's optimizations are hand-placed (SURVEY.md §4); ours are
-Catalyst's, so the engine asserts they actually fire — filters reach the
-parquet scan, small dims broadcast, shuffles stay bounded. Used by tests
-and by bench diagnostics.
+Catalyst's, so the tests assert they actually fire — filters reach the
+parquet scan, small dims broadcast, shuffles stay bounded. Only tests
+use these helpers, so they live beside them.
 """
 
 from __future__ import annotations
@@ -17,10 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
 
 
 def count_shuffles(df: DataFrame) -> int:

@@ -44,7 +44,7 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
     raw = _corpus(spark)
     src = str(tmp_path / "corpus_jsonl")
     eio.write_jsonl(raw, src)
-    docs = eio.read_jsonl(spark, src, schema="doc_id long, text string")
+    docs = spark.read.schema("doc_id long, text string").json(src)
     assert docs.count() == N_CLEAN + 6
 
     # 1. quality gate drops the short + all-punct docs
@@ -58,8 +58,15 @@ def test_corpus_pipeline_end_to_end(spark, tmp_path):
     kept = {r["doc_id"] for r in ex.select("doc_id").collect()}
     assert 101 not in kept and 102 not in kept and 1 in kept and 2 in kept
 
-    # 3. transitive near-dedup removes the one-word-off copy, keeps doc 3
-    nd = dd.minhash_dedup(ex, threshold=0.6, transitive=True)
+    # 3. transitive near-dedup removes the one-word-off copy, keeps doc 3:
+    # verified MinHash pairs -> connected components -> drop every
+    # member that is not its component's min id
+    pairs = dd.minhash_pairs(ex, threshold=0.6)
+    comps = dd.connected_components(pairs)
+    losers = comps.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias("doc_id")
+    )
+    nd = ex.join(losers, "doc_id", "left_anti")
     kept = {r["doc_id"] for r in nd.select("doc_id").collect()}
     assert 103 not in kept and 3 in kept
 

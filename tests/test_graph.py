@@ -64,14 +64,6 @@ def test_pagerank_validations(spark):
         gr.pagerank_integer(df, damping_ppm=2_000_000)
 
 
-def test_degree_stats(spark):
-    df = spark.createDataFrame(
-        [(0, 1, 1), (0, 2, 1), (1, 2, 1)], "src int, dst int, weight long"
-    )
-    got = {r["node"]: (r["out_degree"], r["in_degree"]) for r in gr.degree_stats(df).collect()}
-    assert got == {0: (2, 0), 1: (1, 1), 2: (0, 2)}
-
-
 def test_triangle_count_known_graphs(spark):
     from hdinsight_pyspark_cntk_integration_spark.operators import graph as gr
 
@@ -894,27 +886,32 @@ def test_rewritten_loops_on_empty_edges(spark, name):
 
 
 def test_k_core_then_classifier_in_one_session(spark):
-    """k_core touches the session's Observation machinery; a logistic
-    regression fitted and scored afterwards in the same session must
-    still serialize its transform() closure."""
+    """k_core touches the session's Observation machinery; a classifier
+    scored afterwards in the same session (the engine's mapInArrow
+    scorer with the stub model) must still serialize its closure and
+    predict exactly the NumPy argmax."""
     import numpy as np
 
-    from hdinsight_pyspark_cntk_integration_spark import ml as eml
     from hdinsight_pyspark_cntk_integration_spark.operators import relational as rel
+    from hdinsight_pyspark_cntk_integration_spark.operators import scoring as sc
 
     clique = [(a, b) for a in range(4) for b in range(4) if a < b]
     core = gr.k_core(spark.createDataFrame(clique, "src long, dst long"), k=3)
     assert core.count() == 4
 
     rng = np.random.default_rng(5)
-    x = rng.normal(0, 1, size=(120, 4))
+    x = rng.normal(0, 1, size=(120, 4)).astype(np.float32)
     y = (x[:, 0] > 0).astype(int)
-    x[:, 0] += np.where(y == 1, 2.0, -2.0)
     df = spark.createDataFrame(
-        [(x[i].astype(float).tolist(), int(y[i])) for i in range(len(y))],
-        "embedding array<float>, label int",
+        [(i, x[i].tolist(), int(y[i])) for i in range(len(y))],
+        "id long, embedding array<float>, label int",
     )
-    model = eml.fit_classifier(df, max_iter=20)
-    acc = rel.accuracy(eml.score_with_model(model, df), "label", "predicted_label").collect()[0]
+    scored = sc.score(
+        df, sc.make_linear_stub_loader(4, 2), "embedding", pass_through=["id", "label"]
+    )
+    want = (x.astype(np.float64) @ sc.linear_stub_weights(4, 2).T).argmax(axis=1)
+    got = {r["id"]: r["predicted_label"] for r in scored.collect()}
+    assert got == {i: int(want[i]) for i in range(len(y))}
+    acc = rel.accuracy(scored, "label", "predicted_label").collect()[0]
     assert acc["num_total"] == 120
-    assert acc["num_correct"] >= 115
+    assert acc["num_correct"] == int((want == y).sum())

@@ -42,7 +42,7 @@ def test_partitioned_parquet_write(spark, tmp_path, sf_dir):
     back = spark.read.parquet(out)
     assert back.count() == docs.count()
     # partition pruning: a lang filter should scan only one partition dir
-    from hdinsight_pyspark_cntk_integration_spark.plans import formatted_plan
+    from plan_checks import formatted_plan
 
     pruned = back.filter(F.col("lang") == "en")
     assert pruned.count() == docs.filter(F.col("lang") == "en").count()
@@ -58,9 +58,7 @@ def test_jsonl_roundtrip_partitioned(spark, tmp_path, sf_dir):
     out = str(tmp_path / "docs_jsonl")
     eio.write_jsonl(docs, out, partition_by=["lang"])
     assert glob.glob(f"{out}/lang=*/*.json.gz"), "partition dirs + gzip expected"
-    back = eio.read_jsonl(
-        spark, out, schema="doc_id long, text string, source string, lang string"
-    )
+    back = spark.read.schema("doc_id long, text string, source string, lang string").json(out)
     assert back.count() == docs.count()
     a = {tuple(sorted(r.asDict().items())) for r in docs.collect()}
     b = {tuple(sorted(r.asDict().items())) for r in back.collect()}
@@ -184,7 +182,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
 def test_bucketed_join_no_shuffle(spark, sf_dir):
     """Two tables bucketed on the join key join with zero exchanges —
     the pre-shuffled warehouse layout for repeated fact-fact joins."""
-    from hdinsight_pyspark_cntk_integration_spark.plans import count_shuffles
+    from plan_checks import count_shuffles
     from hdinsight_pyspark_cntk_integration_spark.sources import io as eio
     from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
 
@@ -193,8 +191,8 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
     eio.write_bucketed(li, "li_bkt", 4, "l_orderkey")
     eio.write_bucketed(orders, "ord_bkt", 4, "o_orderkey")
     try:
-        a = eio.read_table(spark, "li_bkt")
-        b = eio.read_table(spark, "ord_bkt")
+        a = spark.table("li_bkt")
+        b = spark.table("ord_bkt")
         # MERGE hint: at fixture scale the planner would broadcast instead
         # (disabling bucketed reads); the SMJ path is the one that matters
         # at warehouse scale, and on bucketed tables it needs no exchange.
@@ -212,7 +210,7 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     """Hive-style partitionBy layout + filter → Spark reads ONLY the
     matching partition directories (PartitionFilters, not a full scan) —
     the layout that turns a 100 TB scan into a per-slice read."""
-    from hdinsight_pyspark_cntk_integration_spark.plans import formatted_plan
+    from plan_checks import formatted_plan
     from hdinsight_pyspark_cntk_integration_spark.sources import io as eio
     from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
 
@@ -228,24 +226,26 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
 def test_orc_roundtrip_with_pushdown(spark, tmp_path, sf_dir):
     """ORC sink/source round-trip; filters reach the ORC scan the same
     way they do for parquet (PushedFilters in the formatted plan)."""
-    from hdinsight_pyspark_cntk_integration_spark.plans import formatted_plan
+    from plan_checks import formatted_plan
 
     nation = load_table(spark, sf_dir, "nation")
     out = str(tmp_path / "nation_orc")
     eio.write_orc(nation, out)
-    back = eio.read_orc(spark, out)
+    back = spark.read.orc(out)
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in nation.collect()}
     plan = formatted_plan(back.filter(F.col("n_nationkey") > 2).select("n_name"))
     assert "PushedFilters" in plan and "n_nationkey" in plan
 
 
 def test_write_zordered_clusters_both_columns(spark, tmp_path, sf_dir):
-    """Z-ordered layout: after clustering on the Morton key of
+    """Z-ordered write: after range-clustering on the Morton key of
     (l_partkey, l_suppkey), each output file covers a small slice of
     BOTH key ranges — the per-file min/max span must shrink vs the
     unclustered layout on both columns (that span is exactly what
     row-group skipping prunes on)."""
     import pyspark.sql.functions as SF
+
+    from hdinsight_pyspark_cntk_integration_spark.functions.layout import zorder_key2
 
     # synthetic uniform 2-D points: both dims need cardinality >> file
     # count for clustering to be observable (sf0.001's l_suppkey has 10
@@ -256,7 +256,13 @@ def test_write_zordered_clusters_both_columns(spark, tmp_path, sf_dir):
         SF.pmod(SF.xxhash64("id", SF.lit(1)), SF.lit(4096)).alias("l_suppkey"),
     )
     out = str(tmp_path / "li_z")
-    eio.write_zordered(li, out, "l_partkey", "l_suppkey", n_files=8)
+    (
+        li.withColumn("__zkey", zorder_key2(SF.col("l_partkey"), SF.col("l_suppkey")))
+        .repartitionByRange(8, "__zkey")
+        .sortWithinPartitions("__zkey")
+        .drop("__zkey")
+        .write.parquet(out)
+    )
     back = spark.read.parquet(out)
     assert back.count() == li.count()
 
@@ -292,107 +298,6 @@ def test_sample_k_per_group_exact_and_stable(spark, sf_dir):
     # nested-ish: the k=3 sample is a subset of the k=7 sample
     s3 = pl.sample_k_per_group(docs, k=3, group_col="lang").select("doc_id", "lang")
     assert {tuple(r) for r in s3.collect()} <= {tuple(r) for r in s1.collect()}
-
-
-def test_observed_write_collects_metrics_in_one_job(spark, tmp_path):
-    """Observation metrics arrive with the write itself — rows, nulls,
-    and bounds without a second scan."""
-    from pyspark.sql import functions as F
-
-    from hdinsight_pyspark_cntk_integration_spark.sources.io import observed_write
-
-    df = spark.range(0, 1000).select(
-        F.col("id"),
-        F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id") * 2).alias("v"),
-    )
-    out = str(tmp_path / "observed")
-    got = observed_write(
-        df,
-        {
-            "rows": F.count(F.lit(1)),
-            "null_v": F.sum(F.col("v").isNull().cast("long")),
-            "max_v": F.max("v"),
-        },
-        path=out,
-    )
-    assert got["rows"] == 1000
-    assert got["null_v"] == 100
-    assert got["max_v"] == 1998
-    assert spark.read.parquet(out).count() == 1000
-    # noop-sink form (no path) still reports
-    got2 = observed_write(df, {"rows": F.count(F.lit(1))})
-    assert got2["rows"] == 1000
-
-
-def test_compact_parquet_reduces_files_preserves_data(spark, tmp_path):
-    from hdinsight_pyspark_cntk_integration_spark.sources.io import compact_parquet
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(0, 10_000).selectExpr("id", "id % 7 AS g")
-    df.repartition(64).write.mode("overwrite").parquet(path)  # 64 tiny files
-    before = spark.read.parquet(path).toPandas().sort_values("id")
-    stats = compact_parquet(spark, path, target_file_bytes=10**9, sort_cols=["id"])
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == 1  # everything fits one target-size file
-    after = spark.read.parquet(path).toPandas().sort_values("id")
-    assert before.reset_index(drop=True).equals(after.reset_index(drop=True))
-    # larger target count: bytes/target drives the file count
-    df.repartition(64).write.mode("overwrite").parquet(path)
-    total = stats["bytes"]
-    stats2 = compact_parquet(spark, path, target_file_bytes=max(1, total // 4))
-    assert 4 <= stats2["files_after"] <= 6  # ceil(bytes/target) plus re-encode slack
-
-
-def test_read_jsonl_quarantines_corrupt_lines(spark, tmp_path):
-    from hdinsight_pyspark_cntk_integration_spark.sources.io import read_jsonl
-
-    p = tmp_path / "dump.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "good"}\n'
-        "this is not json at all\n"
-        '{"doc_id": 2, "text": "also good"}\n'
-        '{"doc_id": 3, "text": broken}\n'
-    )
-    df = read_jsonl(
-        spark, str(p), schema="doc_id long, text string", corrupt_col="_bad"
-    )
-    rows = df.collect()
-    good = [r for r in rows if r["_bad"] is None]
-    bad = [r for r in rows if r["_bad"] is not None]
-    assert {r["doc_id"] for r in good} == {1, 2}
-    assert len(bad) == 2  # every malformed line kept verbatim, none dropped
-    assert "not json" in bad[0]["_bad"] or "not json" in bad[1]["_bad"]
-    # without corrupt_col but with schema: malformed rows parse to nulls
-    df2 = read_jsonl(spark, str(p), schema="doc_id long, text string")
-    assert df2.count() == 4
-    import pytest
-
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_jsonl(spark, str(p), corrupt_col="_bad")
-
-
-def test_overwrite_partitions_touches_only_written_partitions(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from hdinsight_pyspark_cntk_integration_spark.sources.io import (
-        overwrite_partitions,
-    )
-
-    path = str(tmp_path / "parts")
-    full = spark.range(0, 300).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("src")
-    )
-    full.write.mode("overwrite").partitionBy("src").parquet(path)
-    # refresh ONLY partition src=1 with new content
-    refresh = spark.range(1000, 1010).select(F.col("id"), F.lit("1").alias("src"))
-    overwrite_partitions(refresh, path, ["src"])
-    out = spark.read.parquet(path)
-    assert out.filter("src = '0'").count() == 100  # untouched
-    assert out.filter("src = '2'").count() == 100  # untouched
-    got1 = sorted(r["id"] for r in out.filter("src = '1'").collect())
-    assert got1 == list(range(1000, 1010))  # replaced, not appended
-    # conf restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() != "dynamic"
 
 
 def test_jsonl_corrupt_record_handling(spark, tmp_path):

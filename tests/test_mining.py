@@ -15,7 +15,7 @@ from hdinsight_pyspark_cntk_integration_spark.operators import sketch as sk
 from hdinsight_pyspark_cntk_integration_spark.operators import dedup as dd
 from hdinsight_pyspark_cntk_integration_spark.operators import text as tx
 from hdinsight_pyspark_cntk_integration_spark.operators import similarity as sim
-from hdinsight_pyspark_cntk_integration_spark.plans import count_shuffles
+from plan_checks import count_shuffles
 
 
 # --- frequent_pairs ------------------------------------------------------

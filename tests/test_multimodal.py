@@ -1,4 +1,4 @@
-"""Multimodal plumbing: binary columns, metadata, decode/resize/sample.
+"""Multimodal plumbing: binary columns, metadata, decode/resize, hashing.
 The codec is a deterministic fake (container has no imaging libs); the
 Spark-side schema/batching/partitioning is fully real (SURVEY.md §2.7)."""
 
@@ -30,7 +30,6 @@ def test_metadata_without_decode(media_df):
 
 
 def test_decode_requires_decoder(media_df):
-    mm.set_decoder(None)
     with pytest.raises(NotImplementedError):
         mm.decode_to_tensor(media_df)
 
@@ -54,27 +53,19 @@ def test_resize_tensor(spark, media_df):
         assert len(resized.loc[p, "tensor"]) == 4 * 4 * 3
 
 
-def test_frame_sampling(spark):
-    rows = [("v1", [b"f0", b"f1", b"f2", b"f3", b"f4", b"f5"])]
-    df = spark.createDataFrame(rows, "vid string, frames array<binary>")
-    out = mm.sample_frames(df, every_n=2).collect()[0]
-    assert [bytes(b) for b in out["frames"]] == [b"f0", b"f2", b"f4"]
-
-
-def test_decode_arrow_twin_matches_pandas_path(spark):
-    """mapInArrow decode produces row-identical output to the mapInPandas
-    path (same fake decoder), so either is a valid production surface."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import multimodal as mm
-
+def test_decode_matches_decoder_per_row(spark):
+    """The mapInPandas decode returns, for every row across partitions,
+    exactly the decoder's output on that row's bytes: the shape column
+    and the flat float32 tensor."""
     rows = [(f"img{i}", bytes([i] * (10 + i))) for i in range(6)]
     df = spark.createDataFrame(rows, "path string, content binary").repartition(3)
     dec = mm.deterministic_fake_decoder((4, 5, 3))
-    a = {r["path"]: r for r in mm.decode_to_tensor(df, decoder=dec).collect()}
-    b = {r["path"]: r for r in mm.decode_to_tensor_arrow(df, decoder=dec).collect()}
-    assert set(a) == set(b) == {f"img{i}" for i in range(6)}
-    for k in a:
-        assert a[k]["shape"] == b[k]["shape"] == [4, 5, 3]
-        assert a[k]["tensor"] == b[k]["tensor"]
+    got = {r["path"]: r for r in mm.decode_to_tensor(df, decoder=dec).collect()}
+    assert set(got) == {f"img{i}" for i in range(6)}
+    for path, data in rows:
+        want = dec(data)
+        assert got[path]["shape"] == [4, 5, 3]
+        assert got[path]["tensor"] == want.astype(np.float32).ravel().tolist()
 
 
 # --------------------------------------------------------------------------
@@ -118,4 +109,3 @@ def test_near_dup_phash_banding_guarantee_and_verify(spark):
     # 2 vs 3: xor has bits {0, 2, 17, 33} (bit 1 cancels) = hamming 4;
     # band 3 (bits 48-63) is untouched on both, so they bucket together
     assert got[(2, 3)] == 4
-

@@ -6,7 +6,7 @@ relational path."""
 from __future__ import annotations
 
 import __spark_entry__ as e
-from hdinsight_pyspark_cntk_integration_spark import plans as P
+import plan_checks as P
 from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
 
 
@@ -109,25 +109,8 @@ def test_tokenize_ids_gate_is_shuffle_free(spark, sf_dir):
     assert P.count_shuffles(df) == 0
 
 
-def test_tokenize_ids_join_form_broadcasts_vocab(spark, sf_dir):
-    """The unbounded-vocab fallback (tokenize_to_ids) must broadcast the
-    vocab side — a sort-merge join here would shuffle the whole exploded
-    token stream."""
-    from hdinsight_pyspark_cntk_integration_spark.operators.text import (
-        build_vocab,
-        tokenize_to_ids,
-    )
-    from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    df = tokenize_to_ids(docs, build_vocab(docs, top_v=25))
-    plan = P.formatted_plan(df)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_zorder_layout_is_range_partitioned(spark, sf_dir):
-    """write_zordered's exchange must be a range partitioning on the
+    """A Z-order layout's exchange must be a range partitioning on the
     Morton key (sampled bounds -> balanced files), not hash/round-robin."""
     from pyspark.sql import functions as F
 

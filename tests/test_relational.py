@@ -52,7 +52,7 @@ def test_asof_join_strict(spark):
 def test_asof_join_single_shuffle(spark):
     left = spark.createDataFrame([(1, 5, "x")], "k int, ts int, name string")
     right = spark.createDataFrame([(1, 5, 42)], "k int, rts int, val int")
-    from hdinsight_pyspark_cntk_integration_spark.plans import count_shuffles
+    from plan_checks import count_shuffles
 
     out = rel.asof_join(left, right, ["k"], "ts", "rts", ["val"])
     # union of two local relations + one window shuffle — no join explosion
@@ -107,7 +107,7 @@ def test_range_join_covers_all_rows(spark, sf_dir):
 
 
 def test_dim_lookup_broadcasts(spark, sf_dir):
-    from hdinsight_pyspark_cntk_integration_spark.plans import has_broadcast_join
+    from plan_checks import has_broadcast_join
 
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -641,7 +641,7 @@ def test_running_distinct_counts_first_appearances(spark):
 
 
 def test_differential_join_equals_plain_join_and_broadcasts(spark):
-    from hdinsight_pyspark_cntk_integration_spark.plans import has_broadcast_join
+    from plan_checks import has_broadcast_join
 
     # 1 hot key (80% of rows) + 50 cold keys
     rows = [(0, i) for i in range(800)] + [(1 + i % 50, i) for i in range(200)]

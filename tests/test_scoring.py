@@ -244,16 +244,3 @@ def test_single_csv_sink_keeps_scoring_parallel(spark, tmp_path):
         assert f.readline().strip() == "rid,predicted_label"
     back = eio.read_csv(spark, out, schema="rid long, predicted_label long").collect()
     assert sorted(map(tuple, back)) == sorted(map(tuple, scored.collect()))
-
-
-def test_onnx_loader_is_import_gated():
-    """No onnxruntime in this container: the loader must fail fast with a
-    clear message (not at first task on an executor)."""
-    try:
-        import onnxruntime  # noqa: F401
-
-        pytest.skip("onnxruntime installed; gate not exercisable")
-    except ImportError:
-        pass
-    with pytest.raises(ImportError, match="onnxruntime is not installed"):
-        sc.make_onnx_loader("/nonexistent/model.onnx")

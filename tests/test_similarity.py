@@ -82,7 +82,7 @@ def test_topk_plan_is_two_stage_partition_bounded(spark, emb):
     """Plan proof: the first aggregate keys on spark_partition_id (the
     bounded pre-aggregation), and there are two separate aggregation
     exchanges rather than one global collect_list."""
-    from hdinsight_pyspark_cntk_integration_spark import plans as P
+    import plan_checks as P
 
     queries = sim.self_queries(emb, [0])
     plan = P.formatted_plan(sim.cosine_topk(emb, queries, k=5))
@@ -275,32 +275,6 @@ def test_pq_train_validates_dims(spark):
     )
     with _pytest.raises(ValueError, match="not divisible"):
         sim.pq_train_codebooks(df, m_subvectors=2, k_codes=2, sample_n=1)
-
-
-def test_pq_index_roundtrip(spark, tmp_path):
-    import numpy as np
-
-    from hdinsight_pyspark_cntk_integration_spark.operators import similarity as sim
-
-    rng = np.random.default_rng(9)
-    X = rng.uniform(-1, 1, size=(200, 8))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in r]) for i, r in enumerate(X)],
-        "vec_id long, embedding array<double>",
-    )
-    books = sim.pq_train_codebooks(df, m_subvectors=2, k_codes=8, sample_n=100, seed=3)
-    enc = sim.pq_encode(df, books)
-    sim.pq_save_index(spark, books, enc, str(tmp_path / "pqidx"))
-    books2, enc2 = sim.pq_load_index(spark, str(tmp_path / "pqidx"))
-    assert np.array_equal(books, books2)
-    a = {r["vec_id"]: list(r["codes"]) for r in enc.collect()}
-    b = {r["vec_id"]: list(r["codes"]) for r in enc2.collect()}
-    assert a == b
-    # ADC search over the reloaded index gives identical results
-    q = [0.0] * 8
-    r1 = [(r["vec_id"], r["adc_dist"]) for r in sim.pq_topk_adc(enc, q, books, k=5).collect()]
-    r2 = [(r["vec_id"], r["adc_dist"]) for r in sim.pq_topk_adc(enc2, q, books2, k=5).collect()]
-    assert r1 == r2
 
 
 def test_ivfpq_recall_on_clustered_data(spark):
@@ -784,3 +758,18 @@ def test_kmeans_clusters_production_wrapper_smoke(spark, sf_dir):
     rows = df.collect()
     assert 0 < len(rows) <= 8
     assert sum(r["n"] for r in rows) > 0
+
+
+def test_kmeans_ivf_improves_over_grid(spark, emb):
+    """IVF over the engine's own k-means centroids keeps recall against
+    the exact brute-force top-k while probing 3 of 8 cells."""
+    _, cents = sim.kmeans_lloyd(emb, k=8)
+    centroids = spark.createDataFrame(
+        list(enumerate(cents)), "centroid_id int, centroid_vec array<double>"
+    )
+    queries = sim.self_queries(emb, [0])
+    out = sim.ivf_topk(emb, queries, centroids, k=10, nprobe=3).toPandas()
+    assert len(out) == 10
+    exact = sim.cosine_topk(emb, queries, k=10).toPandas()
+    recall = len(set(out["vec_id"]) & set(exact["vec_id"])) / 10
+    assert recall >= 0.4

@@ -8,20 +8,21 @@ from pyspark.sql import functions as F
 
 from hdinsight_pyspark_cntk_integration_spark.operators.sketch import (
     distinct_bounded,
-    hll_sketch_by_group,
-    hll_union_estimate,
+    hll_sliding_distinct,
 )
 from hdinsight_pyspark_cntk_integration_spark.sources.catalog import load_table
 
 
 def test_hll_union_of_group_sketches_equals_whole(spark, sf_dir):
     """estimate(union(per-group sketches)) == estimate(one sketch over
-    everything): the incremental-maintenance property. HLL register
-    merge is exact (max per register), so the two are EQUAL, not just
-    close."""
+    everything): the incremental-maintenance property. The groups are
+    days: a trailing window wide enough to hold every day unions all the
+    per-day sketches. HLL register merge is exact (max per register), so
+    the two are EQUAL, not just close."""
     ev = load_table(spark, sf_dir, "events")
-    per_group = hll_sketch_by_group(ev, "event_type", "user_id", lg_k=12)
-    unioned = hll_union_estimate(per_group).collect()[0]["estimate"]
+    days = ev.select(F.datediff(F.max(F.to_date("ts")), F.min(F.to_date("ts")))).first()[0]
+    per_day = hll_sliding_distinct(ev, "ts", "user_id", window_days=days + 1)
+    unioned = per_day.orderBy(F.desc("day")).first()["est"]
     whole = (
         ev.agg(
             F.hll_sketch_estimate(
@@ -46,11 +47,10 @@ def test_hll_sketch_insensitive_to_partitioning(spark, sf_dir):
     merge is commutative/associative, so the physical plan can't change
     the answer."""
     ev = load_table(spark, sf_dir, "events")
-    a = hll_sketch_by_group(ev, "event_type", "user_id").select("event_type", "estimate")
-    b = hll_sketch_by_group(ev.repartition(13, "user_id"), "event_type", "user_id").select(
-        "event_type", "estimate"
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    a = hll_sliding_distinct(ev, "ts", "user_id")
+    b = hll_sliding_distinct(ev.repartition(13, "user_id"), "ts", "user_id")
+    rows = sorted(map(tuple, a.collect()))
+    assert rows and rows == sorted(map(tuple, b.collect()))
 
 
 def test_heavy_hitters_exact_guarantee_and_partition_invariance(spark):
@@ -209,8 +209,13 @@ def test_cms_never_undercounts_and_merges_exactly(spark):
     df = spark.createDataFrame(rows, "k long")
     a, b = df.filter(F.col("k") < 25), df.filter(F.col("k") >= 25)
     whole = sk.cms_build(df, "k", depth=4, width=256)
-    merged = sk.cms_merge(sk.cms_build(a, "k", depth=4, width=256),
-                          sk.cms_build(b, "k", depth=4, width=256))
+    # merge = union + per-cell sum (the storage contract cms_build documents)
+    merged = (
+        sk.cms_build(a, "k", depth=4, width=256)
+        .unionByName(sk.cms_build(b, "k", depth=4, width=256))
+        .groupBy("d", "bucket")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    )
     cells_w = sorted(map(tuple, whole.collect()))
     cells_m = sorted(map(tuple, merged.collect()))
     assert cells_w == cells_m

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from hdinsight_pyspark_cntk_integration_spark.sources.catalog import TABLE_NAMES, load_tables
+from hdinsight_pyspark_cntk_integration_spark.sources.catalog import TABLE_NAMES, load_table
 
 EXPECTED_MIN_ROWS = {
     "region": 5,
@@ -19,15 +19,14 @@ EXPECTED_MIN_ROWS = {
 
 
 def test_all_tables_load_and_count(spark, sf_dir):
-    tables = load_tables(spark, sf_dir)
-    assert set(tables) == set(TABLE_NAMES)
-    for name, df in tables.items():
-        assert df.count() >= EXPECTED_MIN_ROWS[name], name
+    assert set(EXPECTED_MIN_ROWS) == set(TABLE_NAMES)
+    for name in TABLE_NAMES:
+        assert load_table(spark, sf_dir, name).count() >= EXPECTED_MIN_ROWS[name], name
 
 
 def test_events_ts_is_timestamp(spark, sf_dir):
-    tables = load_tables(spark, sf_dir)
-    assert tables["events"].schema["ts"].dataType.typeName().startswith("timestamp")
+    events = load_table(spark, sf_dir, "events")
+    assert events.schema["ts"].dataType.typeName().startswith("timestamp")
 
 
 def test_entry_contract(spark):

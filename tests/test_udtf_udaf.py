@@ -1,11 +1,8 @@
 """UDTF + grouped-aggregate UDF surface (SURVEY.md §2.7 additions)."""
 
-import math
-
 from pyspark.sql import functions as F
 
 from hdinsight_pyspark_cntk_integration_spark.functions.udtf import (
-    geometric_mean,
     split_sentences,
     trimmed_mean,
 )
@@ -31,19 +28,6 @@ def test_split_sentences_lateral(spark):
         (1, "How are you", 3),
         (3, "One sentence only", 3),
     ]
-
-
-def test_geometric_mean_grouped(spark):
-    df = spark.createDataFrame(
-        [("a", 2.0), ("a", 8.0), ("b", 3.0), ("b", 0.0)],
-        "k string, v double",
-    )
-    got = {
-        r["k"]: r["gm"]
-        for r in df.groupBy("k").agg(geometric_mean()("v").alias("gm")).collect()
-    }
-    assert math.isclose(got["a"], 4.0)  # sqrt(2*8)
-    assert math.isclose(got["b"], 3.0)  # non-positive values excluded
 
 
 def test_trimmed_mean_grouped(spark):

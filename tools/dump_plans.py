@@ -81,7 +81,8 @@ def main() -> None:
         "and narrow `ReadSchema` on every scan (pushdown + pruning),",
         "`BroadcastHashJoin` on dim sides, wide `WholeStageCodegen`",
         "spans, and no `CartesianProduct` / corpus-sized global sorts",
-        "anywhere (enforced registry-wide by `plans.lint_plan`).",
+        "anywhere (enforced registry-wide by `lint_plan` in",
+        "`tests/plan_checks.py`, run over every query by `tests/test_plans.py`).",
         "",
     ]
     for name in HEADLINE:
