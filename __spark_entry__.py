@@ -5850,6 +5850,40 @@ def q_pass_at_k_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return st.pass_at_k_ci(samples, "problem_id", "correct", k=3)
 
 
+def _mix(c):
+    """The engine-wide Knuth-mix fixture mixer: deterministic,
+    SQL-replayable pseudo-randomness."""
+    return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
+
+
+def _rating_fixture(
+    spark: SparkSession, sf_dir: str, levels: int, first: int = 0, ragged: bool = False
+) -> DataFrame:
+    """The synthetic rating frame the agreement gates share: every
+    document (``item_id``) rated by 5 raters (``rater`` 0..4) with
+    ``label = first + level``, the level a Knuth-mixed doc property in
+    0..levels-1 with 1/4 per-rater disagreement noise. ``ragged`` keeps
+    a (doc, rater) rating only when a Knuth-mixed coin admits it
+    (~60-80% participation, so items carry 0..5 ratings)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    rated = docs.crossJoin(spark.range(5).select(F.col("id").alias("rater")))
+    if ragged:
+        rated = rated.filter(
+            F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
+            < 6 + F.pmod(F.col("rater"), F.lit(3))
+        )
+    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
+    base = F.pmod(_mix(F.col("doc_id")), F.lit(levels))
+    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(levels))
+    return rated.select(
+        F.col("doc_id").alias("item_id"),
+        F.col("rater"),
+        (F.lit(first) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
+        .cast("long")
+        .alias("label"),
+    )
+
+
 def q_self_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Majority-vote self-consistency accuracy (operators.stats.
     self_consistency): problems = event users, gold = Knuth-mixed
@@ -5861,12 +5895,9 @@ def q_self_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
-    gold = F.pmod(mix(F.col("user_id")), F.lit(7))
-    s = mix(F.col("event_id"))
-    alt = F.pmod(mix(F.col("event_id") + F.lit(13)), F.lit(7))
+    gold = F.pmod(_mix(F.col("user_id")), F.lit(7))
+    s = _mix(F.col("event_id"))
+    alt = F.pmod(_mix(F.col("event_id") + F.lit(13)), F.lit(7))
     samples = ev.select(
         F.col("user_id").alias("problem_id"),
         F.when(F.pmod(s, F.lit(3)) < 2, gold).otherwise(alt).cast("long").alias(
@@ -5888,16 +5919,13 @@ def q_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     rated = docs.select(
         F.col("doc_id").alias("item_id"),
         F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
     )
-    base = F.pmod(mix(F.col("item_id")), F.lit(4))
-    s = mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
+    base = F.pmod(_mix(F.col("item_id")), F.lit(4))
+    s = _mix(F.col("item_id") * 5 + F.col("rater"))
+    alt = F.pmod(_mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
     rated = rated.select(
         "item_id",
         "rater",
@@ -5957,12 +5985,9 @@ def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     scored = docs.select(
-        (F.pmod(mix(F.col("doc_id")), F.lit(5)) < 3).alias("correct_a"),
-        (F.pmod(mix(F.col("doc_id") + 29), F.lit(5)) < 3).alias("correct_b"),
+        (F.pmod(_mix(F.col("doc_id")), F.lit(5)) < 3).alias("correct_a"),
+        (F.pmod(_mix(F.col("doc_id") + 29), F.lit(5)) < 3).alias("correct_b"),
     )
     return st.mcnemar_test(scored)
 
@@ -6007,14 +6032,11 @@ def _synthetic_ranking(spark: SparkSession, sf_dir: str, with_rel: bool):
     exact ranking."""
     ev = load_table(spark, sf_dir, "events")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     users = ev.select("user_id").distinct()
     cand = users.select(
         "user_id", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("d")
     )
-    s = mix(F.col("user_id") * 16 + F.col("d"))
+    s = _mix(F.col("user_id") * 16 + F.col("d"))
     w = Window.partitionBy("user_id").orderBy(F.desc("s"), F.asc("d"))
     base = cand.select(
         F.col("user_id").alias("query_id"),
@@ -6022,7 +6044,7 @@ def _synthetic_ranking(spark: SparkSession, sf_dir: str, with_rel: bool):
         s.alias("s"),
         *(
             [
-                F.pmod(mix(F.col("user_id") * 16 + F.col("d") + 3), F.lit(4))
+                F.pmod(_mix(F.col("user_id") * 16 + F.col("d") + 3), F.lit(4))
                 .cast("long")
                 .alias("rel")
             ]
@@ -6046,13 +6068,10 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter before the co-keyed gold join; one corpus row, all
     integers."""
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     users, ranked = _synthetic_ranking(spark, sf_dir, with_rel=False)
     gold = users.select(
         F.col("user_id").alias("query_id"),
-        F.pmod(mix(F.col("user_id") + 7), F.lit(10)).cast("long").alias("doc_id"),
+        F.pmod(_mix(F.col("user_id") + 7), F.lit(10)).cast("long").alias("doc_id"),
     )
     return sim.retrieval_metrics(ranked, gold, k=5)
 
@@ -6087,12 +6106,9 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
 
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
     i = F.pmod(F.col("l_suppkey"), F.lit(20))
     j = F.pmod(F.col("l_partkey"), F.lit(20))
-    win = F.pmod(mix(F.col("l_orderkey") * 8 + F.col("l_linenumber")), F.lit(2)) == 0
+    win = F.pmod(_mix(F.col("l_orderkey") * 8 + F.col("l_linenumber")), F.lit(2)) == 0
     m = li.filter(i != j).select(
         F.when(win, i).otherwise(j).cast("long").alias("winner"),
         F.when(win, j).otherwise(i).cast("long").alias("loser"),
@@ -6103,30 +6119,12 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-annotator agreement (operators.stats.fleiss_kappa): every
     document rated by 5 deterministic synthetic 'raters' — category =
-    Knuth-mixed doc property with 1/4 per-rater disagreement noise —
-    the redundant-judgment QA gate a labeling pipeline runs. Exact
-    integer numerator/denominator + truncated kappa_micro."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
-    rated = docs.select(
-        F.col("doc_id").alias("item_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
-    )
-    base = F.pmod(mix(F.col("item_id")), F.lit(4))
-    s = mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
-        "item_id",
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "category"
-        ),
-    )
-    return st.fleiss_kappa(rated)
+    Knuth-mixed doc property with 1/4 per-rater disagreement noise
+    (``_rating_fixture``, labels 0..3) — the redundant-judgment QA gate
+    a labeling pipeline runs. Exact integer numerator/denominator +
+    truncated kappa_micro."""
+    rated = _rating_fixture(spark, sf_dir, 4)
+    return st.fleiss_kappa(rated.select("item_id", F.col("label").alias("category")))
 
 
 def q_bleu_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6144,64 +6142,29 @@ def q_bleu_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tx.bleu_clipped_precision(docs, gens, n_max=2)
 
 
-def _mix(c):
-    """The engine-wide Knuth-mix fixture mixer (see fleiss/dawid/ndcg
-    fixtures): deterministic, SQL-replayable pseudo-randomness."""
-    return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
-
 def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha over RAGGED synthetic ratings (operators.
     stats.krippendorff_alpha — the missing-data agreement statistic
     Fleiss can't express): each of 5 raters rates a document only when
     a Knuth-mixed coin admits it (~60-80% participation, so items
     carry 0..5 ratings and the single-rating exclusion is exercised),
-    labels from the fleiss fixture scheme. Per-item micro truncation +
-    one final DIV, replayed exactly by the oracle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters).filter(
-        F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
-        < 6 + F.pmod(F.col("rater"), F.lit(3))
-    )
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(4))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "label"
-        ),
-    )
-    return st.krippendorff_alpha(rated)
+    labels from the fleiss fixture scheme (``_rating_fixture``, 0..3).
+    Per-item micro truncation + one final DIV, replayed exactly by the
+    oracle."""
+    return st.krippendorff_alpha(_rating_fixture(spark, sf_dir, 4, ragged=True))
 
 
 def q_krippendorff_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORDINAL Krippendorff's alpha over ragged synthetic Likert
     ratings (operators.stats.krippendorff_ordinal) — the same
-    participation coin as krippendorff_alpha but a 1..5 ordered scale,
-    so a 1-vs-5 disagreement costs more than a 1-vs-2 (cumulative-
-    margin distance, integer-exact; the nominal form can't tell them
-    apart). Per-item micro truncation + one final DIV, replayed
-    exactly by the oracle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters).filter(
-        F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
-        < 6 + F.pmod(F.col("rater"), F.lit(3))
+    participation coin as krippendorff_alpha but a 1..5 ordered scale
+    (``_rating_fixture``), so a 1-vs-5 disagreement costs more than a
+    1-vs-2 (cumulative-margin distance, integer-exact; the nominal form
+    can't tell them apart). Per-item micro truncation + one final DIV,
+    replayed exactly by the oracle."""
+    return st.krippendorff_ordinal(
+        _rating_fixture(spark, sf_dir, 5, first=1, ragged=True)
     )
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(5))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(5))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        (F.lit(1) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
-        .cast("long")
-        .alias("label"),
-    )
-    return st.krippendorff_ordinal(rated)
 
 
 def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6550,27 +6513,10 @@ def q_icc_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     disagreement noise) — single-rating reliability, the continuous
     complement to the kappa family. Exact-integer rationals end to
     end; one truncating micro DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
-    rated = docs.select(
-        F.col("doc_id").alias("item_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("rater"),
+    rated = _rating_fixture(spark, sf_dir, 4)
+    return st.icc_oneway(
+        rated.select("item_id", F.col("label").alias("rating")), "item_id", "rating"
     )
-    base = F.pmod(mix(F.col("item_id")), F.lit(4))
-    s = mix(F.col("item_id") * 5 + F.col("rater"))
-    alt = F.pmod(mix(F.col("item_id") * 5 + F.col("rater") + 101), F.lit(4))
-    rated = rated.select(
-        "item_id",
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "rating"
-        ),
-    )
-    return st.icc_oneway(rated, "item_id", "rating")
 
 
 def q_ece_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6921,26 +6867,10 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     subjects, raters as battery items, ratings as scores) — the
     scale-level internal-consistency companion to item_analysis and
     icc_oneway. Exact integer rationals, one truncating micro DIV."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def mix(c):
-        return F.pmod(F.pmod(c, F.lit(1_000_003)) * F.lit(2654435761), F.lit(1_000_003))
-
-    rated = docs.select(
-        F.col("doc_id").alias("subject"),
-        F.explode(F.sequence(F.lit(0), F.lit(4))).alias("item_id"),
-    )
-    base = F.pmod(mix(F.col("subject")), F.lit(4))
-    s = mix(F.col("subject") * 5 + F.col("item_id"))
-    alt = F.pmod(mix(F.col("subject") * 5 + F.col("item_id") + 101), F.lit(4))
-    rated = rated.select(
-        "subject",
-        "item_id",
-        F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt).cast("long").alias(
-            "score"
-        ),
+    rated = _rating_fixture(spark, sf_dir, 4).select(
+        F.col("item_id").alias("subject"),
+        F.col("rater").alias("item_id"),
+        F.col("label").alias("score"),
     )
     return st.cronbach_alpha(rated, "subject", "item_id", "score")
 
@@ -7283,23 +7213,9 @@ def q_krippendorff_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinal gate — squared-difference distance, the numeric-scale
     member completing the alpha family. All-integer coincidence
     algebra, one micro truncation per item + one final DIV."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters).filter(
-        F.pmod(_mix(F.col("doc_id") * 11 + F.col("rater") * 3), F.lit(10))
-        < 6 + F.pmod(F.col("rater"), F.lit(3))
+    return st.krippendorff_interval(
+        _rating_fixture(spark, sf_dir, 5, first=1, ragged=True)
     )
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(5))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(5))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        (F.lit(1) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
-        .cast("long")
-        .alias("label"),
-    )
-    return st.krippendorff_interval(rated)
 
 
 def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7957,25 +7873,11 @@ def q_icc_twoway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ICC(2,1) two-way random single-rating reliability
     (operators.stats.icc_twoway): the COMPLETE-design companion to the
     icc_oneway gate — same 5 synthetic raters, but every rater rates
-    EVERY document (no participation coin), so rater bias is a
-    separable column effect. All-integer mean-square identity, one
-    truncating micro DIV, no float anywhere."""
-    from hdinsight_pyspark_cntk_integration_spark.operators import stats as st
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    raters = spark.range(5).select(F.col("id").alias("rater"))
-    rated = docs.crossJoin(raters)
-    s = _mix(F.col("doc_id") * 5 + F.col("rater"))
-    base = F.pmod(_mix(F.col("doc_id")), F.lit(5))
-    alt = F.pmod(_mix(F.col("doc_id") * 5 + F.col("rater") + 101), F.lit(5))
-    rated = rated.select(
-        F.col("doc_id").alias("item_id"),
-        F.col("rater"),
-        (F.lit(1) + F.when(F.pmod(s, F.lit(4)) < 3, base).otherwise(alt))
-        .cast("long")
-        .alias("rating"),
-    )
-    return st.icc_twoway(rated)
+    EVERY document (no participation coin) on a 1..5 scale, so rater
+    bias is a separable column effect. All-integer mean-square
+    identity, one truncating micro DIV, no float anywhere."""
+    rated = _rating_fixture(spark, sf_dir, 5, first=1)
+    return st.icc_twoway(rated.withColumnRenamed("label", "rating"))
 
 
 def q_dp_above_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:

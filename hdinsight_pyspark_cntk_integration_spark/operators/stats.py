@@ -21,10 +21,34 @@ runs over that aggregate:
   and dunn_test: per-group doubled rank sums over pooled ranks, plus
   the pooled count and tie sum.
 
+The agreement and trend operators share three more builders, one per
+family, and are thin formulas over them:
+
+- ``_rating_cells`` is the one rating-cell table, ``(item, label, c,
+  m)``: the rating count per cell and the item's rating count, over
+  items rated at least twice. ``krippendorff_alpha``,
+  ``krippendorff_ordinal``, ``krippendorff_interval`` (through the one
+  coincidence kernel ``_krippendorff``, which differs per metric only
+  in the pair weight), ``gwet_ac1`` and ``fleiss_kappa`` read it.
+- ``_margin_totals`` is the one margin-totals table: per key, then one
+  row of key count, cell count, Σx, Σx² and Σ(per-key Σx)².
+  ``icc_oneway`` and ``kendall_w`` read the item margins;
+  ``cochran_q``, ``icc_twoway`` and ``cronbach_alpha`` cross the row
+  margins with the column margins.
+- ``_pair_signs`` is the one ``i < j`` self-join within keys, giving
+  the pair signums ``kendall_tau`` counts; ``_mann_kendall`` is the one
+  Mann-Kendall body over it, keyed by partition (``mann_kendall``) or
+  by (partition, season) (``seasonal_mann_kendall``).
+
 NULL policy: NULL values (and NULL groups) are dropped by every rank
-and two-sample operator. Degenerate input (empty, one group empty,
+and two-sample operator, and a row with a NULL in any column an
+agreement or trend operator reads (item, rater, label, value, rank,
+partition, seq) drops. Degenerate input (empty, one group empty,
 all values NULL) reports zero counts and a NULL statistic wherever the
-statistic's denominator is 0.
+statistic's denominator is 0. In the agreement and trend families,
+empty, single-rating and one-category input gives the one-row
+operators one row with a NULL statistic, and drops every partition of
+the per-partition ones (kendall_tau, the Mann-Kendall pair).
 
 Exactness: counts and doubled ranks are integers; sums of their
 products are exact (in DECIMAL, or in fp64 below 2^53), so results do
@@ -118,6 +142,159 @@ def _pooled_rank_sums(
         F.sum(F.col("n_gv") * F.col("r2")).cast("long").alias("r2_g"),
     )
     return per_g, pooled
+
+
+def _rating_cells(
+    df: DataFrame, item_col: str, label_col: str, *keys: str, cast=None
+) -> DataFrame:
+    """The rating-cell table of the agreement statistics: one row per
+    (item, label) cell with its rating count ``c`` and the item's
+    rating count ``m``, for items rated at least twice (one rating
+    carries no agreement information). Rows with a NULL item, label or
+    other named key column drop; ``cast`` types the label. ``m`` is a
+    window over the item, so the cells are item-partitioned after it."""
+    label = F.col(label_col) if cast is None else F.col(label_col).cast(cast)
+    cells = (
+        df.dropna(subset=[item_col, label_col, *keys])
+        .groupBy(F.col(item_col).alias("item"), label.alias("label"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    m = F.sum("c").over(Window.partitionBy("item")).cast("long")
+    return cells.withColumn("m", m).filter(F.col("m") >= 2)
+
+
+def _pair_sum(c: str, x) -> Column:
+    """``Σ_{a<b} c_a·c_b·w(a, b)`` over one group's label counts ``c``,
+    as a DECIMAL(38,0) aggregate: the pair weight is ``w ≡ 2`` when
+    ``x`` is None (nominal), else ``w = (x_b − x_a)²`` for the labels'
+    positions ``x``, summed as ``Σc·Σc·x² − (Σc·x)²`` (no pair join)."""
+    cd = F.col(c).cast("decimal(38,0)")
+    if x is None:
+        return F.sum(cd) * F.sum(cd) - F.sum(cd * F.col(c))
+    return F.sum(cd) * F.sum(cd * x * x) - F.sum(cd * x) * F.sum(cd * x)
+
+
+def _krippendorff(
+    df: DataFrame, item_col: str, rater_col: str, label_col: str, metric: str
+) -> DataFrame:
+    """The coincidence kernel of the three Krippendorff metrics, one row
+    (n_items, n_ratings, do_scaled, de_num, disagreement_micro,
+    alpha_micro) over the rating cells:
+    ``alpha = 1 − (n−1)·Σ_u [P_u / (m_u−1)] / D_e`` with the per-item
+    pair sum ``P_u = Σ_{c<k} n_uc·n_uk·w(c,k)`` micro-truncated per item
+    (``do_scaled``) and ``D_e = Σ_{c<k} n_c·n_k·w(c,k)`` over the pooled
+    label margins (``de_num``). The pair weight is 2 for ``nominal``,
+    ``(k − c)²`` for ``interval`` and ``(x_k − x_c)²`` with ``x`` the
+    label's doubled midrank in the pooled margins for ``ordinal``, i.e.
+    ``(2·(cum_k − cum_c) + n_c − n_k)²``, four times the ordinal δ² (the
+    factor cancels). That midrank is the only label-domain window."""
+    cast = None if metric == "nominal" else "long"
+    cells = _rating_cells(df, item_col, label_col, rater_col, cast=cast)
+    cat = cells.groupBy("label").agg(F.sum("c").cast("long").alias("n_l"))
+    x = None if metric == "nominal" else F.col("label")
+    if metric == "ordinal":
+        cat = cat.withColumn("label_x", _doubled_midrank("n_l", "label"))
+        cells = cells.join(cat.select("label", "label_x"), "label")
+        x = F.col("label_x")
+    obs = (
+        cells.groupBy("item")
+        .agg(F.max("m").alias("m"), _pair_sum("c", x).alias("pd"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_items"),
+            F.sum(F.expr("pd * 1000000 DIV (m - 1)").cast("decimal(38,0)"))
+            .alias("do_scaled"),
+        )
+    )
+    de = cat.agg(
+        F.sum("n_l").cast("long").alias("n_ratings"),
+        _pair_sum("n_l", x).alias("de_num"),
+    )
+    dis = F.expr("(do_scaled * (n_ratings - 1)) DIV NULLIF(de_num, 0)")
+    return obs.crossJoin(de).select(
+        "n_items",
+        "n_ratings",
+        "do_scaled",
+        "de_num",
+        dis.cast("long").alias("disagreement_micro"),
+        (F.lit(1000000) - dis).cast("long").alias("alpha_micro"),
+    )
+
+
+def _margin_totals(df: DataFrame, key: str, x: Column) -> DataFrame:
+    """The margin totals of the cells ``df`` over ``key``, one row:
+    ``keys`` (distinct keys), ``cells`` (rows), ``sx = Σx``,
+    ``sx2 = Σx²`` and ``sk2 = Σ_key (Σ_key x)²``, the sums
+    DECIMAL(38,0)-exact. One key-partitioned aggregate, one 1-row
+    reduce."""
+    xd = x.cast("decimal(38,0)")
+    per_key = df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n"), F.sum(xd).alias("s"), F.sum(xd * x).alias("q")
+    )
+    return per_key.agg(
+        F.count(F.lit(1)).cast("long").alias("keys"),
+        F.sum("n").cast("long").alias("cells"),
+        F.sum("s").alias("sx"),
+        F.sum("q").alias("sx2"),
+        F.sum(F.col("s") * F.col("s")).alias("sk2"),
+    )
+
+
+def _pair_signs(pts: DataFrame, keys: list, values: list) -> DataFrame:
+    """The pair table of the trend and concordance statistics: one row
+    per point pair ``i < j`` (on ``__i``) within equal ``keys``, keeping
+    the keys and replacing each value column ``v`` by the pair's
+    ``sign(v_j − v_i)``. Series² work per key, never across keys."""
+    a, b = pts.alias("a"), pts.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return a.join(b, on + [F.col("a.__i") < F.col("b.__i")]).select(
+        *(F.col(f"a.{k}").alias(k) for k in keys),
+        *(
+            F.signum(F.col(f"b.{v}") - F.col(f"a.{v}")).cast("int").alias(v)
+            for v in values
+        ),
+    )
+
+
+def _mann_kendall(pts: DataFrame, part_col: str, keys: list) -> DataFrame:
+    """The Mann-Kendall body over points ``(__p, …keys, __i, __x)``:
+    S, n and the tie-corrected 18·Var(S) are summed over the ``keys``
+    blocks of each partition ``__p`` (``["__p"]`` for one series,
+    ``["__p", "__s"]`` per season), then the continuity-corrected Z.
+    Partitions with Var(S) = 0 (fewer than 2 points in every block, or
+    all values tied within each) drop."""
+    def v18(t):
+        return t * (t - 1) * (2 * t + 5)
+
+    s = (
+        _pair_signs(pts, keys, ["__x"])
+        .groupBy("__p")
+        .agg(F.sum("__x").cast("long").alias("s_stat"))
+    )
+    var = (
+        pts.groupBy(*keys, "__x")
+        .agg(F.count(F.lit(1)).cast("long").alias("t"))
+        .groupBy(*keys)
+        .agg(F.sum("t").alias("n"), F.sum(v18(F.col("t"))).alias("ties"))
+        .groupBy("__p")
+        .agg(
+            F.sum("n").cast("long").alias("n"),
+            F.sum(v18(F.col("n")) - F.col("ties")).cast("long").alias("var18"),
+        )
+    )
+    sd = F.col("s_stat").cast("double")
+    sigma = F.sqrt(F.col("var18").cast("double") / F.lit(18.0))
+    z = (
+        F.when(F.col("s_stat") > 0, (sd - F.lit(1.0)) / sigma)
+        .when(F.col("s_stat") < 0, (sd + F.lit(1.0)) / sigma)
+        .otherwise(F.lit(0.0))
+    )
+    return s.join(var, "__p").filter(F.col("var18") > 0).select(
+        F.col("__p").alias(part_col),
+        "n",
+        "s_stat",
+        "var18",
+        F.floor(z * F.lit(1_000_000.0)).cast("long").alias("z_micro"),
+    )
 
 
 def mann_whitney_u(
@@ -1138,10 +1315,11 @@ def kendall_tau(
     both count in neither denominator term).
 
     CONTRACT: ``df`` is a per-(partition, seq) SERIES — one row per
-    seq value (months, buckets), so the within-partition self-join is
-    partitions × series², never raw-rows². seq must be unique per
-    partition (it defines the i<j pair enumeration, not the order —
-    tau is order-free).
+    seq value (months, buckets), so the within-partition self-join
+    (``_pair_signs``) is partitions × series², never raw-rows². seq
+    must be unique per partition (it defines the i<j pair enumeration,
+    not the order — tau is order-free). Rows with a NULL partition,
+    seq, x or y drop.
 
     Exactness: x/y are cents-quantized at birth; C/D/Tx/Ty are pure
     integer counts; tau is ONE fp64 ratio over them, micro-floored.
@@ -1150,40 +1328,18 @@ def kendall_tau(
     Returns (part, n, concordant, discordant, ties_x, ties_y,
     tau_micro).
     """
-    pts = df.select(
+    pts = df.dropna(subset=[part_col, seq_col, x_col, y_col]).select(
         F.col(part_col).alias("__p"),
         F.col(seq_col).alias("__i"),
         F.round(F.col(x_col) * 100).cast("long").alias("__x"),
         F.round(F.col(y_col) * 100).cast("long").alias("__y"),
     )
-    a, b = pts.alias("a"), pts.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.__p") == F.col("b.__p")) & (F.col("a.__i") < F.col("b.__i")),
-    ).select(
-        F.col("a.__p").alias("__p"),
-        F.signum(F.col("b.__x") - F.col("a.__x")).cast("int").alias("__sx"),
-        F.signum(F.col("b.__y") - F.col("a.__y")).cast("int").alias("__sy"),
-    )
-    one = F.lit(1)
-    agg = (
-        pairs.groupBy("__p")
-        .agg(
-            F.sum(
-                F.when((F.col("__sx") * F.col("__sy")) == 1, one).otherwise(0)
-            ).cast("long").alias("concordant"),
-            F.sum(
-                F.when((F.col("__sx") * F.col("__sy")) == -1, one).otherwise(0)
-            ).cast("long").alias("discordant"),
-            F.sum(
-                F.when((F.col("__sx") == 0) & (F.col("__sy") != 0), one)
-                .otherwise(0)
-            ).cast("long").alias("ties_x"),
-            F.sum(
-                F.when((F.col("__sy") == 0) & (F.col("__sx") != 0), one)
-                .otherwise(0)
-            ).cast("long").alias("ties_y"),
-        )
+    sx, sy = F.col("__x"), F.col("__y")
+    agg = _pair_signs(pts, ["__p"], ["__x", "__y"]).groupBy("__p").agg(
+        F.sum((sx * sy == 1).cast("long")).alias("concordant"),
+        F.sum((sx * sy == -1).cast("long")).alias("discordant"),
+        F.sum(((sx == 0) & (sy != 0)).cast("long")).alias("ties_x"),
+        F.sum(((sy == 0) & (sx != 0)).cast("long")).alias("ties_y"),
     )
     npts = pts.groupBy("__p").agg(F.count(F.lit(1)).cast("long").alias("n"))
     c, d = F.col("concordant").cast("double"), F.col("discordant").cast("double")
@@ -1435,63 +1591,22 @@ def mann_kendall(
 
     CONTRACT: ``df`` is a per-(partition, seq) SERIES (seq unique per
     partition, defines time order), so the pair self-join is
-    partitions × series², never raw rows².
+    partitions × series², never raw rows². Rows with a NULL partition,
+    seq or value drop.
 
     Exactness: values cents-quantize at birth; S and the tie-corrected
     18·Var(S) are pure integers (var18 emitted for auditability); Z is
-    ONE fp64 chain micro-floored. Partitions with n < 2 or Var = 0
-    (all values tied) drop.
+    ONE fp64 chain micro-floored (the ``_mann_kendall`` body).
+    Partitions with n < 2 or Var = 0 (all values tied) drop.
 
     Returns (part, n, s_stat, var18, z_micro).
     """
-    pts = df.select(
+    pts = df.dropna(subset=[part_col, seq_col, value_col]).select(
         F.col(part_col).alias("__p"),
         F.col(seq_col).alias("__i"),
         F.round(F.col(value_col) * 100).cast("long").alias("__x"),
     )
-    a, b = pts.alias("a"), pts.alias("b")
-    s_agg = (
-        a.join(
-            b,
-            (F.col("a.__p") == F.col("b.__p")) & (F.col("a.__i") < F.col("b.__i")),
-        )
-        .groupBy(F.col("a.__p").alias("__p"))
-        .agg(
-            F.sum(F.signum(F.col("b.__x") - F.col("a.__x")).cast("long"))
-            .cast("long").alias("s_stat")
-        )
-    )
-    npts = pts.groupBy("__p").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    tie_term = (
-        pts.groupBy("__p", "__x")
-        .agg(F.count(F.lit(1)).cast("long").alias("__t"))
-        .groupBy("__p")
-        .agg(
-            F.sum(
-                F.col("__t") * (F.col("__t") - 1) * (2 * F.col("__t") + 5)
-            ).cast("long").alias("__ties")
-        )
-    )
-    joined = s_agg.join(npts, "__p").join(tie_term, "__p")
-    nn = F.col("n")
-    var18 = (nn * (nn - 1) * (2 * nn + 5) - F.col("__ties")).cast("long")
-    s = F.col("s_stat").cast("double")
-    vard = var18.cast("double") / F.lit(18.0)
-    z = (
-        F.when(F.col("s_stat") > 0, (s - F.lit(1.0)) / F.sqrt(vard))
-        .when(F.col("s_stat") < 0, (s + F.lit(1.0)) / F.sqrt(vard))
-        .otherwise(F.lit(0.0))
-    )
-    return (
-        joined.filter((F.col("n") >= 2) & (var18 > 0))
-        .select(
-            F.col("__p").alias(part_col),
-            "n",
-            "s_stat",
-            var18.alias("var18"),
-            F.floor(z * F.lit(1_000_000.0)).cast("long").alias("z_micro"),
-        )
-    )
+    return _mann_kendall(pts, part_col, ["__p"])
 
 
 def auc(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
@@ -3242,26 +3357,25 @@ def fleiss_kappa(
     along so a caller can reconstruct the full-precision rational.
 
     Input is one row per (item, rater) assignment; rater identity never
-    matters, only counts. Uniform n per item is the caller's contract
-    (Fleiss' requirement); n is derived as T DIV N.
+    matters, only counts. Uniform n ≥ 2 per item is the caller's
+    contract (Fleiss' requirement); n is derived as T DIV N. The counts
+    are the shared rating cells, so rows with a NULL item or category
+    drop and single-rated items are left out; off-contract, a corpus of
+    only single-rated items reads 0 items and NULL counts and kappa.
 
-    Scale shape: one partial-agg shuffle to (item, category) counts —
-    bounded by items × category domain — then two tiny reductions
-    (per-item and per-category) into a single row. Nothing global ever
-    sorts.
+    Scale shape: the rating cells (one partial-agg shuffle bounded by
+    items × category domain), then two tiny reductions (per-item and
+    per-category) into a single row. Nothing global ever sorts.
     """
-    nij = df.groupBy(item_col, category_col).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    tot = nij.groupBy().agg(
+    cells = _rating_cells(df, item_col, category_col)
+    tot = cells.agg(
         F.sum(F.col("c") * F.col("c")).cast("long").alias("s_sq"),
         F.sum("c").cast("long").alias("t"),
-        F.countDistinct(item_col).cast("long").alias("n_items"),
+        F.countDistinct("item").cast("long").alias("n_items"),
     )
     col2 = (
-        nij.groupBy(category_col)
+        cells.groupBy("label")
         .agg(F.sum("c").cast("long").alias("cj"))
-        .groupBy()
         .agg(F.sum(F.col("cj") * F.col("cj")).cast("long").alias("c_sq"))
     )
     d = "CAST({x} AS DECIMAL(38,0))"
@@ -3619,9 +3733,10 @@ def krippendorff_alpha(
     model+human mixes) rather than the uniform n-per-item Fleiss
     requires.
 
-    Exact form (coincidence-matrix algebra for nominal data): over
-    items with m_u >= 2 ratings, each item's observed-disagreement
-    contribution is the ordered disagreeing pair count over m_u - 1:
+    Exact form (coincidence-matrix algebra for nominal data, the
+    ``_krippendorff`` kernel with pair weight 2): over items with
+    m_u >= 2 ratings, each item's observed-disagreement contribution is
+    the ordered disagreeing pair count over m_u - 1:
     ``t_u = (m_u^2 - SUM_c n_uc^2) / (m_u - 1)``; expected
     disagreement is ``D_e = (n^2 - SUM_c n_c^2) / (n - 1)`` over the
     pooled category totals, and ``alpha = 1 - D_o / D_e`` with
@@ -3636,49 +3751,20 @@ def krippendorff_alpha(
 
     Single-rating items are excluded everywhere (they carry no
     agreement information — the standard convention), including from
-    n and the category totals.
-
-    Scale shape: one partial-agg shuffle to (item, label) counts, one
-    item-keyed reduce for the per-item terms, two scalar reductions.
-    No windows, no collect, rater identity never shuffled.
+    n and the category totals. Rows with a NULL item, rater or label
+    drop.
 
     Returns one row (n_items, n_ratings, do_scaled, de_num, de_den,
     alpha_micro).
     """
-    nuc = df.groupBy(
-        F.col(item_col).alias("__it"), F.col(label_col).alias("__l")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    per_item = nuc.groupBy("__it").agg(
-        F.sum("c").cast("long").alias("m"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("s2"),
-    ).filter(F.col("m") >= 2)
-    multi = nuc.join(per_item.select("__it"), "__it")
-    cat = multi.groupBy("__l").agg(F.sum("c").cast("long").alias("cj"))
-    cat_tot = cat.groupBy().agg(
-        F.sum(F.col("cj") * F.col("cj")).cast("long").alias("c_sq"),
-        F.sum("cj").cast("long").alias("n"),
-    )
-    obs = per_item.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-        F.sum(
-            F.expr(
-                "CAST((CAST(m AS DECIMAL(38,0)) * m - s2) * 1000000"
-                " DIV (m - 1) AS DECIMAL(38,0))"
-            )
-        ).alias("do_scaled"),
-    )
-    return obs.crossJoin(cat_tot).select(
+    k = _krippendorff(df, item_col, rater_col, label_col, "nominal")
+    return k.select(
         "n_items",
-        F.col("n").alias("n_ratings"),
-        F.col("do_scaled").cast("decimal(38,0)").cast("long").alias("do_scaled"),
-        F.expr("CAST(CAST(n AS DECIMAL(38,0)) * n - c_sq AS BIGINT)").alias(
-            "de_num"
-        ),
-        F.expr("CAST(n - 1 AS BIGINT)").alias("de_den"),
-        F.expr(
-            "CAST(1000000 - (do_scaled * (n - 1))"
-            " DIV NULLIF(CAST(n AS DECIMAL(38,0)) * n - c_sq, 0) AS BIGINT)"
-        ).alias("alpha_micro"),
+        "n_ratings",
+        F.col("do_scaled").cast("long").alias("do_scaled"),
+        F.col("de_num").cast("long").alias("de_num"),
+        F.expr("CAST(n_ratings - 1 AS BIGINT)").alias("de_den"),
+        "alpha_micro",
     )
 
 
@@ -3696,12 +3782,12 @@ def krippendorff_ordinal(
     ``delta²(c,k) = (SUM_{g=c..k} n_g − (n_c + n_k)/2)²`` weights each
     category pair by the cumulative pooled margins between them.
 
-    Exact integer form: with margins n_g over multi-rated items and
-    their running sum over the ordered label domain, the DOUBLED
-    distance ``w(c,k) = (2·S(c,k) − n_c − n_k)²`` (S = inclusive
-    margin sum c..k) is an exact integer; the /4 cancels between D_o
-    and D_e, as does the both-directions pair factor 2, so
-    ``alpha = 1 − (n−1)·[Σ_u Σ_{c<k} n_uc·n_uk·w / (m_u−1)]
+    Exact integer form (the ``_krippendorff`` kernel): with margins n_g
+    over multi-rated items, the DOUBLED distance
+    ``w(c,k) = (2·S(c,k) − n_c − n_k)²`` (S = inclusive margin sum
+    c..k) is the squared gap between the two labels' doubled midranks
+    in the pooled margins, an exact integer; the /4 cancels between D_o
+    and D_e, so ``alpha = 1 − (n−1)·[Σ_u Σ_{c<k} n_uc·n_uk·w / (m_u−1)]
     / Σ_{c<k} n_c·n_k·w``. The per-item division is the ONE
     non-integer step, micro-quantized at the established truncation
     point; the final alpha is one more truncating DIV (NULL when every
@@ -3710,14 +3796,13 @@ def krippendorff_ordinal(
     alpha by construction (pytest-pinned invariant).
 
     Single-rating items are excluded everywhere (no agreement
-    information), exactly as in the nominal form.
+    information), exactly as in the nominal form; rows with a NULL
+    item, rater or label drop.
 
-    Scale shape: one (item,label) partial-agg shuffle; the margin
-    cumsum + pair-weight table live on the LABEL DOMAIN (bounded — a
-    rating scale, never the corpus) and broadcast back; the per-item
-    pair sum is a contingency-cell self-join (≤ |labels|² cells per
-    item, the goodman_kruskal_gamma discipline), never a row-pair
-    join. Intermediate products are DECIMAL(38,0)-exact.
+    Scale shape: the rating cells (one (item,label) partial-agg
+    shuffle); the midrank window lives on the LABEL DOMAIN (bounded — a
+    rating scale, never the corpus) and joins back to the cells; the
+    pair sums are closed-form per group, never a pair join.
 
     Returns one row (n_items, n_ratings, disagreement_micro,
     alpha_micro) — the raw D_o/D_e integers grow like n_items·n² and
@@ -3725,94 +3810,8 @@ def krippendorff_ordinal(
     emitted (``alpha_micro = 1e6 − disagreement_micro``); the internal
     arithmetic is DECIMAL(38,0)-exact throughout.
     """
-    nuc = df.groupBy(
-        F.col(item_col).alias("__it"), F.col(label_col).cast("long").alias("__l")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    per_item = (
-        nuc.groupBy("__it")
-        .agg(F.sum("c").cast("long").alias("m"))
-        .filter(F.col("m") >= 2)
-    )
-    multi = nuc.join(per_item, "__it")
-    cat = multi.groupBy("__l").agg(F.sum("c").cast("long").alias("cj"))
-    wcum = Window.orderBy("__l").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cat = cat.select(
-        "__l", "cj", F.sum("cj").over(wcum).cast("long").alias("cum")
-    )
-    lo = cat.select(
-        F.col("__l").alias("lc"), F.col("cj").alias("cjc"),
-        F.col("cum").alias("cumc"),
-    )
-    hi = cat.select(
-        F.col("__l").alias("lk"), F.col("cj").alias("cjk"),
-        F.col("cum").alias("cumk"),
-    )
-    # w(c,k) = (2*(cum_k - cum_c) + cj_c - cj_k)^2  [= (2S - n_c - n_k)^2]
-    wpairs = (
-        lo.join(hi, F.col("lc") < F.col("lk"))
-        .select(
-            "lc",
-            "lk",
-            "cjc",
-            "cjk",
-            F.expr(
-                "CAST(2 * (cumk - cumc) + cjc - cjk AS DECIMAL(38,0))"
-                " * CAST(2 * (cumk - cumc) + cjc - cjk AS DECIMAL(38,0))"
-            ).alias("w"),
-        )
-    )
-    cat_tot = cat.groupBy().agg(F.sum("cj").cast("long").alias("n"))
-    de = wpairs.groupBy().agg(
-        F.sum(
-            F.expr("CAST(cjc AS DECIMAL(38,0)) * cjk") * F.col("w")
-        ).alias("de_num")
-    )
-    a = multi.select("__it", F.col("__l").alias("lc"), F.col("c").alias("ca"))
-    b = multi.select(
-        F.col("__it").alias("__itb"), F.col("__l").alias("lk"),
-        F.col("c").alias("cb"),
-    )
-    # no broadcast hint on wpairs: it is label-domain-bounded (≤
-    # |scale|²/2 rows) but DERIVED from the input table, and the repo
-    # convention (test-enforced) never force-broadcasts anything rooted
-    # at an SF table — AQE broadcasts it at runtime when it is small.
-    item_pairs = (
-        a.join(b, (F.col("__it") == F.col("__itb")) & (F.col("lc") < F.col("lk")))
-        .join(wpairs.select("lc", "lk", "w"), ["lc", "lk"])
-        .groupBy("__it")
-        .agg(
-            F.sum(
-                F.expr("CAST(ca AS DECIMAL(38,0)) * cb") * F.col("w")
-            ).alias("pd")
-        )
-    )
-    obs = (
-        per_item.join(item_pairs, "__it", "left")
-        .select(
-            "m",
-            F.coalesce(F.col("pd"), F.lit(0).cast("decimal(38,0)")).alias("pd"),
-        )
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(
-                F.expr("CAST(pd * 1000000 DIV (m - 1) AS DECIMAL(38,0))")
-            ).alias("do_scaled"),
-        )
-    )
-    return obs.crossJoin(cat_tot).crossJoin(de).select(
-        "n_items",
-        F.col("n").alias("n_ratings"),
-        F.expr(
-            "CAST((do_scaled * (n - 1)) DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("disagreement_micro"),
-        F.expr(
-            "CAST(1000000 - (do_scaled * (n - 1))"
-            " DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("alpha_micro"),
-    )
+    k = _krippendorff(df, item_col, rater_col, label_col, "ordinal")
+    return k.drop("do_scaled", "de_num")
 
 
 def cochran_armitage(
@@ -3890,89 +3889,20 @@ def krippendorff_interval(
     interval = this). Values must be integer-quantized upstream
     (the engine-wide discipline).
 
-    Same coincidence algebra as the ordinal form with the
-    margin-independent squared-difference weight — so NO window at
-    all: the pair-weight table is computed directly on the label-pair
-    join, ``alpha = 1 − (n−1)·[Σ_u Σ_{c<k} n_uc·n_uk·(c−k)² /
-    (m_u−1)] / Σ_{c<k} n_c·n_k·(c−k)²``, one micro truncation per
-    item + one final truncating DIV (NULL when every rating is one
-    value). Single-rating items are excluded everywhere.
-
-    Scale shape: one (item,label) partial-agg shuffle, a
-    contingency-cell self-join per item (≤ |values|² cells), a
-    value-domain pair aggregate for D_e. DECIMAL(38,0)-exact
-    intermediates.
+    Same coincidence kernel (``_krippendorff``) as the ordinal form
+    with the margin-independent squared-difference weight — so NO
+    window over the labels:
+    ``alpha = 1 − (n−1)·[Σ_u Σ_{c<k} n_uc·n_uk·(c−k)² / (m_u−1)]
+    / Σ_{c<k} n_c·n_k·(c−k)²``, one micro truncation per item + one
+    final truncating DIV (NULL when every rating is one value).
+    Single-rating items are excluded everywhere; rows with a NULL item,
+    rater or label drop. DECIMAL(38,0)-exact intermediates.
 
     Returns one row (n_items, n_ratings, disagreement_micro,
     alpha_micro).
     """
-    nuc = df.groupBy(
-        F.col(item_col).alias("__it"), F.col(label_col).cast("long").alias("__l")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    per_item = (
-        nuc.groupBy("__it")
-        .agg(F.sum("c").cast("long").alias("m"))
-        .filter(F.col("m") >= 2)
-    )
-    multi = nuc.join(per_item, "__it")
-    cat = multi.groupBy("__l").agg(F.sum("c").cast("long").alias("cj"))
-    lo = cat.select(F.col("__l").alias("lc"), F.col("cj").alias("cjc"))
-    hi = cat.select(F.col("__l").alias("lk"), F.col("cj").alias("cjk"))
-    de = (
-        lo.join(hi, F.col("lc") < F.col("lk"))
-        .groupBy()
-        .agg(
-            F.sum(
-                F.expr(
-                    "CAST(cjc AS DECIMAL(38,0)) * cjk"
-                    " * CAST(lk - lc AS DECIMAL(38,0)) * (lk - lc)"
-                )
-            ).alias("de_num")
-        )
-    )
-    cat_tot = cat.groupBy().agg(F.sum("cj").cast("long").alias("n"))
-    a = multi.select("__it", F.col("__l").alias("lc"), F.col("c").alias("ca"))
-    b = multi.select(
-        F.col("__it").alias("__itb"), F.col("__l").alias("lk"),
-        F.col("c").alias("cb"),
-    )
-    item_pairs = (
-        a.join(b, (F.col("__it") == F.col("__itb")) & (F.col("lc") < F.col("lk")))
-        .groupBy("__it")
-        .agg(
-            F.sum(
-                F.expr(
-                    "CAST(ca AS DECIMAL(38,0)) * cb"
-                    " * CAST(lk - lc AS DECIMAL(38,0)) * (lk - lc)"
-                )
-            ).alias("pd")
-        )
-    )
-    obs = (
-        per_item.join(item_pairs, "__it", "left")
-        .select(
-            "m",
-            F.coalesce(F.col("pd"), F.lit(0).cast("decimal(38,0)")).alias("pd"),
-        )
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(
-                F.expr("CAST(pd * 1000000 DIV (m - 1) AS DECIMAL(38,0))")
-            ).alias("do_scaled"),
-        )
-    )
-    return obs.crossJoin(cat_tot).crossJoin(de).select(
-        "n_items",
-        F.col("n").alias("n_ratings"),
-        F.expr(
-            "CAST((do_scaled * (n - 1)) DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("disagreement_micro"),
-        F.expr(
-            "CAST(1000000 - (do_scaled * (n - 1))"
-            " DIV NULLIF(de_num, 0) AS BIGINT)"
-        ).alias("alpha_micro"),
-    )
+    k = _krippendorff(df, item_col, rater_col, label_col, "interval")
+    return k.drop("do_scaled", "de_num")
 
 
 def cochran_q(
@@ -3993,49 +3923,29 @@ def cochran_q(
     term an exact count, one truncating micro DIV at the end (NULL
     when the denominator is 0: all items unanimous across systems,
     nothing to test). Uniform k per item is the caller's contract
-    (matched design); k is derived as total_cells DIV n_items.
+    (matched design); k is derived as total_cells DIV n_items. Rows
+    with a NULL item, treatment or outcome drop.
 
-    Scale shape: two partial-agg shuffles (per-item and per-treatment
-    totals — the treatment domain is bounded), then a 1-row reduce.
+    Scale shape: the item and treatment margin totals
+    (``_margin_totals``, the treatment domain is bounded), crossed.
 
     Returns one row (n_items, k, total_successes, g_sq, r_sq,
     q_micro).
     """
-    cells = df.select(
-        F.col(item_col).alias("__it"),
-        F.col(treatment_col).alias("__tr"),
-        F.col(outcome_col).cast("boolean").cast("long").alias("__x"),
+    cells = df.dropna(subset=[item_col, treatment_col, outcome_col])
+    x = F.col(outcome_col).cast("boolean").cast("long")
+    cols = _margin_totals(cells, treatment_col, x).select(
+        F.col("sk2").alias("g2")
     )
-    rows = cells.groupBy("__it").agg(
-        F.sum("__x").cast("long").alias("ri"),
-        F.count(F.lit(1)).cast("long").alias("ki"),
-    )
-    row_tot = rows.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-        F.sum(F.col("ri") * F.col("ri")).cast("long").alias("r_sq"),
-        F.sum("ki").cast("long").alias("n_cells"),
-    )
-    col_tot = (
-        cells.groupBy("__tr")
-        .agg(F.sum("__x").cast("long").alias("gj"))
-        .groupBy()
-        .agg(
-            F.sum(F.col("gj") * F.col("gj")).cast("long").alias("g_sq"),
-            F.sum("gj").cast("long").alias("t"),
-        )
-    )
-    return row_tot.crossJoin(col_tot).select(
-        "n_items",
-        F.expr("CAST(n_cells DIV n_items AS BIGINT)").alias("k"),
-        F.col("t").alias("total_successes"),
-        "g_sq",
-        "r_sq",
+    return _margin_totals(cells, item_col, x).crossJoin(cols).select(
+        F.col("keys").alias("n_items"),
+        F.expr("CAST(cells DIV keys AS BIGINT)").alias("k"),
+        F.col("sx").cast("long").alias("total_successes"),
+        F.col("g2").cast("long").alias("g_sq"),
+        F.col("sk2").cast("long").alias("r_sq"),
         F.expr(
-            "CAST((n_cells DIV n_items - 1)"
-            " * ((n_cells DIV n_items) * CAST(g_sq AS DECIMAL(38,0))"
-            "    - CAST(t AS DECIMAL(38,0)) * t) * 1000000"
-            " DIV NULLIF((n_cells DIV n_items) * CAST(t AS DECIMAL(38,0))"
-            "            - r_sq, 0) AS BIGINT)"
+            "CAST((cells DIV keys - 1) * ((cells DIV keys) * g2 - sx * sx)"
+            " * 1000000 DIV NULLIF((cells DIV keys) * sx - sk2, 0) AS BIGINT)"
         ).alias("q_micro"),
     )
 
@@ -4057,37 +3967,36 @@ def kendall_w(
     permutation of 1..n, the caller's contract; use a deterministic
     tie-break upstream): with item rank sums R_i,
     ``W = 12 * SUM (R_i - m(n+1)/2)^2 / (m^2 (n^3 - n))``, computed in
-    the half-integer-free form ``3 * SUM (2 R_i - m(n+1))^2 /
-    (m^2 (n^3 - n))`` — exact integers end to end, one truncating
-    micro DIV (NULL for n < 2). m is derived as total_ranks DIV n.
+    the half-integer-free form ``3 * s_dev / (m^2 (n^3 - n))`` with
+    ``s_dev = SUM (2 R_i - c)^2 = 4·SUM R_i^2 − 4c·SUM R_i + n·c^2``,
+    ``c = m(n+1)`` — exact integers end to end, one truncating micro
+    DIV (NULL for n < 2). m is derived as total_ranks DIV n. Rows with
+    a NULL judge, item or rank drop.
 
-    Scale shape: one item-keyed partial-agg shuffle for rank sums,
-    one 1-row reduce. Judge identity never shuffled.
+    Scale shape: the item margin totals (``_margin_totals``: one
+    item-keyed partial-agg shuffle, one 1-row reduce). Judge identity
+    never shuffled.
 
     Returns one row (n_items, n_judges, s_dev, w_micro).
     """
-    sums = df.groupBy(F.col(item_col).alias("__it")).agg(
-        F.sum(F.col(rank_col).cast("long")).cast("long").alias("ri"),
-        F.count(F.lit(1)).cast("long").alias("mi"),
+    t = _margin_totals(
+        df.dropna(subset=[judge_col, item_col, rank_col]),
+        item_col,
+        F.col(rank_col).cast("long"),
+    ).select(
+        F.col("keys").alias("n_items"),
+        F.expr("CAST(cells DIV keys AS BIGINT)").alias("n_judges"),
+        "sx",
+        "sk2",
+        F.expr("CAST(cells DIV keys AS DECIMAL(38,0)) * (keys + 1)").alias("c"),
     )
-    tot = sums.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-        F.expr("CAST(SUM(mi) DIV COUNT(*) AS BIGINT)").alias("n_judges"),
-    )
-    # 1-row totals broadcast back onto the n_items rank sums: the
-    # deviation needs m and n per row, and a scalar crossJoin is the
-    # window-free way to provide them.
-    dev = sums.crossJoin(F.broadcast(tot)).select(
+    s_dev = "(4 * sk2 - 4 * c * sx + n_items * c * c)"
+    return t.select(
         "n_items",
         "n_judges",
+        F.expr(f"CAST({s_dev} AS BIGINT)").alias("s_dev"),
         F.expr(
-            "CAST(2 AS DECIMAL(38,0)) * ri - n_judges * (n_items + 1)"
-        ).alias("__d"),
-    )
-    return dev.groupBy("n_items", "n_judges").agg(
-        F.expr("CAST(SUM(__d * __d) AS BIGINT)").alias("s_dev"),
-        F.expr(
-            "CAST(CAST(SUM(__d * __d) AS DECIMAL(38,0)) * 3000000"
+            f"CAST({s_dev} * 3000000"
             " DIV NULLIF(CAST(n_judges AS DECIMAL(38,0)) * n_judges"
             " * (CAST(n_items AS DECIMAL(38,0)) * n_items * n_items"
             "    - n_items), 0) AS BIGINT)"
@@ -4860,56 +4769,36 @@ def icc_oneway(
 
     All-integer identity: with integer ratings, per-item sums S_j,
     grand sum G and Σx², define ``A = n·ΣS_j² − G² (= n·k·SSB)`` and
-    ``B = k·Σx² − ΣS_j² (= k·SSW)`` — both exact BIGINT/DECIMAL. Then
+    ``B = k·Σx² − ΣS_j² (= k·SSW)`` — both exact DECIMAL. Then
     ``MSB = A/(n·k·(n−1))`` and ``MSW = B/(n·k·(k−1))`` share the
     common denominator n·k·(n−1)·(k−1), so the ICC collapses to one
     truncating micro DIV of two exact integers:
     ``num = A·(k−1) − B·(n−1)``, ``den = A·(k−1) + B·(n−1)·(k−1)``.
     No float enters before the single DIV. Uniform k is the one-way
     design's contract (derived as total DIV n; supply a balanced
-    rating frame).
+    rating frame). Rows with a NULL item or value drop.
 
-    Scale shape: one item-keyed partial-agg shuffle (per-item sum and
-    count), one bounded reduce. No windows, no sorts.
+    Scale shape: the item margin totals (``_margin_totals``: one
+    item-keyed partial-agg shuffle, one 1-row reduce). No windows.
 
     Returns one row (n_items, k, icc_micro).
     """
-    per = df.groupBy(item_col).agg(
-        F.sum(F.col(value_col).cast("long")).alias("s"),
-        F.sum(F.col(value_col).cast("long") * F.col(value_col).cast("long")).alias(
-            "ss"
-        ),
-        F.count(F.lit(1)).cast("long").alias("k"),
+    t = _margin_totals(
+        df.dropna(subset=[item_col, value_col]),
+        item_col,
+        F.col(value_col).cast("long"),
+    ).select(
+        F.col("keys").alias("n"),
+        F.expr("cells DIV keys").alias("k"),
+        F.expr("keys * sk2 - sx * sx").alias("a"),
+        F.expr("(cells DIV keys) * sx2 - sk2").alias("b"),
     )
-    tot = per.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("k").cast("long").alias("total"),
-        F.sum("s").cast("long").alias("g"),
-        F.sum("ss").cast("long").alias("sx2"),
-        F.sum(F.col("s") * F.col("s")).cast("long").alias("ss2"),
-    )
-    # Common-denominator integer forms (all DECIMAL(38,0)-exact):
-    #   SSB·k·n = n·ΣS² − G²  (k uniform ⇒ ΣS²/k − G²/(nk), scaled by nk)
-    #   SSW·k   = k·Σx² − ΣS²
-    #   MSB ∝ (n·ΣS² − G²) / (k·n·(n−1));  MSW ∝ (k·Σx² − ΣS²) / (k·n·(k−1))
-    # ICC = (MSB−MSW)/(MSB+(k−1)MSW) — multiply through by k·n·(n−1)·(k−1):
-    #   num = (n·ΣS² − G²)·(k−1) − (k·Σx² − ΣS²)·(n−1)
-    #   den = (n·ΣS² − G²)·(k−1) + (k·Σx² − ΣS²)·(n−1)·(k−1)
-    return tot.select(
+    return t.select(
         F.col("n").alias("n_items"),
-        F.expr("total DIV n").alias("k"),
+        "k",
         F.expr(
-            """CAST(
-              ((CAST(n AS DECIMAL(38,0)) * ss2 - CAST(g AS DECIMAL(38,0)) * g)
-                 * ((total DIV n) - 1)
-               - (CAST(total DIV n AS DECIMAL(38,0)) * sx2 - ss2)
-                 * (n - 1)) * 1000000
-            DIV NULLIF(
-              (CAST(n AS DECIMAL(38,0)) * ss2 - CAST(g AS DECIMAL(38,0)) * g)
-                * ((total DIV n) - 1)
-              + (CAST(total DIV n AS DECIMAL(38,0)) * sx2 - ss2)
-                * (n - 1) * ((total DIV n) - 1), 0)
-            AS BIGINT)"""
+            "CAST((a * (k - 1) - b * (n - 1)) * 1000000"
+            " DIV NULLIF(a * (k - 1) + b * (n - 1) * (k - 1), 0) AS BIGINT)"
         ).alias("icc_micro"),
     )
 
@@ -5606,47 +5495,36 @@ def cronbach_alpha(
     over subject × item integer scores (population variances; the n²
     denominators cancel, so the ratio is exact).
 
-    All-integer identity: per item, ``n·Σx² − (Σx)²``; their sum is
-    num1; per subject totals T give ``num2 = n·ΣT² − G²``; then
+    All-integer identity: over n subjects, the item variances sum to
+    ``num1 = Σ_i (n·Σx_i² − s_i²) = n·Σx² − Σ s_i²`` (s_i the item
+    sums); per subject totals T give ``num2 = n·ΣT² − G²``; then
     ``alpha = k·(num2 − num1) / ((k−1)·num2)`` — one truncating micro
-    DIV of exact DECIMAL integers. Uniform k per subject is the
-    battery contract (k derives as total DIV n).
+    DIV of exact DECIMAL integers. A complete battery (every subject
+    scores every item once) is the contract. Rows with a NULL subject,
+    item or score drop.
 
-    Scale shape: one (item) partial-agg shuffle, one (subject)
-    partial-agg shuffle, two bounded reduces. No windows.
+    Scale shape: the subject and item margin totals
+    (``_margin_totals``), crossed. No windows.
 
     Returns one row (n_subjects, k, alpha_micro).
     """
+    cells = df.dropna(subset=[subject_col, item_col, value_col])
     x = F.col(value_col).cast("long")
-    per_item = df.groupBy(item_col).agg(
-        F.sum(x).alias("s"),
-        F.sum(x * x).alias("q"),
-        F.count(F.lit(1)).cast("long").alias("n"),
+    items = _margin_totals(cells, item_col, x).select(
+        F.col("keys").alias("k"), F.col("sk2").alias("si2")
     )
-    item_tot = per_item.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.max("n").alias("n"),
-        F.sum(
-            F.col("n").cast("decimal(38,0)") * F.col("q")
-            - F.col("s").cast("decimal(38,0)") * F.col("s")
-        ).alias("num1"),
+    t = _margin_totals(cells, subject_col, x).crossJoin(items).select(
+        F.col("keys").alias("n_subjects"),
+        "k",
+        F.expr("keys * sx2 - si2").alias("num1"),
+        F.expr("keys * sk2 - sx * sx").alias("num2"),
     )
-    per_subj = df.groupBy(subject_col).agg(F.sum(x).cast("long").alias("t"))
-    subj_tot = per_subj.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n2"),
-        F.sum(F.col("t").cast("decimal(38,0)") * F.col("t")).alias("st2"),
-        F.sum("t").cast("decimal(38,0)").alias("g"),
-    )
-    j = item_tot.join(subj_tot)
-    return j.select(
-        F.col("n2").alias("n_subjects"),
-        F.col("k"),
+    return t.select(
+        "n_subjects",
+        "k",
         F.expr(
-            """CAST(
-              CAST(k AS DECIMAL(38,0))
-                * ((n2 * st2 - g * g) - num1) * 1000000
-              DIV NULLIF((k - 1) * (n2 * st2 - g * g), 0)
-            AS BIGINT)"""
+            "CAST(k * (num2 - num1) * 1000000"
+            " DIV NULLIF((k - 1) * num2, 0) AS BIGINT)"
         ).alias("alpha_micro"),
     )
 
@@ -6686,40 +6564,24 @@ def gwet_ac1(
     well-known kappa paradox); the natural annotation-QA companion in
     the agreement family.  Multi-rater, missing-data tolerant: items
     with fewer than 2 ratings are excluded from BOTH the observed and
-    the chance term (documented convention).
+    the chance term (documented convention), and rows with a NULL
+    item, rater or label drop.
 
         pa   = mean_i SUM_c r_ic(r_ic - 1) / (r_i(r_i - 1))
         pi_c = mean_i r_ic / r_i
         pe   = SUM_c pi_c(1 - pi_c) / (q - 1)
         AC1  = (pa - pe) / (1 - pe)
 
-    One shuffle to (item, label) cell counts, an item-keyed reduce for
+    The rating cells (r_ic = c, r_i = m), an item-keyed reduce for
     both per-item terms (micro-truncated at birth, then exact integer
     sums — the krippendorff discipline), a q-row label reduce for pe.
     Returns one row (n_items, q, pa_micro, pe_micro, ac1_micro).
     """
-    cells = (
-        df.filter(
-            F.col(item_col).isNotNull()
-            & F.col(rater_col).isNotNull()
-            & F.col(label_col).isNotNull()
-        )
-        .groupBy(
-            F.col(item_col).alias("item"), F.col(label_col).alias("label")
-        )
-        .agg(F.count("*").cast("long").alias("r_ic"))
-    )
-    wi = Window.partitionBy("item")
-    cells = cells.select(
-        "item",
-        "label",
-        "r_ic",
-        F.sum("r_ic").over(wi).cast("long").alias("r_i"),
-    ).filter(F.col("r_i") >= 2)
+    cells = _rating_cells(df, item_col, label_col, rater_col)
     per_item = cells.groupBy("item").agg(
         F.expr(
-            "CAST(SUM(r_ic * (r_ic - 1)) * 1000000"
-            " DIV (MAX(r_i) * (MAX(r_i) - 1)) AS BIGINT)"
+            "CAST(SUM(c * (c - 1)) * 1000000"
+            " DIV (MAX(m) * (MAX(m) - 1)) AS BIGINT)"
         ).alias("pa_item")
     )
     pa = per_item.groupBy().agg(
@@ -6727,7 +6589,7 @@ def gwet_ac1(
         F.expr("CAST(SUM(pa_item) DIV COUNT(*) AS BIGINT)").alias("pa_micro"),
     )
     pi = cells.groupBy("label").agg(
-        F.expr("CAST(SUM(r_ic * 1000000 DIV r_i) AS BIGINT)").alias("pi_num")
+        F.expr("CAST(SUM(c * 1000000 DIV m) AS BIGINT)").alias("pi_num")
     )
     pe = pi.join(F.broadcast(pa.select("n_items"))).select(
         F.expr("CAST(pi_num DIV n_items AS BIGINT)").alias("pi_c")
@@ -7887,74 +7749,21 @@ def seasonal_mann_kendall(
 
         S = Σ_seasons S_s,   Var = Σ_seasons Var_s (tie-corrected)
 
-    with mann_kendall's continuity-corrected Z on the totals.  Same
-    contract and shape as mann_kendall, with the pair self-join keyed
-    (partition, season) — series² work per season, never across
-    seasons.  Partitions with S-variance 0 drop.
+    with mann_kendall's continuity-corrected Z on the totals: the
+    ``_mann_kendall`` body keyed (partition, season = seq mod period),
+    series² work per season, never across seasons. Rows with a NULL
+    partition, seq or value drop. Partitions with S-variance 0 drop.
     Returns (part, n, s_stat, var18, z_micro).
     """
     if period < 2:
         raise ValueError(f"period must be >= 2 (got {period})")
-    pts = df.select(
+    pts = df.dropna(subset=[part_col, seq_col, value_col]).select(
         F.col(part_col).alias("__p"),
         F.col(seq_col).cast("long").alias("__i"),
         F.pmod(F.col(seq_col).cast("long"), F.lit(period)).alias("__s"),
         F.round(F.col(value_col) * 100).cast("long").alias("__x"),
     )
-    a, b = pts.alias("a"), pts.alias("b")
-    s_agg = (
-        a.join(
-            b,
-            (F.col("a.__p") == F.col("b.__p"))
-            & (F.col("a.__s") == F.col("b.__s"))
-            & (F.col("a.__i") < F.col("b.__i")),
-        )
-        .groupBy(F.col("a.__p").alias("__p"))
-        .agg(
-            F.sum(F.signum(F.col("b.__x") - F.col("a.__x")).cast("long"))
-            .cast("long").alias("s_stat")
-        )
-    )
-    season_n = pts.groupBy("__p", "__s").agg(
-        F.count(F.lit(1)).cast("long").alias("__ns")
-    )
-    season_ties = (
-        pts.groupBy("__p", "__s", "__x")
-        .agg(F.count(F.lit(1)).cast("long").alias("__t"))
-        .groupBy("__p", "__s")
-        .agg(
-            F.sum(
-                F.col("__t") * (F.col("__t") - 1) * (2 * F.col("__t") + 5)
-            ).cast("long").alias("__ties")
-        )
-    )
-    var_per_season = season_n.join(season_ties, ["__p", "__s"]).select(
-        "__p",
-        "__ns",
-        (
-            F.col("__ns") * (F.col("__ns") - 1) * (2 * F.col("__ns") + 5)
-            - F.col("__ties")
-        ).cast("long").alias("__v18"),
-    )
-    totals = var_per_season.groupBy("__p").agg(
-        F.sum("__ns").cast("long").alias("n"),
-        F.sum("__v18").cast("long").alias("var18"),
-    )
-    joined = s_agg.join(totals, "__p")
-    s = F.col("s_stat").cast("double")
-    vard = F.col("var18").cast("double") / F.lit(18.0)
-    z = (
-        F.when(F.col("s_stat") > 0, (s - F.lit(1.0)) / F.sqrt(vard))
-        .when(F.col("s_stat") < 0, (s + F.lit(1.0)) / F.sqrt(vard))
-        .otherwise(F.lit(0.0))
-    )
-    return joined.filter(F.col("var18") > 0).select(
-        F.col("__p").alias(part_col),
-        "n",
-        "s_stat",
-        "var18",
-        F.floor(z * F.lit(1_000_000.0)).cast("long").alias("z_micro"),
-    )
+    return _mann_kendall(pts, part_col, ["__p", "__s"])
 
 
 def dunn_test(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -8086,68 +7895,30 @@ def icc_twoway(
         den = n·(k-1)·A + (k-1)·n·E + k·((n-1)·B - E)
 
     ONE truncating micro DIV of two exact DECIMAL integers — no float
-    ever.  COMPLETE
-    design is the contract (k derived as total DIV n, the icc_oneway
-    convention).  Returns one row (n_items, k, icc21_micro).
+    ever. The item and rater margin totals (``_margin_totals``, two
+    aggregations) give every sum. COMPLETE design is the contract (k
+    is the rater count). Rows with a NULL item, rater or value drop.
+    Returns one row (n_items, k, icc21_micro).
     """
-    cells = (
-        df.filter(
-            F.col(item_col).isNotNull()
-            & F.col(rater_col).isNotNull()
-            & F.col(value_col).isNotNull()
-        )
-        .select(
-            F.col(item_col).alias("i"),
-            F.col(rater_col).alias("r"),
-            F.col(value_col).cast("long").alias("x"),
-        )
+    cells = df.dropna(subset=[item_col, rater_col, value_col])
+    x = F.col(value_col).cast("long")
+    raters = _margin_totals(cells, rater_col, x).select(
+        F.col("keys").alias("k"), F.col("sk2").alias("sc2")
     )
-    rows_ = cells.groupBy("i").agg(
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("ri"),
-        F.count(F.lit(1)).cast("long").alias("ki"),
+    t = _margin_totals(cells, item_col, x).crossJoin(raters).select(
+        F.col("keys").alias("n"),
+        "k",
+        F.expr("keys * sk2 - sx * sx").alias("a"),
+        F.expr("k * sc2 - sx * sx").alias("b"),
+        F.expr("(cells * sx2 - sx * sx) - (keys * sk2 - sx * sx)"
+               " - (k * sc2 - sx * sx)").alias("e"),
     )
-    cols_ = cells.groupBy("r").agg(
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("cj")
-    )
-    tot = cells.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("nk"),
-        F.sum(F.col("x").cast("decimal(38,0)")).alias("g"),
-        F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).alias("q"),
-    )
-    rs = rows_.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.expr("ri * ri")).alias("sr2"),
-    )
-    cs = cols_.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(F.expr("cj * cj")).alias("sc2"),
-    )
-    wide = tot.join(F.broadcast(rs)).join(F.broadcast(cs))
-    return wide.select(
+    return t.select(
         F.col("n").alias("n_items"),
         "k",
         F.expr(
-            """CAST(
-              (CAST(n AS DECIMAL(38,0)) * (k - 1)
-                 * (CAST(n AS DECIMAL(38,0)) * sr2 - g * g)
-               - CAST(n AS DECIMAL(38,0))
-                 * (CAST(nk AS DECIMAL(38,0)) * q - g * g
-                    - (CAST(n AS DECIMAL(38,0)) * sr2 - g * g)
-                    - (CAST(k AS DECIMAL(38,0)) * sc2 - g * g)))
-              * 1000000
-              DIV NULLIF(
-              CAST(n AS DECIMAL(38,0)) * (k - 1)
-                * (CAST(n AS DECIMAL(38,0)) * sr2 - g * g)
-              + (CAST(k AS DECIMAL(38,0)) - 1) * n
-                * (CAST(nk AS DECIMAL(38,0)) * q - g * g
-                   - (CAST(n AS DECIMAL(38,0)) * sr2 - g * g)
-                   - (CAST(k AS DECIMAL(38,0)) * sc2 - g * g))
-              + CAST(k AS DECIMAL(38,0))
-                * ((CAST(n AS DECIMAL(38,0)) - 1)
-                    * (CAST(k AS DECIMAL(38,0)) * sc2 - g * g)
-                   - (CAST(nk AS DECIMAL(38,0)) * q - g * g
-                      - (CAST(n AS DECIMAL(38,0)) * sr2 - g * g)
-                      - (CAST(k AS DECIMAL(38,0)) * sc2 - g * g))), 0)
-              AS BIGINT)"""
+            "CAST((a * n * (k - 1) - e * n) * 1000000"
+            " DIV NULLIF(a * n * (k - 1) + e * (k - 1) * n"
+            " + (b * (n - 1) - e) * k, 0) AS BIGINT)"
         ).alias("icc21_micro"),
     )

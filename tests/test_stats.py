@@ -169,6 +169,145 @@ def test_doubled_midrank_matches_average_rank(spark, partitioned):
     assert got == expected
 
 
+# The agreement and trend operators built on the shared rating cells,
+# margin totals or pair signs, each with the columns it reads from one
+# (a, b, v, w) long frame: a is the item or partition, b the rater,
+# judge or seq, v the label, value or rank, w an outcome bit or a
+# second value.
+_AGREEMENT_TREND = {
+    "krippendorff_alpha": (st.krippendorff_alpha, "a", "b", "v"),
+    "krippendorff_ordinal": (st.krippendorff_ordinal, "a", "b", "v"),
+    "krippendorff_interval": (st.krippendorff_interval, "a", "b", "v"),
+    "gwet_ac1": (st.gwet_ac1, "a", "b", "v"),
+    "fleiss_kappa": (st.fleiss_kappa, "a", "v"),
+    "icc_oneway": (st.icc_oneway, "a", "v"),
+    "icc_twoway": (st.icc_twoway, "a", "b", "v"),
+    "cronbach_alpha": (st.cronbach_alpha, "a", "b", "v"),
+    "cochran_q": (st.cochran_q, "a", "b", "w"),
+    "kendall_w": (st.kendall_w, "b", "a", "v"),
+    "kendall_tau": (st.kendall_tau, "a", "b", "v", "w"),
+    "mann_kendall": (st.mann_kendall, "a", "b", "v"),
+    "seasonal_mann_kendall": (
+        lambda df, p, t, v: st.seasonal_mann_kendall(df, p, t, v, period=3),
+        "a", "b", "v",
+    ),
+}
+_ABVW = "a long, b long, v long, w long"
+
+
+def _family_rows(frame_of) -> dict:
+    """Every operator's rows on ``frame_of(cols)``, the frame for the
+    columns it reads."""
+    return {
+        name: sorted(op(frame_of(cols), *cols).collect(), key=repr)
+        for name, (op, *cols) in _AGREEMENT_TREND.items()
+    }
+
+
+@pytest.fixture(scope="module")
+def plan_variant_rows(spark):
+    """Each operator's rows on 8 items (or partitions) x 6 raters (or
+    points), labels 0..3 leaning to the item's own level, plus NULL
+    rows: first repartitioned 13 ways, then with 1 or 7 shuffle
+    partitions and AQE off; and, last, on the same frame without the
+    rows NULL in a column the operator reads."""
+    rng = np.random.default_rng(14)
+    rows = [
+        (a, b, int(a % 4 if rng.random() < 0.6 else rng.integers(0, 4)),
+         int(rng.integers(0, 2)))
+        for a in range(8) for b in range(6)
+    ]
+    nulls = [
+        (None, 0, 1, 1), (1, None, 2, 0), (2, 6, None, 1), (3, 7, 1, None),
+        (None, None, None, None),
+    ]
+    df = spark.createDataFrame(rows + nulls, _ABVW)
+    runs = [_family_rows(lambda cols: df.repartition(13))]
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            runs.append(_family_rows(lambda cols: df))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    return runs + [_family_rows(lambda cols: df.dropna(subset=cols))]
+
+
+@pytest.mark.parametrize("name", sorted(_AGREEMENT_TREND))
+def test_agreement_trend_partition_invariance(plan_variant_rows, name):
+    """Same rows whatever the physical plan."""
+    base, aqe_off_1, aqe_off_7, _ = (run[name] for run in plan_variant_rows)
+    assert base
+    assert aqe_off_1 == base and aqe_off_7 == base
+
+
+@pytest.mark.parametrize("name", sorted(_AGREEMENT_TREND))
+def test_agreement_trend_drop_null_rows(plan_variant_rows, name):
+    """A row with a NULL in any column the operator reads drops: the
+    frame with NULL rows gives the rows of the same frame filtered."""
+    with_nulls, *_, filtered = (run[name] for run in plan_variant_rows)
+    assert with_nulls == filtered
+
+
+_DEGENERATE = {
+    "empty": [],
+    # one item with one rating; one point
+    "one": [(0, 0, 1, 1)],
+    # every rating in one category; every v series constant, w varies
+    "constant": [(a, b, 2, b % 2) for a in range(3) for b in range(3)],
+    # every item's raters agree, and every judge ranks the items 1..4
+    "unanimous": [(a, b, a + 1, 1) for a in range(4) for b in range(3)],
+}
+# the statistics each one-row operator reports on the cases above, NULL
+# where not listed; the per-partition operators (kendall_tau and the
+# Mann-Kendall pair) drop every partition of every case: each has fewer
+# than 2 points or a tied axis
+_PERFECT = {"unanimous": (1_000_000,)}
+_DEGENERATE_STAT = {
+    "krippendorff_alpha": (("alpha_micro",), _PERFECT),
+    "krippendorff_ordinal": (
+        ("alpha_micro", "disagreement_micro"), {"unanimous": (1_000_000, 0)}
+    ),
+    "krippendorff_interval": (
+        ("alpha_micro", "disagreement_micro"), {"unanimous": (1_000_000, 0)}
+    ),
+    "gwet_ac1": (("ac1_micro",), _PERFECT),
+    "fleiss_kappa": (("kappa_micro",), _PERFECT),
+    "icc_oneway": (("icc_micro",), _PERFECT),
+    "icc_twoway": (("icc21_micro",), _PERFECT),
+    "cronbach_alpha": (("alpha_micro",), _PERFECT),
+    # constant: R_i = 1, G = (0, 3, 0) -> Q = 2 * (3 * 9 - 9) / (9 - 3)
+    "cochran_q": (("q_micro",), {"constant": (6_000_000,)}),
+    # constant: every rank sum equals m(n+1)/2 -> W = 0
+    "kendall_w": (("w_micro",), {"constant": (0,), "unanimous": (1_000_000,)}),
+}
+
+
+@pytest.fixture(scope="module")
+def degenerate_rows(spark):
+    return {
+        case: _family_rows(lambda cols, rows=rows: spark.createDataFrame(rows, _ABVW))
+        for case, rows in _DEGENERATE.items()
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+@pytest.mark.parametrize("name", sorted(_AGREEMENT_TREND))
+def test_agreement_trend_degenerate_input(degenerate_rows, name, case):
+    """Empty input, one rating or point, one category or a constant
+    series, and unanimous raters give defined rows, never an error."""
+    out = degenerate_rows[case][name]
+    if name not in _DEGENERATE_STAT:
+        assert out == []
+        return
+    cols, want = _DEGENERATE_STAT[name]
+    [r] = out
+    assert tuple(r[c] for c in cols) == want.get(case, (None,) * len(cols))
+
+
 def test_ks_statistic_disjoint_and_identical(spark):
     disjoint = spark.createDataFrame(
         [("a", 1.0), ("a", 2.0), ("b", 10.0), ("b", 11.0)], "g string, v double"
@@ -700,12 +839,6 @@ def test_kendall_tau_perfect_and_reversed(spark):
     got = {r["p"]: r["tau_micro"] for r in
            st.kendall_tau(df, "p", "i", "x", "y").collect()}
     assert got == {"u": 1_000_000, "d": -1_000_000}
-
-
-def test_kendall_tau_all_tied_axis_drops(spark):
-    rows = [("p", i, 1.0, float(i)) for i in range(4)]
-    df = spark.createDataFrame(rows, "p string, i long, x double, y double")
-    assert st.kendall_tau(df, "p", "i", "x", "y").count() == 0
 
 
 # --- rolling_corr ---------------------------------------------------------
@@ -1798,14 +1931,6 @@ def test_fleiss_kappa_perfect_and_worse_than_chance(spark):
     assert r["kappa_micro"] == -1_000_000
 
 
-def test_fleiss_kappa_degenerate_single_category_null(spark):
-    # every rating identical: 1 - Pe = 0 -> kappa undefined -> NULL
-    rows = [(1, "a"), (1, "a"), (2, "a"), (2, "a")]
-    df = spark.createDataFrame(rows, "item_id long, category string")
-    [r] = st.fleiss_kappa(df).collect()
-    assert r["kappa_micro"] is None
-
-
 def test_fleiss_kappa_matches_fraction_reference(spark):
     # 4 items x 3 raters, mixed agreement; reference via exact fractions
     from fractions import Fraction
@@ -2035,22 +2160,6 @@ def test_krippendorff_alpha_hand_case(spark):
     assert r["alpha_micro"] == 1_000_000 - 14_000_000 // 30  # 533334
 
 
-def test_krippendorff_alpha_perfect_and_degenerate(spark):
-    perfect = spark.createDataFrame(
-        [(i, r, "X" if i % 2 else "Y") for i in range(4) for r in ("a", "b")],
-        "item_id long, rater string, label string",
-    )
-    [r] = st.krippendorff_alpha(perfect).collect()
-    assert r["alpha_micro"] == 1_000_000
-    # one category overall -> D_e = 0 -> NULL alpha
-    degen = spark.createDataFrame(
-        [(i, r, "X") for i in range(3) for r in ("a", "b")],
-        "item_id long, rater string, label string",
-    )
-    [r2] = st.krippendorff_alpha(degen).collect()
-    assert r2["alpha_micro"] is None
-
-
 def test_cochran_q_hand_case(spark):
     # 3 systems, 4 items: G=(2,3,1), R=(2,3,1,0) -> Q = 2*6/4 = 3
     rows = [
@@ -2064,13 +2173,6 @@ def test_cochran_q_hand_case(spark):
     assert (r["n_items"], r["k"], r["total_successes"]) == (4, 3, 6)
     assert (r["g_sq"], r["r_sq"]) == (14, 14)
     assert r["q_micro"] == 3_000_000
-    # unanimous rows only -> denominator 0 -> NULL
-    u = spark.createDataFrame(
-        [(1, "a", 1), (1, "b", 1), (2, "a", 0), (2, "b", 0)],
-        "item_id long, treatment string, correct int",
-    )
-    [r2] = st.cochran_q(u).collect()
-    assert r2["q_micro"] is None
 
 
 def test_kendall_w_extremes(spark):
@@ -2288,21 +2390,6 @@ def test_krippendorff_ordinal_two_categories_equals_nominal(spark):
     assert o["n_items"] == n["n_items"] == 4
     assert o["n_ratings"] == n["n_ratings"] == 8
     assert o["alpha_micro"] == n["alpha_micro"]
-
-
-def test_krippendorff_ordinal_perfect_and_degenerate(spark):
-    perfect = spark.createDataFrame(
-        [(i, r, 1 if i % 2 else 5) for i in range(4) for r in ("a", "b")],
-        "item_id long, rater string, label long",
-    )
-    [r] = st.krippendorff_ordinal(perfect).collect()
-    assert r["alpha_micro"] == 1_000_000 and r["disagreement_micro"] == 0
-    degen = spark.createDataFrame(
-        [(i, r, 3) for i in range(3) for r in ("a", "b")],
-        "item_id long, rater string, label long",
-    )
-    [r2] = st.krippendorff_ordinal(degen).collect()
-    assert r2["alpha_micro"] is None
 
 
 def test_krippendorff_ordinal_penalizes_distance(spark):

@@ -12,8 +12,11 @@ Prints one line per query:  <name>  <median>s  [samples]  compiles=N  exchanges=
 compiles is the number of Janino compilations during the 3 timed runs
 (Spark's CodegenMetrics). The warm run already compiled the query's code,
 so a non-zero count marks a query whose generated code is not
-cache-stable on its own, e.g. an AQE-replanned stage whose code differs
-from run to run.
+cache-stable on its own. The usual cause is an AQE-replanned stage: its
+code repeats from run to run, but the generated class name carries the
+whole-stage codegen stage id (spark.sql.codegen.useIdInClassName, on by
+default), AQE assigns that id as it re-plans, and so the cache key
+changes.
 """
 
 from __future__ import annotations
