@@ -6,6 +6,8 @@ Prints ONE JSON line:
 
 Each query is forced with a noop sink (full computation, no driver
 collect), mirroring how a production job would terminate in a write.
+The warm-up, the timing loop and the Spark read-out defined here
+(warm_up, timed_runs, Readout) are the ones tools/ measures with.
 """
 
 from __future__ import annotations
@@ -288,6 +290,99 @@ PIPELINE = [
 ]
 
 
+def warm_up(spark) -> None:
+    """JVM/codegen + Python-worker-pool warmup on trivial actions, so
+    per-query numbers measure the plan, not first-call initialization
+    (workers are reused across jobs; starting one per core is a fixed
+    ~2s cost that would otherwise land on the first pandas-UDF query)."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    par = spark.sparkContext.defaultParallelism
+
+    def _noop(batches):
+        yield from batches
+
+    spark.range(par).repartition(par).mapInPandas(_noop, "id long").write.format(
+        "noop"
+    ).mode("overwrite").save()
+
+
+def noop_run(make_df) -> None:
+    """Build the frame and force it through the noop sink: full
+    computation, no driver collect."""
+    make_df().write.format("noop").mode("overwrite").save()
+
+
+def timed_runs(make_df, readout=None, warm: bool = True) -> list[float]:
+    """One unmeasured warm run (first-touch parquet footer reads, codegen
+    compilation), then 3 timed noop runs, each building its frame anew.
+    Returns the 3 wall times. A ``readout`` (a Readout) traces the last
+    timed run; ``warm=False`` leaves the warm run to the caller.
+
+    Callers reduce the samples with a robust estimator: single runs swing
+    ±40% on GC pauses (round-2 bench read +17% total vs round 1 on
+    identical code)."""
+    if warm:
+        noop_run(make_df)
+    samples = []
+    for last in (False, False, True):
+        run = noop_run
+        if last and readout is not None:
+            readout.start()
+            run = readout.run
+        t0 = time.perf_counter()
+        run(make_df)
+        samples.append(time.perf_counter() - t0)
+    return samples
+
+
+class Readout:
+    """Spark's own counters for one noop run, read from the status store
+    through perfbench.layers.Tracer's public spans. Its install(), which
+    patches package functions, is never called, so the run is the same
+    code as an untraced one.
+
+    Pass it to ``timed_runs``; ``read()`` then returns, for the traced
+    run, the Tracer's ``execute.*`` totals (jobs, stages, tasks, cpu_s,
+    run_s, shuffle_write_mb, ...) and ``sources.input_mb``, all over the
+    whole run: building the frame and its write. ``construct.jobs``,
+    ``construct.tasks`` and ``construct.wall_s`` are the build's share
+    (eager checkpoints, counts and collects it triggers). The Tracer
+    counts no CPU, stages or shuffle per operation, so the build's share
+    of those is not reported."""
+
+    def __init__(self, spark) -> None:
+        from perfbench.layers import Tracer
+
+        self.tracer = Tracer(spark, entrymod)
+        self.cores = spark.sparkContext.defaultParallelism
+        self._before: dict = {}
+
+    def start(self) -> None:
+        """Open the pass; timed_runs calls it before its clock starts."""
+        # the Tracer's job groups are named by pass and outlive this
+        # readout (they last as long as the SparkContext), so each run
+        # takes a pass id no other run can hold
+        self._before = self.tracer.begin_pass(f"readout{time.perf_counter_ns()}")
+
+    def run(self, make_df) -> None:
+        # both spans in the execute phase, so the execute.* totals hold
+        # the build's jobs too; the per-operation rows keep them apart
+        with self.tracer.span("construct", "execute"):
+            df = make_df()
+        with self.tracer.span("query", "execute"):
+            noop_run(lambda: df)
+
+    def read(self) -> dict[str, float]:
+        metrics, rows = self.tracer.end_pass(self._before, self.cores)
+        build = next(r for r in rows if r["op"] == "construct")
+        out = {k: v for k, v in metrics.items() if k.startswith("execute.")}
+        out["sources.input_mb"] = metrics["sources.input_mb"]
+        out["construct.jobs"] = build["execute_jobs"]
+        out["construct.tasks"] = build["execute_tasks"]
+        out["construct.wall_s"] = build["execute_s"]
+        return out
+
+
 N_BENCH_IMAGES = 10_000  # the reference's benchmark cardinality (README.md:194)
 
 
@@ -321,201 +416,8 @@ def inference_throughput(spark) -> float:
         pass_through=["id"],
         preprocess=lambda b: sc.cifar_preprocess(b, mean),
     )
-    scored.write.format("noop").mode("overwrite").save()  # warm
-    best = float("inf")
-    for _ in range(3):  # best-of-3: single runs swing ±40% on GC pauses
-        t0 = time.perf_counter()
-        scored.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return N_BENCH_IMAGES / best
-
-
-def skew_join_bench(spark) -> dict[str, float]:
-    """Hot-key join under three strategies — the proof that salted_join
-    earns its keep (or that AQE suffices). Left fact: 4M rows, 50% on ONE
-    key; right: 100k-key dim, too big to usefully broadcast (broadcast is
-    disabled to isolate the shuffle-join skew behavior).
-
-      plain  — AQE off, ordinary shuffle join: the hot key's 2M rows land
-               on a single reducer (the straggler).
-      salted — AQE off, relational.salted_join(8): the hot key spreads
-               over 8 reducers at the cost of an 8x right-side inflation.
-      aqe    — AQE skew-join with its size knobs SCALED to the bench's
-               data volume: runtime split of the oversized partition, no
-               manual salting.
-
-    Root cause of the r7/r8 aqe-vs-plain incoherence (r7 1.508 < 1.723,
-    r8 2.061 > 1.842 on identical code): the hot partition here is ~32 MB,
-    far below the default skewedPartitionThresholdInBytes (256 MB), so the
-    aqe arm NEVER actually split — it measured the same straggler as plain
-    plus AQE re-planning overhead, i.e. pure ambient noise. The probe's
-    stage bars show it: plain (31+1)/32, aqe-with-defaults (15+1)/16 (same
-    single straggler after coalescing), aqe-with-scaled-knobs 17 splits and
-    a stable win (1.184 < 1.515 < 1.596 median-of-3, fresh session). The
-    defaults are cluster-scale values; a 100 TB run's skewed partitions
-    clear 256 MB on their own — the bench must scale the knob to its data
-    or the arm measures nothing. Hence the aqe arm now pins
-    skewedPartitionThresholdInBytes/advisoryPartitionSizeInBytes to 4 MB
-    (~1/8 of the hot partition, mirroring the 256 MB/multi-GB cluster
-    ratio) and restores them after.
-    """
-    import time
-
-    from pyspark.sql import functions as F
-
-    from hdinsight_pyspark_cntk_integration_spark.operators import relational as rel
-
-    n_left, n_right, hot_frac = 4_000_000, 100_000, 0.5
-    left = spark.range(n_left).select(
-        F.when(F.col("id") % int(1 / hot_frac) == 0, F.lit(0))
-        .otherwise(F.pmod(F.xxhash64("id"), F.lit(n_right)))
-        .alias("k"),
-        (F.col("id") % 1000).alias("v"),
-    )
-    right = spark.range(n_right).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("w")
-    )
-
-    conf = spark.conf
-    saved = {
-        "spark.sql.adaptive.enabled": conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.autoBroadcastJoinThreshold": conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    times: dict[str, float] = {}
-
-    def run(tag: str, make_df) -> None:
-        make_df().write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            make_df().write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        times[tag] = round(sorted(samples)[1], 3)
-
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        run("plain", lambda: left.join(right, "k").select(F.col("v") + F.col("w")))
-        run(
-            "salted",
-            lambda: rel.salted_join(left, right, key="k", salt_buckets=8).select(
-                F.col("v") + F.col("w")
-            ),
-        )
-        conf.set("spark.sql.adaptive.enabled", "true")
-        conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            str(4 * 1024 * 1024),
-        )
-        conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(4 * 1024 * 1024)
-        )
-        run("aqe", lambda: left.join(right, "k").select(F.col("v") + F.col("w")))
-    finally:
-        conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-        conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        for key, val in saved.items():
-            conf.set(key, val)
-    return times
-
-
-def bucketed_join_bench(spark, sf_dir: str) -> dict[str, float]:
-    """orders ⋈ lineitem revenue rollup, unbucketed (per-query shuffle of
-    both facts) vs pre-bucketed on the join key (write-time shuffle, ZERO
-    join exchanges at query time — sources.io.write_bucketed). The
-    bucketed write itself is unmeasured setup: it's the amortized
-    once-per-load cost this layout exists to pay.
-
-    Root cause of the r8 collapse (bucketed 1.238 ≈ unbucketed 1.235
-    where r7 showed 0.315 vs 0.911, identical code): orders.parquet at
-    sf0.1 is 2.7 MB — always under the session's 64 MB
-    autoBroadcastJoinThreshold — so BOTH arms planned a
-    BroadcastHashJoin and the bucketed layout never reached the join at
-    all. What the section actually compared was scan parallelism (one
-    3-task single-file scan vs 32 bucket files) under a broadcast join,
-    a gap that session-ambient scheduler load erases — hence coherent-
-    looking numbers in one round and a collapse in the next. With
-    broadcast disabled the section measures its claim and the gap is
-    structural: unbucketed = SortMergeJoin with 3 exchanges (2 join-side
-    + 1 agg), bucketed = 1 exchange (agg only), 0.577 vs 0.317 median-
-    of-3 in a fresh session. Broadcast is now disabled for both arms
-    (saved/restored), and the per-arm physical-plan exchange counts are
-    emitted alongside the times so a future plan regression shows up
-    structurally instead of as timing noise. At warehouse scale no fact-
-    fact join is broadcastable — disabling the threshold here is what
-    makes the sf0.1 bench a faithful miniature of the 100 TB case."""
-    import io
-    import time
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from hdinsight_pyspark_cntk_integration_spark.sources.io import write_bucketed
-
-    def count_exchanges(df) -> int:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        # tree-line shuffle Exchange nodes only ("+- Exchange"/":- Exchange");
-        # "+- BroadcastExchange" does not match this substring
-        return buf.getvalue().count("- Exchange")
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    buckets = spark.sparkContext.defaultParallelism
-
-    def revenue(o, l, lkey: str):
-        return (
-            o.join(l, o["o_orderkey"] == l[lkey])
-            .groupBy("o_orderpriority")
-            .agg(
-                F.sum(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                        "decimal(18,4)"
-                    )
-                ).alias("revenue")
-            )
-        )
-
-    def _median3(make_df) -> float:
-        make_df().write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            make_df().write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        return round(sorted(samples)[1], 3)
-
-    times: dict[str, float] = {}
-    conf = spark.conf
-    saved_thr = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        times["unbucketed"] = _median3(lambda: revenue(orders, li, "l_orderkey"))
-        times["unbucketed_exchanges"] = count_exchanges(
-            revenue(orders, li, "l_orderkey")
-        )
-
-        # Idempotent setup: a previous bench run's table dirs survive in
-        # spark-warehouse while the fresh session's catalog has no entry,
-        # so saveAsTable(overwrite) refuses — clear both sides.
-        import shutil
-
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        for tbl in ("bench_li_bkt", "bench_ord_bkt"):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            shutil.rmtree(os.path.join(warehouse, tbl), ignore_errors=True)
-
-        write_bucketed(li, "bench_li_bkt", buckets, "l_orderkey")
-        write_bucketed(orders, "bench_ord_bkt", buckets, "o_orderkey")
-        lb, ob = spark.table("bench_li_bkt"), spark.table("bench_ord_bkt")
-        times["bucketed"] = _median3(lambda: revenue(ob, lb, "l_orderkey"))
-        times["bucketed_exchanges"] = count_exchanges(revenue(ob, lb, "l_orderkey"))
-    finally:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", saved_thr)
-    return times
+    # best-of-3: the throughput of the fastest run
+    return N_BENCH_IMAGES / min(timed_runs(lambda: scored))
 
 
 def _registry_parity_timings(here: str) -> dict[str, object]:
@@ -609,19 +511,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entrymod.queries()
-    # JVM/codegen + Python-worker-pool warmup on trivial actions so
-    # per-query numbers measure the plan, not first-call initialization
-    # (workers are reused across jobs; starting one per core is a fixed
-    # ~2s cost that would otherwise land on the first pandas-UDF query).
-    spark.range(1000).selectExpr("sum(id)").collect()
-    par = spark.sparkContext.defaultParallelism
-
-    def _noop(batches):
-        yield from batches
-
-    spark.range(par).repartition(par).mapInPandas(_noop, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark)
 
     # All three steady-state samples are recorded ("query_samples") so a
     # future ±10% median move is attributable at a glance: tight samples
@@ -633,42 +523,18 @@ def main() -> None:
     # outgrew that window, losing the headline medians from the record.
     calib_pre, calib_pre_samples = _calibration_probe(spark)
 
-    per_query: dict[str, float] = {}
+    medians: dict[str, float] = {}
     query_samples: dict[str, list[float]] = {}
-    total = 0.0
-    for name in HEADLINE:
+    for name in HEADLINE + PIPELINE:
         fn = queries[name]
-        # one unmeasured run per query (first-touch parquet footer reads,
-        # codegen compilation), then MEDIAN of 3 steady-state executions:
-        # single runs swing ±40% on GC pauses (round-2 bench read +17%
-        # total vs round 1 on identical code), so a robust estimator is
-        # required for round-over-round comparisons to carry signal.
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        dt = sorted(samples)[1]
-        per_query[name] = round(dt, 3)
+        samples = timed_runs(lambda: fn(spark, sf_dir))
+        medians[name] = sorted(samples)[1]
         query_samples[name] = [round(s, 3) for s in samples]
-        total += dt
-
-    pipeline_q: dict[str, float] = {}
-    for name in PIPELINE:
-        fn = queries[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        pipeline_q[name] = round(sorted(samples)[1], 3)
-        query_samples[name] = [round(s, 3) for s in samples]
+    total = sum(medians[name] for name in HEADLINE)
+    per_query = {name: round(medians[name], 3) for name in HEADLINE}
+    pipeline_q = {name: round(medians[name], 3) for name in PIPELINE}
 
     images_per_sec = inference_throughput(spark)
-    skew = skew_join_bench(spark)
-    bucketed = bucketed_join_bench(spark, sf_dir)
 
     calib_post, calib_post_samples = _calibration_probe(spark)
 
@@ -704,61 +570,34 @@ def main() -> None:
             indent=1,
         )
 
-    line = json.dumps(
-        {
-            "metric": "headline_query_total",
-            "value": round(total, 3),
-            "unit": "sec",
-            "queries": per_query,
-            "pipeline_total_sec": pipeline_total,
-            "pipeline_n": len(pipeline_q),
-            "detail_file": "BENCH_SAMPLES.json",
-            "sf": sf,
-            "images_per_sec": round(images_per_sec, 1),
-            "reference_images_per_sec": 102.2,
-            "skew_join_sec": skew,
-            "bucketed_join_sec": bucketed,
-            "calib_sec": {
-                "pre": round(calib_pre, 3),
-                "post": round(calib_post, 3),
-            },
-        }
-    )
+    record = {
+        "metric": "headline_query_total",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": per_query,
+        "pipeline_total_sec": pipeline_total,
+        "pipeline_n": len(pipeline_q),
+        "detail_file": "BENCH_SAMPLES.json",
+        "sf": sf,
+        "images_per_sec": round(images_per_sec, 1),
+        "reference_images_per_sec": 102.2,
+        "calib_sec": {
+            "pre": round(calib_pre, 3),
+            "post": round(calib_post, 3),
+        },
+    }
     # Hard guard against a repeat of round 5: the driver's tail capture is
     # 2000 bytes and the printed line is the LAST stdout line, so it must
-    # fit whole. Fall back to the headline-only core rather than emit an
-    # unparseable record.
-    if len(line) > 1900:
-        line = json.dumps(
-            {
-                "metric": "headline_query_total",
-                "value": round(total, 3),
-                "unit": "sec",
-                "queries": per_query,
-                "sf": sf,
-                "images_per_sec": round(images_per_sec, 1),
-                "calib_sec": {
-                    "pre": round(calib_pre, 3),
-                    "post": round(calib_post, 3),
-                },
-            }
-        )
-    # The fallback itself can outgrow the window if per_query gains
-    # entries or long names — drop "queries" too rather than truncate.
-    if len(line) > 1900:
-        line = json.dumps(
-            {
-                "metric": "headline_query_total",
-                "value": round(total, 3),
-                "unit": "sec",
-                "sf": sf,
-                "images_per_sec": round(images_per_sec, 1),
-                "calib_sec": {
-                    "pre": round(calib_pre, 3),
-                    "post": round(calib_post, 3),
-                },
-            }
-        )
+    # fit whole. Fall back to the headline-only core, and then drop
+    # "queries" too (it can outgrow the window if it gains entries or
+    # long names), rather than emit an unparseable record.
+    optional = ((), ("pipeline_total_sec", "pipeline_n", "detail_file", "reference_images_per_sec"), ("queries",))
+    for keys in optional:
+        for key in keys:
+            del record[key]
+        line = json.dumps(record)
+        if len(line) <= 1900:
+            break
     assert len(line) <= 1900, "bench output line still exceeds capture window"
     print(line)
     spark.stop()

@@ -1,4 +1,4 @@
-"""Dump formatted physical plans for the headline queries to PLANS.md —
+"""Dump formatted physical plans for the PLAN_QUERIES list to PLANS.md —
 committed evidence of plan quality (pushed filters, pruned schemas,
 broadcast joins, whole-stage codegen spans) so a reviewer can audit the
 100 TB story without re-running Spark.
@@ -16,7 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from hdinsight_pyspark_cntk_integration_spark import get_spark
 
-HEADLINE = [
+PLAN_QUERIES = [
     "pricing_summary",
     "top_revenue_orders",
     "region_revenue",
@@ -74,7 +74,7 @@ def main() -> None:
     spark = get_spark()
     queries = entrymod.queries()
     lines = [
-        "# Physical plans (headline queries)",
+        "# Physical plans (plan-audit queries)",
         "",
         f"`df.explain('formatted')` output at `{sf}`, regenerate with",
         "`python tools/dump_plans.py`. What to look for: `PushedFilters`",
@@ -85,7 +85,7 @@ def main() -> None:
         "`tests/plan_checks.py`, run over every query by `tests/test_plans.py`).",
         "",
     ]
-    for name in HEADLINE:
+    for name in PLAN_QUERIES:
         df = queries[name](spark, sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
@@ -98,7 +98,7 @@ def main() -> None:
         lines.append("")
     with open(out, "w") as f:
         f.write("\n".join(lines))
-    print(f"wrote {out} ({len(HEADLINE)} plans)")
+    print(f"wrote {out} ({len(PLAN_QUERIES)} plans)")
 
 
 if __name__ == "__main__":

@@ -11,10 +11,12 @@ slice their inputs for cheap oracles; the rehearsal must not):
 repeated_passages_maximal, sentence_dedup, embedding_dedup (banded
 candidates), minhash_lsh_candidates, ivf_topk.
 
-Each query: one warm run (parquet footers, codegen), then two timed
-runs forced through the noop sink; the MIN is the scaling estimator
-(robust to one-off GC pauses). Shuffle bytes diff the Spark REST API's
-completed-stage totals around the final timed run.
+Each query runs on bench.py's loop (``bench.timed_runs``): one warm run
+(parquet footers, codegen), then three timed runs forced through the
+noop sink; the MIN is the scaling estimator (robust to one-off GC
+pauses). Shuffle-write and input bytes of the final timed run come from
+Spark's status store (``bench.Readout``) and cover the whole run, the
+frame's build (eager checkpoints and the like) as well as its write.
 
 Usage: python tools/scale_rehearsal.py [BASE] [FIXTURE] [FACTOR] [OUT_JSON]
 """
@@ -25,12 +27,11 @@ import json
 import math
 import os
 import sys
-import time
-import urllib.request
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+import bench  # noqa: E402
 from hdinsight_pyspark_cntk_integration_spark import get_spark
 from hdinsight_pyspark_cntk_integration_spark.operators import dedup as dd
 from hdinsight_pyspark_cntk_integration_spark.operators import similarity as sim
@@ -263,19 +264,6 @@ def _targets(spark, sf_dir):
     }
 
 
-def _stage_totals(spark) -> tuple[int, int]:
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(
-        f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    ) as r:
-        stages = json.load(r)
-    return (
-        sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        sum(s.get("inputBytes", 0) for s in stages),
-    )
-
-
 def run(base: str, fixture: str, factor: int, out_json: str,
         target_set: str = "dedup", only: str | None = None) -> None:
     # Cluster-realistic heap: the engine's local sessions never set
@@ -292,7 +280,8 @@ def run(base: str, fixture: str, factor: int, out_json: str,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    bench.warm_up(spark)
+    readout = bench.Readout(spark)
 
     make_targets = {
         "relational": _relational_targets,
@@ -311,31 +300,25 @@ def run(base: str, fixture: str, factor: int, out_json: str,
         for name, make in make_targets(spark, sf_dir).items():
             if keep is not None and name not in keep:
                 continue
-            make().write.format("noop").mode("overwrite").save()  # warm
             # 3 samples, exponent from t_min (VERDICT r12 "what's wrong"
             # #3: 2-sample minima under host-throttle noise made the
             # TIME exponents unreliable — e.g. 10x samples [3.03,
             # 11.11]; shuffle-BYTE exponents were always robust). The
-            # shuffle/input counters are measured around the LAST run
-            # only (bytes are deterministic per plan, any run works).
-            samples = []
-            sw0 = inp0 = 0
-            for i in range(3):
-                if i == 2:
-                    sw0, inp0 = _stage_totals(spark)
-                t0 = time.perf_counter()
-                make().write.format("noop").mode("overwrite").save()
-                samples.append(round(time.perf_counter() - t0, 3))
-            sw1, inp1 = _stage_totals(spark)
+            # shuffle/input counters are read for the LAST run only
+            # (bytes are deterministic per plan, any run works).
+            samples = [round(s, 3) for s in bench.timed_runs(make, readout)]
+            work = readout.read()
+            shuffle = round(work["execute.shuffle_write_mb"] * 1e6)
+            inp = round(work["sources.input_mb"] * 1e6)
             rec = results.setdefault(name, {})
             rec[scale] = {
                 "samples": samples,
                 "t_min": min(samples),
-                "shuffle_write_bytes": sw1 - sw0,
-                "input_bytes": inp1 - inp0,
+                "shuffle_write_bytes": shuffle,
+                "input_bytes": inp,
             }
             print(f"{scale:>4} {name}: {samples} shuffleMB="
-                  f"{(sw1 - sw0) / 1e6:.1f} inputMB={(inp1 - inp0) / 1e6:.1f}",
+                  f"{shuffle / 1e6:.1f} inputMB={inp / 1e6:.1f}",
                   flush=True)
 
     big = f"{factor}x"
