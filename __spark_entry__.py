@@ -313,8 +313,8 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window agg in batch form (the streaming layer runs the
-    identical groupBy on a stream — streaming.tumbling_counts)."""
+    """Tumbling hourly count and exact value sum per event type: one
+    groupBy on the hour-truncated timestamp."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -2295,8 +2295,8 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min) via window islands: lag-gap mark
-    + running sum. One shuffle on user_id; the batch twin of
-    streaming.session_counts."""
+    + running sum. One shuffle on user_id; the hand-rolled twin of
+    q_session_window_native."""
     ev = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -3768,14 +3768,21 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sliding_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window counts (streaming.sliding_counts in batch form):
-    1-hour windows every 30 minutes, so each event lands in exactly two
-    windows — the oracle unnests both half-hour-aligned window starts
-    covering each timestamp."""
-    from hdinsight_pyspark_cntk_integration_spark import streaming as st
-
+    """Sliding-window counts per event type (F.window): 1-hour windows
+    every 30 minutes, so each event lands in exactly two windows — the
+    oracle unnests both half-hour-aligned window starts covering each
+    timestamp."""
     ev = load_table(spark, sf_dir, "events")
-    return st.sliding_counts(ev, window_len="1 hour", slide="30 minutes")
+    return (
+        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), F.col("event_type"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("win.start").alias("window_start"),
+            F.col("win.end").alias("window_end"),
+            "event_type",
+            "n",
+        )
+    )
 
 
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4540,17 +4547,21 @@ def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's NATIVE gap-based session windows (F.session_window via
-    streaming.session_counts — the identical call runs on a stream with
-    state-store session merge). Oracle reproduces the semantics as
-    lag-gap islands: a gap of exactly 30 min starts a new session
-    (session end = last event + gap, end-exclusive). The islands twin
-    q_sessionize covers the hand-rolled form; this gates the built-in."""
-    from hdinsight_pyspark_cntk_integration_spark import streaming as st
-
+    """Spark's NATIVE gap-based session windows (F.session_window) per
+    user. Oracle reproduces the semantics as lag-gap islands: a gap of
+    exactly 30 min starts a new session (session end = last event + gap,
+    end-exclusive). The islands twin q_sessionize covers the hand-rolled
+    form; this gates the built-in."""
     ev = load_table(spark, sf_dir, "events")
-    return st.session_counts(ev, gap="30 minutes").select(
-        "session_start", "session_end", "user_id", F.col("n").cast("long").alias("n")
+    return (
+        ev.groupBy(F.session_window("ts", "30 minutes").alias("win"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("win.start").alias("session_start"),
+            F.col("win.end").alias("session_end"),
+            "user_id",
+            F.col("n").cast("long").alias("n"),
+        )
     )
 
 
@@ -4574,9 +4585,9 @@ def q_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-window dedup (dedup.dedup_within_window): first event per
-    (user, event_type) in each 1-hour tumbling window — the batch twin
-    of the streaming watermark/TTL dedup. Window ids are exact integer
-    epoch-micros arithmetic; one shuffle on (keys, window)."""
+    (user, event_type) in each 1-hour tumbling window. Window ids are
+    exact integer epoch-micros arithmetic; one shuffle on (keys,
+    window)."""
     ev = load_table(spark, sf_dir, "events")
     kept = dd.dedup_within_window(
         ev,

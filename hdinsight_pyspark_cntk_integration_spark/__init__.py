@@ -16,7 +16,6 @@ Public surface:
     sources      — table catalog + IO (parquet/csv readers, sinks)
     functions    — vector/text scalar helpers built on pyspark.sql.functions
     operators    — relational, scoring, dedup, similarity, text, multimodal
-    streaming    — Structured Streaming builders (windows, watermarks, scoring)
 """
 
 from hdinsight_pyspark_cntk_integration_spark.session import get_spark

@@ -1388,9 +1388,8 @@ def dedup_within_window(
     tiebreak_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Time-window deduplication: keep the FIRST row per key within each
-    tumbling ``window_seconds`` window — the batch twin of the streaming
-    watermark/TTL dedup (same contract: an event repeated inside the
-    window is a duplicate; across windows it is fresh). The classic
+    tumbling ``window_seconds`` window: an event repeated inside the
+    window is a duplicate; across windows it is fresh. The classic
     at-least-once-ingest compaction.
 
     The window id is exact integer arithmetic on epoch-micros

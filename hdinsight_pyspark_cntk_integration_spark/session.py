@@ -108,14 +108,3 @@ def get_spark(
 
     spark = builder.getOrCreate()
     return spark
-
-
-def configure_rocksdb_state(spark: SparkSession) -> None:
-    """Switch the streaming state store to RocksDB — required by
-    ``transformWithStateInPandas`` and the right provider for large
-    dedup/session state anyway (state spills to local disk + changelog
-    checkpointing instead of living on the JVM heap)."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )

@@ -75,30 +75,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_b
     writer.parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int,
-    key: str | list[str],
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and bucket-sorted) managed table.
-
-    THE pre-shuffle for repeated fact-fact joins at warehouse scale: two
-    tables bucketed on the same key with the same bucket count join with
-    ZERO exchanges (and, if sorted, zero sorts) — the shuffle is paid
-    once at write time instead of per query. See
-    tests/test_io_streaming_extra.py::test_bucketed_join_no_shuffle for
-    the plan-level proof.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    writer = df.write.mode(mode).format("parquet").bucketBy(buckets, *keys)
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(table)
-
-
 def write_single_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """K1: deliberate single-file CSV write with a header (reference
     README.md:95,217).

@@ -164,39 +164,6 @@ def test_decontaminate_drops_planted_overlap(spark):
     assert has_broadcast_join(pl.contamination_hits(train, eval_df))
 
 
-def test_split_and_sample_work_on_streams(spark, tmp_path):
-    """split_assign / mixture_sample are stateless projections, so the
-    same operator works unchanged under Structured Streaming and agrees
-    with the batch assignment row-for-row."""
-    df = spark.range(500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("src"), (F.col("id") % 3).cast("string")).alias("source"),
-    )
-    src = str(tmp_path / "stream_src")
-    df.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("doc_id long, source string").parquet(src)
-    weights = {"train": 0.9, "test": 0.1}
-    fracs = {"src0": 1.0, "src1": 0.5}
-    out = pl.split_assign(pl.mixture_sample(stream, fracs), weights)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("pipe_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["doc_id"], r["source"], r["split"])
-        for r in spark.sql("SELECT * FROM pipe_stream").collect()
-    }
-    want = {
-        (r["doc_id"], r["source"], r["split"])
-        for r in pl.split_assign(pl.mixture_sample(df, fracs), weights).collect()
-    }
-    assert got == want and got
-
-
 def test_hash_bucket_methods_disagree_but_both_mix(spark, ids_df):
     """knuth is the cross-engine oracle mixer; both must spread buckets."""
     both = ids_df.select(

@@ -5,13 +5,17 @@ round 9 shipped `grouping_sets_sql` twice and the registry count
 silently read 303 where the source had 304 entries. These tests parse
 the SOURCE of ``__spark_entry__.queries()`` with ``ast`` so a future
 duplicate of two DIFFERENT functions cannot silently drop a query.
+The window-query test runs two registry queries against their DuckDB
+oracles with the parity gate's own comparison.
 """
 
 from __future__ import annotations
 
 import ast
 import collections
+import importlib
 import pathlib
+import sys
 
 import pytest
 
@@ -69,3 +73,30 @@ def test_oracle_keys_subset_of_registry():
     q, o = e.queries(), e.oracle_sql()
     orphans = sorted(set(o) - set(q))
     assert not orphans, f"oracle_sql() keys with no query: {orphans}"
+
+
+def _parity_compare():
+    """tools/check_parity.compare, imported the way perfbench does it:
+    the script's module code edits ``sys.path``, so that edit is undone."""
+    saved = list(sys.path)
+    try:
+        return importlib.import_module("tools.check_parity").compare
+    finally:
+        sys.path[:] = saved
+
+
+@pytest.mark.parametrize("name", ["sliding_hourly", "session_window_native"])
+def test_window_query_matches_oracle(spark, sf_dir, name):
+    """The F.window and F.session_window queries match their DuckDB
+    oracles at sf0.001: the slide and the gap both reach the rows."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from hdinsight_pyspark_cntk_integration_spark.sources.catalog import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    got = e.queries()[name](spark, sf_dir).toPandas()
+    ok, msg = _parity_compare()(got, con.sql(e.oracle_sql()[name]).df())
+    assert ok, f"{name}: {msg}"
